@@ -1,0 +1,1 @@
+"""Frontier benchmark: see run.py and README.md."""
