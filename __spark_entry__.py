@@ -1563,7 +1563,7 @@ def q_frontier_wave(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="jwcs-entrywave-")
     try:  # noqa: SIM105
         cat = SnapshotCatalog(spark, tmp)
-        eng = FrontierEngine(spark, cat, use_bloom=True)
+        eng = FrontierEngine(spark, cat)
         eng.bootstrap(seeds)
         eng.run_wave(pages, budget=50, n_salts=2)
         docs = cat.read("documents").select("url", "host", "wave", F.length("text").alias("n_chars"))

@@ -140,7 +140,7 @@ def bench_frontier(spark, sf: float, n_salts: int = 4) -> dict:
         cat = SnapshotCatalog(spark, os.path.join(work, "cat"))
         # fingerprint_k=128: extract + MinHash128 + SimHash in one Arrow
         # pass per document — the full crawl + dedup-prep pipeline
-        eng = FrontierEngine(spark, cat, use_bloom=True, fingerprint_k=128)
+        eng = FrontierEngine(spark, cat, fingerprint_k=128)
         t0 = time.monotonic()
         eng.bootstrap(seeds)
         # the skewed giant host holds ~17% of urls; budget n/10 drains it
@@ -214,7 +214,7 @@ def bench_incremental_dedup(spark, sf: float) -> dict:
         n_seeds = seeds.count()
         cat = SnapshotCatalog(spark, os.path.join(work, "cat"))
         eng = FrontierEngine(
-            spark, cat, use_bloom=True, fingerprint_k=128,
+            spark, cat, fingerprint_k=128,
             minhash_index_path=os.path.join(work, "mhidx"),
         )
         t0 = time.monotonic()

@@ -20,21 +20,22 @@ End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
         done      += scheduled / duplicate / robots-denied urls
         metrics   += per-partition lineage
 
-Scale design (10^10 URLs):
+State and cost:
 - ALL state tables are append-only — no wave ever rewrites a table, so
   per-wave cost is O(pending), not O(frontier). The old design's
   full-frontier status overwrite per wave would be O(frontier × waves).
-- ``pending`` is an anti-join on ``url`` against ``done``; at cluster
-  scale both sides are hash-partitioned/bucketed on the join key so the
-  anti-join is shuffle-local.
-- the bloom prefilter is maintained INCREMENTALLY: built once from the
+- ``pending`` is an anti-join on ``url`` against ``done``, and the seen
+  filter's truth tier an anti-join on ``key_hash`` against ``seen``;
+  both are key-hash equi-joins that Catalyst/AQE plan.
+- the seen filter has one Bloom prefilter (``BLOOM_BITS``/``BLOOM_K``),
+  held on the driver and maintained INCREMENTALLY: built once from the
   ``seen`` table at engine construction (resume), then OR-merged with
   each wave's newly-scheduled keys — never rebuilt from the full table.
-  At 10^10 keys a single broadcast bloom no longer fits; the same
-  incremental OR applies per hash-range shard (seen.py header).
-- every join below is either broadcast (politeness config) or key-hash
-  equi-join; Catalyst/AQE pick physical strategy; nothing collects rows
-  to the driver except scalar counts and bloom blobs.
+  Bloom misses skip the ``seen`` anti-join; hits go through it, so the
+  Bloom never changes which urls are new.
+- every other join is broadcast (politeness config) or a key-hash
+  equi-join; nothing collects rows to the driver except scalar counts
+  and bloom blobs.
 """
 
 from __future__ import annotations
@@ -52,10 +53,8 @@ from judyst_web_crawler_spark.functions.extraction import extract_text, extract_
 from judyst_web_crawler_spark.operators.dedup_fuzzy import minhash_index_write_sigs
 from judyst_web_crawler_spark.operators.politeness import apply_robots, budget_topk
 from judyst_web_crawler_spark.operators.seen import (
-    CatalogShardedBloom,
     bloom_bits_for,
     build_bloom,
-    filter_new_exact,
     filter_new_with_bloom,
 )
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
@@ -65,6 +64,13 @@ SEEN_TABLE = "seen"
 DONE_TABLE = "done_urls"
 DOCS_TABLE = "documents"
 METRICS_TABLE = "metrics"
+
+# Seen-filter Bloom geometry: ≥12 bits per key up to 10^6 keys (2^24
+# bits, ≈0.1% false positives at 10^6 keys; a false positive costs an
+# exact-join probe, never a dropped url), probed k=5 times per key.
+BLOOM_BITS = bloom_bits_for(1_000_000, 12)
+BLOOM_K = 5
+
 
 def _priority():
     return [F.col("depth").asc(), F.col("page_seq").asc(), F.col("intra_page_seq").asc()]
@@ -93,35 +99,13 @@ class FrontierEngine:
         spark: SparkSession,
         catalog: SnapshotCatalog,
         politeness: DataFrame | None = None,
-        use_bloom: bool = True,
-        bloom_capacity: int = 1_000_000,
-        bloom_bits_per_item: int = 12,
-        bloom_k: int = 5,
         fingerprint_k: int | None = None,
-        bloom_shards: int | None = None,
         minhash_index_path: str | None = None,
         minhash_bands: int = 16,
     ):
         self.spark = spark
         self.catalog = catalog
         self.politeness = politeness
-        self.use_bloom = use_bloom
-        # bloom_shards: hash-range sharded filter (the 10^10-key layout).
-        # CATALOG-resident since round 4: blobs live as one catalog row
-        # per shard (range-aligned with `seen`), membership cogroups each
-        # candidate partition with ITS shard's blob executor-side, and a
-        # restarted engine resumes from the committed shard table — no
-        # driver blob dict, no full seen-table rebuild pass on resume.
-        self._sharded: CatalogShardedBloom | None = None
-        if use_bloom and bloom_shards:
-            per_shard = max(1 << 14, bloom_bits_for(bloom_capacity, bloom_bits_per_item) // bloom_shards)
-            self._sharded = CatalogShardedBloom(
-                catalog, n_shards=bloom_shards, bits_per_shard=per_shard, k=bloom_k
-            )
-            if not catalog.exists(self._sharded.table) and catalog.exists(SEEN_TABLE):
-                # one-time migration of a pre-round-4 catalog (seen rows
-                # exist, no shard table yet) — never repeated on resume
-                self._sharded.add_df(catalog.read(SEEN_TABLE))
         # fingerprint_k: compute MinHash(k)+SimHash per document IN the
         # extract pass (one Arrow crossing; no re-read of the docs table
         # for the dedup-prep stage). None = extraction only.
@@ -148,17 +132,13 @@ class FrontierEngine:
             # repairable here, the same once-per-engine-lifetime recovery
             # model as _repair_partial_wave.
             self._reconcile_minhash_index()
-        self._bloom_k = bloom_k
-        self._bloom_nbits = bloom_bits_for(bloom_capacity, bloom_bits_per_item)
-        self._bloom: np.ndarray | None = None
         self._bloom_bc = None
-        if use_bloom and not self._sharded:
-            if catalog.exists(SEEN_TABLE):
-                # resume: rebuild once from the committed seen set
-                blob = build_bloom(catalog.read(SEEN_TABLE), "key_hash", self._bloom_nbits, bloom_k)
-                self._bloom = np.frombuffer(blob, dtype=np.uint8).copy()
-            else:
-                self._bloom = np.zeros(self._bloom_nbits // 8, dtype=np.uint8)
+        if catalog.exists(SEEN_TABLE):
+            # resume: rebuild once from the committed seen set
+            blob = build_bloom(catalog.read(SEEN_TABLE), "key_hash", BLOOM_BITS, BLOOM_K)
+            self._bloom = np.frombuffer(blob, dtype=np.uint8).copy()
+        else:
+            self._bloom = np.zeros(BLOOM_BITS // 8, dtype=np.uint8)
 
     # -- bloom maintenance -------------------------------------------------
 
@@ -169,7 +149,7 @@ class FrontierEngine:
 
     def _bloom_add(self, keys_df: DataFrame) -> None:
         """OR this wave's newly-scheduled keys into the running bloom."""
-        blob = build_bloom(keys_df, "key_hash", self._bloom_nbits, self._bloom_k)
+        blob = build_bloom(keys_df, "key_hash", BLOOM_BITS, BLOOM_K)
         self._bloom |= np.frombuffer(blob, dtype=np.uint8)
         if self._bloom_bc is not None:
             self._bloom_bc.unpersist()
@@ -210,12 +190,11 @@ class FrontierEngine:
     def forget(self, urls: DataFrame) -> None:
         """Un-retire urls: rewrite DONE and SEEN without them so a
         recrawl generation can re-fetch (Iceberg's rewrite-files shape;
-        at 10¹⁰ urls you bucket these tables by key hash and rewrite
-        only affected buckets — here they're compacted small tables).
-        The incremental bloom keeps the stale keys: it is only a
-        PREfilter, the exact anti-join against the rewritten SEEN is
-        authoritative, so staleness costs prefilter efficiency for the
-        forgotten keys, never correctness."""
+        here the tables are rewritten whole). The Bloom keeps the stale
+        keys — bits cannot be cleared — so a forgotten key probes
+        maybe-seen and goes through the exact anti-join against the
+        rewritten SEEN, which lets it through: staleness costs prefilter
+        efficiency for the forgotten keys, never correctness."""
         u = urls.select("url").distinct().localCheckpoint(eager=True)
         # SEEN dedups by CANONICAL key, not url: a variant url that
         # shares the key would keep its seen row under a url anti-join
@@ -323,16 +302,13 @@ class FrontierEngine:
         seen_rows = orphans.select("key_hash", "url", F.col("wave").alias("first_seen_wave"))
         if self.catalog.exists(SEEN_TABLE):
             seen_rows = seen_rows.join(
-                self.catalog.read(SEEN_TABLE).select("key_hash").distinct(),
+                self.catalog.read(SEEN_TABLE).select("key_hash"),
                 on="key_hash",
                 how="left_anti",
             )
         # bloom before seen — same superset-invariant ordering as the
         # wave commit (see run_wave step 6)
-        if self._sharded is not None:
-            self._sharded.add_df(seen_rows)
-        elif self.use_bloom:
-            self._bloom_add(seen_rows)
+        self._bloom_add(seen_rows)
         if self.catalog.exists(SEEN_TABLE):
             self.catalog.append(SEEN_TABLE, seen_rows)
         else:
@@ -399,16 +375,10 @@ class FrontierEngine:
 
         # 2. seen filter (incremental bloom prefilter + exact anti-join)
         if self.catalog.exists(SEEN_TABLE):
-            seen = self.catalog.read(SEEN_TABLE)
-            if self._sharded is not None:
-                new = self._sharded.filter_new(pending_u, seen, "key_hash")
-            elif self.use_bloom:
-                new = filter_new_with_bloom(
-                    pending_u, seen, "key_hash",
-                    self._bloom_broadcast(), self._bloom_nbits, self._bloom_k,
-                )
-            else:
-                new = filter_new_exact(pending_u, seen, "key_hash")
+            new = filter_new_with_bloom(
+                pending_u, self.catalog.read(SEEN_TABLE), "key_hash",
+                self._bloom_broadcast(), BLOOM_BITS, BLOOM_K,
+            )
         else:
             new = pending_u
         # materialize once: the politeness chain, the dup-retirement
@@ -477,16 +447,13 @@ class FrontierEngine:
         scheduled_keys = docs_c.select(
             "key_hash", "url", F.lit(wave).alias("first_seen_wave")
         )
-        # bloom BEFORE seen (the safe crash direction): the two commits
-        # are not atomic, and filter_new routes bloom-NEGATIVE rows
-        # straight past the exact anti-join — so the durable invariant
-        # must be bloom ⊇ seen. A crash after the shard commit leaves
-        # extra bits (prune cost only); a crash after a seen commit with
-        # no bits would mean seen urls re-fetched as "definitely new".
-        if self._sharded is not None:
-            self._sharded.add_df(scheduled_keys)
-        elif self.use_bloom:
-            self._bloom_add(scheduled_keys)
+        # bloom BEFORE seen (the safe crash direction): the two steps
+        # are not atomic, and filter_new_with_bloom routes bloom-NEGATIVE
+        # rows straight past the exact anti-join — so the invariant must
+        # be bloom ⊇ seen. A failed seen commit after the OR leaves extra
+        # bits (prune cost only); seen rows without bits would mean seen
+        # urls re-fetched as "definitely new".
+        self._bloom_add(scheduled_keys)
         if self.catalog.exists(SEEN_TABLE):
             self.catalog.append(SEEN_TABLE, _shrink(scheduled_keys))
         else:

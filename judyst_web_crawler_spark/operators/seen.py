@@ -1,20 +1,18 @@
-"""Distributed URL-seen filter: sharded-bloom prefilter + exact anti-join.
+"""URL-seen filter: incremental Bloom prefilter + exact anti-join.
 
-Two-tier design (SURVEY.md §4 custom-op 1, north_star BASELINE.json:6):
+Two tiers (SURVEY.md §4 custom-op 1, north_star BASELINE.json:6):
 
-- TIER 1 (performance): a bloom filter over ``xxhash64(canonical_key)``
-  built from per-partition numpy bit-array shards (``mapInPandas``),
-  OR-merged (associative + deterministic) and broadcast back. Candidates
-  the bloom has definitely NOT seen skip the join entirely.
-- TIER 2 (truth): candidates the bloom *might* have seen go through an
-  exact LEFT ANTI JOIN against the ``seen`` table — bloom false positives
-  can therefore never drop a URL (exact URL-seen parity, BASELINE.json:14).
-
-At 10^10 URLs the seen table is hash-range partitioned on ``key_hash``;
-the bloom shards follow the same ranges so each executor ORs only its
-range before the (small) cross-range merge — the sandbox implementation
-merges partition shards on the driver, which is the same associative
-reduction at local scale.
+- PREFILTER: a Bloom filter over ``xxhash64(canonical_key)``.
+  ``build_bloom`` turns a DataFrame of keys into the bit array
+  (per-partition numpy bit arrays via ``mapInPandas``, OR-merged on the
+  driver). The frontier engine builds it once from the committed
+  ``seen`` table when it starts and then ORs in each wave's scheduled
+  keys, so the bits are never rebuilt from the whole table mid-crawl.
+  Candidates the Bloom has definitely NOT seen skip the join.
+- TRUTH: candidates the Bloom *might* have seen go through the exact
+  LEFT ANTI JOIN against ``seen`` (``filter_new_exact``), so a Bloom
+  false positive can never drop a URL (exact URL-seen parity,
+  BASELINE.json:14).
 
 Hashing: Kirsch-Mitzenmacher double hashing from the single 64-bit key
 (g_i = h_lo + i*h_hi mod n_bits) — k derived probes, no extra hash passes.
@@ -26,31 +24,19 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
-_MASK64 = np.uint64(0xFFFFFFFFFFFFFFFF)
 
-
-def _probe_positions(hashes: np.ndarray, n_bits: int, k: int) -> Iterator[np.ndarray]:
+def _probe_positions(hashes: np.ndarray, n_bits: int, k: int) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """(byte index, bit mask) of each of the k probes per key."""
     h = hashes.astype(np.int64).view(np.uint64)
     lo = h & np.uint64(0xFFFFFFFF)
     hi = (h >> np.uint64(32)) & np.uint64(0xFFFFFFFF)
     for i in range(k):
-        yield ((lo + np.uint64(i) * hi) % np.uint64(n_bits)).astype(np.uint64)
-
-
-def _empty_bits(n_bits: int) -> np.ndarray:
-    return np.zeros(n_bits // 8, dtype=np.uint8)
-
-
-def _set_bits(bits: np.ndarray, positions: np.ndarray) -> None:
-    np.bitwise_or.at(bits, (positions >> np.uint64(3)).astype(np.int64), (np.uint8(1) << (positions & np.uint64(7)).astype(np.uint8)))
-
-
-def _test_bits(bits: np.ndarray, positions: np.ndarray) -> np.ndarray:
-    return (bits[(positions >> np.uint64(3)).astype(np.int64)] & (np.uint8(1) << (positions & np.uint64(7)).astype(np.uint8))) != 0
+        pos = (lo + np.uint64(i) * hi) % np.uint64(n_bits)
+        yield (pos >> np.uint64(3)).astype(np.int64), np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)
 
 
 def bloom_bits_for(n_items: int, bits_per_item: int = 12) -> int:
@@ -66,359 +52,27 @@ def build_bloom(seen_df: DataFrame, hash_col: str, n_bits: int, k: int = 5) -> b
     """Per-partition shards via mapInPandas, OR-merged on the driver.
 
     The shard emit is one row per partition (n_bits/8 bytes each); the
-    merge is an associative bitwise OR — order-independent, deterministic.
+    merge is an associative bitwise OR — order-independent, deterministic,
+    so the OR of two builds equals one build over the union of their keys.
     """
 
     def shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = _empty_bits(n_bits)
+        bits = np.zeros(n_bits // 8, dtype=np.uint8)
         saw = False
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             saw = True
-            hashes = pdf[hash_col].to_numpy(dtype=np.int64)
-            for pos in _probe_positions(hashes, n_bits, k):
-                _set_bits(bits, pos)
+            for idx, mask in _probe_positions(pdf[hash_col].to_numpy(dtype=np.int64), n_bits, k):
+                np.bitwise_or.at(bits, idx, mask)
         if saw:
             yield pd.DataFrame({"shard": [bits.tobytes()]})
 
     shards = seen_df.select(hash_col).mapInPandas(shard, "shard binary").collect()
-    merged = _empty_bits(n_bits)
+    merged = np.zeros(n_bits // 8, dtype=np.uint8)
     for row in shards:
         merged |= np.frombuffer(row["shard"], dtype=np.uint8)
     return merged.tobytes()
-
-
-class SeenFilter:
-    """Exact seen-membership with a broadcast bloom prefilter."""
-
-    def __init__(self, spark: SparkSession, seen_df: DataFrame, hash_col: str = "key_hash", bits_per_item: int = 12, k: int = 5, n_items_hint: int | None = None):
-        self.spark = spark
-        self.seen_df = seen_df
-        self.hash_col = hash_col
-        n_items = n_items_hint if n_items_hint is not None else max(1, seen_df.count())
-        self.n_bits = bloom_bits_for(n_items, bits_per_item)
-        self.k = k
-        blob = build_bloom(seen_df, hash_col, self.n_bits, k)
-        self._bc = spark.sparkContext.broadcast(blob)
-
-    def might_contain_udf(self):
-        n_bits, k, bc = self.n_bits, self.k, self._bc
-
-        @F.pandas_udf(BooleanType())
-        def might_contain(hashes: pd.Series) -> pd.Series:
-            bits = np.frombuffer(bc.value, dtype=np.uint8)
-            h = hashes.to_numpy(dtype=np.int64)
-            hit = np.ones(len(h), dtype=bool)
-            for pos in _probe_positions(h, n_bits, k):
-                hit &= _test_bits(bits, pos)
-            return pd.Series(hit)
-
-        return might_contain
-
-    def filter_new(self, candidates: DataFrame) -> DataFrame:
-        """Rows of ``candidates`` whose ``hash_col`` is NOT in the seen set.
-
-        definitely-new (bloom miss) ∪ (bloom hit ANTI JOIN seen) — exact.
-        """
-        mc = self.might_contain_udf()
-        tagged = candidates.withColumn("_maybe_seen", mc(F.col(self.hash_col)))
-        definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        survivors = maybe.join(
-            self.seen_df.select(self.hash_col), on=self.hash_col, how="left_anti"
-        )
-        return definitely_new.unionByName(survivors)
-
-
-class ShardedBloom:
-    """Hash-RANGE sharded bloom over 64-bit keys (north_star: "per-
-    partition shards, merged via treeAggregate").
-
-    Shard id = top ``log2(n_shards)`` bits of the key — a RANGE sharding,
-    so a cluster deployment can co-partition the seen table and the
-    shard blobs on the same ranges and each executor holds only its own
-    range's blob. Shards are built per input partition and OR-merged
-    EXECUTOR-side via ``reduceByKey`` (associative, deterministic) — the
-    driver receives one blob per shard, never per partition. Incremental
-    adds OR new keys into the affected shards only.
-    """
-
-    def __init__(self, n_shards: int = 16, bits_per_shard: int = 1 << 20, k: int = 5):
-        assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of two"
-        self.n_shards = n_shards
-        self.shard_bits = int(n_shards).bit_length() - 1
-        self.n_bits = bits_per_shard
-        self.k = k
-        self.blobs: dict[int, np.ndarray] = {
-            s: _empty_bits(bits_per_shard) for s in range(n_shards)
-        }
-
-    # -- shard math -------------------------------------------------------
-
-    def shard_of(self, hashes: np.ndarray) -> np.ndarray:
-        u = hashes.astype(np.int64).view(np.uint64)
-        return (u >> np.uint64(64 - self.shard_bits)).astype(np.int64) if self.shard_bits else np.zeros(len(u), dtype=np.int64)
-
-    # -- build / add ------------------------------------------------------
-
-    def _partition_shards(self, hashes: np.ndarray) -> dict[int, np.ndarray]:
-        out: dict[int, np.ndarray] = {}
-        sh = self.shard_of(hashes)
-        for s in np.unique(sh):
-            bits = _empty_bits(self.n_bits)
-            hs = hashes[sh == s]
-            for pos in _probe_positions(hs, self.n_bits, self.k):
-                _set_bits(bits, pos)
-            out[int(s)] = bits
-        return out
-
-    def add_df(self, df: DataFrame, hash_col: str = "key_hash") -> None:
-        """Executor-side shard build + reduceByKey OR-merge; driver ORs
-        one blob per shard into the running state."""
-        n_bits, k, shard_bits = self.n_bits, self.k, self.shard_bits
-
-        def part_blobs(rows):
-            hs = np.fromiter((r[0] for r in rows), dtype=np.int64)
-            if len(hs) == 0:
-                return
-            u = hs.view(np.uint64)
-            sh = (u >> np.uint64(64 - shard_bits)).astype(np.int64) if shard_bits else np.zeros(len(u), dtype=np.int64)
-            for s in np.unique(sh):
-                bits = _empty_bits(n_bits)
-                for pos in _probe_positions(hs[sh == s], n_bits, k):
-                    _set_bits(bits, pos)
-                yield (int(s), bits.tobytes())
-
-        merged = (
-            df.select(hash_col).rdd.mapPartitions(part_blobs)
-            .reduceByKey(lambda a, b: (np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)).tobytes())
-            .collectAsMap()
-        )
-        for s, blob in merged.items():
-            self.blobs[s] |= np.frombuffer(blob, dtype=np.uint8)
-
-    # -- membership -------------------------------------------------------
-
-    def broadcast(self, spark: SparkSession):
-        return spark.sparkContext.broadcast({s: b.tobytes() for s, b in self.blobs.items()})
-
-    def might_contain_udf(self, spark: SparkSession):
-        bc = self.broadcast(spark)
-        n_bits, k, shard_bits = self.n_bits, self.k, self.shard_bits
-
-        @F.pandas_udf(BooleanType())
-        def might_contain(hashes: pd.Series) -> pd.Series:
-            blobs = {s: np.frombuffer(b, dtype=np.uint8) for s, b in bc.value.items()}
-            h = hashes.to_numpy(dtype=np.int64)
-            u = h.view(np.uint64)
-            sh = (u >> np.uint64(64 - shard_bits)).astype(np.int64) if shard_bits else np.zeros(len(u), dtype=np.int64)
-            hit = np.ones(len(h), dtype=bool)
-            for s in np.unique(sh):
-                mask = sh == s
-                shard_hits = np.ones(mask.sum(), dtype=bool)
-                for pos in _probe_positions(h[mask], n_bits, k):
-                    shard_hits &= _test_bits(blobs[int(s)], pos)
-                hit[mask] = shard_hits
-            return pd.Series(hit)
-
-        return might_contain
-
-    def filter_new(self, candidates: DataFrame, seen_df: DataFrame, hash_col: str = "key_hash") -> DataFrame:
-        """Two-tier: bloom-definite-new ∪ (maybe-seen ANTI JOIN seen)."""
-        mc = self.might_contain_udf(candidates.sparkSession)
-        tagged = candidates.withColumn("_maybe_seen", mc(F.col(hash_col)))
-        definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        survivors = maybe.join(seen_df.select(hash_col).distinct(), on=hash_col, how="left_anti")
-        return definitely_new.unionByName(survivors)
-
-
-class CatalogShardedBloom:
-    """Hash-range sharded bloom whose shard blobs live IN THE CATALOG —
-    one row per shard, range-aligned with the ``seen`` table — instead of
-    a driver-held dict (the round-3 reduction this class replaces:
-    ``ShardedBloom.blobs``).
-
-    Properties the driver-held version only documented:
-
-    - **No blob set on the driver, ever.** ``add_df`` builds per-partition
-      shard deltas executor-side (``mapPartitions``), OR-merges them
-      executor-side (``reduceByKey``, associative + deterministic), and
-      MERGEs them into the shard table via the catalog — the blobs move
-      parquet→executor→parquet. Membership runs as a cogrouped
-      ``applyInPandas``: candidates repartition by shard id, each task
-      holds exactly ITS shard's blob (the executor-residency the range
-      alignment promises at 10^10 keys).
-    - **Resume is free.** A restarted engine reads the committed shard
-      table; there is no full seen-table rebuild pass.
-    - **Incremental adds touch only affected shards.** A delta that maps
-      to shard s reads and rewrites shard s's row; absent rows mean
-      all-zero bits, so a fresh table needs no seeding.
-
-    Still a PREfilter: the exact anti-join against ``seen`` stays
-    authoritative, so a lost/stale shard row costs prune efficiency,
-    never correctness.
-    """
-
-    TABLE = "bloom_shards"
-
-    def __init__(
-        self,
-        catalog,
-        n_shards: int = 16,
-        bits_per_shard: int = 1 << 20,
-        k: int = 5,
-        table: str | None = None,
-    ):
-        assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of two"
-        self.catalog = catalog
-        self.n_shards = n_shards
-        self.n_bits = bits_per_shard
-        self.k = k
-        self.table = table or self.TABLE
-        # A committed shard table carries its geometry, and a resuming
-        # instance ADOPTS it: probing committed blobs with a different
-        # (n_shards, n_bits, k) would hit wrong bit positions → false
-        # negatives → seen urls re-fetched. Constructor args are only a
-        # proposal for a table that does not exist yet.
-        if self.catalog.exists(self.table):
-            row = self.catalog.read(self.table).select("n_shards", "n_bits", "k").first()
-            if row is not None:
-                self.n_shards = int(row["n_shards"])
-                self.n_bits = int(row["n_bits"])
-                self.k = int(row["k"])
-        self.shard_bits = int(self.n_shards).bit_length() - 1
-
-    def _with_geometry(self, df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("n_shards", F.lit(self.n_shards))
-            .withColumn("n_bits", F.lit(self.n_bits))
-            .withColumn("k", F.lit(self.k))
-        )
-
-    def _shard_col(self, hash_col: str):
-        # top log2(n_shards) bits of the key — same rule as the numpy
-        # side (uint64 view >> (64 - shard_bits)); logical shift keeps
-        # negative int64 keys consistent between JVM and numpy
-        if not self.shard_bits:
-            return F.lit(0).cast("int")
-        return F.shiftrightunsigned(F.col(hash_col), 64 - self.shard_bits).cast("int")
-
-    def add_df(self, df: DataFrame, hash_col: str = "key_hash") -> None:
-        """OR new keys into the AFFECTED shards' catalog rows only."""
-        n_bits, k, shard_bits = self.n_bits, self.k, self.shard_bits
-
-        def part_blobs(rows):
-            hs = np.fromiter((r[0] for r in rows), dtype=np.int64)
-            if len(hs) == 0:
-                return
-            u = hs.view(np.uint64)
-            sh = (
-                (u >> np.uint64(64 - shard_bits)).astype(np.int64)
-                if shard_bits
-                else np.zeros(len(u), dtype=np.int64)
-            )
-            for s in np.unique(sh):
-                bits = _empty_bits(n_bits)
-                for pos in _probe_positions(hs[sh == s], n_bits, k):
-                    _set_bits(bits, pos)
-                yield (int(s), bits.tobytes())
-
-        spark = df.sparkSession
-        delta_rdd = (
-            df.select(hash_col)
-            .rdd.mapPartitions(part_blobs)
-            .reduceByKey(
-                lambda a, b: (
-                    np.frombuffer(a, dtype=np.uint8) | np.frombuffer(b, dtype=np.uint8)
-                ).tobytes()
-            )
-        )
-        delta = spark.createDataFrame(delta_rdd, "shard int, bits binary")
-        if not self.catalog.exists(self.table):
-            # absent shard rows = all-zero bits: writing only the delta's
-            # shards IS the complete state
-            self.catalog.overwrite(self.table, self._with_geometry(delta))
-            return
-        existing = self.catalog.read(self.table).select(
-            "shard", F.col("bits").alias("bits_old")
-        )
-        joined = delta.withColumnRenamed("bits", "bits_new").join(
-            existing, "shard", "left"
-        )
-
-        def or_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                merged = [
-                    new
-                    if old is None
-                    else (
-                        np.frombuffer(new, dtype=np.uint8)
-                        | np.frombuffer(old, dtype=np.uint8)
-                    ).tobytes()
-                    for new, old in zip(pdf["bits_new"], pdf["bits_old"])
-                ]
-                yield pd.DataFrame({"shard": pdf["shard"], "bits": merged})
-
-        merged = self._with_geometry(joined.mapInPandas(or_blobs, "shard int, bits binary"))
-        # key-unique by construction (reduceByKey) — merge rewrites only
-        # the affected shards' rows, untouched shards keep their bytes
-        self.catalog.merge_upsert(self.table, merged, keys=["shard"])
-
-    def tag_maybe_seen(
-        self, candidates: DataFrame, hash_col: str = "key_hash", flag_col: str = "_maybe_seen"
-    ) -> DataFrame:
-        """candidates + a boolean bloom verdict, computed by cogrouping
-        candidates with their OWN shard's blob row — one shard blob per
-        task, nothing broadcast, nothing on the driver."""
-        if not self.catalog.exists(self.table):
-            return candidates.withColumn(flag_col, F.lit(False))
-        from pyspark.sql.types import StructField, StructType
-
-        shards = self.catalog.read(self.table)
-        cand = candidates.withColumn("_shard", self._shard_col(hash_col))
-        out_schema = StructType(
-            list(cand.schema.fields) + [StructField(flag_col, BooleanType())]
-        )
-        n_bits, k = self.n_bits, self.k
-
-        def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            out = left.copy()
-            if len(left) == 0:
-                out[flag_col] = pd.Series([], dtype=bool)
-                return out
-            if len(right) == 0:  # no blob row yet = empty shard
-                out[flag_col] = False
-                return out
-            bits = np.frombuffer(right["bits"].iloc[0], dtype=np.uint8)
-            h = left[hash_col].to_numpy(dtype=np.int64)
-            hit = np.ones(len(h), dtype=bool)
-            for pos in _probe_positions(h, n_bits, k):
-                hit &= _test_bits(bits, pos)
-            out[flag_col] = hit
-            return out
-
-        tagged = (
-            cand.groupBy("_shard")
-            .cogroup(shards.groupBy("shard"))
-            .applyInPandas(probe, out_schema)
-        )
-        return tagged.drop("_shard")
-
-    def filter_new(
-        self, candidates: DataFrame, seen_df: DataFrame, hash_col: str = "key_hash"
-    ) -> DataFrame:
-        """Two-tier: bloom-definite-new ∪ (maybe-seen ANTI JOIN seen)."""
-        tagged = self.tag_maybe_seen(candidates, hash_col)
-        definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-        maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        survivors = maybe.join(
-            seen_df.select(hash_col).distinct(), on=hash_col, how="left_anti"
-        )
-        return definitely_new.unionByName(survivors)
 
 
 def bloom_might_contain_udf(bc, n_bits: int, k: int):
@@ -429,8 +83,8 @@ def bloom_might_contain_udf(bc, n_bits: int, k: int):
         bits = np.frombuffer(bc.value, dtype=np.uint8)
         h = hashes.to_numpy(dtype=np.int64)
         hit = np.ones(len(h), dtype=bool)
-        for pos in _probe_positions(h, n_bits, k):
-            hit &= _test_bits(bits, pos)
+        for idx, mask in _probe_positions(h, n_bits, k):
+            hit &= (bits[idx] & mask) != 0
         return pd.Series(hit)
 
     return might_contain
@@ -444,18 +98,19 @@ def filter_new_with_bloom(
     n_bits: int,
     k: int,
 ) -> DataFrame:
-    """Two-tier filter with an externally-maintained bloom (the frontier
-    engine keeps the blob incrementally up to date across waves instead of
-    rebuilding it from the whole seen table each wave)."""
+    """Rows of ``candidates`` whose ``hash_col`` is NOT in ``seen_df``:
+    bloom-definitely-new ∪ (maybe-seen ANTI JOIN seen) — exact. The
+    caller owns the bloom blob ``bc`` and keeps it a superset of
+    ``seen_df``'s keys."""
     mc = bloom_might_contain_udf(bc, n_bits, k)
     tagged = candidates.withColumn("_maybe_seen", mc(F.col(hash_col)))
     definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    survivors = maybe.join(seen_df.select(hash_col).distinct(), on=hash_col, how="left_anti")
-    return definitely_new.unionByName(survivors)
+    return definitely_new.unionByName(filter_new_exact(maybe, seen_df, hash_col))
 
 
 def filter_new_exact(candidates: DataFrame, seen_df: DataFrame, hash_col: str = "key_hash") -> DataFrame:
-    """The truth path alone (D3/D4 anti-join, SURVEY §2.3) — used as the
-    oracle for the bloom path and directly for small frontiers."""
+    """The truth tier alone (D3/D4 anti-join, SURVEY §2.3): the bloom
+    path's maybe-seen branch and its oracle in tests. Duplicate keys on
+    the seen side cannot change a left-anti result, so no distinct()."""
     return candidates.join(seen_df.select(hash_col), on=hash_col, how="left_anti")

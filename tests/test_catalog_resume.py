@@ -64,24 +64,24 @@ def _final_state(cat):
 
 
 def test_resume_with_bloom_rebuild(spark, tmp_path):
-    """Restart with use_bloom=True: the engine rebuilds its bloom from
-    the committed seen table; the prefilter must not change the final
-    seen-set/output vs an uninterrupted bloom run."""
+    """Restart: the engine rebuilds its bloom from the committed seen
+    table; the prefilter must not change the final seen-set/output vs an
+    uninterrupted run."""
     pages = pages_df(spark, n_rows=40, n_hosts=2, seed=11).cache()
     seeds = _seeds_from_pages(pages)
 
     cat_a = SnapshotCatalog(spark, str(tmp_path / "ba"))
-    eng_a = FrontierEngine(spark, cat_a, use_bloom=True)
+    eng_a = FrontierEngine(spark, cat_a)
     eng_a.bootstrap(seeds)
     eng_a.run(pages, budget=6, max_waves=50)
 
     cat_b = SnapshotCatalog(spark, str(tmp_path / "bb"))
-    eng_b1 = FrontierEngine(spark, cat_b, use_bloom=True)
+    eng_b1 = FrontierEngine(spark, cat_b)
     eng_b1.bootstrap(seeds)
     eng_b1.run_wave(pages, budget=6)
     del eng_b1
     cat_b2 = SnapshotCatalog(spark, str(tmp_path / "bb"))
-    eng_b2 = FrontierEngine(spark, cat_b2, use_bloom=True)  # bloom rebuilt from seen
+    eng_b2 = FrontierEngine(spark, cat_b2)  # bloom rebuilt from seen
     eng_b2.run(pages, budget=6, max_waves=50)
 
     assert _final_state(cat_a) == _final_state(cat_b2)
@@ -98,20 +98,20 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
 
     # uninterrupted run
     cat_a = SnapshotCatalog(spark, str(tmp_path / "a"))
-    eng_a = FrontierEngine(spark, cat_a, politeness=pol, use_bloom=False)
+    eng_a = FrontierEngine(spark, cat_a, politeness=pol)
     eng_a.bootstrap(seeds)
     eng_a.run(pages, budget=8, max_waves=50)
 
     # interrupted: run 2 waves, then build a NEW engine over the same
     # catalog dir (fresh process stand-in) and finish
     cat_b = SnapshotCatalog(spark, str(tmp_path / "b"))
-    eng_b1 = FrontierEngine(spark, cat_b, politeness=pol, use_bloom=False)
+    eng_b1 = FrontierEngine(spark, cat_b, politeness=pol)
     eng_b1.bootstrap(seeds)
     eng_b1.run_wave(pages, budget=8)
     eng_b1.run_wave(pages, budget=8)
     del eng_b1
     cat_b2 = SnapshotCatalog(spark, str(tmp_path / "b"))
-    eng_b2 = FrontierEngine(spark, cat_b2, politeness=pol, use_bloom=False)
+    eng_b2 = FrontierEngine(spark, cat_b2, politeness=pol)
     eng_b2.run(pages, budget=8, max_waves=50)
 
     assert _final_state(cat_a) == _final_state(cat_b2)

@@ -31,7 +31,7 @@ def test_multi_depth_crawl_reaches_linked_pages(spark, tmp_path):
         .select("url", F.lit(2).alias("page_seq"), F.lit(0).alias("intra_page_seq"))
     )
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=True)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds)
     eng.crawl(pages, budget=100, max_depth=8)
 

@@ -38,7 +38,7 @@ def test_frontier_end_to_end_with_bloom(spark, tmp_path):
     )
 
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, politeness=pol, use_bloom=True)
+    eng = FrontierEngine(spark, cat, politeness=pol)
     eng.bootstrap(seeds)
     stats = eng.run(pages, budget=10, max_waves=30)
     assert len(stats) >= 2

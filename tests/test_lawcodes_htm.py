@@ -16,13 +16,25 @@ non-circular — the reference's own loops run. The text-extraction layer
 inside both sides goes through ``html_text_content`` (real lxml is not
 installable here), so that layer is pinned separately by GOLDEN literal
 strings: ``test_text_layer_golden_strings`` below and
-tests/test_extraction_parity.py."""
+tests/test_extraction_parity.py.
+
+The parity tests skip when the reference checkout is absent. The golden
+pins (``test_*_golden``) always run: tests/data/lawcodes_htm_golden.json
+holds the output, on the same fixtures, of the splitter code that last
+passed the parity tests, so a splitter, cleaner or subheader regression
+fails without the reference. Refresh that file only from a run whose
+parity tests pass."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import random
 import re
 import sys
 import types
+from pathlib import Path
 
 import pytest
 
@@ -62,6 +74,8 @@ def ref():
     sys.modules["lxml.html"] = fake_html
     try:
         path = "/root/reference/web_crawler/law_codes.py"
+        if not os.path.exists(path):
+            pytest.skip("reference checkout absent")
         with open(path, encoding="utf-8") as f:
             src = f.read()
         # Python ≥3.11 rejects mid-pattern (?i); on the Pythons the reference
@@ -346,8 +360,6 @@ def test_fuzz_split_and_clean_parity(ref):
     """50 seeded random documents through BOTH implementations: the
     split blocks AND the cleaned lines + harvested notes must be equal.
     This is the property-based extension of the fixture parity above."""
-    import random
-
     for seed in range(50):
         rng = random.Random(seed)
         htm = _random_htm(rng)
@@ -364,6 +376,52 @@ def test_fuzz_split_and_clean_parity(ref):
             assert lines == theirs[t]["lines"], f"seed {seed}: {t}"
             assert cons == theirs[t].get("cons_note"), f"seed {seed}: {t}"
             assert rd == theirs[t].get("redaction_note"), f"seed {seed}: {t}"
+
+
+# ------------------------------------------------------------ golden pins
+
+GOLDEN = json.loads(
+    (Path(__file__).parent / "data" / "lawcodes_htm_golden.json").read_text(encoding="utf-8")
+)
+
+
+def _engine_view(htm: str) -> dict:
+    """Everything the reference-parity tests compare, engine side only:
+    contents titles (X1), split blocks (X1), cleaned lines + harvested
+    notes (X2) and each article's note/part children (X3/X4)."""
+    blocks = {}
+    for title, block in H.split_saved_htm(htm).items():
+        lines, cons, rd = H.clean_block(block["lines"])
+        children = []
+        if block["type"] == "СТ":
+            note, parts = H.split_article_children(H.article_entries(lines))
+            children = ([note] if note else []) + parts
+        blocks[title] = {
+            "htm_par_num": block["htm_par_num"],
+            "type": block["type"],
+            "lines": block["lines"],
+            "clean_lines": lines,
+            "cons_note": cons,
+            "redaction_note": rd,
+            "children": children,
+        }
+    return {"contents_titles": H.contents_titles(htm), "blocks": blocks}
+
+
+@pytest.mark.parametrize("builder", [make_htm, make_htm_with_table])
+def test_fixture_output_golden(builder):
+    assert _engine_view(builder()) == GOLDEN[builder.__name__]
+
+
+def test_fuzz_split_and_clean_golden():
+    """The 50 seeded random documents of the fuzz parity test, one
+    digest of the engine's view per seed."""
+    got = []
+    for seed in range(50):
+        view = _engine_view(_random_htm(random.Random(seed)))
+        blob = json.dumps(view, ensure_ascii=False, sort_keys=True).encode("utf-8")
+        got.append(hashlib.sha256(blob).hexdigest()[:16])
+    assert got == GOLDEN["fuzz_sha256_16"]
 
 
 def test_text_layer_golden_strings():

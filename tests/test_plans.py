@@ -135,32 +135,3 @@ def test_dsir_weights_plan_broadcasts_ratio_no_python(spark):
     w = D.importance_weights(feats, ratio)
     assert P.broadcast_hint_count(w) >= 1
     assert P.python_eval_ops(w) == 0
-
-
-def test_bucketed_seen_anti_join_has_no_shuffle(spark, tmp_path):
-    """Both sides written bucketed by key_hash into the same bucket
-    count → the anti-join plans with ZERO exchanges (the hash-range
-    co-location the north star names for the 10^10-key seen-set)."""
-    from judyst_web_crawler_spark.sources import bucketed as B
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bkt LOCATION '{tmp_path}/wh'")
-    pending = spark.range(500).select(
-        F.xxhash64("id").alias("key_hash"), F.concat(F.lit("u"), F.col("id")).alias("url")
-    )
-    seen = spark.range(0, 500, 2).select(F.xxhash64("id").alias("key_hash"))
-    B.write_bucketed(pending, "bkt.pending", n_buckets=8)
-    B.write_bucketed(seen, "bkt.seen", n_buckets=8)
-    # at real scale seen is far past any broadcast threshold; disable it
-    # here so the planner shows the bucketed (co-located) strategy the
-    # 10^10-key case would use
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        q = B.colocated_anti_join(spark, "bkt.pending", "bkt.seen")
-        assert P.shuffle_count(q) == 0, P.simple_plan(q)
-        assert "Bucketed: true" in P.formatted_plan(q)
-        assert q.count() == 250
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    spark.sql("DROP TABLE bkt.pending")
-    spark.sql("DROP TABLE bkt.seen")

@@ -72,7 +72,7 @@ def test_engine_budget1_single_host_reference_order(spark, tmp_path):
         for r in seeds.orderBy("page_seq", "intra_page_seq").collect()
     ]
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=False)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds)
     eng.run(pages, budget=1, n_salts=1, max_waves=20)
     docs = cat.read(DOCS_TABLE).orderBy("wave").collect()

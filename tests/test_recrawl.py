@@ -88,7 +88,7 @@ def test_engine_recrawl_generation(spark, tmp_path):
                 F.col("_rn").cast("int").alias("intra_page_seq"))
     )
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=True)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds)
     eng.run(pages, budget=10, max_waves=10)
     assert cat.read(DOCS_TABLE).count() == 24
@@ -177,7 +177,7 @@ def test_recrawl_survives_engine_restart_repair(spark, tmp_path):
     )
     root = str(tmp_path / "cat")
     cat = SnapshotCatalog(spark, root)
-    eng = FrontierEngine(spark, cat, use_bloom=True)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds)
     eng.run(pages, budget=6, max_waves=10)
     n = eng.enqueue_recrawl(aged, now=1_000_000, per_host_k=1)
@@ -185,7 +185,7 @@ def test_recrawl_survives_engine_restart_repair(spark, tmp_path):
 
     # restart: new engine, repair runs before its first wave
     cat2 = SnapshotCatalog(spark, root)
-    eng2 = FrontierEngine(spark, cat2, use_bloom=True)
+    eng2 = FrontierEngine(spark, cat2)
     eng2.run(pages, budget=6, max_waves=10)
     docs = cat2.read(DOCS_TABLE)
     assert docs.count() == 12 + n       # recrawl happened, not cancelled

@@ -76,7 +76,7 @@ def test_fetch_miss_retired_not_documented(spark, tmp_path):
         "url string, page_seq int, intra_page_seq int",
     )
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=False)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds.unionByName(ghost))
     stats = eng.run(pages, budget=50, max_waves=10)
     docs = cat.read(DOCS_TABLE)
@@ -120,7 +120,7 @@ def test_crash_after_docs_commit_repairs_on_resume(spark, tmp_path):
     )
     root = str(tmp_path / "cat")
     crash_cat = _CrashingCatalog(spark, root, crash_table="seen")
-    eng = FrontierEngine(spark, crash_cat, use_bloom=False)
+    eng = FrontierEngine(spark, crash_cat)
     eng.bootstrap(seeds)
     try:
         eng.run_wave(pages, budget=8)
@@ -130,7 +130,7 @@ def test_crash_after_docs_commit_repairs_on_resume(spark, tmp_path):
 
     # resume with a fresh engine over the same state
     cat2 = SnapshotCatalog(spark, root)
-    eng2 = FrontierEngine(spark, cat2, use_bloom=False)
+    eng2 = FrontierEngine(spark, cat2)
     eng2.run(pages, budget=8, max_waves=20)
     docs = cat2.read(DOCS_TABLE)
     # every url fetched EXACTLY once despite the crash
@@ -172,7 +172,7 @@ def test_inprocess_retry_after_midwave_failure(spark, tmp_path):
     )
     root = str(tmp_path / "cat")
     crash_cat = _CrashingCatalog(spark, root, crash_table="seen")
-    eng = FrontierEngine(spark, crash_cat, use_bloom=False)
+    eng = FrontierEngine(spark, crash_cat)
     eng.bootstrap(seeds)
     try:
         eng.run_wave(pages, budget=8)

@@ -60,24 +60,25 @@ def test_index_gen_handles_file_uri_paths(spark, tmp_path):
 
 
 def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
-    """The shard table must receive a wave's keys BEFORE the seen table
-    does: bloom-false-negatives bypass the exact anti-join (filter_new
-    routes bloom-negative rows straight to 'definitely new'), so a crash
-    between the two commits is only safe in the bloom-superset direction.
-    Pin the order, then the invariant itself."""
+    """The engine's Bloom must receive a wave's keys BEFORE the seen
+    table does: bloom-false-negatives bypass the exact anti-join
+    (filter_new_with_bloom routes bloom-negative rows straight to
+    'definitely new'), so a failure between the two steps is only safe
+    in the bloom-superset direction. Pin the order, then the invariant
+    itself."""
     from judyst_web_crawler_spark.operators import frontier as frontier_mod
-    from judyst_web_crawler_spark.operators import seen as seen_mod
+    from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf
 
-    eng, cat, pages = _seeded_engine(spark, tmp_path, use_bloom=True, bloom_shards=4)
+    eng, cat, pages = _seeded_engine(spark, tmp_path)
 
     order: list[str] = []
-    orig_add = seen_mod.CatalogShardedBloom.add_df
+    orig_add = frontier_mod.FrontierEngine._bloom_add
     orig_append = type(cat).append
     orig_overwrite = type(cat).overwrite
 
-    def rec_add(self, df, **kw):
+    def rec_add(self, df):
         order.append("bloom")
-        return orig_add(self, df, **kw)
+        return orig_add(self, df)
 
     def rec_append(self, table, df, **kw):
         if table == frontier_mod.SEEN_TABLE:
@@ -89,21 +90,22 @@ def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
             order.append("seen")
         return orig_overwrite(self, table, df, **kw)
 
-    monkeypatch.setattr(seen_mod.CatalogShardedBloom, "add_df", rec_add)
+    monkeypatch.setattr(frontier_mod.FrontierEngine, "_bloom_add", rec_add)
     monkeypatch.setattr(type(cat), "append", rec_append)
     monkeypatch.setattr(type(cat), "overwrite", rec_overwrite)
 
     eng.run_wave(pages, budget=8)
-    bloom_events = [e for e in order if e in ("bloom", "seen")]
-    assert "bloom" in bloom_events and "seen" in bloom_events
-    assert bloom_events.index("bloom") < bloom_events.index("seen"), order
+    assert "bloom" in order and "seen" in order
+    assert order.index("bloom") < order.index("seen"), order
 
     # invariant check: every committed seen key probes positive
     monkeypatch.undo()
-    sb = eng._sharded
     seen_df = cat.read(frontier_mod.SEEN_TABLE)
-    tagged = sb.tag_maybe_seen(seen_df.select("key_hash"))
-    assert tagged.filter(~F.col("_maybe_seen")).count() == 0
+    assert seen_df.count() > 0
+    mc = bloom_might_contain_udf(
+        eng._bloom_broadcast(), frontier_mod.BLOOM_BITS, frontier_mod.BLOOM_K
+    )
+    assert seen_df.filter(~mc(F.col("key_hash"))).count() == 0
     pages.unpersist()
 
 

@@ -1,5 +1,5 @@
 """Round-4 pins: hashed exact-substring shuffle, ADVICE.md r3 fixes,
-executor-resident bloom shards, widened lang-ID, engine↔index wiring."""
+widened lang-ID, engine↔index wiring."""
 
 from __future__ import annotations
 
@@ -223,103 +223,6 @@ def test_ann_candidates_arrow_preserves_input_types(spark):
     ]
     rows = out.collect()
     assert rows and all(r["vec_id"].startswith("v") for r in rows)
-
-
-# ------------------------------------------- catalog-resident bloom (r4)
-
-
-def test_catalog_bloom_equals_exact_and_adopts_geometry(spark, tmp_path):
-    """Two-tier filter parity vs the exact anti-join, with blobs living
-    in the catalog; a resuming instance ADOPTS the committed geometry
-    (probing with mismatched n_bits/k would create false negatives)."""
-    from judyst_web_crawler_spark.operators.seen import (
-        CatalogShardedBloom,
-        filter_new_exact,
-    )
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    seen = spark.range(500).select(F.xxhash64("id").alias("key_hash"))
-    cands = spark.range(300, 900).select(F.xxhash64("id").alias("key_hash"))
-    sb = CatalogShardedBloom(cat, n_shards=8, bits_per_shard=1 << 16, k=5)
-    sb.add_df(seen)
-    got = {r["key_hash"] for r in sb.filter_new(cands, seen).collect()}
-    want = {r["key_hash"] for r in filter_new_exact(cands, seen).collect()}
-    assert got == want
-    # no false negatives, ever: every member tests maybe-seen
-    misses = sb.tag_maybe_seen(seen).filter(~F.col("_maybe_seen")).count()
-    assert misses == 0
-    # a second instance with a DIFFERENT proposal adopts the committed geometry
-    sb2 = CatalogShardedBloom(cat, n_shards=2, bits_per_shard=1 << 10, k=3)
-    assert (sb2.n_shards, sb2.n_bits, sb2.k) == (8, 1 << 16, 5)
-    misses2 = sb2.tag_maybe_seen(seen).filter(~F.col("_maybe_seen")).count()
-    assert misses2 == 0
-
-
-def test_catalog_bloom_add_touches_only_affected_shards(spark, tmp_path):
-    """Incremental add rewrites ONLY the shards its keys map to; every
-    other shard row keeps byte-identical bits."""
-    from judyst_web_crawler_spark.operators.seen import CatalogShardedBloom
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    sb = CatalogShardedBloom(cat, n_shards=8, bits_per_shard=1 << 15, k=5)
-    spread = spark.range(2000).select(F.xxhash64("id").alias("key_hash"))
-    sb.add_df(spread)
-    before = {r["shard"]: bytes(r["bits"]) for r in cat.read(sb.table).collect()}
-    assert len(before) >= 4  # xxhash spread actually hit several shards
-    # small positive int64 keys have top bits 0 → all map to shard 0
-    shard0 = spark.range(1, 200).select(F.col("id").alias("key_hash"))
-    sb.add_df(shard0)
-    after = {r["shard"]: bytes(r["bits"]) for r in cat.read(sb.table).collect()}
-    assert after[0] != before[0]
-    for s in before:
-        if s != 0:
-            assert after[s] == before[s], f"shard {s} changed without new keys"
-    # and the new keys are all visible
-    assert sb.tag_maybe_seen(shard0).filter(~F.col("_maybe_seen")).count() == 0
-
-
-def test_engine_resume_reads_committed_bloom_no_rebuild(spark, tmp_path, monkeypatch):
-    """A restarted engine must NOT rebuild the bloom from a full
-    seen-table pass: the committed shard table is the resume state."""
-    from pyspark.sql import Window
-
-    from judyst_web_crawler_spark.datagen import pages_df
-    from judyst_web_crawler_spark.operators import seen as seen_mod
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    pages = pages_df(spark, n_rows=30, n_hosts=3, seed=7).cache()
-    seeds = (
-        pages.select("url")
-        .withColumn("_rn", F.row_number().over(Window.orderBy("url")))
-        .select(
-            "url",
-            F.lit(2).alias("page_seq"),
-            F.col("_rn").cast("int").alias("intra_page_seq"),
-        )
-    )
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=True, bloom_shards=8)
-    eng.bootstrap(seeds)
-    eng.run_wave(pages, budget=6)
-
-    calls: list[int] = []
-    orig = seen_mod.CatalogShardedBloom.add_df
-
-    def counting_add(self, df, **kw):
-        calls.append(1)
-        return orig(self, df, **kw)
-
-    monkeypatch.setattr(seen_mod.CatalogShardedBloom, "add_df", counting_add)
-    eng2 = FrontierEngine(spark, cat, use_bloom=True, bloom_shards=8)
-    assert calls == [], "resume triggered a bloom rebuild from the seen table"
-    # and the resumed engine still crawls correctly (no duplicate fetches)
-    eng2.run(pages, budget=6, max_waves=20)
-    docs = cat.read(DOCS_TABLE)
-    assert docs.count() == docs.select("url").distinct().count() == 30
-    pages.unpersist()
 
 
 # ------------------------------------------------- widened trigram lang-ID

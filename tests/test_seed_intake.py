@@ -34,7 +34,7 @@ def test_streaming_crawl_two_batches_exactly_once(spark, tmp_path):
     _seed_rows(pages, -100, 50).write.parquet(os.path.join(seeds_dir, "b1"))
 
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=True)
+    eng = FrontierEngine(spark, cat)
     stats1 = SI.run_streaming_crawl(
         SI.stream_seeds(spark, seeds_dir + "/*"),
         eng, pages, checkpoint_dir=str(tmp_path / "ckpt"), budget=40,

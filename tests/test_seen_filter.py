@@ -7,9 +7,11 @@ from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
 from judyst_web_crawler_spark.operators.seen import (
-    SeenFilter,
-    ShardedBloom,
+    bloom_bits_for,
+    bloom_might_contain_udf,
+    build_bloom,
     filter_new_exact,
+    filter_new_with_bloom,
 )
 
 
@@ -19,58 +21,81 @@ def _urls(spark, start, n, prefix="http://h.ru/doc"):
     ).withColumn("key_hash", C.key_hash(C.canonical_key("url")))
 
 
+def _probe(spark, keys_df, n_bits, k=5):
+    bc = spark.sparkContext.broadcast(build_bloom(keys_df, "key_hash", n_bits, k))
+    return bc, bloom_might_contain_udf(bc, n_bits, k)
+
+
 def test_bloom_equals_exact(spark):
     seen = _urls(spark, 0, 5000)
     candidates = _urls(spark, 2500, 5000)  # half overlap
-    sf = SeenFilter(spark, seen, "key_hash")
-    got = {r["url"] for r in sf.filter_new(candidates).collect()}
     want = {r["url"] for r in filter_new_exact(candidates, seen, "key_hash").collect()}
-    assert got == want
     assert len(want) == 2500
+    # 12 bits/item (few false positives) and 1024 bits for 5000 keys
+    # (nearly every candidate maybe-seen, so the exact branch decides)
+    for n_bits in (bloom_bits_for(5000, 12), 1024):
+        bc, _ = _probe(spark, seen, n_bits)
+        got = filter_new_with_bloom(candidates, seen, "key_hash", bc, n_bits, 5)
+        assert {r["url"] for r in got.collect()} == want, n_bits
 
 
 def test_bloom_prefilter_prunes(spark):
-    """Sanity: the bloom actually classifies most non-members as
-    definitely-new (prune effectiveness, not just correctness)."""
+    """The bloom classifies most non-members as definitely-new (prune
+    effectiveness) and never misses a member (correctness)."""
     seen = _urls(spark, 0, 4000)
     fresh = _urls(spark, 100000, 4000)
-    sf = SeenFilter(spark, seen, "key_hash")
-    mc = sf.might_contain_udf()
-    fp = fresh.select(mc(F.col("key_hash")).alias("m")).filter(F.col("m")).count()
+    _, mc = _probe(spark, seen, bloom_bits_for(4000, 12))
+    fp = fresh.filter(mc(F.col("key_hash"))).count()
     assert fp < 4000 * 0.05  # fpp well under 5% at 12 bits/item
-    members = seen.select(mc(F.col("key_hash")).alias("m")).filter(~F.col("m")).count()
-    assert members == 0  # no false negatives, ever
+    assert seen.filter(~mc(F.col("key_hash"))).count() == 0  # no false negatives
 
 
 def test_sharded_bloom_equals_exact(spark):
+    """build_bloom's per-partition shards OR-merge to the same bits
+    however the keys are partitioned, and raw xxhash64 keys (negative
+    int64s included) filter exactly like the anti-join."""
     seen = spark.range(500).select((F.xxhash64("id")).alias("key_hash"))
     cands = spark.range(300, 900).select((F.xxhash64("id")).alias("key_hash"))
-    sb = ShardedBloom(n_shards=8, bits_per_shard=1 << 16)
-    sb.add_df(seen)
-    got = {r["key_hash"] for r in sb.filter_new(cands, seen).collect()}
+    n_bits = bloom_bits_for(500, 12)
+    blob = build_bloom(seen.repartition(8), "key_hash", n_bits, 5)
+    assert blob == build_bloom(seen.coalesce(1), "key_hash", n_bits, 5)
+    bc = spark.sparkContext.broadcast(blob)
+    got = {r["key_hash"] for r in filter_new_with_bloom(cands, seen, "key_hash", bc, n_bits, 5).collect()}
     want = {r["key_hash"] for r in filter_new_exact(cands, seen).collect()}
-    assert got == want  # bloom FPs routed through the exact anti-join
+    assert got == want
 
 
 def test_sharded_bloom_incremental_add(spark):
-    batch1 = spark.range(200).select(F.xxhash64("id").alias("key_hash"))
-    batch2 = spark.range(200, 400).select(F.xxhash64("id").alias("key_hash"))
-    sb = ShardedBloom(n_shards=4, bits_per_shard=1 << 15)
-    sb.add_df(batch1)
-    sb.add_df(batch2)
-    all_seen = batch1.unionByName(batch2)
-    # every added key must test positive (no false negatives, ever)
-    mc = sb.might_contain_udf(spark)
-    hits = all_seen.select(mc(F.col("key_hash")).alias("h")).collect()
-    assert all(r["h"] for r in hits)
-    # shards actually spread across the range
+    """The engine's per-wave update: the OR of two incremental
+    build_bloom blobs reports every key of both batches, and equals one
+    build over their union."""
     import numpy as np
 
-    ks = np.array([r["key_hash"] for r in all_seen.collect()], dtype=np.int64)
-    assert len(set(sb.shard_of(ks).tolist())) >= 3
+    batch1 = spark.range(200).select(F.xxhash64("id").alias("key_hash"))
+    batch2 = spark.range(200, 400).select(F.xxhash64("id").alias("key_hash"))
+    n_bits = bloom_bits_for(400, 12)
+    blob1 = np.frombuffer(build_bloom(batch1, "key_hash", n_bits, 5), dtype=np.uint8)
+    blob2 = np.frombuffer(build_bloom(batch2, "key_hash", n_bits, 5), dtype=np.uint8)
+    merged = (blob1 | blob2).tobytes()
+    all_seen = batch1.unionByName(batch2)
+    assert merged == build_bloom(all_seen, "key_hash", n_bits, 5)
+    mc = bloom_might_contain_udf(spark.sparkContext.broadcast(merged), n_bits, 5)
+    assert all_seen.filter(~mc(F.col("key_hash"))).count() == 0
+
+
+def test_engine_bloom_geometry_matches_benchmark_replay():
+    """perfbench's seen-filter replay measures a bloom of
+    bloom_bits_for(1_000_000, 12) bits probed k=5 times; the engine's
+    filter must be that same filter or the replay's seen.* metrics
+    describe something the crawl does not run."""
+    from judyst_web_crawler_spark.operators.frontier import BLOOM_BITS, BLOOM_K
+
+    assert (BLOOM_BITS, BLOOM_K) == (bloom_bits_for(1_000_000, 12), 5)
 
 
 def test_engine_with_sharded_bloom(spark, tmp_path):
+    """A multi-wave crawl through the engine's Bloom (built from
+    build_bloom's per-partition shards) fetches every url once."""
     from judyst_web_crawler_spark.datagen import pages_df
     from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
     from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
@@ -82,10 +107,10 @@ def test_engine_with_sharded_bloom(spark, tmp_path):
         .withColumn("_rn", F.row_number().over(Window.orderBy("url")))
         .select("url", F.lit(2).alias("page_seq"), F.col("_rn").cast("int").alias("intra_page_seq"))
     )
-    # duplicate tail exercises the sharded seen filter across waves
+    # duplicate tail exercises the seen filter across waves
     seeds = seeds.unionByName(seeds.limit(15))
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, use_bloom=True, bloom_shards=8)
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(seeds)
     eng.run(pages, budget=9, max_waves=30)
     docs = cat.read(DOCS_TABLE)
