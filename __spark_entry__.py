@@ -1484,7 +1484,8 @@ def q_minhash_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         minhash_index_write(docs.filter(F.pmod("doc_id", 5) != 0), tmp)
         wave = docs.filter(F.pmod("doc_id", 5) == 0)
-        return minhash_query_index(wave, tmp, docs, threshold=0.5)
+        # the lazy pairs still read the index: materialize before rmtree
+        return minhash_query_index(wave, tmp, docs, threshold=0.5).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

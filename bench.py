@@ -5,7 +5,7 @@ Prints ONE JSON line:
      "frontier": {...}}
 
 - headline queries run at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-  on local[$SPARK_GRAFT_CPUS];
+  on local[<host cores>] ($SPARK_GRAFT_CPUS overrides; session.host_sizing);
 - the frontier benchmark (the north-rule metric: URLs scheduled+deduped/sec)
   runs over a deterministic synthetic pages table of the BASELINE.json:15
   shape, sized by the sf of the input dir, written to parquet first so the
@@ -36,7 +36,6 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -394,7 +393,6 @@ def main() -> None:
 
     spark = get_spark(
         "jwcs-bench",
-        master=f"local[{CPUS}]",
         extra_conf={
             # pandas-UDF stages cost seconds per MB, so scan splits must
             # be sized for parallelism, not for 128MB scan efficiency —

@@ -1,21 +1,21 @@
-"""Deterministic cache release for operators that persist intermediates.
+"""The one laziness policy shared by every operator that returns a DataFrame.
 
-Near-dup / similarity operators persist signature and bucket tables that
-their self-joins consume twice; on a long-lived driver, repeated
-invocations must not accumulate cached blocks until LRU-eviction
-pressure. The shared protocol: materialize the (small) result, then
-unpersist every intermediate handle — one implementation, so the release
-discipline cannot drift between modules (it previously existed twice,
-in dedup_fuzzy and inlined in similarity).
+An operator cuts each intermediate it consumes more than once with
+:func:`cut` (an eager ``localCheckpoint``), so an expensive subplan —
+above all an Arrow signature pass — runs exactly once per call, and
+returns a LAZY plan over those cuts. It never checkpoints its result,
+never hands out persisted handles and has no mode flag. The frontier's
+wave loop follows the same rule.
 
-Trade-off, stated once: ``localCheckpoint`` truncates lineage, so the
-returned result is NOT recomputable after executor loss (blocks live on
-executors only). That is the right default for pair/id-sized results
-consumed promptly; callers on long-lived dynamic-allocation clusters who
-need recompute resilience — or who want to compose/inspect the lazy
-plan — should call the operators with ``materialize=False``, which skips
-both the persist and the checkpoint entirely (nothing to leak, full
-lineage, at the cost of recomputing shared subplans per action).
+Lifetime trade-off, stated once: a cut's blocks live on the executors
+and are freed by Spark's ContextCleaner once the result that reads them
+is garbage-collected on the driver — nothing reaches the Dataset cache,
+so nothing accumulates until LRU pressure on a long-lived driver. A cut
+truncates lineage: after executor loss the returned plan cannot
+recompute the cut part, and the caller re-runs the operator.
+
+Operators call ``cache.cut(...)`` through the module, so a test can
+monkeypatch it to the identity and inspect the full lineage.
 """
 
 from __future__ import annotations
@@ -23,13 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def checkpoint_and_release(df: DataFrame, handles: list[DataFrame]) -> DataFrame:
-    """Materialize ``df`` via an eager ``localCheckpoint``, then unpersist
-    every DataFrame in ``handles`` (same pattern as ``dsir.dsir_weights``).
-    The checkpoint runs BEFORE the release so the cached intermediates are
-    read exactly once more, never recomputed."""
-    try:
-        return df.localCheckpoint(eager=True)
-    finally:
-        for h in handles:
-            h.unpersist()
+def cut(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and return a plan that reads it back."""
+    return df.localCheckpoint(eager=True)

@@ -14,7 +14,14 @@ Four families, each structured for 100 TB scale:
 - n-gram Jaccard: the exact verifier, also usable standalone on small sets.
 
 All signatures are seeded + deterministic (fixed hash mixing constants);
-no wall-clock, no RNG state.
+no wall-clock, no RNG state. One per-document kernel per signature
+(``_minhash_of`` / ``_simhash_of``, over a document's shingle hashes)
+serves the batch operators and the frontier's fused wave UDF alike.
+
+Laziness (``cache.py``): an operator cuts each intermediate it consumes
+more than once — signature and bucket tables before their self-joins —
+so the Arrow pass behind it runs once per call, and returns a lazy plan
+over those cuts.
 """
 
 from __future__ import annotations
@@ -29,15 +36,12 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from judyst_web_crawler_spark.cache import checkpoint_and_release
+from judyst_web_crawler_spark import cache
 from judyst_web_crawler_spark.functions.textstats import normalized_fingerprint
 
 _MERSENNE = (1 << 61) - 1
 
 log = logging.getLogger(__name__)
-
-# release protocol shared with operators.similarity — see cache.py
-_checkpoint_and_release = checkpoint_and_release
 
 
 def _id_derived_schema(df: DataFrame, id_cols: list[str], extra_fields: list):
@@ -57,8 +61,6 @@ def _cap_hot_buckets(
     id_col: str,
     cap: int,
     what: str,
-    handles: list[DataFrame] | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Keep at most ``cap`` members per bucket (deterministic: lowest ids
     win) before a bucket self-join.
@@ -71,40 +73,18 @@ def _cap_hot_buckets(
     confined to pairs whose ONLY collision falls past the cap.
 
     No silent truncation: the dropped row count is computed and logged.
-    The marked bucket table is PERSISTED before the count action so the
-    upstream signature pass (the expensive Arrow stage) runs once, not
-    once for the count and again for the join — and the subsequent
-    bucket SELF-join reads the same persisted table on both sides
-    instead of recomputing it twice. Release protocol: callers pass
-    ``handles`` and release via ``cache.checkpoint_and_release``; with no
-    ``handles`` the persist is scoped to the count action and unpersisted
-    here (nothing is ever left to driver-lifetime LRU).
+    The marked bucket table is cut (``cache.cut``) before that count, so
+    the upstream signature pass runs once — the count and both sides of
+    the bucket self-join read the same cut table.
     """
     w = Window.partitionBy(*key_cols).orderBy(F.col(id_col).asc())
-    marked = rows.withColumn("_rn", F.row_number().over(w))
-    if eager:
-        # the dropped-count action requires materialization; lazy callers
-        # (materialize=False plan composition) skip the persist AND the
-        # count so merely building the plan stays free — the cap filter
-        # itself is identical either way
-        marked = marked.persist()
-        if handles is not None:
-            handles.append(marked)
-        try:
-            dropped = marked.filter(F.col("_rn") > cap).count()
-            if dropped:
-                log.warning(
-                    "%s: hot-bucket cap=%d dropped %d bucket memberships "
-                    "(pairs beyond the cap are not candidates)", what, cap, dropped
-                )
-        finally:
-            # no handles list = no caller owns the release; unpersist now
-            # rather than leak a cached table to LRU on a long-lived
-            # driver (the downstream self-join recomputes the subplan —
-            # correct, just unshared; callers who want the shared read
-            # pass `handles` and release via cache.checkpoint_and_release)
-            if handles is None:
-                marked.unpersist()
+    marked = cache.cut(rows.withColumn("_rn", F.row_number().over(w)))
+    dropped = marked.filter(F.col("_rn") > cap).count()
+    if dropped:
+        log.warning(
+            "%s: hot-bucket cap=%d dropped %d bucket memberships "
+            "(pairs beyond the cap are not candidates)", what, cap, dropped
+        )
     return marked.filter(F.col("_rn") <= cap).drop("_rn")
 
 
@@ -135,7 +115,6 @@ def duplicate_ngram_spans(
     n: int = 8,
     min_docs: int = 2,
     resolve_spans: bool = True,
-    materialize: bool = True,
     broadcast_resolve_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Exact repeated token-n-gram spans ACROSS documents — the
@@ -164,13 +143,12 @@ def duplicate_ngram_spans(
     boilerplate-heavy web corpora the *shared*-span set is itself huge
     (Lee et al. measure double-digit % of tokens inside duplicated
     spans), so an unconditional broadcast of the survivor hashes OOMs
-    the driver exactly when the operator matters most. The default
-    path counts the persisted survivors (one scalar action on the
-    already-persisted ``groups``) and broadcasts only below
+    the driver exactly when the operator matters most. The resolve
+    path counts the cut survivors (one scalar action on the already-cut
+    ``groups``) and broadcasts only below
     ``broadcast_resolve_threshold`` rows (5M ≈ 80 MB of 16 B keys) —
     that path filters singleton spans map-side, so strings cross no
-    exchange before the ``min_docs`` filter. Above the threshold — or
-    whenever ``materialize=False`` means no count is available — the
+    exchange before the ``min_docs`` filter. Above the threshold the
     semi-join runs shuffled: asking for resolved STRINGS over a
     survivor set too big to broadcast inherently costs one exchange of
     the window strings (each string must reach its hash's reducer);
@@ -182,15 +160,12 @@ def duplicate_ngram_spans(
     exactly this; Lee et al.'s production path is suffix-array based —
     this is the shuffle-bounded DataFrame equivalent).
 
-    The resolve path consumes ``groups`` twice (once to build the
-    broadcast survivor set, once as the final join's left side) — the
-    default ``materialize=True`` persists the post-filter ``groups``
-    (small: shared spans only) so the expensive explode+wide-aggregation
-    subplan executes ONCE, then checkpoints the result and releases the
-    handle (cache.checkpoint_and_release trade-offs apply).
-    ``materialize=False`` returns the fully lazy plan — composable and
-    plan-inspectable, at the cost of re-running the wide aggregation for
-    both consumers."""
+    The resolve path consumes ``groups`` three times (the gate's count,
+    the survivor set, the final join's left side), so it cuts the
+    post-filter ``groups`` (small: shared spans only) and the
+    explode+wide-aggregation subplan runs ONCE; the result is a lazy
+    plan over that cut. ``resolve_spans=False`` returns ``groups`` itself,
+    uncut: its caller consumes it once."""
     toks = F.filter(
         F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != F.lit("")
     )
@@ -214,15 +189,11 @@ def duplicate_ngram_spans(
     )
     if not resolve_spans:
         return groups
-    handles: list[DataFrame] = []
-    use_broadcast = False
-    if materialize:
-        groups = groups.persist()
-        handles.append(groups)
-        # size-gate the resolve join (docstring): the count rides the
-        # persisted survivors, so it costs one scalar action, not a
-        # recompute of the wide aggregation
-        use_broadcast = groups.count() <= broadcast_resolve_threshold
+    groups = cache.cut(groups)
+    # size-gate the resolve join (docstring): the count rides the cut
+    # survivors, so it costs one scalar action, not a recompute of the
+    # wide aggregation
+    use_broadcast = groups.count() <= broadcast_resolve_threshold
     # Resolve strings for SURVIVING groups only: re-derive the windows
     # (CPU-linear, no stored intermediate), drop singletons via the
     # semi join, and collapse to one string per hash pair. min(span)
@@ -237,12 +208,9 @@ def duplicate_ngram_spans(
         .groupBy("h1", "h2")
         .agg(F.min("span").alias("span"))
     )
-    out = groups.join(resolved, ["h1", "h2"]).select(
+    return groups.join(resolved, ["h1", "h2"]).select(
         "span", "n_docs", "n_occurrences", "first_doc"
     )
-    if not materialize:
-        return out
-    return checkpoint_and_release(out, handles)
 
 
 def remove_duplicate_spans(
@@ -253,7 +221,6 @@ def remove_duplicate_spans(
     n: int = 8,
     min_docs: int = 2,
     rounds: int = 1,
-    materialize: bool = True,
 ) -> DataFrame:
     """EXCISE cross-document repeated token-n-gram spans — the removal
     half of exact-substring dedup (Lee et al. 2022, "Deduplicating
@@ -299,9 +266,11 @@ def remove_duplicate_spans(
     corpora one round removes everything (pinned on the fixture);
     ``n_tokens_removed`` is cumulative across rounds.
 
-    ``materialize=True`` persists the per-round hit set (small: dirty
-    (id, pos) rows only) so discovery and rebuild share one scan; the
-    handle is released via cache.checkpoint_and_release per round.
+    Each round cuts its covered-position set (small: dirty (id, pos)
+    rows only), which both the dirty-id split and the rebuild anti-join
+    read, and each round before the last cuts its output, which the next
+    round reads four times — so the lazy result's plan holds one round,
+    whatever ``rounds`` is.
     """
     if rounds < 1:
         raise ValueError(f"remove_duplicate_spans: rounds must be >= 1, got {rounds}")
@@ -331,7 +300,7 @@ def remove_duplicate_spans(
         if round_spans is None:
             round_spans = duplicate_ngram_spans(
                 cur, id_col, text_col, n=n, min_docs=min_docs,
-                resolve_spans=False, materialize=False,
+                resolve_spans=False,
             )
         toks = toks_of(F.col(text_col))
         low = F.transform(toks, F.lower)
@@ -365,10 +334,7 @@ def remove_duplicate_spans(
             )
             .distinct()
         )
-        handles: list[DataFrame] = []
-        if materialize:
-            covered = covered.persist()
-            handles.append(covered)
+        covered = cache.cut(covered)
         dirty_ids = covered.select(F.col(id_col)).distinct()
 
         # clean docs: zero-shuffle normalization pass-through
@@ -413,12 +379,11 @@ def remove_duplicate_spans(
             "n_tokens",
             (F.col("n_tokens") - F.col("_n_kept")).alias("n_tokens_removed"),
         )
-        if materialize:
-            out = checkpoint_and_release(out, handles)
         # next round re-tokenizes the cleaned text; `n_tokens` stays the
         # ORIGINAL count, `_n_kept` is always THIS round's survivor
         # count, so `n_tokens_removed` is cumulative with no extra state
-        cur = out
+        if rnd + 1 < rounds:
+            cur = cache.cut(out)
 
     return out
 
@@ -433,30 +398,10 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 # ------------------------------------------------------------- shingles
 
 
-def _shingle_hashes(text: str, n: int = 5) -> np.ndarray:
-    """Character n-gram shingles → uint64 hashes (FNV-1a, deterministic)."""
-    if text is None:
-        return np.empty(0, dtype=np.uint64)
-    data = text.lower().encode("utf-8", "ignore")
-    if len(data) < n:
-        data = data + b" " * (n - len(data))
-    out = np.empty(len(data) - n + 1, dtype=np.uint64)
-    h0 = np.uint64(0xCBF29CE484222325)
-    prime = np.uint64(0x100000001B3)
-    # vectorized FNV over sliding windows via cumulative trick is not
-    # exact; loop per window start but byte ops vectorized per window
-    arr = np.frombuffer(data, dtype=np.uint8)
-    for i in range(len(out)):
-        h = h0
-        for b in arr[i : i + n]:
-            h = (h ^ np.uint64(b)) * prime
-        out[i] = h
-    return np.unique(out)
-
-
 def _shingle_hashes_fast(text: str, n: int = 5) -> np.ndarray:
-    """Vectorized polynomial shingle hashes (the production path; the
-    FNV loop above is kept as the readable spec)."""
+    """Byte n-gram shingles of the lowered UTF-8 text → sorted distinct
+    uint64 hashes: a vectorized polynomial hash per window, finalized
+    with splitmix64."""
     if text is None:
         return np.empty(0, dtype=np.uint64)
     data = text.lower().encode("utf-8", "ignore")
@@ -491,6 +436,32 @@ def _minhash_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
+def _minhash_of(sh: np.ndarray, a: np.ndarray, b: np.ndarray, k: int) -> np.ndarray:
+    """One document's int64[k] MinHash signature from its shingle hashes:
+    min over shingles of (a·x + b) mod p, p = 2^61 - 1, for each of the
+    k permutations (every entry p when the document has no shingles)."""
+    if len(sh) == 0:
+        return np.full(k, _MERSENNE, dtype=np.uint64).astype(np.int64)
+    prod = (sh[None, :] * a[:, None] + b[:, None]) % np.uint64(_MERSENNE)
+    return prod.min(axis=1).astype(np.int64)
+
+
+_SIM_BITMASK = (np.uint64(1) << np.arange(64, dtype=np.uint64))[None, :]
+_SIM_WEIGHTS = np.arange(64, dtype=np.uint64)
+
+
+def _simhash_of(sh: np.ndarray) -> int:
+    """One document's 64-bit SimHash (as a signed int) from its shingle
+    hashes: bit j is set iff more than half of the shingles have bit j
+    set (0 when the document has no shingles)."""
+    if len(sh) == 0:
+        return 0
+    votes = ((sh[:, None] & _SIM_BITMASK) != 0).sum(axis=0) * 2 - len(sh)
+    return int(
+        ((votes > 0).astype(np.uint64) << _SIM_WEIGHTS).sum(dtype=np.uint64).astype(np.int64)
+    )
+
+
 def minhash_signatures(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -506,18 +477,10 @@ def minhash_signatures(
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, sigs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                sh = _shingle_hashes_fast(t, shingle_n)
-                if len(sh) == 0:
-                    sig = np.full(k, _MERSENNE, dtype=np.uint64)
-                else:
-                    # (a*x+b) mod p for all k perms × all shingles
-                    prod = (sh[None, :] * a[:, None] + b[:, None]) % np.uint64(_MERSENNE)
-                    sig = prod.min(axis=1)
-                ids.append(i)
-                sigs.append(sig.astype(np.int64))
-            yield pd.DataFrame({id_col: ids, "signature": sigs})
+            sigs = [
+                _minhash_of(_shingle_hashes_fast(t, shingle_n), a, b, k) for t in pdf[text_col]
+            ]
+            yield pd.DataFrame({id_col: pdf[id_col], "signature": sigs})
 
     from pyspark.sql.types import ArrayType, LongType, StructField
 
@@ -651,22 +614,17 @@ def minhash_lsh_candidates(
     bands: int = 16,
     rows_per_band: int = 4,
     bucket_cap: int | None = None,
-    handles: list[DataFrame] | None = None,
-    eager: bool = True,
 ) -> DataFrame:
     """Band the signatures and self-join buckets → candidate pairs
     (id_a < id_b). bands*rows_per_band must equal the signature length.
 
     ``bucket_cap`` bounds per-(band, bucket) membership before the
     self-join (see ``_cap_hot_buckets``) — set it on corpora with heavy
-    boilerplate; dropped volume is logged, never silent. ``handles``
-    collects any persisted intermediates for the caller to release;
-    ``eager=False`` keeps the cap lazy (no persist, no dropped-count log)."""
+    boilerplate; dropped volume is logged, never silent."""
     banded = band_explode(signatures, id_col, bands, rows_per_band)
     if bucket_cap is not None:
         banded = _cap_hot_buckets(
-            banded, ["band", "bucket"], id_col, bucket_cap,
-            "minhash_lsh_candidates", handles=handles, eager=eager,
+            banded, ["band", "bucket"], id_col, bucket_cap, "minhash_lsh_candidates"
         )
     left = banded.alias("l")
     right = banded.alias("r")
@@ -935,7 +893,6 @@ def minhash_near_duplicates(
     seed: int = 42,
     margin: float | None = 0.15,
     bucket_cap: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-dup pipeline: signatures → band candidates →
     estimate prune → exact Jaccard verify.
@@ -944,32 +901,20 @@ def minhash_near_duplicates(
     candidate goes to the exact verify — no estimator recall loss, at
     the cost of exact-verifying ~n² candidates on boilerplate corpora).
     ``bucket_cap`` bounds per-bucket membership; dropped volume is
-    logged by ``_cap_hot_buckets``. ``materialize=False`` returns the
-    LAZY plan with nothing persisted or checkpointed — full lineage
-    (recompute-safe on executor loss) and composable/inspectable, at the
-    cost of re-running the signature pass per consuming action; the
-    default materializes and deterministically releases intermediates
-    (see cache.checkpoint_and_release for the trade-off)."""
-    sigs = minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n, seed=seed)
-    handles: list[DataFrame] = []
-    if materialize:
-        # the signature table is consumed TWICE (band join + estimate
-        # filter); unpersisted, Spark recomputes the whole Arrow signature
-        # pass for each — the costliest stage doubled. Persist (~20% wall
-        # locally, one full corpus pass saved at scale); released
-        # deterministically below once the pair result is materialized.
-        sigs = sigs.persist()
-        handles.append(sigs)
+    logged by ``_cap_hot_buckets``. Returns a lazy plan over the cut
+    signature table (``cache.py``)."""
+    # the signature table feeds both sides of the band self-join and the
+    # estimate filter: cut it so the Arrow signature pass — the costliest
+    # stage — runs once
+    sigs = cache.cut(
+        minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n, seed=seed)
+    )
     pairs = minhash_lsh_candidates(
-        sigs, id_col, bands=bands, rows_per_band=k // bands,
-        bucket_cap=bucket_cap, handles=handles, eager=materialize,
+        sigs, id_col, bands=bands, rows_per_band=k // bands, bucket_cap=bucket_cap
     )
     if margin is not None:
         pairs = estimate_filter(pairs, sigs, id_col, threshold=threshold, margin=margin)
-    out = jaccard_verify(pairs, df, id_col, text_col, shingle_n, threshold)
-    if not materialize:
-        return out
-    return _checkpoint_and_release(out, handles)
+    return jaccard_verify(pairs, df, id_col, text_col, shingle_n, threshold)
 
 
 # ------------------------------------------- incremental band-bucket index
@@ -1100,7 +1045,6 @@ def minhash_query_index(
     seed: int = 42,
     threshold: float = 0.7,
     margin: float | None = 0.15,
-    materialize: bool = True,
     new_sigs: DataFrame | None = None,
     corpus_latest_by: str | None = None,
 ) -> DataFrame:
@@ -1113,11 +1057,9 @@ def minhash_query_index(
 
     ``corpus_texts`` supplies (id, text) for the exact Jaccard verify —
     pass the documents table; the join is candidate-keyed and
-    column-pruned. ``materialize=False`` returns the lazy plan (for plan
-    assertions / composition) and persists NOTHING — the new-sig subplan
-    is recomputed per consuming action instead of leaking a cached table
-    the caller has no handle to; the default persists, checkpoints the
-    pair result and releases intermediates deterministically.
+    column-pruned. Returns a lazy plan over the cut new-signature table
+    and, when the prune or the corpus dedupe reads it, the cut candidate
+    pairs (``cache.py``).
 
     ``new_sigs`` (optional ``(id, signature)`` rows) skips the Arrow
     fingerprint pass over ``new_df`` entirely — pass it when the wave's
@@ -1140,10 +1082,7 @@ def minhash_query_index(
         )
     else:
         new_sigs = new_sigs.select(id_col, "signature")
-    handles: list[DataFrame] = []
-    if materialize:
-        new_sigs = new_sigs.persist()
-        handles.append(new_sigs)
+    new_sigs = cache.cut(new_sigs)
     new_banded = band_explode(new_sigs, id_col, bands, k // bands)
     idx_bands = spark.read.parquet(os.path.join(path, "bands"))
     idx_sigs = spark.read.parquet(os.path.join(path, "sigs"))
@@ -1168,10 +1107,8 @@ def minhash_query_index(
     if margin is not None or corpus_latest_by is not None:
         # the candidate-id set is consumed by the stored-sig prune and/or
         # the corpus-text dedupe (each consumer re-runs the band join
-        # otherwise) — persist the small pair set alongside new_sigs
-        if materialize:
-            pairs = pairs.persist()
-            handles.append(pairs)
+        # otherwise) — cut the small pair set
+        pairs = cache.cut(pairs)
         cand_ids = (
             pairs.select(F.col("id_a").alias(id_col))
             .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -1231,14 +1168,7 @@ def minhash_query_index(
             .filter(F.col("_rn") == 1)
             .drop("_rn", corpus_latest_by)
         )
-    out = jaccard_verify(pairs, corpus_texts, id_col, text_col, shingle_n, threshold)
-    if not materialize:
-        return out
-    return _checkpoint_and_release(out, handles)
-
-
-_SIM_BITMASK = (np.uint64(1) << np.arange(64, dtype=np.uint64))[None, :]
-_SIM_WEIGHTS = np.arange(64, dtype=np.uint64)
+    return jaccard_verify(pairs, corpus_texts, id_col, text_col, shingle_n, threshold)
 
 
 def fingerprint_text(
@@ -1249,25 +1179,14 @@ def fingerprint_text(
     minhash_shingle_n: int = 5,
     simhash_shingle_n: int = 4,
 ) -> tuple[np.ndarray, int]:
-    """One document's (minhash signature int64[k], simhash int64) — the
-    single normative implementation shared by ``combined_fingerprints``
-    and the frontier's fused extract+fingerprint wave UDF."""
+    """One document's (minhash signature int64[k], simhash int64) from the
+    same two kernels ``minhash_signatures`` and ``simhash_signatures`` run,
+    sharing the shingle pass when both use the same shingle size — used by
+    ``combined_fingerprints`` and the frontier's fused extract+fingerprint
+    wave UDF."""
     sh = _shingle_hashes_fast(text, minhash_shingle_n)
-    if len(sh) == 0:
-        sig = np.full(k, _MERSENNE, dtype=np.uint64).astype(np.int64)
-    else:
-        prod = (sh[None, :] * a[:, None] + b[:, None]) % np.uint64(_MERSENNE)
-        sig = prod.min(axis=1).astype(np.int64)
     sh2 = sh if simhash_shingle_n == minhash_shingle_n else _shingle_hashes_fast(text, simhash_shingle_n)
-    if len(sh2) == 0:
-        sim = 0
-    else:
-        bits = (sh2[:, None] & _SIM_BITMASK) != 0
-        votes = bits.sum(axis=0) * 2 - len(sh2)
-        sim = int(
-            ((votes > 0).astype(np.uint64) << _SIM_WEIGHTS).sum(dtype=np.uint64).astype(np.int64)
-        )
-    return sig, sim
+    return _minhash_of(sh, a, b, k), _simhash_of(sh2)
 
 
 def combined_fingerprints(
@@ -1321,21 +1240,9 @@ def simhash_signatures(
     """64-bit SimHash over shingle hashes (unweighted), vectorized."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bitmask = (np.uint64(1) << np.arange(64, dtype=np.uint64))[None, :]
         for pdf in batches:
-            ids, sigs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                sh = _shingle_hashes_fast(t, shingle_n)
-                if len(sh) == 0:
-                    sigs.append(0)
-                else:
-                    bits = (sh[:, None] & bitmask) != 0  # (n_shingles, 64)
-                    votes = bits.sum(axis=0) * 2 - len(sh)
-                    sig = np.uint64(0)
-                    sig = ((votes > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64)
-                    sigs.append(int(sig.astype(np.int64)))
-                ids.append(i)
-            yield pd.DataFrame({id_col: ids, "simhash": sigs})
+            sims = [_simhash_of(_shingle_hashes_fast(t, shingle_n)) for t in pdf[text_col]]
+            yield pd.DataFrame({id_col: pdf[id_col], "simhash": sims})
 
     from pyspark.sql.types import LongType, StructField
 
@@ -1353,7 +1260,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     shingle_n: int = 4,
     bucket_cap: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Block-technique retrieval: any pair within Hamming distance k must
     agree on ≥1 of k+1 disjoint blocks (pigeonhole) → join per block,
@@ -1361,9 +1267,8 @@ def simhash_near_duplicates(
 
     ``bucket_cap`` bounds per-(block, block_val) membership before the
     self-join (hot-bucket guard, same rationale as the MinHash path);
-    dropped volume is logged, never silent. ``materialize=False`` returns
-    the lazy, lineage-preserving plan with nothing persisted (see
-    ``minhash_near_duplicates``)."""
+    dropped volume is logged, never silent. Returns a lazy plan over the
+    cut block table (``cache.py``)."""
     sigs = simhash_signatures(df, id_col, text_col, shingle_n)
     n_blocks = max_hamming + 1
     width = 64 // n_blocks
@@ -1379,17 +1284,14 @@ def simhash_near_duplicates(
         F.col("simhash"),
         F.posexplode(block_vals).alias("block", "block_val"),
     )
-    handles: list[DataFrame] = []
     if bucket_cap is not None:
         blocks = _cap_hot_buckets(
-            blocks, ["block", "block_val"], id_col, bucket_cap,
-            "simhash_near_duplicates", handles=handles, eager=materialize,
+            blocks, ["block", "block_val"], id_col, bucket_cap, "simhash_near_duplicates"
         )
-    elif materialize:
+    else:
         # the self-join below otherwise recomputes the simhash Arrow pass
-        # for each side (the capped path is already persisted)
-        blocks = blocks.persist()
-        handles.append(blocks)
+        # for each side (the capped path is already cut)
+        blocks = cache.cut(blocks)
     l, r = blocks.alias("l"), blocks.alias("r")
     cand = (
         l.join(
@@ -1407,9 +1309,6 @@ def simhash_near_duplicates(
         .distinct()
     )
     hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
-    out = cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
+    return cand.select("id_a", "id_b", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
-    if not materialize:
-        return out
-    return _checkpoint_and_release(out, handles)

@@ -40,6 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark import cache
+
 TOKEN_SPLIT_RE = r"\s+"
 
 
@@ -144,29 +146,24 @@ def dsir_weights(
     bucket_fn: Callable[[Column, int], Column] | None = None,
 ) -> DataFrame:
     """End-to-end: featurize once, fit p̂ on ``is_target`` rows and q̂ on
-    the whole corpus, score every document. Feature pass is persisted —
-    it feeds the two fits and the scoring join."""
+    the whole corpus, score every document. The feature table feeds the
+    two fits and the scoring join, so it is cut (``cache.py``) and the
+    featurization pass runs once; the result is a lazy plan over it."""
     spark = docs.sparkSession
-    feats = hashed_ngram_features(
-        docs, n_buckets, id_col=id_col, text_col=text_col, bucket_fn=bucket_fn
-    ).persist()
-    try:
-        target_ids = docs.filter(is_target).select(id_col)
-        ratio = bucket_log_ratio(
-            spark,
-            feats.join(F.broadcast(target_ids), on=id_col),
-            feats,
-            n_buckets,
-            alpha,
+    feats = cache.cut(
+        hashed_ngram_features(
+            docs, n_buckets, id_col=id_col, text_col=text_col, bucket_fn=bucket_fn
         )
-        # materialize BEFORE unpersisting: the returned plan reads the
-        # cached features; dropping the cache first would silently rerun
-        # the whole featurization pass at the caller's first action
-        return importance_weights(feats, ratio, id_col=id_col).localCheckpoint(
-            eager=True
-        )
-    finally:
-        feats.unpersist()
+    )
+    target_ids = docs.filter(is_target).select(id_col)
+    ratio = bucket_log_ratio(
+        spark,
+        feats.join(F.broadcast(target_ids), on=id_col),
+        feats,
+        n_buckets,
+        alpha,
+    )
+    return importance_weights(feats, ratio, id_col=id_col)
 
 
 def gumbel_top_k(

@@ -630,7 +630,6 @@ class FrontierEngine:
         wave: int,
         threshold: float = 0.7,
         margin: float | None = 0.15,
-        materialize: bool = True,
     ) -> DataFrame:
         """Near-dup pairs (id_a, id_b, jaccard — ids are key_hash) of
         wave ``wave``'s documents vs EVERYTHING crawled so far, without
@@ -671,7 +670,6 @@ class FrontierEngine:
             bands=self._minhash_bands,
             threshold=threshold,
             margin=margin,
-            materialize=materialize,
             new_sigs=wave_docs.select("key_hash", "signature"),
             corpus_latest_by="wave",
         )

@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from judyst_web_crawler_spark.cache import checkpoint_and_release
+from judyst_web_crawler_spark import cache
 
 
 def _vec(col: Column | str) -> Column:
@@ -476,20 +476,13 @@ def embedding_near_duplicates(
     n_tables: int = 6,
     bits: int = 10,
     seed: int = 42,
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by embedding cosine ≥ threshold: LSH bucket
     self-join for candidates, exact cosine verify. (id_a < id_b).
-    ``materialize=False`` returns the lazy, lineage-preserving plan with
-    nothing persisted (see ``dedup_fuzzy.minhash_near_duplicates``)."""
-    sigs = lsh_signatures(df, dim, id_col, vec_col, n_tables, bits, seed)
-    handles: list[DataFrame] = []
-    if materialize:
-        # self-join consumes the signature subplan twice — persist so the
-        # Arrow hyperplane pass runs once (same rationale as the MinHash
-        # path); released below once the pair result is materialized
-        sigs = sigs.persist()
-        handles.append(sigs)
+    Returns a lazy plan over the cut signature table (``cache.py``)."""
+    # the self-join consumes the signature subplan twice — cut it so the
+    # Arrow hyperplane pass runs once (same rationale as the MinHash path)
+    sigs = cache.cut(lsh_signatures(df, dim, id_col, vec_col, n_tables, bits, seed))
     l, r = sigs.alias("l"), sigs.alias("r")
     pairs = (
         l.join(
@@ -508,9 +501,6 @@ def embedding_near_duplicates(
     joined = attach_pair_sides(pairs, df, id_col, vec_col, "vec_a", "vec_b")
     denom = l2_norm("vec_a") * l2_norm("vec_b")
     cos = F.when(denom == 0, F.lit(0.0)).otherwise(dot_product("vec_a", "vec_b") / denom)
-    out = joined.select("id_a", "id_b", F.round(cos, 6).alias("cosine")).filter(
+    return joined.select("id_a", "id_b", F.round(cos, 6).alias("cosine")).filter(
         F.col("cosine") >= threshold
     )
-    if not materialize:
-        return out
-    return checkpoint_and_release(out, handles)

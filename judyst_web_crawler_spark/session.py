@@ -6,6 +6,7 @@ Single place to set scale-relevant defaults:
 - Arrow on (all extraction UDFs are pandas/Arrow; no per-row Python).
 - shuffle partitions sized to the local core count (on a real cluster
   this is set to ~2-3x total executor cores / handled by AQE coalesce).
+- thread count and driver heap sized from the host (``host_sizing``).
 """
 
 from __future__ import annotations
@@ -51,17 +52,37 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
+def _mem_total_bytes() -> int:
+    with open("/proc/meminfo", encoding="ascii") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def host_sizing() -> tuple[str, str]:
+    """(local-mode thread count, driver heap) for the host running this
+    process: every core (``os.cpu_count()``) and half of physical memory
+    (/proc/meminfo MemTotal), at least 1 GiB. In local mode the driver
+    JVM runs every task; the other half is left to the Python workers
+    the Arrow UDFs fork (one per core) and to the OS.
+    ``SPARK_GRAFT_CPUS`` (a count, or ``*``) and ``SPARK_DRIVER_MEM`` (a
+    JVM size such as ``8g``) override either value."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    heap = os.environ.get("SPARK_DRIVER_MEM") or f"{max(1024, _mem_total_bytes() // 2 >> 20)}m"
+    return cpus, heap
+
+
 def get_spark(
     app_name: str = "judyst-web-crawler-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = host_sizing()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus != "*" else os.cpu_count() or 8
-        shuffle_partitions = int(n)
+        shuffle_partitions = int(cpus) if cpus != "*" else os.cpu_count() or 1
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -73,10 +94,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # documents carry whole page bodies; keep broadcast threshold sane
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        # local mode: the driver JVM runs every task — size the heap for
-        # n_threads × partition buffers (8g thrashes GC at 32 threads with
-        # 100-200MB parquet splits; the sandbox host has 128g)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

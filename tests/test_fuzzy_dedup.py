@@ -3,6 +3,9 @@ must not pair up. MinHash estimates must track exact Jaccard."""
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -73,6 +76,29 @@ def test_combined_fingerprints_match_individual(spark):
     for doc_id in mh:
         assert list(comb[doc_id]["signature"]) == mh[doc_id]
         assert comb[doc_id]["simhash"] == sh[doc_id]
+
+
+def _digest(rows) -> str:
+    return hashlib.sha256(json.dumps(sorted(rows)).encode()).hexdigest()
+
+
+def test_signature_kernels_golden(spark):
+    """Bit-identity pin of the per-document kernels: sha256 over the
+    sorted (doc_id, signature) / (doc_id, simhash) rows of the fixture,
+    recorded before minhash_signatures, simhash_signatures and
+    fingerprint_text were folded onto one MinHash and one SimHash kernel.
+    (test_combined_fingerprints_match_individual alone cannot catch a
+    kernel regression: all three now share the kernels.)"""
+    docs = _docs(spark)
+    mh = [(r["doc_id"], list(r["signature"])) for r in D.minhash_signatures(docs, k=128).collect()]
+    sh = [(r["doc_id"], r["simhash"]) for r in D.simhash_signatures(docs).collect()]
+    cb = [
+        (r["doc_id"], list(r["signature"]), r["simhash"])
+        for r in D.combined_fingerprints(docs, k=128).collect()
+    ]
+    assert _digest(mh) == "a071cf078c21af06f87f6893a442e1fad2030c8145e5fdd92881940f7726286b"
+    assert _digest(sh) == "a76538685b4085116313a93faad6a4768477f8f81c3343fcb1d2f2dfb635718d"
+    assert _digest(cb) == "bfd29b8819d43207cea89ef0d0b23468984ee60054ddd238303c7f2ba4eb4180"
 
 
 def test_hot_bucket_cap_bounds_candidates(spark):

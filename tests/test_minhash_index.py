@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark import cache
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
 from judyst_web_crawler_spark.plans.inspect import formatted_plan
 
@@ -108,7 +109,7 @@ def test_stored_signatures_roundtrip(spark, tmp_path):
     assert n_bands == 16 * docs.count()
 
 
-def test_index_query_plan_has_no_full_corpus_signature_pass(spark, tmp_path):
+def test_index_query_plan_has_no_full_corpus_signature_pass(spark, tmp_path, monkeypatch):
     """The incremental property, plan-asserted: the corpus parquet is
     scanned ONLY by the candidate-keyed verify join (one scan), never fed
     through the Arrow signature stage the batch path runs over it."""
@@ -122,9 +123,9 @@ def test_index_query_plan_has_no_full_corpus_signature_pass(spark, tmp_path):
     wave = spark.createDataFrame(
         [(100, BASE * 3 + " новая волна.")], "doc_id long, text string"
     )
-    plan = formatted_plan(
-        D.minhash_query_index(wave, idx, corpus, threshold=0.5, materialize=False)
-    )
+    # cache.cut as the identity: assert on the full, uncut lineage
+    monkeypatch.setattr(cache, "cut", lambda df: df)
+    plan = formatted_plan(D.minhash_query_index(wave, idx, corpus, threshold=0.5))
     # the committed index IS read...
     assert "idx/bands" in plan
     # ...and the corpus appears exactly ONCE: the verify attaches both
@@ -133,9 +134,8 @@ def test_index_query_plan_has_no_full_corpus_signature_pass(spark, tmp_path):
     # Arrow signature pass (what the batch path runs) would require a
     # SECOND corpus scan to feed it — one scan proves the corpus is never
     # re-fingerprinted. (The wave's own signature subplan DOES reprint
-    # several times in this fully-lazy plan — materialize=False persists
-    # nothing by contract — but it reads only Scan ExistingRDD, the
-    # in-memory wave, never the corpus parquet.)
+    # several times in this uncut plan, but it reads only Scan
+    # ExistingRDD, the in-memory wave, never the corpus parquet.)
     assert plan.count(corpus_path) == 1
     assert "Scan ExistingRDD" in plan
     # nothing persisted while merely building the plan

@@ -124,8 +124,8 @@ def test_q2_single_dim_hint_no_python(spark):
 
 def test_dsir_weights_plan_broadcasts_ratio_no_python(spark):
     """DSIR scoring joins the n_buckets-row ratio table via broadcast and
-    the whole featurize→score pipeline stays JVM-side (the driver query
-    materializes via localCheckpoint, so assert on the operator plan)."""
+    the whole featurize→score pipeline stays JVM-side (dsir_weights
+    cuts its feature table, so assert on the operator plan)."""
     from judyst_web_crawler_spark.operators import dsir as D
 
     docs = _t(spark, "documents")

@@ -4,9 +4,8 @@
   before the merge (the reference's per-record put_data loop semantics);
   a headers-only source (no texts table) backfills via fetch_fn instead
   of crashing.
-- Near-dup operators: ``materialize=False`` returns a lazy,
-  lineage-preserving plan with NOTHING left persisted, and agrees with
-  the eager path; the eager path releases every Dataset-level cache.
+- Near-dup operators: the result over ``cache.cut`` intermediates agrees
+  with the full uncut lineage, and nothing reaches the Dataset cache.
 - Plan inspection: brackets/commas inside string literals don't derail
   the balanced-bracket scan.
 """
@@ -17,7 +16,7 @@ import json
 
 from pyspark.sql import functions as F
 
-from judyst_web_crawler_spark import api
+from judyst_web_crawler_spark import api, cache
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
 from judyst_web_crawler_spark.operators import similarity as S
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
@@ -77,7 +76,7 @@ def test_update_database_from_source_headers_only_source(spark, tmp_path):
     assert texts == {f"D{i}": f"F-D{i}" for i in range(4)}
 
 
-# --------------------------------------------- materialize=False contract
+# ------------------------------------- one laziness policy (cache.cut)
 
 
 def _docs(spark):
@@ -95,65 +94,82 @@ def _cache_manager(spark):
     return spark._jsparkSession.sharedState().cacheManager()
 
 
-def test_minhash_near_dup_lazy_matches_eager_and_leaks_nothing(spark):
-    docs = _docs(spark)
+def _seam_parity(spark, monkeypatch, op) -> set:
+    """``op()``'s pairs with the real ``cache.cut`` equal its pairs with
+    the cut replaced by the identity (the full, uncut lineage), and the
+    real call plus a collect leaves the Dataset cache empty."""
     cm = _cache_manager(spark)
     cm.clearCache()
-    lazy = D.minhash_near_duplicates(docs, threshold=0.5, materialize=False)
-    # building the plan persisted nothing and ran nothing
+    got = {(r["id_a"], r["id_b"]) for r in op().collect()}
     assert cm.isEmpty()
-    got = {(r["id_a"], r["id_b"]) for r in lazy.collect()}
-    assert cm.isEmpty()  # collecting the lazy plan persisted nothing either
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in D.minhash_near_duplicates(docs, threshold=0.5).collect()
-    }
-    assert got == want and (1, 2) in got and (3, 4) in got
-    assert cm.isEmpty()  # the eager path released its Dataset caches too
-
-
-def test_minhash_near_dup_lazy_with_bucket_cap(spark):
-    docs = _docs(spark)
-    cm = _cache_manager(spark)
-    cm.clearCache()
-    lazy = D.minhash_near_duplicates(
-        docs, threshold=0.5, bucket_cap=8, materialize=False
-    )
-    assert cm.isEmpty()  # the capped path must not eagerly persist+count
-    got = {(r["id_a"], r["id_b"]) for r in lazy.collect()}
-    assert (1, 2) in got and (3, 4) in got
-    assert cm.isEmpty()
-
-
-def test_simhash_near_dup_lazy_matches_eager(spark):
-    docs = _docs(spark)
-    cm = _cache_manager(spark)
-    cm.clearCache()
-    lazy = D.simhash_near_duplicates(docs, max_hamming=10, materialize=False)
-    assert cm.isEmpty()
-    got = {(r["id_a"], r["id_b"]) for r in lazy.collect()}
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in D.simhash_near_duplicates(docs, max_hamming=10).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(cache, "cut", lambda df: df)
+        want = {(r["id_a"], r["id_b"]) for r in op().collect()}
     assert got == want
-    assert cm.isEmpty()
+    return got
 
 
-def test_embedding_near_dup_lazy_matches_eager(spark):
+def test_minhash_near_dup_lazy_matches_eager_and_leaks_nothing(spark, monkeypatch):
+    docs = _docs(spark)
+    got = _seam_parity(
+        spark, monkeypatch, lambda: D.minhash_near_duplicates(docs, threshold=0.5)
+    )
+    assert (1, 2) in got and (3, 4) in got
+
+
+def test_minhash_near_dup_lazy_with_bucket_cap(spark, monkeypatch):
+    docs = _docs(spark)
+    got = _seam_parity(
+        spark,
+        monkeypatch,
+        lambda: D.minhash_near_duplicates(docs, threshold=0.5, bucket_cap=8),
+    )
+    assert (1, 2) in got and (3, 4) in got
+
+
+def test_simhash_near_dup_lazy_matches_eager(spark, monkeypatch):
+    docs = _docs(spark)
+    got = _seam_parity(
+        spark, monkeypatch, lambda: D.simhash_near_duplicates(docs, max_hamming=10)
+    )
+    assert got
+
+
+def test_embedding_near_dup_lazy_matches_eager(spark, monkeypatch):
     rows = [(i, [1.0 if j == i % 4 else 0.01 * i for j in range(8)]) for i in range(10)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cm = _cache_manager(spark)
-    cm.clearCache()
-    lazy = S.embedding_near_duplicates(emb, dim=8, threshold=0.9, materialize=False)
-    assert cm.isEmpty()
-    got = {(r["id_a"], r["id_b"]) for r in lazy.collect()}
-    want = {
-        (r["id_a"], r["id_b"])
-        for r in S.embedding_near_duplicates(emb, dim=8, threshold=0.9).collect()
-    }
-    assert got == want and got  # non-vacuous: planted same-axis near-dups
-    assert cm.isEmpty()
+    got = _seam_parity(
+        spark,
+        monkeypatch,
+        lambda: S.embedding_near_duplicates(emb, dim=8, threshold=0.9),
+    )
+    assert got  # non-vacuous: planted same-axis near-dups
+
+
+def test_cut_signature_pass_runs_once(spark):
+    """Each cut intermediate is computed once per call: a counting UDF
+    on the input text sees every row twice in the MinHash pipeline (the
+    signature pass + the verify's text lookup; an uncut signature table
+    is recomputed for the band join's sides and the estimate filter)
+    and once in the SimHash pipeline, with or without a bucket cap."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tag(t):
+        acc.add(1)
+        return t
+
+    docs = _docs(spark)
+    n = docs.count()
+    counted = docs.select("doc_id", F.udf(tag, "string")("text").alias("text"))
+    for op, evals in (
+        (lambda: D.minhash_near_duplicates(counted, threshold=0.5), 2 * n),
+        (lambda: D.minhash_near_duplicates(counted, threshold=0.5, bucket_cap=8), 2 * n),
+        (lambda: D.simhash_near_duplicates(counted, max_hamming=10), n),
+        (lambda: D.simhash_near_duplicates(counted, max_hamming=10, bucket_cap=8), n),
+    ):
+        acc.value = 0
+        op().collect()
+        assert acc.value == evals
 
 
 def test_ann_topk_jvm_uses_ann_candidates(spark):

@@ -9,6 +9,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark import cache
+
 
 def _seeded_engine(spark, tmp_path, **engine_kw):
     from judyst_web_crawler_spark.datagen import pages_df
@@ -138,7 +140,7 @@ def test_near_dups_of_wave_single_row_per_pair_after_recrawl(spark, tmp_path):
     # precondition: the fan-out hazard actually exists in this fixture
     assert docs.count() > docs.select("key_hash").distinct().count()
 
-    pairs = eng.near_dups_of_wave(last_wave, threshold=0.5, materialize=False)
+    pairs = eng.near_dups_of_wave(last_wave, threshold=0.5)
     rows = pairs.select("id_a", "id_b").collect()
     keys = [(r["id_a"], r["id_b"]) for r in rows]
     assert len(keys) == len(set(keys)), "recrawled ids fanned pairs out"
@@ -212,7 +214,7 @@ def test_index_commit_crash_is_reconciled_on_restart(spark, tmp_path, monkeypatc
     }
     assert wave_ids <= idx_ids, "restart did not re-append the crashed wave's sigs"
     # and the incremental query over that wave works end-to-end
-    pairs = eng2.near_dups_of_wave(crashed_wave, threshold=0.5, materialize=False)
+    pairs = eng2.near_dups_of_wave(crashed_wave, threshold=0.5)
     pairs.collect()  # no error; content checked by the recall tests
     pages.unpersist()
 
@@ -239,7 +241,7 @@ def test_fill_data_source_rejects_uri_directory(spark, tmp_path):
 # --------------------------- corpus dedupe stays candidate-sized at scale
 
 
-def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path):
+def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path, monkeypatch):
     """The last-wins dedupes inside near_dups_of_wave must operate on
     CANDIDATE-pruned rows, never on the raw corpus: in the optimized
     logical plan, every row_number Window (stored-sig last-wins AND
@@ -253,9 +255,9 @@ def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path):
         minhash_index_path=str(tmp_path / "idx"),
     )
     stats = eng.run(pages, budget=10, max_waves=10)
-    pairs = eng.near_dups_of_wave(
-        stats[-1]["wave"], threshold=0.5, materialize=False
-    )
+    # cache.cut as the identity: inspect the full, uncut lineage
+    monkeypatch.setattr(cache, "cut", lambda df: df)
+    pairs = eng.near_dups_of_wave(stats[-1]["wave"], threshold=0.5)
     lines = (
         pairs._jdf.queryExecution().optimizedPlan().toString().splitlines()
     )
@@ -323,15 +325,10 @@ def test_near_dups_recrawl_no_duplicate_pairs(spark, tmp_path):
     eng.enqueue_recrawl(recrawl, now=4_000_000_000, per_host_k=n_clones)
     stats2 = eng.run(pages, budget=100, n_salts=2)
     last2 = stats2[-1]["wave"]
-    for materialize in (False, True):
-        got = eng.near_dups_of_wave(
-            last2, threshold=0.5, materialize=materialize
-        ).collect()
-        keys = [(r["id_a"], r["id_b"]) for r in got]
-        assert len(keys) == len(set(keys)), (
-            f"duplicate pairs (materialize={materialize}): {sorted(keys)}"
-        )
-        # every clone↔original pair found exactly once, byte-identical text
-        assert len(keys) == n_clones
-        assert all(r["jaccard"] == 1.0 for r in got)
+    got = eng.near_dups_of_wave(last2, threshold=0.5).collect()
+    keys = [(r["id_a"], r["id_b"]) for r in got]
+    assert len(keys) == len(set(keys)), f"duplicate pairs: {sorted(keys)}"
+    # every clone↔original pair found exactly once, byte-identical text
+    assert len(keys) == n_clones
+    assert all(r["jaccard"] == 1.0 for r in got)
     pages.unpersist()

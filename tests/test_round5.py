@@ -11,6 +11,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark import cache
 from judyst_web_crawler_spark.plans import inspect as P
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -127,6 +128,18 @@ def test_remove_spans_adversarial_needs_second_round(spark):
     assert got[2]["text"] == "" and got[2]["n_tokens_removed"] == 16
 
 
+def test_remove_spans_rounds_do_not_stack_plans(spark):
+    """Every round but the last is cut (cache.cut), so the lazy result of
+    rounds=3 holds ONE round's plan — as many exchanges as rounds=1 —
+    instead of re-executing every prior round at each action."""
+    from judyst_web_crawler_spark.operators.dedup_fuzzy import remove_duplicate_spans
+
+    docs = _docs(spark)
+    one = remove_duplicate_spans(docs, n=8, min_docs=2, rounds=1)
+    three = remove_duplicate_spans(docs, n=8, min_docs=2, rounds=3)
+    assert P.shuffle_count(three) == P.shuffle_count(one) > 0
+
+
 def test_remove_spans_accepts_precomputed_hash_keys(spark):
     """The hash-keyed duplicate_ngram_spans output (resolve_spans=False)
     is the designed join input — passing it explicitly matches the
@@ -149,7 +162,7 @@ def test_remove_spans_accepts_precomputed_hash_keys(spark):
     assert got == want and len(got) == 150
 
 
-def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark):
+def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark, monkeypatch):
     """Scale pins: (a) no exchange in the removal plan carries the raw
     `span` string (window matching rides the 128-bit hashes); (b) no
     compile-time broadcast anywhere (the span set is unbounded at
@@ -159,7 +172,9 @@ def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark):
     from judyst_web_crawler_spark.operators.dedup_fuzzy import remove_duplicate_spans
 
     docs = _docs(spark)
-    out = remove_duplicate_spans(docs, n=8, min_docs=2, materialize=False)
+    # cache.cut as the identity: assert on the full, uncut lineage
+    monkeypatch.setattr(cache, "cut", lambda df: df)
+    out = remove_duplicate_spans(docs, n=8, min_docs=2)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
