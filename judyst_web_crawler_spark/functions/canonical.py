@@ -108,9 +108,3 @@ def key_hash(canonical: Column | str) -> Column:
     """
     c = F.col(canonical) if isinstance(canonical, str) else canonical
     return F.xxhash64(c)
-
-
-def host_salt(url: Column | str, n_salts: int) -> Column:
-    """Deterministic salt shard for skewed-host splitting (SURVEY §4.2)."""
-    c = F.col(url) if isinstance(url, str) else url
-    return F.pmod(F.xxhash64(c), F.lit(n_salts)).cast("int")

@@ -291,8 +291,6 @@ MONTH_MAP = {
     "декабря": "12",
 }
 
-DATE_PATTERN = r"\d\d\.\d\d\.\d{4}"  # law_codes.py:35
-
 # law_codes.py:770 sentinel for a redaction that never took effect
 NEVER_EFFECTIVE = "не_действовала"
 
@@ -305,16 +303,3 @@ def month_number(month_name: Column | str) -> Column:
         pairs.append(F.lit(k))
         pairs.append(F.lit(v))
     return F.element_at(F.create_map(*pairs), F.lower(c))
-
-
-def extract_date(col: Column | str) -> Column:
-    """First ``DD.MM.YYYY`` occurrence (law_codes.py:766-770)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract(c, DATE_PATTERN, 0)
-
-
-def release_date_from_russian(day: Column, month_name: Column, year: Column) -> Column:
-    """law_codes.py:734-739 — build 'DD.MM.YYYY' from Russian long date."""
-    return F.concat_ws(
-        ".", F.lpad(day.cast("string"), 2, "0"), month_number(month_name), year.cast("string")
-    )

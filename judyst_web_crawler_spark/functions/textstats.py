@@ -32,15 +32,6 @@ def token_count(text: Column | str) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("int")
 
 
-def bpe_ish_token_count(text: Column | str) -> Column:
-    """A BPE-ish proxy: count word pieces + digit runs + punctuation
-    marks separately (regex segmentation, JVM-side)."""
-    t = _c(text)
-    words = F.size(F.filter(F.split(t, r"[^\p{L}\p{N}]+"), lambda x: x != ""))
-    puncts = F.length(t) - F.length(F.regexp_replace(t, r"[\.,;:!?()«»\"']", ""))
-    return (words + puncts).cast("int")
-
-
 def cyrillic_ratio(text: Column | str) -> Column:
     t = _c(text)
     cyr = F.length(t) - F.length(F.regexp_replace(t, "[а-яА-ЯёЁ]", ""))

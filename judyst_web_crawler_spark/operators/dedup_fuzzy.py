@@ -27,17 +27,16 @@ over those cuts.
 from __future__ import annotations
 
 import logging
-import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark import cache
 from judyst_web_crawler_spark.functions.textstats import normalized_fingerprint
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 _MERSENNE = (1 << 61) - 1
 
@@ -922,64 +921,31 @@ def minhash_near_duplicates(
 # The batch path above re-fingerprints and self-joins the WHOLE corpus per
 # invocation — the right correctness baseline, the wrong shape for a crawl
 # that adds a wave of documents to a 10^10-doc corpus. The index persists
-# the banded bucket table once (same pattern as similarity.ivf_index_write):
-# wave-N documents are fingerprinted once and band-JOINED against committed
-# buckets, so per-wave cost is O(new × matching buckets), never a
-# full-corpus re-scan. Layout under ``path``:
-#   bands/  (band, bucket, id)        — parquet, partitioned by band
-#   sigs/   (id, signature, gen)      — for the MinHash-estimate prune
-# Exact-verify texts come from a keyed join against the documents table
-# (candidate ids only — column-pruned, bucket-prunable scan, not a corpus
-# pass through Python).
+# the banded bucket table once: wave-N documents are fingerprinted once and
+# band-JOINED against committed buckets, so per-wave cost is
+# O(new × matching buckets), never a full-corpus re-scan. ``path`` is the
+# root of a ``SnapshotCatalog`` holding two append-only tables:
+#   bands  (band, bucket, id)     — partitioned by band
+#   sigs   (id, signature, gen)   — for the MinHash-estimate prune
+# A commit appends ``bands`` first and ``sigs`` last, so a ``sigs``
+# snapshot carrying ``gen`` is the proof that commit landed whole; a crash
+# in between leaves only extra band rows, which a re-commit duplicates
+# harmlessly (the candidate join is distinct). Exact-verify texts come
+# from a keyed join against the documents table (candidate ids only —
+# column-pruned, not a corpus pass through Python).
 #
 # Re-crawled ids (the recrawl generations path re-fetches stale urls, so
-# an appended wave MAY contain ids already committed): each commit stamps
-# its sigs with a monotonically increasing ``gen`` and the query keeps the
-# LATEST signature per candidate id (last-wins, the crawl's own merge
-# rule) — without this, duplicate sig rows fan every pair touching a
-# re-crawled id into duplicate output rows through the estimate join.
-# Stale rows in bands/ are left in place deliberately: a stale-bucket
-# collision only ADDS a candidate pair, and every candidate is gated by
-# the exact Jaccard verify against CURRENT text, so stale bands cost
-# wasted verify work (bounded by the re-crawl rate), never wrong output.
+# an appended wave MAY contain ids already committed): the query keeps the
+# LATEST signature per candidate id — highest ``gen``, the crawl's own
+# last-wins rule; the frontier engine stamps ``gen = wave``, the same key
+# its text side dedupes by. Stale rows in ``bands`` are left in place
+# deliberately: a stale-bucket collision only ADDS a candidate pair, and
+# every candidate is gated by the exact Jaccard verify against CURRENT
+# text, so stale bands cost wasted verify work (bounded by the re-crawl
+# rate), never wrong output.
 
-
-def _error_condition(e: AnalysisException) -> str:
-    """Error class + message of an AnalysisException, for matching the
-    few conditions that mean 'nothing at this path' (getCondition on
-    Spark 4, getErrorClass before it)."""
-    get_cls = getattr(e, "getCondition", None) or getattr(e, "getErrorClass", None)
-    cls = (get_cls() or "") if callable(get_cls) else ""
-    return f"{cls} {e}"
-
-
-def _next_index_gen(spark, path: str) -> int:
-    """Next commit sequence number for ``path``'s sigs table (0 for a
-    fresh index; indexes written before gen stamping count as gen 0).
-
-    Only a genuinely-absent sigs table maps to gen 0: a TRANSIENT read
-    failure on an EXISTING index (permissions, corrupt footer) must fail
-    loudly, not silently alias a fresh index — a gen-0 append over live
-    gen-0 rows would tie in the last-wins window and pick between stale
-    and fresh signatures nondeterministically.
-
-    Existence goes through Spark's reader, not os.path: the index may
-    live behind any Hadoop scheme (file:, hdfs:, s3a:), where a
-    driver-local FS check would report every path absent and stamp all
-    appends gen 0. Only the two error classes that mean "nothing here"
-    (PATH_NOT_FOUND, UNABLE_TO_INFER_SCHEMA for a footerless placeholder
-    dir) map to gen 0; any other failure propagates."""
-    sigs_dir = os.path.join(path, "sigs")
-    try:
-        prev = spark.read.parquet(sigs_dir)
-    except AnalysisException as e:
-        if any(m in _error_condition(e) for m in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")):
-            return 0
-        raise
-    if "gen" not in prev.columns:
-        return 1
-    top = prev.agg(F.max("gen")).first()[0]
-    return (top if top is not None else 0) + 1
+INDEX_BANDS = "bands"
+INDEX_SIGS = "sigs"
 
 
 def minhash_index_write(
@@ -991,46 +957,40 @@ def minhash_index_write(
     bands: int = 16,
     shingle_n: int = 5,
     seed: int = 42,
-    mode: str = "overwrite",
 ) -> None:
-    """Build (or ``mode='append'``: extend) the persisted MinHash index
-    from a corpus slice — one Arrow fingerprint pass, two writes. Each
-    commit is stamped with a ``gen`` sequence number so a later append of
-    a RE-CRAWLED id supersedes (last-wins) its stored signature at query
-    time instead of duplicating it."""
-    sigs = minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n, seed=seed)
-    minhash_index_write_sigs(sigs, path, id_col=id_col, k=k, bands=bands, mode=mode)
+    """Commit a corpus slice to the persisted MinHash index (creating it
+    on first use) — one Arrow fingerprint pass, two appends. Each call
+    takes the next ``gen`` (the count of ``sigs`` commits so far), so a
+    later write of a RE-CRAWLED id supersedes (last-wins) its stored
+    signature at query time instead of duplicating it."""
+    # both index tables read the signatures: cut so the pass runs once
+    sigs = cache.cut(
+        minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n, seed=seed)
+    )
+    gen = SnapshotCatalog(df.sparkSession, path).current_version(INDEX_SIGS) or 0
+    minhash_index_write_sigs(sigs, path, gen, id_col=id_col, k=k, bands=bands)
 
 
 def minhash_index_write_sigs(
     sigs: DataFrame,
     path: str,
+    gen: int,
     id_col: str = "doc_id",
     k: int = 64,
     bands: int = 16,
-    mode: str = "overwrite",
 ) -> None:
-    """Commit PRE-COMPUTED ``(id, signature)`` rows to the index — the
-    path the frontier engine uses: the crawl wave's fused
-    extract+fingerprint pass already produced the signatures, so indexing
-    a wave must not re-fingerprint it (the signatures column ships with
-    the documents row)."""
-    gen = _next_index_gen(sigs.sparkSession, path) if mode == "append" else 0
-    sigs = sigs.select(id_col, "signature").persist()
-    try:
-        band_explode(sigs, id_col, bands, k // bands).write.mode(mode).partitionBy(
-            "band"
-        ).parquet(os.path.join(path, "bands"))
-        sigs.withColumn("gen", F.lit(gen)).write.mode(mode).parquet(
-            os.path.join(path, "sigs")
-        )
-    finally:
-        sigs.unpersist()
-
-
-def minhash_index_append(df: DataFrame, path: str, **kw) -> None:
-    """Commit a new wave's documents to an existing index."""
-    minhash_index_write(df, path, mode="append", **kw)
+    """Commit PRE-COMPUTED ``(id, signature)`` rows to the index under
+    commit generation ``gen`` — the path the frontier engine uses (the
+    wave's fused extract+fingerprint pass already produced the
+    signatures, and ``gen`` is the wave). ``bands`` commits first,
+    ``sigs`` last. No caching: ``sigs`` is read twice, so pass a cheap
+    plan (a parquet scan or a cut)."""
+    index = SnapshotCatalog(sigs.sparkSession, path)
+    sigs = sigs.select(id_col, "signature")
+    index.append(
+        INDEX_BANDS, band_explode(sigs, id_col, bands, k // bands), partition_by=["band"]
+    )
+    index.append(INDEX_SIGS, sigs.withColumn("gen", F.lit(gen)))
 
 
 def minhash_query_index(
@@ -1084,8 +1044,9 @@ def minhash_query_index(
         new_sigs = new_sigs.select(id_col, "signature")
     new_sigs = cache.cut(new_sigs)
     new_banded = band_explode(new_sigs, id_col, bands, k // bands)
-    idx_bands = spark.read.parquet(os.path.join(path, "bands"))
-    idx_sigs = spark.read.parquet(os.path.join(path, "sigs"))
+    index = SnapshotCatalog(spark, path)
+    idx_bands = index.read(INDEX_BANDS)
+    idx_sigs = index.read(INDEX_SIGS)
 
     n, o = new_banded.alias("n"), idx_bands.alias("o")
     cross = (
@@ -1123,11 +1084,8 @@ def minhash_query_index(
         # index, then (2) deduped last-wins by commit gen: a re-crawled
         # id has one sig row per commit, and without the dedupe the
         # estimate join fans every pair touching it into duplicates.
-        if "gen" not in idx_sigs.columns:  # pre-gen index layout
-            idx_sigs = idx_sigs.withColumn("gen", F.lit(0))
         # gen desc = last commit wins; the xxhash64(signature) secondary
-        # key makes a gen TIE (two commits stamped equally, e.g. a legacy
-        # pre-gen index appended before its first stamped commit) pick
+        # key makes a gen TIE (two commits a caller stamped equally) pick
         # deterministically instead of by partition arrival order
         w = Window.partitionBy(id_col).orderBy(
             F.col("gen").desc(), F.xxhash64("signature").desc()
@@ -1147,19 +1105,7 @@ def minhash_query_index(
         # semi join), so the window shuffles candidate-sized rows, and
         # the full corpus text column never crosses an exchange
         wlat = Window.partitionBy(id_col).orderBy(
-            # deterministic tiebreak on a latest_by tie. NOTE: this hashes
-            # the TEXT while the stored-sig window (above) hashes the
-            # SIGNATURE — different values, so on a simultaneous tie in
-            # BOTH tables (same id, equal gen sig rows AND equal
-            # latest_by text rows) the two windows may pick rows from
-            # different generations: the estimate could prune on gen-1's
-            # signature where gen-2's text would have verified. True
-            # cross-table consistency needs a shared per-row key (e.g. a
-            # stored xxhash64(text) column in the index). Reachability:
-            # the engine path stamps strictly increasing gens per commit
-            # (minhash_index_write_sigs), so equal-gen duplicates — and
-            # with them this divergence — arise only on legacy pre-gen
-            # index data appended twice for one id.
+            # deterministic tiebreak on a latest_by tie
             F.col(corpus_latest_by).desc(), F.xxhash64(text_col).desc()
         )
         corpus_texts = (

@@ -40,17 +40,18 @@ State and cost:
 
 from __future__ import annotations
 
-import os
 import time
 
 import numpy as np
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
 from judyst_web_crawler_spark.functions.extraction import extract_text, extract_text_udf
-from judyst_web_crawler_spark.operators.dedup_fuzzy import minhash_index_write_sigs
+from judyst_web_crawler_spark.operators.dedup_fuzzy import (
+    INDEX_SIGS,
+    minhash_index_write_sigs,
+)
 from judyst_web_crawler_spark.operators.politeness import apply_robots, budget_topk
 from judyst_web_crawler_spark.operators.seen import (
     bloom_bits_for,
@@ -110,10 +111,12 @@ class FrontierEngine:
         # extract pass (one Arrow crossing; no re-read of the docs table
         # for the dedup-prep stage). None = extraction only.
         self.fingerprint_k = fingerprint_k
-        # minhash_index_path: commit each wave's (key_hash, signature)
-        # rows to the persisted band-bucket index so near-dup queries
-        # against ALL previously crawled documents never re-fingerprint
-        # anything (per-wave cost: O(new × matching buckets)).
+        # minhash_index_path: root of the band-bucket index's own
+        # SnapshotCatalog (tables ``bands`` and ``sigs``, see
+        # dedup_fuzzy). Each wave appends its (key_hash, signature) rows
+        # under gen = wave, so near-dup queries against ALL previously
+        # crawled documents never re-fingerprint anything (per-wave cost:
+        # O(new × matching buckets)).
         if minhash_index_path is not None:
             if not fingerprint_k:
                 raise ValueError("minhash_index_path requires fingerprint_k")
@@ -125,11 +128,11 @@ class FrontierEngine:
         self._minhash_bands = minhash_bands
         if minhash_index_path is not None:
             # restart reconciliation: docs commit and index commit are
-            # separate writes, so a crash between them leaves a wave's
-            # documents permanently unindexed (silent recall loss in
-            # every later near_dups query). The wave-marker protocol
-            # (marker written AFTER sigs) makes the gap detectable and
-            # repairable here, the same once-per-engine-lifetime recovery
+            # separate commits, so a crash between them leaves a wave's
+            # documents unindexed (silent recall loss in every later
+            # near_dups query). The sigs commit is the index's last, so
+            # the gens it holds are the waves that landed; the gap is
+            # repaired here, the same once-per-engine-lifetime recovery
             # model as _repair_partial_wave.
             self._reconcile_minhash_index()
         self._bloom_bc = None
@@ -295,10 +298,7 @@ class FrontierEngine:
         done_rows = orphans.select(
             "url", F.lit("scheduled").alias("retire_status"), "wave"
         )
-        if self.catalog.exists(DONE_TABLE):
-            self.catalog.append(DONE_TABLE, done_rows)
-        else:
-            self.catalog.overwrite(DONE_TABLE, done_rows)
+        self.catalog.append(DONE_TABLE, done_rows)
         seen_rows = orphans.select("key_hash", "url", F.col("wave").alias("first_seen_wave"))
         if self.catalog.exists(SEEN_TABLE):
             seen_rows = seen_rows.join(
@@ -309,10 +309,7 @@ class FrontierEngine:
         # bloom before seen — same superset-invariant ordering as the
         # wave commit (see run_wave step 6)
         self._bloom_add(seen_rows)
-        if self.catalog.exists(SEEN_TABLE):
-            self.catalog.append(SEEN_TABLE, seen_rows)
-        else:
-            self.catalog.overwrite(SEEN_TABLE, seen_rows)
+        self.catalog.append(SEEN_TABLE, seen_rows)
 
     def run_wave(
         self,
@@ -423,8 +420,8 @@ class FrontierEngine:
         docs_c = self.catalog.read_last_append(DOCS_TABLE, v_docs)
 
         # 5b. index += this wave's signatures (already computed in the
-        # fused extract pass — committed, never recomputed; gen-stamped
-        # appends give re-crawled keys last-wins at query time)
+        # fused extract pass — committed, never recomputed; gen = wave
+        # gives re-crawled keys last-wins at query time)
         if self._minhash_index_path is not None:
             self._commit_wave_sigs_to_index(
                 docs_c.select("key_hash", "signature"), wave
@@ -454,10 +451,7 @@ class FrontierEngine:
         # bits (prune cost only); seen rows without bits would mean seen
         # urls re-fetched as "definitely new".
         self._bloom_add(scheduled_keys)
-        if self.catalog.exists(SEEN_TABLE):
-            self.catalog.append(SEEN_TABLE, _shrink(scheduled_keys))
-        else:
-            self.catalog.overwrite(SEEN_TABLE, _shrink(scheduled_keys))
+        self.catalog.append(SEEN_TABLE, _shrink(scheduled_keys))
         mark("seen_commit")
 
         # 7. done += scheduled ∪ seen-dups ∪ intra-wave dups ∪ robots-denied
@@ -478,10 +472,7 @@ class FrontierEngine:
         # are real compute), then shrink the materialized result for the
         # write — merging checkpointed partitions is free
         done_new = done_new.withColumn("wave", F.lit(wave)).localCheckpoint(eager=True)
-        if self.catalog.exists(DONE_TABLE):
-            self.catalog.append(DONE_TABLE, _shrink(done_new))
-        else:
-            self.catalog.overwrite(DONE_TABLE, _shrink(done_new))
+        self.catalog.append(DONE_TABLE, _shrink(done_new))
         mark("done_commit")
 
         status_counts = {
@@ -506,10 +497,7 @@ class FrontierEngine:
             )
         )
         part_metrics = part_metrics.coalesce(1)  # ≤ one row per partition
-        if self.catalog.exists(METRICS_TABLE):
-            self.catalog.append(METRICS_TABLE, part_metrics)
-        else:
-            self.catalog.overwrite(METRICS_TABLE, part_metrics)
+        self.catalog.append(METRICS_TABLE, part_metrics)
         mark("metrics_commit")
         # bump only after every commit of this wave succeeded; the
         # repair latch is re-armed too (it was cleared at wave start so
@@ -563,53 +551,41 @@ class FrontierEngine:
 
     def _commit_wave_sigs_to_index(self, sigs: DataFrame, wave: int) -> None:
         """Append one wave's pre-computed (key_hash, signature) rows to
-        the band-bucket index, then write the wave MARKER. Marker-after-
-        data is the durability protocol: a marker row proves the wave's
-        sigs landed, so ``_reconcile_minhash_index`` can detect (docs
-        committed, marker absent) and roll the index forward on restart.
-        A crash mid-append can leave partial sig rows WITHOUT a marker;
-        the reconcile re-append then duplicates those ids at a higher
-        gen — harmless, the query's last-wins window keeps one."""
+        the band-bucket index under gen = ``wave``. The index commits
+        ``bands`` first and ``sigs`` last, so a ``sigs`` row with
+        gen = ``wave`` proves the wave landed; ``_reconcile_minhash_index``
+        re-commits any docs wave without one on restart."""
         minhash_index_write_sigs(
             sigs,
             self._minhash_index_path,
+            wave,
             id_col="key_hash",
             k=self.fingerprint_k,
             bands=self._minhash_bands,
-            mode="append",
         )
-        self.spark.createDataFrame([(wave,)], "wave int").coalesce(1).write.mode(
-            "append"
-        ).parquet(os.path.join(self._minhash_index_path, "waves"))
 
     def _reconcile_minhash_index(self) -> None:
         """Roll the index forward over waves whose documents committed
         but whose signatures never landed (crash between the docs commit
-        and step 5b). Runs once at construction — the same restart
-        recovery model as ``_repair_partial_wave``. Also backfills a
-        catalog that predates the index (every docs wave missing a
-        marker), provided it was crawled with fingerprinting on."""
+        and the index's ``sigs`` commit). Runs once at construction — the
+        same restart recovery model as ``_repair_partial_wave``: one
+        narrow scan of the ``sigs`` gen column, next to the docs wave
+        scan. Also backfills a catalog that predates the index (every
+        docs wave missing), provided it was crawled with fingerprinting
+        on."""
         if not self.catalog.exists(DOCS_TABLE):
             return
         docs = self.catalog.read(DOCS_TABLE)
         doc_waves = {r["wave"] for r in docs.select("wave").distinct().collect()}
         if not doc_waves:
             return
-        marked: set[int] = set()
-        try:
-            marked = {
-                r["wave"]
-                for r in self.spark.read.parquet(
-                    os.path.join(self._minhash_index_path, "waves")
-                ).collect()
+        index = SnapshotCatalog(self.spark, self._minhash_index_path)
+        landed: set[int] = set()
+        if index.exists(INDEX_SIGS):
+            landed = {
+                r["gen"] for r in index.read(INDEX_SIGS).select("gen").distinct().collect()
             }
-        except AnalysisException as e:
-            from judyst_web_crawler_spark.operators.dedup_fuzzy import _error_condition
-
-            blob = _error_condition(e)
-            if "PATH_NOT_FOUND" not in blob and "UNABLE_TO_INFER_SCHEMA" not in blob:
-                raise
-        missing = sorted(doc_waves - marked)
+        missing = sorted(doc_waves - landed)
         if not missing:
             return
         if "signature" not in docs.columns:

@@ -405,68 +405,6 @@ def ivf_topk(
     return brute_force_topk(cands, query, k, id_col, vec_col)
 
 
-def ivf_index_write(
-    df: DataFrame,
-    path: str,
-    n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> np.ndarray:
-    """Materialize the IVF index: vectors written as parquet PARTITIONED
-    BY cell (hive layout), centroids as a JSON sidecar. This is the 100
-    TB shape the in-memory ``ivf_topk`` only gestures at: one full
-    assignment pass at build time, then every query reads ONLY its
-    nprobe cell directories — partition PRUNING at the source, not a
-    post-scan filter (plan-asserted in tests/test_plans.py)."""
-    import json
-    import os
-
-    cents = train_ivf_centroids(
-        df, n_cells=n_cells, id_col=id_col, vec_col=vec_col, seed=seed
-    )
-    # ONE pass: assignment carries the vector (no shuffle-join of the
-    # full vector table back onto its own cell labels)
-    assigned = ivf_assign(df, cents, id_col, vec_col, include_vec=True)
-    (
-        assigned.write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(os.path.join(path, "vectors"))
-    )
-    with open(os.path.join(path, "centroids.json"), "w") as f:
-        json.dump(cents.tolist(), f)
-    return cents
-
-
-def ivf_query_indexed(
-    spark,
-    path: str,
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k against a written IVF index: pick the nprobe nearest cells
-    driver-side (centroids are a tiny sidecar), then scan ONLY those
-    cell partitions. The ``cell IN (...)`` predicate lands in the scan's
-    PartitionFilters — nprobe/n_cells of the bytes are read."""
-    import json
-    import os
-
-    with open(os.path.join(path, "centroids.json")) as f:
-        cents = np.asarray(json.load(f), dtype=np.float64)
-    q = np.asarray(query, dtype=np.float64)
-    d2 = ((cents - q[None, :]) ** 2).sum(axis=1)
-    probe_cells = [int(c) for c in d2.argsort()[:nprobe]]
-    vecs = (
-        spark.read.parquet(os.path.join(path, "vectors"))
-        .filter(F.col("cell").isin(probe_cells))
-        .select(id_col, vec_col)
-    )
-    return brute_force_topk(vecs, query, k, id_col, vec_col)
-
-
 def embedding_near_duplicates(
     df: DataFrame,
     dim: int,

@@ -89,16 +89,6 @@ def pushed_filters(df: DataFrame) -> list[str]:
     return out
 
 
-def partition_filters(df: DataFrame) -> list[str]:
-    """Predicates the scan applies at PARTITION level (directory
-    pruning, hive layout) — bytes for pruned partitions are never read."""
-    plan = formatted_plan(df)
-    out: list[str] = []
-    for body in _bracket_bodies(plan, "PartitionFilters"):
-        out.extend(_split_predicates(body))
-    return out
-
-
 def read_schema_columns(df: DataFrame) -> set[str]:
     """Columns the scan actually reads (column pruning check)."""
     plan = formatted_plan(df)

@@ -101,6 +101,12 @@ class SnapshotCatalog:
             # those directories — SURVEY §4 custom-op 3)
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
+        if partition_by and not any(
+            f.endswith(".parquet") for _d, _s, files in os.walk(data_dir) for f in files
+        ):
+            # an empty partitioned write leaves no file to read the schema
+            # back from: commit the empty frame unpartitioned instead
+            df.write.mode("overwrite").parquet(data_dir)
         return data_dir
 
     def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> int:
@@ -129,8 +135,7 @@ class SnapshotCatalog:
         # materialize BEFORE the overwrite commit so we never read a
         # snapshot we are replacing mid-write
         v_next = (self.current_version(name) or 0) + 1
-        data_dir = os.path.join(self._tdir(name), "data", f"snap-{v_next}")
-        merged.write.mode("overwrite").parquet(data_dir)
+        data_dir = self._write(name, merged, v_next, None)
         return self._commit(name, [data_dir], "merge")
 
     def read_last_append(self, name: str, version: int) -> DataFrame:

@@ -215,19 +215,15 @@ def run_to_catalog(
     atomic snapshot commit (availableNow trigger → returns when done)."""
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df.withColumn("batch_id", F.lit(batch_id))
-        if catalog.exists(table):
-            # foreachBatch is at-least-once: a crash between the snapshot
-            # commit and the streaming checkpoint replays this batch_id —
-            # skip it so the sink is exactly-once per batch
-            already = (
-                catalog.read(table).filter(F.col("batch_id") == batch_id).limit(1).count() > 0
-            )
-            if already:
-                return
-            catalog.append(table, out)
-        else:
-            catalog.overwrite(table, out)
+        # foreachBatch is at-least-once: a crash between the snapshot
+        # commit and the streaming checkpoint replays this batch_id —
+        # skip it so the sink is exactly-once per batch
+        if (
+            catalog.exists(table)
+            and catalog.read(table).filter(F.col("batch_id") == batch_id).limit(1).count() > 0
+        ):
+            return
+        catalog.append(table, batch_df.withColumn("batch_id", F.lit(batch_id)))
 
     q = (
         stream_df.writeStream.foreachBatch(commit)

@@ -4,7 +4,8 @@ full-corpus self-join. Pinned here:
 
 - pair PARITY with the batch path (index query ≡ batch pairs touching a
   new id),
-- append-then-query across two waves,
+- append-then-query across two waves (the index is a SnapshotCatalog
+  with tables ``bands`` and ``sigs``),
 - stored signatures ≡ freshly computed ones (no banding drift),
 - the PLAN: one keyed scan of the corpus texts (the verify join), never
   the second full-corpus pass the batch path's signature stage does.
@@ -17,6 +18,7 @@ from pyspark.sql import functions as F
 from judyst_web_crawler_spark import cache
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
 from judyst_web_crawler_spark.plans.inspect import formatted_plan
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 BASE = (
     "Настоящим постановлением суд установил что жалоба гражданина "
@@ -81,7 +83,7 @@ def test_index_append_then_query_next_wave(spark, tmp_path):
     docs = _corpus(spark).cache()
     idx = str(tmp_path / "idx")
     D.minhash_index_write(docs.filter(F.col("doc_id") <= 6), idx)
-    D.minhash_index_append(docs.filter(F.col("doc_id").between(7, 9)), idx)
+    D.minhash_index_write(docs.filter(F.col("doc_id").between(7, 9)), idx)
 
     wave2 = docs.filter(F.col("doc_id") >= 10)
     got = _pairs(D.minhash_query_index(wave2, idx, docs, threshold=0.5))
@@ -97,7 +99,7 @@ def test_stored_signatures_roundtrip(spark, tmp_path):
     D.minhash_index_write(docs, idx)
     stored = {
         r["doc_id"]: list(r["signature"])
-        for r in spark.read.parquet(f"{idx}/sigs").collect()
+        for r in SnapshotCatalog(spark, idx).read(D.INDEX_SIGS).collect()
     }
     fresh = {
         r["doc_id"]: list(r["signature"])
@@ -105,7 +107,7 @@ def test_stored_signatures_roundtrip(spark, tmp_path):
     }
     assert stored == fresh
     # band table: bands × docs rows, bucket ids drift-free vs band_explode
-    n_bands = spark.read.parquet(f"{idx}/bands").count()
+    n_bands = SnapshotCatalog(spark, idx).read(D.INDEX_BANDS).count()
     assert n_bands == 16 * docs.count()
 
 
@@ -155,10 +157,10 @@ def test_index_append_recrawled_id_last_wins_no_duplicate_pairs(spark, tmp_path)
     # signatures are both near the new text, the duplicate-fanout case
     new3 = OTHER * 3 + " обновлённая редакция после повторного обхода."
     recrawl = spark.createDataFrame([(3, new3)], "doc_id long, text string")
-    D.minhash_index_append(recrawl, idx)
+    D.minhash_index_write(recrawl, idx)
     sig_gens = {
         (r["doc_id"], r["gen"])
-        for r in spark.read.parquet(f"{idx}/sigs").filter("doc_id = 3").collect()
+        for r in SnapshotCatalog(spark, idx).read(D.INDEX_SIGS).filter("doc_id = 3").collect()
     }
     assert sig_gens == {(3, 0), (3, 1)}  # both commits present, gen-stamped
 
@@ -177,16 +179,17 @@ def test_index_append_recrawled_id_last_wins_no_duplicate_pairs(spark, tmp_path)
     assert {(3, 12), (6, 12)} <= set(pairs)
 
 
-def test_index_query_reads_pre_gen_layout(spark, tmp_path):
-    """Indexes written before gen stamping (no ``gen`` column) still
-    query: the column is injected as 0."""
+def test_index_write_of_empty_slice_keeps_index_queryable(spark, tmp_path):
+    """A wave that fetched nothing commits empty ``bands``/``sigs``
+    snapshots — first, between and after real ones — and the index
+    still reads back and queries."""
     docs = _corpus(spark)
-    base = docs.filter(F.col("doc_id") <= 6)
     idx = str(tmp_path / "idx")
-    D.minhash_index_write(base, idx)
-    # strip the gen column in place, emulating the old layout
-    legacy = spark.read.parquet(f"{idx}/sigs").drop("gen").localCheckpoint()
-    legacy.write.mode("overwrite").parquet(f"{idx}/sigs")
+    nothing = docs.filter(F.lit(False))
+    D.minhash_index_write(nothing, idx)
+    D.minhash_index_write(docs.filter(F.col("doc_id") <= 3), idx)
+    D.minhash_index_write(nothing, idx)
+    D.minhash_index_write(docs.filter(F.col("doc_id").between(4, 6)), idx)
     wave = docs.filter(F.col("doc_id").between(7, 9))
     got = _pairs(D.minhash_query_index(wave, idx, docs, threshold=0.5))
     assert (1, 7) in got and (8, 9) in got

@@ -1,7 +1,7 @@
 """Pins for the round-4 review findings (code-review pass over the r4
-diff): remote-path index gens, bloom-superset commit ordering, recrawl
-fan-out in near_dups_of_wave, over-eager constructor validation, index
-commit durability, and the URI-directory ingest guard."""
+diff): bloom-superset commit ordering, recrawl fan-out in
+near_dups_of_wave, over-eager constructor validation, index commit
+durability, and the URI-directory ingest guard."""
 
 from __future__ import annotations
 
@@ -32,30 +32,6 @@ def _seeded_engine(spark, tmp_path, **engine_kw):
     eng = FrontierEngine(spark, cat, **engine_kw)
     eng.bootstrap(seeds)
     return eng, cat, pages
-
-
-# ------------------------------------------------- index gen: path scheme
-
-
-def test_index_gen_handles_file_uri_paths(spark, tmp_path):
-    """_next_index_gen must see an EXISTING index through any Hadoop
-    path scheme — a driver-local os.path check would return gen 0 for
-    'file://…' (and every hdfs:/s3a: path), stamping appends with a gen
-    that ties live rows and making last-wins nondeterministic."""
-    from judyst_web_crawler_spark.operators.dedup_fuzzy import (
-        _next_index_gen,
-        minhash_index_write,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"текст документа номер {i} " * 20) for i in range(8)],
-        "doc_id long, text string",
-    )
-    path = str(tmp_path / "idx")
-    minhash_index_write(docs, path, k=32, bands=8)
-    assert _next_index_gen(spark, path) == 1
-    # same index addressed as a file: URI — still gen 1, never a fresh 0
-    assert _next_index_gen(spark, "file://" + path) == 1
 
 
 # --------------------------------------- bloom ⊇ seen commit invariant
@@ -167,55 +143,149 @@ def test_fingerprint_k_free_without_index(spark, tmp_path):
 # --------------------------------------------- index commit durability
 
 
-def test_index_commit_crash_is_reconciled_on_restart(spark, tmp_path, monkeypatch):
-    """Docs commit and index commit are separate writes; a crash between
-    them must not silently lose the wave from the index forever. The
-    wave-marker protocol (marker written AFTER sigs) lets a restarted
-    engine detect and re-append the missing wave."""
-    from judyst_web_crawler_spark.operators import dedup_fuzzy as df_mod
-    from judyst_web_crawler_spark.operators import frontier as frontier_mod
+def _planted_pages(spark):
+    """24 pages in 12 near-dup pairs: the i-th largest url carries the
+    html of the i-th smallest. Crawled at budget 7 per host, that is 3
+    waves, and the pairs straddle them: waves 1 and 2 pair with docs of
+    earlier waves, so their near-dup queries need those in the index."""
+    from judyst_web_crawler_spark.datagen import pages_df
+
+    pages = pages_df(spark, n_rows=24, n_hosts=3, seed=21)
+    rows = pages.orderBy("url").collect()
+    planted = spark.createDataFrame(
+        [(rows[-(i + 1)]["url"], rows[i]["html"]) for i in range(len(rows) // 2)],
+        ["url", "html2"],
+    )
+    other = [c for c in pages.columns if c not in ("url", "html")]
+    return (
+        pages.alias("p")
+        .join(planted.alias("x"), "url", "left")
+        .select("url", F.coalesce("x.html2", "p.html").alias("html"), *other)
+        .cache()
+    )
+
+
+def _index_engine(spark, root, pages):
     from judyst_web_crawler_spark.operators.frontier import FrontierEngine
+    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
-    idx = str(tmp_path / "idx")
-    eng, cat, pages = _seeded_engine(
-        spark, tmp_path, fingerprint_k=64, minhash_index_path=idx
+    seeds = (
+        pages.select("url")
+        .withColumn("_rn", F.row_number().over(Window.orderBy("url")))
+        .select(
+            "url",
+            F.lit(2).alias("page_seq"),
+            F.col("_rn").cast("int").alias("intra_page_seq"),
+        )
     )
-    m1 = eng.run_wave(pages, budget=8)
-    assert m1["scheduled"] > 0
-
-    def boom(*a, **kw):
-        raise RuntimeError("injected crash before index commit")
-
-    monkeypatch.setattr(frontier_mod, "minhash_index_write_sigs", boom, raising=False)
-    monkeypatch.setattr(df_mod, "minhash_index_write_sigs", boom)
-    with pytest.raises(RuntimeError, match="injected"):
-        eng.run_wave(pages, budget=8)
-    monkeypatch.undo()
-
-    # restart: reconcile must notice the docs-committed-but-unindexed
-    # wave and re-append its signatures before the next query/wave
-    eng2 = FrontierEngine(
-        spark, cat, fingerprint_k=64, minhash_index_path=idx
+    cat = SnapshotCatalog(spark, str(root / "cat"))
+    eng = FrontierEngine(
+        spark, cat, fingerprint_k=64, minhash_index_path=str(root / "idx")
     )
-    docs = cat.read(frontier_mod.DOCS_TABLE)
-    waves = sorted(r["wave"] for r in docs.select("wave").distinct().collect())
-    crashed_wave = waves[-1]
-    idx_ids = {
-        r["doc_id"]
-        for r in spark.read.parquet(idx + "/sigs")
-        .selectExpr("key_hash as doc_id")
-        .collect()
+    eng.bootstrap(seeds)
+    return eng, cat
+
+
+def _pairs_by_wave(eng, cat, first_wave):
+    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE
+
+    waves = cat.read(DOCS_TABLE).filter(F.col("wave") >= first_wave).select("wave").distinct()
+    return {
+        r["wave"]: {
+            (p["id_a"], p["id_b"])
+            for p in eng.near_dups_of_wave(r["wave"], threshold=0.5)
+            .select("id_a", "id_b")
+            .collect()
+        }
+        for r in waves.collect()
     }
-    wave_ids = {
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_index_crawl(spark, tmp_path_factory):
+    """Planted pages, crawled to the end at budget 7 without a crash:
+    (pages, near-dup pairs of every wave from wave 1 on)."""
+    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE
+
+    pages = _planted_pages(spark)
+    eng, cat = _index_engine(spark, tmp_path_factory.mktemp("ref"), pages)
+    eng.run(pages, budget=7)
+    want = _pairs_by_wave(eng, cat, 1)
+    # precondition: a later wave pairs with a wave-1 doc, so its query
+    # needs wave 1 in the index
+    wave1 = {
         r["key_hash"]
-        for r in docs.filter(F.col("wave") == crashed_wave)
-        .select("key_hash")
-        .collect()
+        for r in cat.read(DOCS_TABLE).filter("wave = 1").select("key_hash").collect()
     }
-    assert wave_ids <= idx_ids, "restart did not re-append the crashed wave's sigs"
-    # and the incremental query over that wave works end-to-end
-    pairs = eng2.near_dups_of_wave(crashed_wave, threshold=0.5)
-    pairs.collect()  # no error; content checked by the recall tests
+    assert any({a, b} & wave1 for w, ps in want.items() if w > 1 for a, b in ps)
+    yield pages, want
+    pages.unpersist()
+
+
+@pytest.mark.parametrize(
+    "crash_table", ["bands", "sigs"], ids=["before_bands", "between_bands_and_sigs"]
+)
+def test_index_commit_crash_is_reconciled_on_restart(
+    spark, tmp_path, monkeypatch, uninterrupted_index_crawl, crash_table
+):
+    """Docs commit and index commit are separate commits; a crash in
+    wave 1 before the index's ``bands`` commit, or between its ``bands``
+    and ``sigs`` commits, must not lose the wave from the index. The
+    ``sigs`` commit lands last, so a restarted engine sees gen 1 missing
+    and re-commits it: the near-dup pairs of wave 1 and of every later
+    wave then equal those of an uninterrupted crawl."""
+    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
+    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
+
+    pages, want = uninterrupted_index_crawl
+    eng, cat = _index_engine(spark, tmp_path, pages)
+    idx = str(tmp_path / "idx")
+    eng.run_wave(pages, budget=7)
+    orig_append = SnapshotCatalog.append
+
+    def crashing_append(self, name, df, **kw):
+        if self.root == idx and name == crash_table:
+            raise RuntimeError(f"injected crash before the {name} commit")
+        return orig_append(self, name, df, **kw)
+
+    monkeypatch.setattr(SnapshotCatalog, "append", crashing_append)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run_wave(pages, budget=7)
+    monkeypatch.undo()
+    assert SnapshotCatalog(spark, idx).read("sigs").filter("gen = 1").count() == 0
+
+    # restart: reconcile re-commits the docs-committed-but-unindexed
+    # wave, then the crawl runs on
+    eng2 = FrontierEngine(spark, cat, fingerprint_k=64, minhash_index_path=idx)
+    eng2.run(pages, budget=7)
+    assert _pairs_by_wave(eng2, cat, 1) == want
+
+
+def test_index_commit_reads_no_index_table(spark, tmp_path, monkeypatch):
+    """A wave's index commit is two appends and nothing else: it reads
+    neither ``bands`` nor ``sigs`` (no per-wave scan of the growing
+    index to derive a commit sequence number)."""
+    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
+
+    pages = _planted_pages(spark)
+    eng, _ = _index_engine(spark, tmp_path, pages)
+    idx = str(tmp_path / "idx")
+    eng.run_wave(pages, budget=7)
+    reads: list[str] = []
+    orig_read = SnapshotCatalog.read
+
+    def recording_read(self, name, version=None):
+        if self.root == idx:
+            reads.append(name)
+        return orig_read(self, name, version)
+
+    monkeypatch.setattr(SnapshotCatalog, "read", recording_read)
+    m = eng.run_wave(pages, budget=7)
+    monkeypatch.undo()
+    assert m["scheduled"] > 0
+    assert reads == []
+    gens = SnapshotCatalog(spark, idx).read("sigs").select("gen").distinct().collect()
+    assert {r["gen"] for r in gens} == {m["wave"] - 1, m["wave"]}
     pages.unpersist()
 
 

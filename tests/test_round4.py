@@ -174,24 +174,6 @@ def test_fill_data_source_rejects_multi_file_inputs(spark, tmp_path):
         api.fill_data_source_from_file(spark, str(d / "*.jsonl"), db)
 
 
-def test_index_gen_unreadable_sigs_fails_loudly(spark, tmp_path):
-    """A transient/corrupt read of an EXISTING index must raise — never
-    alias gen 0 and let a later append tie with live gen-0 rows."""
-    import pytest as _pytest
-
-    from judyst_web_crawler_spark.operators.dedup_fuzzy import _next_index_gen
-
-    path = tmp_path / "idx"
-    # fresh path and empty placeholder dir → gen 0 (legitimately new)
-    assert _next_index_gen(spark, str(path)) == 0
-    (path / "sigs").mkdir(parents=True)
-    assert _next_index_gen(spark, str(path)) == 0
-    # files present but no readable parquet → loud failure
-    (path / "sigs" / "part-0000.parquet").write_bytes(b"not a parquet file")
-    with _pytest.raises(Exception):
-        _next_index_gen(spark, str(path))
-
-
 def test_cap_hot_buckets_no_cache_leak_without_handles(spark):
     """The cap's cut table never reaches the Dataset cache (the
     accumulation cache.py exists to prevent): its checkpoint blocks are

@@ -74,38 +74,3 @@ def test_embedding_near_duplicates_finds_planted(spark):
     assert (1, 2) in got
     assert all(3 not in p for p in got)
 
-
-def test_ivf_index_roundtrip_matches_inmemory(spark, tmp_path):
-    """Written index + pruned query == the in-memory ivf_topk path
-    (same centroid seed → same cells → same candidates)."""
-    import __spark_entry__ as E
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    path = str(tmp_path / "ivf")
-    S.ivf_index_write(emb, path, n_cells=8)
-    got = {(r["vec_id"], round(r["cosine"], 6)) for r in S.ivf_query_indexed(
-        spark, path, E.QUERY_VEC, k=10, nprobe=4).collect()}
-    want = {(r["vec_id"], round(r["cosine"], 6)) for r in S.ivf_topk(
-        emb, E.QUERY_VEC, k=10, n_cells=8, nprobe=4).collect()}
-    assert got == want and len(got) == 10
-
-
-def test_ivf_indexed_query_prunes_partitions(spark, tmp_path):
-    """The cell predicate must land in PartitionFilters (directory-level
-    pruning), not just a post-scan filter."""
-    import __spark_entry__ as E
-    from pyspark.sql import functions as F
-
-    from judyst_web_crawler_spark.plans import inspect as P
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    path = str(tmp_path / "ivf")
-    S.ivf_index_write(emb, path, n_cells=8)
-    q = S.ivf_query_indexed(spark, path, E.QUERY_VEC, k=10, nprobe=3)
-    pf = P.partition_filters(q)
-    assert any("cell" in p for p in pf), pf
