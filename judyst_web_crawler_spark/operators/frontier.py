@@ -34,8 +34,12 @@ State and cost:
   Bloom misses skip the ``seen`` anti-join; hits go through it, so the
   Bloom never changes which urls are new.
 - every other join is broadcast (politeness config) or a key-hash
-  equi-join; nothing collects rows to the driver except scalar counts
-  and bloom blobs.
+  equi-join; nothing collects rows to the driver except bloom blobs.
+- each selection step runs once: its narrow output (never html) is
+  checkpointed and every later commit reads the checkpoint, so the
+  documents and done commits agree on the winners of priority ties. The
+  wave's counters (pending, per-status retirements) are ``Observation``s
+  on checkpoint jobs that run anyway — a wave adds no job to count.
 """
 
 from __future__ import annotations
@@ -43,7 +47,7 @@ from __future__ import annotations
 import time
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
@@ -349,8 +353,16 @@ class FrontierEngine:
         self._repaired = False
         mark("waveid")
 
-        pending = self.pending().localCheckpoint(eager=True)  # cut wave-loop lineage
-        n_pending = pending.count()
+        # 0. pending = frontier ANTI JOIN done. Checkpoint `pending` (cuts
+        # the wave-loop lineage; its row count is observed on the same
+        # job) → read by step 1.
+        pending_obs = Observation()
+        pending = (
+            self.pending()
+            .observe(pending_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_pending = pending_obs.get["n"]
         mark("pending")
         if n_pending == 0:
             # nothing committed: the wave id stays available and no
@@ -360,9 +372,8 @@ class FrontierEngine:
             return {"wave": wave, "frontier_pending": 0, "scheduled": 0, "retired": 0, "elapsed_s": 0.0}
 
         # 1. url-level collapse: rediscoveries of one url = one fetch row.
-        # Checkpointed: consumed twice (the seen-filter chain AND the
-        # seen-dups retirement anti-join) — without it the window runs
-        # again per consumer.
+        # Checkpoint `pending_u` → read by step 2 and the seen-dups of
+        # the done commit (step 7).
         w_url = Window.partitionBy("url").orderBy(*_priority())
         pending_u = (
             pending.withColumn("_ur", F.row_number().over(w_url))
@@ -370,40 +381,42 @@ class FrontierEngine:
             .drop("_ur")
         ).localCheckpoint(eager=True)
 
-        # 2. seen filter (incremental bloom prefilter + exact anti-join)
+        # 2. seen filter (incremental bloom prefilter + exact anti-join).
+        # Checkpoint `new` → read by step 3 and the seen-dups of step 7.
+        # Without a seen table nothing is filtered: `new` is `pending_u`.
+        new = pending_u
         if self.catalog.exists(SEEN_TABLE):
             new = filter_new_with_bloom(
                 pending_u, self.catalog.read(SEEN_TABLE), "key_hash",
                 self._bloom_broadcast(), BLOOM_BITS, BLOOM_K,
-            )
-        else:
-            new = pending_u
-        # materialize once: the politeness chain, the dup-retirement
-        # anti-join, and the fetch stage all branch from ``new``
-        new = new.localCheckpoint(eager=True)
+            ).localCheckpoint(eager=True)
         mark("seen_filter")
 
         # 3. first-wins per canonical key WITHIN the wave (D1): one fetch
-        # per key, best priority survives; later-priority keys retire as dups
+        # per key, best priority survives; later-priority keys retire as
+        # dups. Checkpoint `keyed` → read by step 4 and the intra-wave
+        # dups and robots-denied urls of step 7.
         w_key = Window.partitionBy("key_hash").orderBy(*_priority())
-        keyed = new.withColumn("_kr", F.row_number().over(w_key))
+        keyed = new.withColumn("_kr", F.row_number().over(w_key)).localCheckpoint(eager=True)
         new_first = keyed.filter(F.col("_kr") == 1).drop("_kr")
 
-        # 4. politeness: robots + budget top-k per (salted) host
+        # 4. politeness: robots + budget top-k per (salted) host.
+        # Checkpoint `selected` → read by the fetch (step 5) and the
+        # fetch misses of step 7.
         allowed = new_first
         if self.politeness is not None:
             allowed = apply_robots(allowed, self.politeness)
-        selected = budget_topk(allowed, self.politeness, default_budget=budget, n_salts=n_salts)
+        selected = budget_topk(
+            allowed, self.politeness, default_budget=budget, n_salts=n_salts
+        ).localCheckpoint(eager=True)
 
         # 5. fetch stand-in + extract (SURVEY §2.1 S3: html column IS the
-        # payload). Urls missing from the pages table are fetch MISSES —
-        # they retire with their own status instead of polluting the
-        # documents table with null-text rows masquerading as fetches.
-        fetched = selected.join(pages.select("url", "html"), on="url", how="left")
-        fetch_misses = fetched.filter(F.col("html").isNull()).select(
-            "url", F.lit("fetch_miss").alias("retire_status")
+        # payload) → documents commit. Urls missing from the pages table
+        # are fetch MISSES: they get no documents row (no null-text rows
+        # masquerading as fetches) and retire with their own status.
+        fetched = selected.join(pages.select("url", "html"), on="url").filter(
+            F.col("html").isNotNull()
         )
-        fetched = fetched.filter(F.col("html").isNotNull())
         carry = ["url", "host", "depth", "page_seq", "intra_page_seq", "key_hash"]
         if self.fingerprint_k:
             docs = self._extract_and_fingerprint(fetched, carry, wave)
@@ -414,9 +427,10 @@ class FrontierEngine:
         v_docs = self.catalog.append(DOCS_TABLE, docs)
         mark("extract_commit")
         # read ONLY the dir this append committed: one extract pass ran
-        # at the append; the seen/done/metrics commits below reuse that
-        # parquet output without re-scanning every prior wave's documents
-        # (full-table read here made late waves pay O(total crawled))
+        # at the append; the index/seen/done/metrics commits below reuse
+        # that parquet output without re-scanning every prior wave's
+        # documents (full-table read here made late waves pay O(total
+        # crawled))
         docs_c = self.catalog.read_last_append(DOCS_TABLE, v_docs)
 
         # 5b. index += this wave's signatures (already computed in the
@@ -428,19 +442,15 @@ class FrontierEngine:
             )
             mark("index_commit")
 
-        # 6. seen += scheduled keys; bloom |= scheduled keys. The three
-        # bookkeeping tables below are SKINNY (url/key/status columns);
-        # committing them at full scan parallelism writes dozens of tiny
-        # files per wave, and every later wave re-reads the union —
-        # shrink 8× (floor 1) AT THE WRITE ONLY. coalesce() pushes up
-        # into the producing stage (no shuffle barrier), so shrinking a
-        # live plan would throttle the anti-joins/scans feeding it to
-        # 1/8 of the cores; shrink either a checkpointed input or a
-        # plain parquet projection, never the compute chain.
-        def _shrink(df: DataFrame) -> DataFrame:
-            n = df.rdd.getNumPartitions()
-            return df.coalesce(max(1, n // 8))
-
+        # 6. seen += scheduled keys; bloom |= scheduled keys. The seen and
+        # done tables are SKINNY (url/key/status columns); committing them
+        # at full parallelism writes dozens of tiny files per wave, and
+        # every later wave re-reads the union — so both commits write
+        # one file per 8 of the documents commit's files (floor 1).
+        # coalesce() pushes up into the producing stage (no shuffle
+        # barrier), so it only ever shrinks a checkpoint or a plain
+        # parquet projection, never the compute chain.
+        n_files = max(1, len(docs_c.inputFiles()) // 8)
         scheduled_keys = docs_c.select(
             "key_hash", "url", F.lit(wave).alias("first_seen_wave")
         )
@@ -451,38 +461,48 @@ class FrontierEngine:
         # bits (prune cost only); seen rows without bits would mean seen
         # urls re-fetched as "definitely new".
         self._bloom_add(scheduled_keys)
-        self.catalog.append(SEEN_TABLE, _shrink(scheduled_keys))
+        self.catalog.append(SEEN_TABLE, scheduled_keys.coalesce(n_files))
         mark("seen_commit")
 
-        # 7. done += scheduled ∪ seen-dups ∪ intra-wave dups ∪ robots-denied
-        sched_urls = docs_c.select("url", F.lit("scheduled").alias("retire_status"))
-        seen_dups = pending_u.join(new.select("url"), on="url", how="left_anti").select(
-            "url", F.lit("dup").alias("retire_status")
-        )
-        intra_dups = keyed.filter(F.col("_kr") > 1).select(
-            "url", F.lit("dup").alias("retire_status")
-        )
-        done_new = sched_urls.unionByName(seen_dups).unionByName(intra_dups).unionByName(fetch_misses)
-        if self.politeness is not None:
-            denied = new_first.join(allowed.select("url"), on="url", how="left_anti").select(
-                "url", F.lit("robots_denied").alias("retire_status")
-            )
-            done_new = done_new.unionByName(denied)
-        # checkpoint at FULL parallelism (the union's anti-join branches
-        # are real compute), then shrink the materialized result for the
-        # write — merging checkpointed partitions is free
-        done_new = done_new.withColumn("wave", F.lit(wave)).localCheckpoint(eager=True)
-        self.catalog.append(DONE_TABLE, _shrink(done_new))
-        mark("done_commit")
+        # 7. done += scheduled ∪ seen-dups ∪ intra-wave dups ∪
+        # robots-denied ∪ fetch misses, every branch read off the
+        # documents dir or the checkpoints above. Checkpoint `done_new`
+        # (at full parallelism: the anti-joins are real compute; the
+        # retirement counts are observed on the same job) → the done
+        # commit.
+        def retire(df: DataFrame, status: str) -> DataFrame:
+            return df.select("url", F.lit(status).alias("retire_status"))
 
-        status_counts = {
-            r["retire_status"]: r["n"]
-            for r in done_new.groupBy("retire_status").agg(F.count(F.lit(1)).alias("n")).collect()
+        done_new = retire(docs_c, "scheduled").unionByName(
+            retire(keyed.filter(F.col("_kr") > 1), "dup")
+        ).unionByName(
+            retire(selected.join(docs_c.select("url"), on="url", how="left_anti"), "fetch_miss")
+        )
+        if new is not pending_u:
+            seen_dups = pending_u.join(new.select("url"), on="url", how="left_anti")
+            done_new = done_new.unionByName(retire(seen_dups, "dup"))
+        if self.politeness is not None:
+            denied = new_first.join(allowed.select("url"), on="url", how="left_anti")
+            done_new = done_new.unionByName(retire(denied, "robots_denied"))
+        done_obs = Observation()
+        counters = {
+            "scheduled": "scheduled",
+            "dedup_hits": "dup",
+            "robots_denied": "robots_denied",
+            "fetch_misses": "fetch_miss",
         }
-        scheduled = status_counts.get("scheduled", 0)
-        dedup_hits = status_counts.get("dup", 0)
-        denied_n = status_counts.get("robots_denied", 0)
-        miss_n = status_counts.get("fetch_miss", 0)
+        done_new = (
+            done_new.withColumn("wave", F.lit(wave))
+            .observe(
+                done_obs,
+                *(F.count_if(F.col("retire_status") == s).alias(k) for k, s in counters.items()),
+            )
+            .localCheckpoint(eager=True)
+        )
+        self.catalog.append(DONE_TABLE, done_new.coalesce(n_files))
+        mark("done_commit")
+        observed = done_obs.get
+        counts = {k: observed[k] for k in counters}  # in return-key order
 
         # 8. per-partition lineage metrics (FIXTURES.md §6)
         elapsed = time.monotonic() - t0
@@ -491,8 +511,8 @@ class FrontierEngine:
             .agg(F.count(F.lit(1)).alias("fetch_count"), F.max("depth").alias("depth"))
             .select(
                 F.lit(wave).alias("wave"), "partition_id", "depth", "fetch_count",
-                F.lit(dedup_hits).alias("dedup_hits"),
-                F.lit(dedup_hits / n_pending if n_pending else 0.0).alias("dedup_hit_rate"),
+                F.lit(counts["dedup_hits"]).alias("dedup_hits"),
+                F.lit(counts["dedup_hits"] / n_pending).alias("dedup_hit_rate"),
                 F.lit(elapsed).alias("elapsed_s"),
             )
         )
@@ -507,11 +527,8 @@ class FrontierEngine:
         return {
             "wave": wave,
             "frontier_pending": n_pending,
-            "scheduled": scheduled,
-            "dedup_hits": dedup_hits,
-            "robots_denied": denied_n,
-            "fetch_misses": miss_n,
-            "retired": scheduled + dedup_hits + denied_n + miss_n,
+            **counts,
+            "retired": sum(counts.values()),
             "elapsed_s": elapsed,
             **timings,
         }

@@ -12,6 +12,11 @@ same API over plain parquet directories with JSON manifests:
   atomic on POSIX) — readers only ever see fully-committed snapshots;
 - a manifest lists the data dirs that make up the snapshot, so append is
   O(1) metadata and time travel = read an older manifest;
+- a manifest also holds the table's schema, in the column order and
+  all-nullable form a parquet footer read would infer. Every read passes
+  it to ``spark.read.schema``, so reading a table launches no Spark job
+  (an inferring read runs one per data dir), and ``append`` refuses a
+  frame whose columns differ from it;
 - ``merge_upsert`` re-expresses ``MERGE INTO ... WHEN MATCHED UPDATE WHEN
   NOT MATCHED INSERT`` (SURVEY §2.1 S11-S13) as anti-join + union +
   overwrite-snapshot. On a real cluster this whole class is replaced by
@@ -27,6 +32,27 @@ import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_NULLABILITY_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_read(schema: StructType, partition_by: list[str] | None) -> StructType:
+    """The schema a footer read of a dir written from ``schema`` infers:
+    every field, array element and map value nullable, partition columns
+    last."""
+
+    def nullable(t):
+        if isinstance(t, dict):
+            return {k: True if k in _NULLABILITY_KEYS else nullable(v) for k, v in t.items()}
+        if isinstance(t, list):
+            return [nullable(v) for v in t]
+        return t
+
+    fields = nullable(schema.jsonValue())["fields"]
+    last = [f for p in partition_by or [] for f in fields if f["name"] == p]
+    fields = [f for f in fields if f not in last] + last
+    return StructType.fromJson({"type": "struct", "fields": fields})
 
 
 class SnapshotCatalog:
@@ -62,11 +88,19 @@ class SnapshotCatalog:
         with open(os.path.join(self._manifest_dir(name), f"v{version}.json")) as f:
             return json.load(f)
 
-    def _commit(self, name: str, dirs: list[str], op: str) -> int:
+    def _schema(self, name: str, manifest: dict) -> StructType:
+        if "schema" not in manifest:
+            raise ValueError(
+                f"table {name}: manifest v{manifest['version']} records no "
+                "schema (written before manifests held one); rewrite the table"
+            )
+        return StructType.fromJson(manifest["schema"])
+
+    def _commit(self, name: str, dirs: list[str], op: str, schema: StructType) -> int:
         mdir = self._manifest_dir(name)
         os.makedirs(mdir, exist_ok=True)
         v = (self.current_version(name) or 0) + 1
-        payload = {"version": v, "op": op, "dirs": dirs}
+        payload = {"version": v, "op": op, "dirs": dirs, "schema": schema.jsonValue()}
         tmp = os.path.join(mdir, f".v{v}.json.tmp")
         with open(tmp, "w") as f:
             json.dump(payload, f)
@@ -82,17 +116,23 @@ class SnapshotCatalog:
         v = version if version is not None else self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"table {name} has no snapshots")
-        dirs = self._read_manifest(name, v)["dirs"]
-        if len(dirs) == 1:
-            return self.spark.read.parquet(dirs[0])
+        m = self._read_manifest(name, v)
+        reader = self.spark.read.schema(self._schema(name, m))
+        dirs = m["dirs"]
         # multiple snapshot dirs may each carry hive partition subdirs;
         # per-dir reads + union keep partition discovery rooted correctly
-        out = self.spark.read.parquet(dirs[0])
+        # (and a partitioned dir puts its partition columns last while an
+        # unpartitioned one keeps the schema's order: union by name)
+        out = reader.parquet(dirs[0])
         for d in dirs[1:]:
-            out = out.unionByName(self.spark.read.parquet(d))
+            out = out.unionByName(reader.parquet(d))
         return out
 
-    def _write(self, name: str, df: DataFrame, v_next: int, partition_by: list[str] | None) -> str:
+    def _write(
+        self, name: str, df: DataFrame, v_next: int, partition_by: list[str] | None
+    ) -> tuple[str, StructType]:
+        """Write ``df`` to the next snapshot's data dir; returns the dir
+        and the schema a read of it infers."""
         data_dir = os.path.join(self._tdir(name), "data", f"snap-{v_next}")
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -107,19 +147,28 @@ class SnapshotCatalog:
             # an empty partitioned write leaves no file to read the schema
             # back from: commit the empty frame unpartitioned instead
             df.write.mode("overwrite").parquet(data_dir)
-        return data_dir
+            partition_by = None
+        return data_dir, _as_read(df.schema, partition_by)
 
     def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> int:
-        v_next = (self.current_version(name) or 0) + 1
-        data_dir = self._write(name, df, v_next, partition_by)
         prev = self.current_version(name)
-        dirs = (self._read_manifest(name, prev)["dirs"] if prev else []) + [data_dir]
-        return self._commit(name, dirs, "append")
+        dirs, schema = [], None
+        if prev is not None:
+            m = self._read_manifest(name, prev)
+            dirs, schema = m["dirs"], self._schema(name, m)
+            have = {f.name: f.dataType for f in schema}
+            got = {f.name: f.dataType for f in _as_read(df.schema, None)}
+            differ = sorted(c for c in have.keys() | got.keys() if have.get(c) != got.get(c))
+            if differ:
+                raise ValueError(f"append to table {name}: columns {differ} differ from its schema")
+        data_dir, written = self._write(name, df, (prev or 0) + 1, partition_by)
+        # the table keeps its first commit's column order
+        return self._commit(name, dirs + [data_dir], "append", schema or written)
 
     def overwrite(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> int:
         v_next = (self.current_version(name) or 0) + 1
-        data_dir = self._write(name, df, v_next, partition_by)
-        return self._commit(name, [data_dir], "overwrite")
+        data_dir, schema = self._write(name, df, v_next, partition_by)
+        return self._commit(name, [data_dir], "overwrite", schema)
 
     def merge_upsert(self, name: str, updates: DataFrame, keys: list[str]) -> int:
         """MERGE INTO <name> USING updates ON keys — last-wins update.
@@ -135,8 +184,8 @@ class SnapshotCatalog:
         # materialize BEFORE the overwrite commit so we never read a
         # snapshot we are replacing mid-write
         v_next = (self.current_version(name) or 0) + 1
-        data_dir = self._write(name, merged, v_next, None)
-        return self._commit(name, [data_dir], "merge")
+        data_dir, schema = self._write(name, merged, v_next, None)
+        return self._commit(name, [data_dir], "merge", schema)
 
     def read_last_append(self, name: str, version: int) -> DataFrame:
         """Read ONLY the data dir added by the ``append`` that committed
@@ -147,8 +196,8 @@ class SnapshotCatalog:
         it progresses). Iceberg's analogue is an incremental read of one
         snapshot. Only valid straight after an append, before any
         compaction of this table."""
-        dirs = self._read_manifest(name, version)["dirs"]
-        return self.spark.read.parquet(dirs[-1])
+        m = self._read_manifest(name, version)
+        return self.spark.read.schema(self._schema(name, m)).parquet(m["dirs"][-1])
 
     def n_dirs(self, name: str) -> int:
         v = self.current_version(name)
