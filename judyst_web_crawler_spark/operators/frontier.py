@@ -2,13 +2,13 @@
 
 End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
 
-    pending = frontier ANTI JOIN done          (append-only retirement set)
-        │
-        ├─ url-level collapse (same url rediscovered → one fetch)
-        ├─ seen filter: incremental bloom prefilter + exact anti-join
-        ├─ first-wins per canonical key within the wave (D1, ksrf.py:106-142)
-        ├─ robots filter + per-host budget top-k (salted; politeness.py)
-        ▼
+    fate = frontier ANTI JOIN done, one linear plan checkpointed once:
+        ├─ one exchange on key_hash: url rank (a rediscovered url is one
+        │  fetch) + key rank (first-wins per canonical key, D1,
+        │  ksrf.py:106-142)
+        ├─ Bloom probe + exact seen flag (EXISTS in seen)
+        ├─ robots flag + per-host budget rank (salted; politeness.py)
+        ▼  retire_status: dup | robots_denied | selected | null (waits)
     fetch stand-in: join selected urls to the pages table (html BINARY)
         ▼
     extract_text_udf (byte-identical reference pipeline, P5+P7+P9)
@@ -17,29 +17,28 @@ End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
     law_codes.py:752-776 checkpoint semantics):
         documents += wave output
         seen      += scheduled keys
-        done      += scheduled / duplicate / robots-denied urls
+        done      += fate's dup / robots-denied rows, scheduled urls and
+                     fetch misses (selected urls with no documents row)
         metrics   += per-partition lineage
 
 State and cost:
 - ALL state tables are append-only — no wave ever rewrites a table, so
-  per-wave cost is O(pending), not O(frontier). The old design's
-  full-frontier status overwrite per wave would be O(frontier × waves).
-- ``pending`` is an anti-join on ``url`` against ``done``, and the seen
-  filter's truth tier an anti-join on ``key_hash`` against ``seen``;
-  both are key-hash equi-joins that Catalyst/AQE plan.
+  per-wave cost is O(pending), not O(frontier).
 - the seen filter has one Bloom prefilter (``BLOOM_BITS``/``BLOOM_K``),
   held on the driver and maintained INCREMENTALLY: built once from the
   ``seen`` table at engine construction (resume), then OR-merged with
-  each wave's newly-scheduled keys — never rebuilt from the full table.
-  Bloom misses skip the ``seen`` anti-join; hits go through it, so the
-  Bloom never changes which urls are new.
-- every other join is broadcast (politeness config) or a key-hash
-  equi-join; nothing collects rows to the driver except bloom blobs.
-- each selection step runs once: its narrow output (never html) is
-  checkpointed and every later commit reads the checkpoint, so the
-  documents and done commits agree on the winners of priority ties. The
-  wave's counters (pending, per-status retirements) are ``Observation``s
-  on checkpoint jobs that run anyway — a wave adds no job to count.
+  each wave's scheduled keys. A row is seen only if the Bloom might hold
+  its key AND the key exists in ``seen``, so the Bloom never changes
+  which urls are new.
+- every join is broadcast (politeness config) or a key-hash equi-join;
+  only bloom blobs and the wave's scheduled keys reach the driver.
+- each selection step runs once: the fate's flags are columns of one
+  linear plan, never filters of a shared subtree, so the Bloom's Python
+  crossing runs once. The documents and done commits both read the fate
+  checkpoint (never html), so they agree on the winners of priority
+  ties. Counters are ``Observation``s on jobs that run anyway. A wave
+  that retires every url it saw records the (frontier, done) snapshot
+  versions; a wave at those versions is empty and launches no job.
 """
 
 from __future__ import annotations
@@ -56,11 +55,16 @@ from judyst_web_crawler_spark.operators.dedup_fuzzy import (
     INDEX_SIGS,
     minhash_index_write_sigs,
 )
-from judyst_web_crawler_spark.operators.politeness import apply_robots, budget_topk
+from judyst_web_crawler_spark.operators.politeness import (
+    budget_rank,
+    priority_order,
+    robots_allowed,
+)
 from judyst_web_crawler_spark.operators.seen import (
     bloom_bits_for,
+    bloom_or,
     build_bloom,
-    filter_new_with_bloom,
+    with_seen_flag,
 )
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
@@ -76,9 +80,8 @@ METRICS_TABLE = "metrics"
 BLOOM_BITS = bloom_bits_for(1_000_000, 12)
 BLOOM_K = 5
 
-
-def _priority():
-    return [F.col("depth").asc(), F.col("page_seq").asc(), F.col("intra_page_seq").asc()]
+# the columns of a pending row that the fate keeps and the documents carry
+CARRY = ["url", "host", "depth", "page_seq", "intra_page_seq", "key_hash"]
 
 
 def get_or_fetch(requests: DataFrame, store: DataFrame, fetch, key_col: str = "url"):
@@ -140,6 +143,7 @@ class FrontierEngine:
             # model as _repair_partial_wave.
             self._reconcile_minhash_index()
         self._bloom_bc = None
+        self._drained_at = None  # (frontier, done) versions with nothing pending
         if catalog.exists(SEEN_TABLE):
             # resume: rebuild once from the committed seen set
             blob = build_bloom(catalog.read(SEEN_TABLE), "key_hash", BLOOM_BITS, BLOOM_K)
@@ -154,53 +158,40 @@ class FrontierEngine:
             self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom.tobytes())
         return self._bloom_bc
 
-    def _bloom_add(self, keys_df: DataFrame) -> None:
-        """OR this wave's newly-scheduled keys into the running bloom."""
-        blob = build_bloom(keys_df, "key_hash", BLOOM_BITS, BLOOM_K)
-        self._bloom |= np.frombuffer(blob, dtype=np.uint8)
+    def _bloom_add(self, keys) -> None:
+        """OR newly-scheduled key hashes into the running bloom."""
+        bloom_or(self._bloom, keys, BLOOM_BITS, BLOOM_K)
         if self._bloom_bc is not None:
             self._bloom_bc.unpersist()
             self._bloom_bc = None
 
     # -- bootstrap ---------------------------------------------------------
 
+    @staticmethod
+    def _frontier_rows(seeds: DataFrame, depth: int) -> DataFrame:
+        return seeds.select(
+            "url", C.url_host("url").alias("host"), F.lit(depth).alias("depth"),
+            "page_seq", "intra_page_seq", C.canonical_url("url").alias("canonical_url"),
+            C.key_hash(C.canonical_url("url")).alias("key_hash"),
+        )
+
     def bootstrap(self, seeds: DataFrame) -> None:
         """Seed the frontier. ``seeds``: url, page_seq, intra_page_seq
         (FIXTURES.md §2); host/depth/canonical key derived here. Discovery
         of new URLs mid-crawl = another append to the frontier table."""
-        frontier = (
-            seeds.withColumn("host", C.url_host("url"))
-            .withColumn("depth", F.lit(0))
-            .withColumn("canonical_url", C.canonical_url("url"))
-            .withColumn("key_hash", C.key_hash(C.canonical_url("url")))
-            .select(
-                "url", "host", "depth", "page_seq", "intra_page_seq",
-                "canonical_url", "key_hash",
-            )
-        )
-        self.catalog.overwrite(FRONTIER_TABLE, frontier, partition_by=["depth"])
+        self.catalog.overwrite(FRONTIER_TABLE, self._frontier_rows(seeds, 0), partition_by=["depth"])
 
     def enqueue(self, seeds: DataFrame, depth: int) -> None:
         """Append newly-discovered URLs (deeper frontier levels)."""
-        frontier = (
-            seeds.withColumn("host", C.url_host("url"))
-            .withColumn("depth", F.lit(depth))
-            .withColumn("canonical_url", C.canonical_url("url"))
-            .withColumn("key_hash", C.key_hash(C.canonical_url("url")))
-            .select(
-                "url", "host", "depth", "page_seq", "intra_page_seq",
-                "canonical_url", "key_hash",
-            )
-        )
-        self.catalog.append(FRONTIER_TABLE, frontier, partition_by=["depth"])
+        self.catalog.append(FRONTIER_TABLE, self._frontier_rows(seeds, depth), partition_by=["depth"])
 
     def forget(self, urls: DataFrame) -> None:
         """Un-retire urls: rewrite DONE and SEEN without them so a
         recrawl generation can re-fetch (Iceberg's rewrite-files shape;
         here the tables are rewritten whole). The Bloom keeps the stale
         keys — bits cannot be cleared — so a forgotten key probes
-        maybe-seen and goes through the exact anti-join against the
-        rewritten SEEN, which lets it through: staleness costs prefilter
+        maybe-seen and the exact EXISTS against the rewritten SEEN finds
+        nothing, which lets it through: staleness costs prefilter
         efficiency for the forgotten keys, never correctness."""
         u = urls.select("url").distinct().localCheckpoint(eager=True)
         # SEEN dedups by CANONICAL key, not url: a variant url that
@@ -312,8 +303,51 @@ class FrontierEngine:
             )
         # bloom before seen — same superset-invariant ordering as the
         # wave commit (see run_wave step 6)
-        self._bloom_add(seen_rows)
+        self._bloom_add([r["key_hash"] for r in seen_rows.select("key_hash").collect()])
         self.catalog.append(SEEN_TABLE, seen_rows)
+
+    def fate(self, budget: int = 2, n_salts: int = 1) -> DataFrame:
+        """Every pending row with its ``retire_status`` (``dup``,
+        ``robots_denied``, ``selected``, or null: waits for a later wave,
+        or repeats a url, ``_ur > 1``), the url rank ``_ur`` and the seen
+        flags ``_maybe``/``_seen``. Lazy; ``run_wave`` checkpoints it."""
+        # key_hash is a function of url, so one exchange on key_hash
+        # serves both windows. A url's rediscoveries rank after every
+        # first row of their key: they neither rank nor retire. Seen is
+        # all-or-nothing per key, so ranking before the seen check picks
+        # the winners a rank of the unseen rows would. The probe runs
+        # above the windows: over a multi-dir read a projection is pushed
+        # into every union branch, one Python stage per dir.
+        w_url = Window.partitionBy("key_hash", "url").orderBy(*priority_order())
+        w_key = Window.partitionBy("key_hash").orderBy((F.col("_ur") > 1).asc(), *priority_order())
+        rows = (
+            self.pending()
+            .repartition("key_hash")
+            .withColumn("_ur", F.row_number().over(w_url))
+            .withColumn("_kr", F.row_number().over(w_key))
+        )
+        if self.catalog.exists(SEEN_TABLE):
+            rows = with_seen_flag(
+                rows, self.catalog.read(SEEN_TABLE).select("key_hash"), "key_hash",
+                self._bloom_broadcast(), BLOOM_BITS, BLOOM_K,
+            )
+        else:
+            rows = rows.withColumn("_maybe", F.lit(False)).withColumn("_seen", F.lit(False))
+        allowed, host_budget = F.lit(True), F.lit(budget)
+        if self.politeness is not None:
+            rules = self.politeness.select("host", "robots_allow", "robots_deny", "budget")
+            rows = rows.join(F.broadcast(rules), on="host", how="left")
+            allowed, host_budget = robots_allowed(), F.coalesce(F.col("budget"), host_budget)
+        rows = rows.withColumn("_allowed", allowed)
+        first = (F.col("_ur") == 1) & ~F.col("_seen") & (F.col("_kr") == 1)
+        rows = budget_rank(rows, host_budget, n_salts, first=first & F.col("_allowed"))
+        status = (
+            F.when(F.col("_ur") > 1, F.lit(None))
+            .when(F.col("_seen") | (F.col("_kr") > 1), "dup")
+            .when(~F.col("_allowed"), "robots_denied")
+            .when(F.col("_rank") <= F.col("_share"), "selected")
+        )
+        return rows.select(*CARRY, "_ur", "_maybe", "_seen", status.alias("retire_status"))
 
     def run_wave(
         self,
@@ -353,78 +387,61 @@ class FrontierEngine:
         self._repaired = False
         mark("waveid")
 
-        # 0. pending = frontier ANTI JOIN done. Checkpoint `pending` (cuts
-        # the wave-loop lineage; its row count is observed on the same
-        # job) → read by step 1.
-        pending_obs = Observation()
-        pending = (
-            self.pending()
-            .observe(pending_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_pending = pending_obs.get["n"]
+        # 0-4. every pending row's fate; the rows that retire this wave
+        # are checkpointed (never html) and the counters observed on that
+        # job → read by the fetch (5) and the done commit (7). Versions
+        # only grow: at those a wave left drained, pending is empty.
+        versions = tuple(self.catalog.current_version(t) for t in (FRONTIER_TABLE, DONE_TABLE))
+        fc = {"rows": 0}
+        if versions != self._drained_at:
+            first, status = F.col("_ur") == 1, F.col("retire_status")
+            fate_obs = Observation()
+            fate = (
+                self.fate(budget, n_salts)
+                .observe(
+                    fate_obs,
+                    F.count(F.lit(1)).alias("rows"),
+                    F.count_if(first).alias("urls"),
+                    F.count_if(first & F.col("_maybe")).alias("seen_maybe"),
+                    F.count_if(first & F.col("_seen")).alias("seen_exact_hits"),
+                    *(F.count_if(status == s).alias(s) for s in ("dup", "robots_denied", "selected")),
+                )
+                .filter(F.col("retire_status").isNotNull())
+                .select(*CARRY, "retire_status")
+                .localCheckpoint(eager=True)
+            )
+            fc = fate_obs.get
+        n_pending = fc["rows"]
         mark("pending")
+        timings["t_seen_filter"] = 0.0  # part of the fate plan
         if n_pending == 0:
             # nothing committed: the wave id stays available and no
             # repair is owed
+            self._drained_at = versions
             self._next_wave = wave
             self._repaired = True
             return {"wave": wave, "frontier_pending": 0, "scheduled": 0, "retired": 0, "elapsed_s": 0.0}
-
-        # 1. url-level collapse: rediscoveries of one url = one fetch row.
-        # Checkpoint `pending_u` → read by step 2 and the seen-dups of
-        # the done commit (step 7).
-        w_url = Window.partitionBy("url").orderBy(*_priority())
-        pending_u = (
-            pending.withColumn("_ur", F.row_number().over(w_url))
-            .filter(F.col("_ur") == 1)
-            .drop("_ur")
-        ).localCheckpoint(eager=True)
-
-        # 2. seen filter (incremental bloom prefilter + exact anti-join).
-        # Checkpoint `new` → read by step 3 and the seen-dups of step 7.
-        # Without a seen table nothing is filtered: `new` is `pending_u`.
-        new = pending_u
-        if self.catalog.exists(SEEN_TABLE):
-            new = filter_new_with_bloom(
-                pending_u, self.catalog.read(SEEN_TABLE), "key_hash",
-                self._bloom_broadcast(), BLOOM_BITS, BLOOM_K,
-            ).localCheckpoint(eager=True)
-        mark("seen_filter")
-
-        # 3. first-wins per canonical key WITHIN the wave (D1): one fetch
-        # per key, best priority survives; later-priority keys retire as
-        # dups. Checkpoint `keyed` → read by step 4 and the intra-wave
-        # dups and robots-denied urls of step 7.
-        w_key = Window.partitionBy("key_hash").orderBy(*_priority())
-        keyed = new.withColumn("_kr", F.row_number().over(w_key)).localCheckpoint(eager=True)
-        new_first = keyed.filter(F.col("_kr") == 1).drop("_kr")
-
-        # 4. politeness: robots + budget top-k per (salted) host.
-        # Checkpoint `selected` → read by the fetch (step 5) and the
-        # fetch misses of step 7.
-        allowed = new_first
-        if self.politeness is not None:
-            allowed = apply_robots(allowed, self.politeness)
-        selected = budget_topk(
-            allowed, self.politeness, default_budget=budget, n_salts=n_salts
-        ).localCheckpoint(eager=True)
 
         # 5. fetch stand-in + extract (SURVEY §2.1 S3: html column IS the
         # payload) → documents commit. Urls missing from the pages table
         # are fetch MISSES: they get no documents row (no null-text rows
         # masquerading as fetches) and retire with their own status.
+        selected = fate.filter(F.col("retire_status") == "selected")
         fetched = selected.join(pages.select("url", "html"), on="url").filter(
             F.col("html").isNotNull()
         )
-        carry = ["url", "host", "depth", "page_seq", "intra_page_seq", "key_hash"]
         if self.fingerprint_k:
-            docs = self._extract_and_fingerprint(fetched, carry, wave)
+            docs = self._extract_and_fingerprint(fetched, CARRY, wave)
         else:
             docs = fetched.select(
-                *carry, extract_text_udf(F.col("html")).alias("text")
+                *CARRY, extract_text_udf(F.col("html")).alias("text")
             ).withColumn("wave", F.lit(wave))
+        # the scheduled keys (bloom increment, ``scheduled``) come back
+        # with the write
+        docs_obs = Observation()
+        docs = docs.observe(docs_obs, F.collect_list("key_hash").alias("keys"))
         v_docs = self.catalog.append(DOCS_TABLE, docs)
+        scheduled_keys = docs_obs.get["keys"]
         mark("extract_commit")
         # read ONLY the dir this append committed: one extract pass ran
         # at the append; the index/seen/done/metrics commits below reuse
@@ -443,71 +460,49 @@ class FrontierEngine:
             mark("index_commit")
 
         # 6. seen += scheduled keys; bloom |= scheduled keys. The seen and
-        # done tables are SKINNY (url/key/status columns); committing them
-        # at full parallelism writes dozens of tiny files per wave, and
-        # every later wave re-reads the union — so both commits write
-        # one file per 8 of the documents commit's files (floor 1).
-        # coalesce() pushes up into the producing stage (no shuffle
-        # barrier), so it only ever shrinks a checkpoint or a plain
-        # parquet projection, never the compute chain.
+        # done tables are SKINNY, and every later wave re-reads them: both
+        # commits write one file per 8 of the documents commit's files
+        # (coalesce shrinks the reading stage, no shuffle).
         n_files = max(1, len(docs_c.inputFiles()) // 8)
-        scheduled_keys = docs_c.select(
-            "key_hash", "url", F.lit(wave).alias("first_seen_wave")
-        )
-        # bloom BEFORE seen (the safe crash direction): the two steps
-        # are not atomic, and filter_new_with_bloom routes bloom-NEGATIVE
-        # rows straight past the exact anti-join — so the invariant must
-        # be bloom ⊇ seen. A failed seen commit after the OR leaves extra
-        # bits (prune cost only); seen rows without bits would mean seen
-        # urls re-fetched as "definitely new".
+        # bloom BEFORE seen (the safe crash direction): a bloom-NEGATIVE
+        # key never counts as seen, so the invariant is bloom ⊇ seen. A
+        # failed seen commit after the OR leaves extra bits (prune cost
+        # only); seen rows without bits would mean seen urls re-fetched.
         self._bloom_add(scheduled_keys)
-        self.catalog.append(SEEN_TABLE, scheduled_keys.coalesce(n_files))
+        seen_new = docs_c.select("key_hash", "url", F.lit(wave).alias("first_seen_wave"))
+        self.catalog.append(SEEN_TABLE, seen_new.coalesce(n_files))
         mark("seen_commit")
 
-        # 7. done += scheduled ∪ seen-dups ∪ intra-wave dups ∪
-        # robots-denied ∪ fetch misses, every branch read off the
-        # documents dir or the checkpoints above. Checkpoint `done_new`
-        # (at full parallelism: the anti-joins are real compute; the
-        # retirement counts are observed on the same job) → the done
-        # commit.
+        # 7. done += the fate's dup and robots-denied rows ∪ scheduled
+        # (the documents dir) ∪ fetch misses (selected − documents).
         def retire(df: DataFrame, status: str) -> DataFrame:
             return df.select("url", F.lit(status).alias("retire_status"))
 
-        done_new = retire(docs_c, "scheduled").unionByName(
-            retire(keyed.filter(F.col("_kr") > 1), "dup")
-        ).unionByName(
-            retire(selected.join(docs_c.select("url"), on="url", how="left_anti"), "fetch_miss")
-        )
-        if new is not pending_u:
-            seen_dups = pending_u.join(new.select("url"), on="url", how="left_anti")
-            done_new = done_new.unionByName(retire(seen_dups, "dup"))
-        if self.politeness is not None:
-            denied = new_first.join(allowed.select("url"), on="url", how="left_anti")
-            done_new = done_new.unionByName(retire(denied, "robots_denied"))
-        done_obs = Observation()
-        counters = {
-            "scheduled": "scheduled",
-            "dedup_hits": "dup",
-            "robots_denied": "robots_denied",
-            "fetch_misses": "fetch_miss",
-        }
         done_new = (
-            done_new.withColumn("wave", F.lit(wave))
-            .observe(
-                done_obs,
-                *(F.count_if(F.col("retire_status") == s).alias(k) for k, s in counters.items()),
+            fate.filter(F.col("retire_status") != "selected")
+            .select("url", "retire_status")
+            .unionByName(retire(docs_c, "scheduled"))
+            .unionByName(
+                retire(selected.join(docs_c.select("url"), on="url", how="left_anti"), "fetch_miss")
             )
-            .localCheckpoint(eager=True)
+            .withColumn("wave", F.lit(wave))
         )
-        self.catalog.append(DONE_TABLE, done_new.coalesce(n_files))
+        v_done = self.catalog.append(DONE_TABLE, done_new.coalesce(n_files))
         mark("done_commit")
-        observed = done_obs.get
-        counts = {k: observed[k] for k in counters}  # in return-key order
+        counts = {  # in return-key order
+            "scheduled": len(scheduled_keys),
+            "dedup_hits": fc["dup"],
+            "robots_denied": fc["robots_denied"],
+            "fetch_misses": fc["selected"] - len(scheduled_keys),
+        }
 
-        # 8. per-partition lineage metrics (FIXTURES.md §6)
+        # 8. per-partition lineage metrics (FIXTURES.md §6): ids taken
+        # before the coalesce; one partition groups with no exchange
         elapsed = time.monotonic() - t0
         part_metrics = (
-            docs_c.groupBy(F.spark_partition_id().alias("partition_id"))
+            docs_c.select(F.spark_partition_id().alias("partition_id"), "depth")
+            .coalesce(1)
+            .groupBy("partition_id")
             .agg(F.count(F.lit(1)).alias("fetch_count"), F.max("depth").alias("depth"))
             .select(
                 F.lit(wave).alias("wave"), "partition_id", "depth", "fetch_count",
@@ -516,7 +511,6 @@ class FrontierEngine:
                 F.lit(elapsed).alias("elapsed_s"),
             )
         )
-        part_metrics = part_metrics.coalesce(1)  # ≤ one row per partition
         self.catalog.append(METRICS_TABLE, part_metrics)
         mark("metrics_commit")
         # bump only after every commit of this wave succeeded; the
@@ -524,11 +518,16 @@ class FrontierEngine:
         # a failed wave forces repair, like a restart)
         self._next_wave = wave + 1
         self._repaired = True
+        retired = sum(counts.values())
+        if retired == fc["urls"]:
+            self._drained_at = (versions[0], v_done)
         return {
             "wave": wave,
             "frontier_pending": n_pending,
             **counts,
-            "retired": sum(counts.values()),
+            "retired": retired,
+            "seen_maybe": fc["seen_maybe"],
+            "seen_exact_hits": fc["seen_exact_hits"],
             "elapsed_s": elapsed,
             **timings,
         }

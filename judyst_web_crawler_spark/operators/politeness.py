@@ -89,24 +89,26 @@ def parse_robots_txt(robots: DataFrame, host_col: str = "host", body_col: str = 
     return robots.select(host_col, body_col).mapInPandas(run, schema)
 
 
-def apply_robots(frontier: DataFrame, politeness: DataFrame) -> DataFrame:
-    """Keep URLs allowed by the host's robots rules.
-
-    allow-prefix must match AND no deny-prefix may match; hosts missing
-    from the politeness table are allowed (crawler default-permit, same
-    effective behavior as the reference which has no robots handling —
-    SURVEY §2.8 — but with the hook in place).
-    """
-    path = url_path("url").alias("_path")
-    joined = frontier.withColumn("_path", path).join(
-        F.broadcast(politeness.select("host", "robots_allow", "robots_deny")),
-        on="host",
-        how="left",
-    )
-    starts = lambda p: F.startswith(F.col("_path"), p)  # noqa: E731
+def robots_allowed(url: str = "url") -> Column:
+    """The robots rule over the joined ``robots_allow``/``robots_deny``
+    columns: an allow-prefix must match AND no deny-prefix may match.
+    Null rules (host not in the table) allow — default-permit, like the
+    reference, which has no robots handling (SURVEY §2.8)."""
+    path = url_path(url)
+    starts = lambda p: F.startswith(path, p)  # noqa: E731
     allowed = F.col("robots_allow").isNull() | F.exists("robots_allow", starts)
     denied = F.col("robots_deny").isNotNull() & F.exists("robots_deny", starts)
-    return joined.filter(allowed & ~denied).drop("_path", "robots_allow", "robots_deny")
+    return F.coalesce(allowed & ~denied, F.lit(False))
+
+
+def apply_robots(frontier: DataFrame, politeness: DataFrame) -> DataFrame:
+    """Keep URLs allowed by the host's robots rules (``robots_allowed``)."""
+    rules = F.broadcast(politeness.select("host", "robots_allow", "robots_deny"))
+    return (
+        frontier.join(rules, on="host", how="left")
+        .filter(robots_allowed())
+        .drop("robots_allow", "robots_deny")
+    )
 
 
 def budget_from_crawl_delay(
@@ -129,44 +131,42 @@ def budget_from_crawl_delay(
     return politeness.select(*cols, derived.cast("int").alias("budget"))
 
 
+def budget_rank(
+    df: DataFrame, budget: Column, n_salts: int = 1, first: Column | None = None
+) -> DataFrame:
+    """Add ``_rank`` (best priority first within the url's (host, salt)
+    shard; rows where ``first`` holds rank before all others) and
+    ``_share`` (the shard's part of ``budget``: budget//eff, plus 1 below
+    budget%eff). A row is within budget when ``_rank <= _share``."""
+    # a host's effective salt count never exceeds its budget — otherwise
+    # salts >= budget%n would get share 0 and their URLs (salt is a pure
+    # function of url) would starve FOREVER
+    eff = F.greatest(F.least(F.lit(n_salts), budget), F.lit(1))
+    salt = F.pmod(F.xxhash64("url"), eff).cast("int") if n_salts > 1 else F.lit(0)
+    share = (budget / eff).cast("int") + F.when(salt < budget % eff, 1).otherwise(0)
+    order = ([] if first is None else [(~first).asc()]) + priority_order()
+    w = Window.partitionBy("host", "_salt").orderBy(*order)
+    return (
+        df.withColumn("_salt", salt)
+        .withColumn("_share", share)
+        .withColumn("_rank", F.row_number().over(w))
+        .drop("_salt")
+    )
+
+
 def budget_topk(
     frontier: DataFrame,
     politeness: DataFrame | None = None,
     default_budget: int = 1,
     n_salts: int = 1,
 ) -> DataFrame:
-    """Select ≤budget URLs per host for this wave, best-priority first.
-
-    n_salts=1: exact global top-k per host (one window shuffle on host).
-    n_salts>1: per-(host,salt) top-k with the budget pre-split across
-    salts — total per host never exceeds the budget, and skew from giant
-    hosts is spread over n_salts tasks.
-    """
-    df = frontier
+    """Select ≤budget URLs per host (``politeness.budget``, else
+    ``default_budget``) for this wave, best-priority first; salted shards
+    (n_salts>1) spread a giant host over tasks and never exceed it."""
+    budget = F.lit(default_budget)
     if politeness is not None:
-        df = df.join(F.broadcast(politeness.select("host", "budget")), on="host", how="left")
-        budget = F.coalesce(F.col("budget"), F.lit(default_budget))
-    else:
-        budget = F.lit(default_budget)
-
-    if n_salts <= 1:
-        w = Window.partitionBy("host").orderBy(*priority_order())
-        out = df.withColumn("_rank", F.row_number().over(w)).filter(F.col("_rank") <= budget)
-    else:
-        # a host's effective salt count never exceeds its budget —
-        # otherwise salts >= budget%n would get share 0 and their URLs
-        # (salt is a pure function of url) would starve FOREVER
-        eff = F.greatest(F.least(F.lit(n_salts), budget), F.lit(1))
-        df = df.withColumn("_salt", F.pmod(F.xxhash64("url"), eff).cast("int")).withColumn("_eff", eff)
-        # budget share for shard s: budget//eff + (1 if s < budget%eff)
-        share = (budget / F.col("_eff")).cast("int") + F.when(
-            F.col("_salt") < budget % F.col("_eff"), F.lit(1)
-        ).otherwise(F.lit(0))
-        w = Window.partitionBy("host", "_salt").orderBy(*priority_order())
-        out = (
-            df.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= share)
-            .drop("_salt", "_eff")
-        )
-    out = out.drop("_rank")
+        frontier = frontier.join(F.broadcast(politeness.select("host", "budget")), on="host", how="left")
+        budget = F.coalesce(F.col("budget"), budget)
+    out = budget_rank(frontier, budget, n_salts).filter(F.col("_rank") <= F.col("_share"))
+    out = out.drop("_rank", "_share")
     return out.drop("budget") if politeness is not None else out

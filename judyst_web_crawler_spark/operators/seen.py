@@ -1,4 +1,4 @@
-"""URL-seen filter: incremental Bloom prefilter + exact anti-join.
+"""URL-seen filter: incremental Bloom prefilter + exact EXISTS flag.
 
 Two tiers (SURVEY.md §4 custom-op 1, north_star BASELINE.json:6):
 
@@ -7,12 +7,13 @@ Two tiers (SURVEY.md §4 custom-op 1, north_star BASELINE.json:6):
   (per-partition numpy bit arrays via ``mapInPandas``, OR-merged on the
   driver). The frontier engine builds it once from the committed
   ``seen`` table when it starts and then ORs in each wave's scheduled
-  keys, so the bits are never rebuilt from the whole table mid-crawl.
-  Candidates the Bloom has definitely NOT seen skip the join.
-- TRUTH: candidates the Bloom *might* have seen go through the exact
-  LEFT ANTI JOIN against ``seen`` (``filter_new_exact``), so a Bloom
-  false positive can never drop a URL (exact URL-seen parity,
-  BASELINE.json:14).
+  keys (``bloom_or``), so the bits are never rebuilt from the whole
+  table mid-crawl.
+- TRUTH: a candidate is seen only if the Bloom *might* have seen it AND
+  its key EXISTS in ``seen`` (``with_seen_flag``), so a Bloom false
+  positive can never drop a URL (exact URL-seen parity,
+  BASELINE.json:14). The EXISTS still reads every candidate row: the
+  Bloom decides which rows *can* be seen, not how much the join reads.
 
 Hashing: Kirsch-Mitzenmacher double hashing from the single 64-bit key
 (g_i = h_lo + i*h_hi mod n_bits) — k derived probes, no extra hash passes.
@@ -48,6 +49,12 @@ def bloom_bits_for(n_items: int, bits_per_item: int = 12) -> int:
     return n
 
 
+def bloom_or(bits: np.ndarray, hashes, n_bits: int, k: int) -> None:
+    """Set the bits of ``hashes`` (int64 keys) in ``bits`` in place."""
+    for idx, mask in _probe_positions(np.asarray(hashes, dtype=np.int64), n_bits, k):
+        np.bitwise_or.at(bits, idx, mask)
+
+
 def build_bloom(seen_df: DataFrame, hash_col: str, n_bits: int, k: int = 5) -> bytes:
     """Per-partition shards via mapInPandas, OR-merged on the driver.
 
@@ -63,8 +70,7 @@ def build_bloom(seen_df: DataFrame, hash_col: str, n_bits: int, k: int = 5) -> b
             if len(pdf) == 0:
                 continue
             saw = True
-            for idx, mask in _probe_positions(pdf[hash_col].to_numpy(dtype=np.int64), n_bits, k):
-                np.bitwise_or.at(bits, idx, mask)
+            bloom_or(bits, pdf[hash_col].to_numpy(dtype=np.int64), n_bits, k)
         if saw:
             yield pd.DataFrame({"shard": [bits.tobytes()]})
 
@@ -90,27 +96,22 @@ def bloom_might_contain_udf(bc, n_bits: int, k: int):
     return might_contain
 
 
-def filter_new_with_bloom(
-    candidates: DataFrame,
-    seen_df: DataFrame,
-    hash_col: str,
-    bc,
-    n_bits: int,
-    k: int,
-) -> DataFrame:
-    """Rows of ``candidates`` whose ``hash_col`` is NOT in ``seen_df``:
-    bloom-definitely-new ∪ (maybe-seen ANTI JOIN seen) — exact. The
-    caller owns the bloom blob ``bc`` and keeps it a superset of
-    ``seen_df``'s keys."""
+def with_seen_flag(candidates: DataFrame, seen_df: DataFrame, hash_col: str, bc, n_bits: int, k: int) -> DataFrame:
+    """``candidates`` plus ``_maybe`` (the Bloom probe hit) and ``_seen``
+    (``_maybe`` AND ``hash_col`` EXISTS in ``seen_df``: exact). The EXISTS
+    plans as an ``ExistenceJoin``, so duplicate seen keys cannot fan rows
+    out. The caller keeps the bloom blob ``bc`` a superset of
+    ``seen_df``'s keys: a key the Bloom misses never counts as seen."""
     mc = bloom_might_contain_udf(bc, n_bits, k)
-    tagged = candidates.withColumn("_maybe_seen", mc(F.col(hash_col)))
-    definitely_new = tagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
-    maybe = tagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-    return definitely_new.unionByName(filter_new_exact(maybe, seen_df, hash_col))
+    # alias the outer frame: an unqualified outer column would resolve
+    # inside the subquery and plan an uncorrelated EXISTS
+    tagged = candidates.withColumn("_maybe", mc(F.col(hash_col))).alias("_cand")
+    exact = seen_df.where(F.col(hash_col) == F.col(f"_cand.{hash_col}").outer()).exists()
+    return tagged.withColumn("_seen", F.col("_maybe") & exact)
 
 
 def filter_new_exact(candidates: DataFrame, seen_df: DataFrame, hash_col: str = "key_hash") -> DataFrame:
-    """The truth tier alone (D3/D4 anti-join, SURVEY §2.3): the bloom
-    path's maybe-seen branch and its oracle in tests. Duplicate keys on
-    the seen side cannot change a left-anti result, so no distinct()."""
+    """Rows of ``candidates`` whose ``hash_col`` is NOT in ``seen_df``, by
+    anti-join alone (D3/D4, SURVEY §2.3): the flag form's oracle. Duplicate
+    seen keys cannot change a left-anti result, so no distinct()."""
     return candidates.join(seen_df.select(hash_col), on=hash_col, how="left_anti")

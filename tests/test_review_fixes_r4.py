@@ -39,9 +39,9 @@ def _seeded_engine(spark, tmp_path, **engine_kw):
 
 def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
     """The engine's Bloom must receive a wave's keys BEFORE the seen
-    table does: bloom-false-negatives bypass the exact anti-join
-    (filter_new_with_bloom routes bloom-negative rows straight to
-    'definitely new'), so a failure between the two steps is only safe
+    table does: bloom-false-negatives bypass the exact check
+    (with_seen_flag flags a row seen only if the Bloom might hold its
+    key), so a failure between the two steps is only safe
     in the bloom-superset direction. Pin the order, then the invariant
     itself."""
     from judyst_web_crawler_spark.operators import frontier as frontier_mod

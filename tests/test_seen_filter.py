@@ -1,5 +1,6 @@
-"""Bloom prefilter must never change results vs the exact anti-join
-(SURVEY §7 build step 4)."""
+"""The Bloom prefilter must never change results vs the exact anti-join
+(SURVEY §7 build step 4): the seen flag is the Bloom probe AND an exact
+EXISTS, so only the exact check decides."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ from judyst_web_crawler_spark.operators.seen import (
     bloom_might_contain_udf,
     build_bloom,
     filter_new_exact,
-    filter_new_with_bloom,
+    with_seen_flag,
 )
 
 
@@ -26,6 +27,10 @@ def _probe(spark, keys_df, n_bits, k=5):
     return bc, bloom_might_contain_udf(bc, n_bits, k)
 
 
+def _unseen(candidates, seen, bc, n_bits):
+    return with_seen_flag(candidates, seen, "key_hash", bc, n_bits, 5).filter(~F.col("_seen"))
+
+
 def test_bloom_equals_exact(spark):
     seen = _urls(spark, 0, 5000)
     candidates = _urls(spark, 2500, 5000)  # half overlap
@@ -35,7 +40,7 @@ def test_bloom_equals_exact(spark):
     # (nearly every candidate maybe-seen, so the exact branch decides)
     for n_bits in (bloom_bits_for(5000, 12), 1024):
         bc, _ = _probe(spark, seen, n_bits)
-        got = filter_new_with_bloom(candidates, seen, "key_hash", bc, n_bits, 5)
+        got = _unseen(candidates, seen, bc, n_bits)
         assert {r["url"] for r in got.collect()} == want, n_bits
 
 
@@ -60,9 +65,49 @@ def test_sharded_bloom_equals_exact(spark):
     blob = build_bloom(seen.repartition(8), "key_hash", n_bits, 5)
     assert blob == build_bloom(seen.coalesce(1), "key_hash", n_bits, 5)
     bc = spark.sparkContext.broadcast(blob)
-    got = {r["key_hash"] for r in filter_new_with_bloom(cands, seen, "key_hash", bc, n_bits, 5).collect()}
+    got = {r["key_hash"] for r in _unseen(cands, seen, bc, n_bits).collect()}
     want = {r["key_hash"] for r in filter_new_exact(cands, seen).collect()}
     assert got == want
+
+
+def test_bloom_hit_missing_from_seen_is_unseen(spark):
+    """A key the Bloom holds but ``seen`` lacks (what ``forget()`` leaves
+    behind) is maybe-seen, not seen: the EXISTS is correlated on the
+    candidate's own key, not an uncorrelated "seen is non-empty"."""
+    keys = _urls(spark, 0, 3)
+    seen = keys.filter(F.col("url").endswith("doc0.pdf"))
+    n_bits = bloom_bits_for(3, 12)
+    bc, _ = _probe(spark, keys, n_bits)  # the Bloom still holds all three
+    got = {r["url"]: (r["_maybe"], r["_seen"]) for r in with_seen_flag(keys, seen, "key_hash", bc, n_bits, 5).collect()}
+    assert got == {
+        "http://h.ru/doc0.pdf": (True, True),
+        "http://h.ru/doc1.pdf": (True, False),
+        "http://h.ru/doc2.pdf": (True, False),
+    }
+
+
+def test_duplicate_seen_keys_keep_one_row_per_candidate(spark):
+    keys = _urls(spark, 0, 4)
+    seen = keys.unionByName(keys).unionByName(keys.limit(2))
+    n_bits = bloom_bits_for(4, 12)
+    bc, _ = _probe(spark, keys, n_bits)
+    flagged = with_seen_flag(keys, seen, "key_hash", bc, n_bits, 5)
+    assert sorted(r["url"] for r in flagged.collect()) == sorted(r["url"] for r in keys.collect())
+    assert flagged.filter(F.col("_seen")).count() == 4
+
+
+def test_bloom_or_equals_build_bloom(spark):
+    """The engine ORs a wave's scheduled keys into its bits on the driver
+    (``bloom_or``); that equals ``build_bloom`` over the same keys."""
+    import numpy as np
+
+    from judyst_web_crawler_spark.operators.seen import bloom_or
+
+    keys = spark.range(300).select(F.xxhash64("id").alias("key_hash"))
+    n_bits = bloom_bits_for(300, 12)
+    bits = np.zeros(n_bits // 8, dtype=np.uint8)
+    bloom_or(bits, [r["key_hash"] for r in keys.collect()], n_bits, 5)
+    assert bits.tobytes() == build_bloom(keys, "key_hash", n_bits, 5)
 
 
 def test_sharded_bloom_incremental_add(spark):

@@ -1,15 +1,20 @@
 """A wave's fixed Spark jobs, and retirement when priorities tie.
 
-One small politeness-bound crawl (module-scoped) serves both:
+One small politeness-bound crawl (module-scoped) serves most tests:
 
-- the job count of a steady-state wave (seen and done tables exist, same
-  engine) and of the empty final wave are pinned, one job group per
-  wave. A selection chain evaluated twice, an inferring catalog read or
-  a counter taken by an extra job shows up as a higher count;
+- the job count of the first wave, of a steady-state wave (seen and
+  done tables exist, same engine) and of the empty final wave are
+  pinned, one job group per wave. A selection plan evaluated twice, an
+  inferring catalog read or a counter taken by an extra job shows up as
+  a higher count;
 - the fixture plants priority ties the documents and done commits must
   resolve the same way: two url variants of one canonical key with equal
   ``(depth, page_seq, intra_page_seq)``, and a host whose budget cuts
-  through six equal-priority urls.
+  through six equal-priority urls;
+- the wave's seen-filter counters are checked against a Bloom and a
+  membership test rebuilt from outside, and the fate plan's shape (one
+  Python stage, an ``ExistenceJoin``, one exchange per window key) is
+  pinned on the fixture's catalog.
 """
 
 from __future__ import annotations
@@ -18,16 +23,22 @@ import pytest
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.operators.frontier import (
+    BLOOM_BITS,
+    BLOOM_K,
     DOCS_TABLE,
     DONE_TABLE,
     FRONTIER_TABLE,
+    SEEN_TABLE,
     FrontierEngine,
 )
+from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf, build_bloom
+from judyst_web_crawler_spark.plans.inspect import python_eval_ops, simple_plan
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 # the numbers this engine reaches on the fixture below
-STEADY_WAVE_JOBS = 26
-EMPTY_WAVE_JOBS = 2
+FIRST_WAVE_JOBS = 12
+STEADY_WAVE_JOBS = 12
+EMPTY_WAVE_JOBS = 0
 
 A = "http://a.example.ru"
 B = "http://b.example.ru"
@@ -39,6 +50,13 @@ OTHERS = [f"{B}/ru/b{i}.pdf" for i in range(3)]
 LATE = f"{B}/ru/b0.pdf#late"  # enqueued after wave 0: its key is seen
 
 
+def _politeness(spark):
+    return spark.createDataFrame(
+        [("a.example.ru", 4, ["/ru/"], ["/private/"], None), ("b.example.ru", 10, ["/ru/"], ["/private/"], None)],
+        "host string, budget int, robots_allow array<string>, robots_deny array<string>, crawl_delay_s double",
+    )
+
+
 @pytest.fixture(scope="module")
 def crawl(spark, tmp_path_factory, jobs_of):
     fetchable = TIED + VARIANTS + [DENIED] + OTHERS + [LATE]
@@ -46,10 +64,7 @@ def crawl(spark, tmp_path_factory, jobs_of):
         [(u, bytearray(f"<html><body><p>doc {u.split('#')[0]}</p></body></html>".encode())) for u in fetchable],
         "url string, html binary",
     ).cache()
-    politeness = spark.createDataFrame(
-        [("a.example.ru", 4, ["/ru/"], ["/private/"], None), ("b.example.ru", 10, ["/ru/"], ["/private/"], None)],
-        "host string, budget int, robots_allow array<string>, robots_deny array<string>, crawl_delay_s double",
-    )
+    politeness = _politeness(spark)
     seeds = spark.createDataFrame(
         [(u, 2, 1) for u in TIED + VARIANTS]
         + [(u, 3, i) for i, u in enumerate([DENIED, MISSING] + OTHERS)],
@@ -78,6 +93,11 @@ def test_crawl_drains_in_two_waves(crawl):
     assert [s["dedup_hits"] for s in stats[:2]] == [1, 1]
     assert [s["robots_denied"] for s in stats[:2]] == [1, 0]
     assert [s["fetch_misses"] for s in stats[:2]] == [1, 0]
+
+
+def test_first_wave_job_budget(crawl):
+    _cat, _stats, jobs = crawl
+    assert jobs[0] == FIRST_WAVE_JOBS
 
 
 def test_steady_wave_job_budget(crawl):
@@ -117,3 +137,93 @@ def test_one_scheduled_url_per_key_and_documents_match(crawl):
     docs = [r["url"] for r in cat.read(DOCS_TABLE).select("url").collect()]
     assert sorted(docs) == sorted(r["url"] for r in scheduled.collect())
     assert len([u for u in docs if u in VARIANTS]) == 1
+
+
+def test_seen_counters_match_outside_replay(spark, crawl):
+    """``seen_maybe``/``seen_exact_hits`` equal a Bloom built from
+    outside over the keys seen before the wave, and an exact membership
+    check, over the wave's pending urls."""
+    cat, stats, _jobs = crawl
+    frontier = cat.read(FRONTIER_TABLE).select("url", "key_hash", "depth").collect()
+    done = cat.read(DONE_TABLE).select("url", "wave").collect()
+    seen = cat.read(SEEN_TABLE).select("key_hash", "first_seen_wave").collect()
+    for w in (0, 1):
+        retired = {r["url"] for r in done if r["wave"] < w}
+        # the depth-1 url was enqueued after wave 0
+        pending = {r["url"]: r["key_hash"] for r in frontier if r["depth"] <= w and r["url"] not in retired}
+        before = {r["key_hash"] for r in seen if r["first_seen_wave"] < w}
+        maybe = 0
+        if before:
+            keys = spark.createDataFrame([(k,) for k in before], "key_hash long")
+            bc = spark.sparkContext.broadcast(build_bloom(keys, "key_hash", BLOOM_BITS, BLOOM_K))
+            probe = bloom_might_contain_udf(bc, BLOOM_BITS, BLOOM_K)
+            cands = spark.createDataFrame([(k,) for k in pending.values()], "key_hash long")
+            maybe = cands.filter(probe(F.col("key_hash"))).count()
+            bc.unpersist()
+        exact = sum(k in before for k in pending.values())
+        assert (stats[w]["seen_maybe"], stats[w]["seen_exact_hits"]) == (maybe, exact), w
+    assert stats[1]["seen_exact_hits"] == 1  # the late variant of b0
+
+
+def test_fate_plan_shape(spark, crawl, tmp_path):
+    """The fate is one linear plan: with a seen table the Bloom probe is
+    its only Python stage (a flag, not branches that re-run it) and the
+    seen check a correlated ``ExistenceJoin``; one hash exchange on
+    key_hash serves both rank windows and one on host the budget window.
+    The fixture's frontier has two dirs (bootstrap + enqueue)."""
+    cat, _stats, _jobs = crawl
+    plan_of = FrontierEngine(spark, cat, politeness=_politeness(spark)).fate(budget=1)
+    plan = simple_plan(plan_of)
+    assert python_eval_ops(plan_of) == 1
+    assert "ExistenceJoin" in plan
+    assert plan.count("Exchange hashpartitioning") == 2
+    fresh = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    eng = FrontierEngine(spark, fresh, politeness=_politeness(spark))
+    eng.bootstrap(spark.createDataFrame([(TIED[0], 2, 1)], "url string, page_seq int, intra_page_seq int"))
+    assert python_eval_ops(eng.fate(budget=1)) == 0
+
+
+def test_drained_memo_never_skips_work(spark, tmp_path, jobs_of):
+    """A wave that retired every url it saw lets the next wave at the
+    same (frontier, done) versions return empty with no job. An enqueue
+    or a forget moves a version, so the next wave plans again: it finds
+    the enqueued url, and after a forget (which drops the url from the
+    frontier too) it looks and finds nothing until the recrawl enqueue."""
+    schema = "url string, page_seq int, intra_page_seq int"
+    urls = OTHERS[:2] + [f"{B}/ru/new.pdf"]
+    pages = spark.createDataFrame(
+        [(u, bytearray(f"<html><body><p>doc {u}</p></body></html>".encode())) for u in urls],
+        "url string, html binary",
+    )
+    eng = FrontierEngine(spark, SnapshotCatalog(spark, str(tmp_path / "cat")))
+    eng.bootstrap(spark.createDataFrame([(u, 2, i) for i, u in enumerate(urls[:2])], schema))
+    wave = lambda: jobs_of(lambda: eng.run_wave(pages, budget=5))  # noqa: E731
+    assert wave()[0]["scheduled"] == 2
+    m, n = wave()
+    assert (m["frontier_pending"], n) == (0, 0)
+    eng.enqueue(spark.createDataFrame([(urls[2], 0, 0)], schema), depth=1)
+    assert wave()[0]["scheduled"] == 1
+    assert wave()[1] == 0
+    eng.forget(spark.createDataFrame([(urls[0],)], "url string"))
+    m, n = wave()
+    assert m["frontier_pending"] == 0 and n > 0
+    eng.enqueue(spark.createDataFrame([(urls[0], 0, 0)], schema), depth=2)
+    assert wave()[0]["scheduled"] == 1
+    assert wave()[1] == 0
+
+
+def test_wave_that_fetches_nothing(spark, tmp_path):
+    """The documents write's ``Observation`` reports an empty write: a
+    wave whose selection is empty (every url robots-denied), and one
+    whose selected urls are all fetch misses, retire every url."""
+    schema = "url string, page_seq int, intra_page_seq int"
+    pages = spark.createDataFrame([(OTHERS[0], bytearray(b"<html><body><p>x</p></body></html>"))], "url string, html binary")
+    for name, urls, want in (
+        ("denied", [f"{B}/private/{i}.pdf" for i in range(3)], (0, 3, 0)),
+        ("missed", [f"{B}/ru/miss{i}.pdf" for i in range(3)], (0, 0, 3)),
+    ):
+        eng = FrontierEngine(spark, SnapshotCatalog(spark, str(tmp_path / name)), politeness=_politeness(spark))
+        eng.bootstrap(spark.createDataFrame([(u, 2, i) for i, u in enumerate(urls)], schema))
+        m = eng.run_wave(pages, budget=5)
+        assert (m["scheduled"], m["robots_denied"], m["fetch_misses"]) == want, name
+        assert m["retired"] == 3 and eng.run_wave(pages, budget=5)["frontier_pending"] == 0
