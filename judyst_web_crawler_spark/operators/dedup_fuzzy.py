@@ -927,10 +927,9 @@ def minhash_near_duplicates(
 # root of a ``SnapshotCatalog`` holding two append-only tables:
 #   bands  (band, bucket, id)     — partitioned by band
 #   sigs   (id, signature, gen)   — for the MinHash-estimate prune
-# A commit appends ``bands`` first and ``sigs`` last, so a ``sigs``
-# snapshot carrying ``gen`` is the proof that commit landed whole; a crash
-# in between leaves only extra band rows, which a re-commit duplicates
-# harmlessly (the candidate join is distinct). Exact-verify texts come
+# A commit appends both in one transaction of that catalog, whose log
+# entry records ``wave = gen``: the index holds a generation whole or not
+# at all, and its log head names the last one. Exact-verify texts come
 # from a keyed join against the documents table (candidate ids only —
 # column-pruned, not a corpus pass through Python).
 #
@@ -982,15 +981,16 @@ def minhash_index_write_sigs(
     """Commit PRE-COMPUTED ``(id, signature)`` rows to the index under
     commit generation ``gen`` — the path the frontier engine uses (the
     wave's fused extract+fingerprint pass already produced the
-    signatures, and ``gen`` is the wave). ``bands`` commits first,
-    ``sigs`` last. No caching: ``sigs`` is read twice, so pass a cheap
-    plan (a parquet scan or a cut)."""
+    signatures, and ``gen`` is the wave). ``bands`` and ``sigs`` publish
+    together, recording ``wave = gen``. No caching: ``sigs`` is read
+    twice, so pass a cheap plan (a parquet scan or a cut)."""
     index = SnapshotCatalog(sigs.sparkSession, path)
     sigs = sigs.select(id_col, "signature")
-    index.append(
-        INDEX_BANDS, band_explode(sigs, id_col, bands, k // bands), partition_by=["band"]
-    )
-    index.append(INDEX_SIGS, sigs.withColumn("gen", F.lit(gen)))
+    with index.transaction(wave=gen):
+        index.append(
+            INDEX_BANDS, band_explode(sigs, id_col, bands, k // bands), partition_by=["band"]
+        )
+        index.append(INDEX_SIGS, sigs.withColumn("gen", F.lit(gen)))
 
 
 def minhash_query_index(

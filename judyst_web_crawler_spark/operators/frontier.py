@@ -13,13 +13,17 @@ End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
         ▼
     extract_text_udf (byte-identical reference pipeline, P5+P7+P9)
         ▼
-    commits (each an atomic snapshot, crash-safe resume per
-    law_codes.py:752-776 checkpoint semantics):
+    one publish (a catalog transaction recording the wave id; the
+    crawl resumes from it as law_codes.py:752-776 does from its
+    checkpoint):
         documents += wave output
         seen      += scheduled keys
         done      += fate's dup / robots-denied rows, scheduled urls and
                      fetch misses (selected urls with no documents row)
         metrics   += per-partition lineage
+        ▼
+    band index += the wave's signatures (its own catalog's transaction,
+    after the publish; a wave it lacks is re-committed from documents)
 
 State and cost:
 - ALL state tables are append-only — no wave ever rewrites a table, so
@@ -51,10 +55,7 @@ from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
 from judyst_web_crawler_spark.functions.extraction import extract_text, extract_text_udf
-from judyst_web_crawler_spark.operators.dedup_fuzzy import (
-    INDEX_SIGS,
-    minhash_index_write_sigs,
-)
+from judyst_web_crawler_spark.operators.dedup_fuzzy import minhash_index_write_sigs
 from judyst_web_crawler_spark.operators.politeness import (
     budget_rank,
     priority_order,
@@ -120,9 +121,10 @@ class FrontierEngine:
         self.fingerprint_k = fingerprint_k
         # minhash_index_path: root of the band-bucket index's own
         # SnapshotCatalog (tables ``bands`` and ``sigs``, see
-        # dedup_fuzzy). Each wave appends its (key_hash, signature) rows
-        # under gen = wave, so near-dup queries against ALL previously
-        # crawled documents never re-fingerprint anything (per-wave cost:
+        # dedup_fuzzy). Each wave commits its (key_hash, signature) rows
+        # under gen = wave in one index transaction after the crawl
+        # publish, so near-dup queries against ALL previously crawled
+        # documents never re-fingerprint anything (per-wave cost:
         # O(new × matching buckets)).
         if minhash_index_path is not None:
             if not fingerprint_k:
@@ -133,15 +135,6 @@ class FrontierEngine:
                 raise ValueError("minhash_bands must divide fingerprint_k")
         self._minhash_index_path = minhash_index_path
         self._minhash_bands = minhash_bands
-        if minhash_index_path is not None:
-            # restart reconciliation: docs commit and index commit are
-            # separate commits, so a crash between them leaves a wave's
-            # documents unindexed (silent recall loss in every later
-            # near_dups query). The sigs commit is the index's last, so
-            # the gens it holds are the waves that landed; the gap is
-            # repaired here, the same once-per-engine-lifetime recovery
-            # model as _repair_partial_wave.
-            self._reconcile_minhash_index()
         self._bloom_bc = None
         self._drained_at = None  # (frontier, done) versions with nothing pending
         if catalog.exists(SEEN_TABLE):
@@ -204,16 +197,16 @@ class FrontierEngine:
         # FRONTIER too: otherwise the url's ORIGINAL row (better
         # priority band) survives and the wave's url-collapse window
         # would schedule it with first-crawl priority instead of the
-        # stale rank. Idempotent — rerun the whole forget on failure.
-        for t, on_df, on_col, pby in (
-            (FRONTIER_TABLE, u, "url", ["depth"]),
-            (DONE_TABLE, u, "url", None),
-            (SEEN_TABLE, keys, "key_hash", None),
-        ):
-            if self.catalog.exists(t):
-                kept = self.catalog.read(t).join(on_df, on=on_col, how="left_anti")
-                kept = kept.localCheckpoint(eager=True)  # read before overwrite
-                self.catalog.overwrite(t, kept, partition_by=pby)
+        # stale rank. One publish: all three rewrites land or none.
+        with self.catalog.transaction():
+            for t, on_df, on_col, pby in (
+                (FRONTIER_TABLE, u, "url", ["depth"]),
+                (DONE_TABLE, u, "url", None),
+                (SEEN_TABLE, keys, "key_hash", None),
+            ):
+                if self.catalog.exists(t):
+                    kept = self.catalog.read(t).join(on_df, on=on_col, how="left_anti")
+                    self.catalog.overwrite(t, kept, partition_by=pby)
 
     def enqueue_recrawl(
         self,
@@ -238,8 +231,9 @@ class FrontierEngine:
         ).localCheckpoint(eager=True)
         n = seeds.count()
         if n:
-            self.forget(seeds)
-            self.enqueue(seeds, depth=RECRAWL_DEPTH)
+            with self.catalog.transaction():  # forgotten ⇒ enqueued
+                self.forget(seeds)
+                self.enqueue(seeds, depth=RECRAWL_DEPTH)
         return n
 
     # -- wave --------------------------------------------------------------
@@ -250,61 +244,6 @@ class FrontierEngine:
             done = self.catalog.read(DONE_TABLE).select("url")
             return frontier.join(done, on="url", how="left_anti")
         return frontier
-
-    def next_wave_id(self) -> int:
-        """Max committed wave across metrics AND documents, +1 — metrics
-        commits LAST in a wave, so a crash mid-wave must not reuse the
-        half-committed wave id (the docs rows already carry it)."""
-        w = -1
-        if self.catalog.exists(METRICS_TABLE):
-            row = self.catalog.read(METRICS_TABLE).agg(F.max("wave").alias("w")).collect()[0]
-            w = max(w, row["w"] if row["w"] is not None else -1)
-        if self.catalog.exists(DOCS_TABLE):
-            row = self.catalog.read(DOCS_TABLE).agg(F.max("wave").alias("w")).collect()[0]
-            w = max(w, row["w"] if row["w"] is not None else -1)
-        return w + 1
-
-    def _repair_partial_wave(self) -> None:
-        """Crash recovery (runs once per engine lifetime, before the first
-        wave): the documents append is a wave's FIRST commit, so after a
-        crash some fetched urls may be missing from ``done``/``seen``.
-        Roll those forward — append their retirement and seen rows — so
-        the wave protocol is effectively atomic at the documents commit.
-        """
-        if not self.catalog.exists(DOCS_TABLE):
-            return
-        docs = self.catalog.read(DOCS_TABLE)
-        orphans = docs.select("url", "key_hash", "wave")
-        # only waves that never reached the metrics commit (a wave's LAST
-        # commit) are crash suspects. Without this filter, urls that
-        # ``forget()`` deliberately un-retired look like orphans (docs
-        # row, no done row) and repair would silently re-retire them,
-        # cancelling the recrawl generation.
-        if self.catalog.exists(METRICS_TABLE):
-            committed = self.catalog.read(METRICS_TABLE).select("wave").distinct()
-            orphans = orphans.join(committed, on="wave", how="left_anti")
-        if self.catalog.exists(DONE_TABLE):
-            orphans = orphans.join(
-                self.catalog.read(DONE_TABLE).select("url"), on="url", how="left_anti"
-            )
-        orphans = orphans.localCheckpoint(eager=True)
-        if orphans.limit(1).count() == 0:
-            return
-        done_rows = orphans.select(
-            "url", F.lit("scheduled").alias("retire_status"), "wave"
-        )
-        self.catalog.append(DONE_TABLE, done_rows)
-        seen_rows = orphans.select("key_hash", "url", F.col("wave").alias("first_seen_wave"))
-        if self.catalog.exists(SEEN_TABLE):
-            seen_rows = seen_rows.join(
-                self.catalog.read(SEEN_TABLE).select("key_hash"),
-                on="key_hash",
-                how="left_anti",
-            )
-        # bloom before seen — same superset-invariant ordering as the
-        # wave commit (see run_wave step 6)
-        self._bloom_add([r["key_hash"] for r in seen_rows.select("key_hash").collect()])
-        self.catalog.append(SEEN_TABLE, seen_rows)
 
     def fate(self, budget: int = 2, n_salts: int = 1) -> DataFrame:
         """Every pending row with its ``retire_status`` (``dup``,
@@ -356,8 +295,9 @@ class FrontierEngine:
         n_salts: int = 1,
         wave: int | None = None,
     ) -> dict:
-        """One politeness-respecting fetch+extract wave. Returns metrics
-        (including a ``t_*`` per-stage wall breakdown for tuning)."""
+        """One politeness-respecting fetch+extract wave, published as one
+        catalog transaction. Returns metrics (including a ``t_*``
+        per-stage wall breakdown for tuning)."""
         t0 = time.monotonic()
         timings: dict[str, float] = {}
         _last = t0
@@ -368,156 +308,134 @@ class FrontierEngine:
             timings[f"t_{stage}"] = round(now - _last, 3)
             _last = now
 
-        if not getattr(self, "_repaired", False):
-            self._repair_partial_wave()
-            self._repaired = True
+        self._reconcile_minhash_index()
         if wave is None:
-            # derive from the catalog ONCE per engine lifetime (two agg
-            # jobs); subsequent waves increment locally — the catalog
-            # re-derivation only matters across process restarts, where a
-            # fresh engine reads it again anyway
-            cached = getattr(self, "_next_wave", None)
-            wave = cached if cached is not None else self.next_wave_id()
-        # invalidate the cache (and the repair latch) for the duration of
-        # the wave: if any commit below raises, an in-process retry must
-        # re-derive the wave id from the catalog (the half-committed docs
-        # already carry this id — reusing it would double-label) and
-        # re-run partial-wave repair, exactly like a process restart
-        self._next_wave = None
-        self._repaired = False
+            # the log head records the last published wave: a restart and a
+            # retry after a failed (unpublished) wave both take the next id
+            last = self.catalog.last_wave()
+            wave = 0 if last is None else last + 1
         mark("waveid")
 
-        # 0-4. every pending row's fate; the rows that retire this wave
-        # are checkpointed (never html) and the counters observed on that
-        # job → read by the fetch (5) and the done commit (7). Versions
-        # only grow: at those a wave left drained, pending is empty.
-        versions = tuple(self.catalog.current_version(t) for t in (FRONTIER_TABLE, DONE_TABLE))
-        fc = {"rows": 0}
-        if versions != self._drained_at:
-            first, status = F.col("_ur") == 1, F.col("retire_status")
-            fate_obs = Observation()
-            fate = (
-                self.fate(budget, n_salts)
-                .observe(
-                    fate_obs,
-                    F.count(F.lit(1)).alias("rows"),
-                    F.count_if(first).alias("urls"),
-                    F.count_if(first & F.col("_maybe")).alias("seen_maybe"),
-                    F.count_if(first & F.col("_seen")).alias("seen_exact_hits"),
-                    *(F.count_if(status == s).alias(s) for s in ("dup", "robots_denied", "selected")),
+        with self.catalog.transaction(wave=wave):
+            # 0-4. every pending row's fate; the rows that retire this wave
+            # are checkpointed (never html) and the counters observed on that
+            # job → read by the fetch (5) and the done write (7). Versions
+            # only grow: at those a wave left drained, pending is empty.
+            versions = tuple(self.catalog.current_version(t) for t in (FRONTIER_TABLE, DONE_TABLE))
+            fc = {"rows": 0}
+            if versions != self._drained_at:
+                first, status = F.col("_ur") == 1, F.col("retire_status")
+                fate_obs = Observation()
+                fate = (
+                    self.fate(budget, n_salts)
+                    .observe(
+                        fate_obs,
+                        F.count(F.lit(1)).alias("rows"),
+                        F.count_if(first).alias("urls"),
+                        F.count_if(first & F.col("_maybe")).alias("seen_maybe"),
+                        F.count_if(first & F.col("_seen")).alias("seen_exact_hits"),
+                        *(F.count_if(status == s).alias(s) for s in ("dup", "robots_denied", "selected")),
+                    )
+                    .filter(F.col("retire_status").isNotNull())
+                    .select(*CARRY, "retire_status")
+                    .localCheckpoint(eager=True)
                 )
-                .filter(F.col("retire_status").isNotNull())
-                .select(*CARRY, "retire_status")
-                .localCheckpoint(eager=True)
+                fc = fate_obs.get
+            n_pending = fc["rows"]
+            mark("pending")
+            timings["t_seen_filter"] = 0.0  # part of the fate plan
+            if n_pending == 0:
+                # nothing staged: nothing is published, the wave id stays free
+                self._drained_at = versions
+                return {"wave": wave, "frontier_pending": 0, "scheduled": 0, "retired": 0, "elapsed_s": 0.0}
+
+            # 5. fetch stand-in + extract (SURVEY §2.1 S3: html column IS the
+            # payload) → documents. Urls missing from the pages table are
+            # fetch MISSES: they get no documents row (no null-text rows
+            # masquerading as fetches) and retire with their own status.
+            selected = fate.filter(F.col("retire_status") == "selected")
+            fetched = selected.join(pages.select("url", "html"), on="url").filter(
+                F.col("html").isNotNull()
             )
-            fc = fate_obs.get
-        n_pending = fc["rows"]
-        mark("pending")
-        timings["t_seen_filter"] = 0.0  # part of the fate plan
-        if n_pending == 0:
-            # nothing committed: the wave id stays available and no
-            # repair is owed
-            self._drained_at = versions
-            self._next_wave = wave
-            self._repaired = True
-            return {"wave": wave, "frontier_pending": 0, "scheduled": 0, "retired": 0, "elapsed_s": 0.0}
+            if self.fingerprint_k:
+                docs = self._extract_and_fingerprint(fetched, CARRY, wave)
+            else:
+                docs = fetched.select(
+                    *CARRY, extract_text_udf(F.col("html")).alias("text")
+                ).withColumn("wave", F.lit(wave))
+            # the scheduled keys (bloom increment, ``scheduled``) come back
+            # with the write
+            docs_obs = Observation()
+            docs = docs.observe(docs_obs, F.collect_list("key_hash").alias("keys"))
+            v_docs = self.catalog.append(DOCS_TABLE, docs)
+            scheduled_keys = docs_obs.get["keys"]
+            mark("extract_commit")
+            # read ONLY the dir this append staged: one extract pass ran at
+            # the append; the writes below and the index commit reuse it
+            # without re-scanning every prior wave's documents
+            docs_c = self.catalog.read_last_append(DOCS_TABLE, v_docs)
 
-        # 5. fetch stand-in + extract (SURVEY §2.1 S3: html column IS the
-        # payload) → documents commit. Urls missing from the pages table
-        # are fetch MISSES: they get no documents row (no null-text rows
-        # masquerading as fetches) and retire with their own status.
-        selected = fate.filter(F.col("retire_status") == "selected")
-        fetched = selected.join(pages.select("url", "html"), on="url").filter(
-            F.col("html").isNotNull()
-        )
-        if self.fingerprint_k:
-            docs = self._extract_and_fingerprint(fetched, CARRY, wave)
-        else:
-            docs = fetched.select(
-                *CARRY, extract_text_udf(F.col("html")).alias("text")
-            ).withColumn("wave", F.lit(wave))
-        # the scheduled keys (bloom increment, ``scheduled``) come back
-        # with the write
-        docs_obs = Observation()
-        docs = docs.observe(docs_obs, F.collect_list("key_hash").alias("keys"))
-        v_docs = self.catalog.append(DOCS_TABLE, docs)
-        scheduled_keys = docs_obs.get["keys"]
-        mark("extract_commit")
-        # read ONLY the dir this append committed: one extract pass ran
-        # at the append; the index/seen/done/metrics commits below reuse
-        # that parquet output without re-scanning every prior wave's
-        # documents (full-table read here made late waves pay O(total
-        # crawled))
-        docs_c = self.catalog.read_last_append(DOCS_TABLE, v_docs)
+            # 6. seen += scheduled keys; bloom |= scheduled keys. The seen and
+            # done tables are SKINNY, and every later wave re-reads them: both
+            # writes make one file per 8 of the documents write's files
+            # (coalesce shrinks the reading stage, no shuffle).
+            n_files = max(1, len(docs_c.inputFiles()) // 8)
+            # bloom BEFORE the publish (the safe crash direction): a
+            # bloom-NEGATIVE key never counts as seen, so the invariant is
+            # bloom ⊇ seen. A failed publish after the OR leaves extra bits
+            # (prune cost only); seen rows without bits would re-fetch urls.
+            self._bloom_add(scheduled_keys)
+            seen_new = docs_c.select("key_hash", "url", F.lit(wave).alias("first_seen_wave"))
+            self.catalog.append(SEEN_TABLE, seen_new.coalesce(n_files))
+            mark("seen_commit")
 
-        # 5b. index += this wave's signatures (already computed in the
-        # fused extract pass — committed, never recomputed; gen = wave
-        # gives re-crawled keys last-wins at query time)
+            # 7. done += the fate's dup and robots-denied rows ∪ scheduled
+            # (the documents dir) ∪ fetch misses (selected − documents).
+            def retire(df: DataFrame, status: str) -> DataFrame:
+                return df.select("url", F.lit(status).alias("retire_status"))
+
+            done_new = (
+                fate.filter(F.col("retire_status") != "selected")
+                .select("url", "retire_status")
+                .unionByName(retire(docs_c, "scheduled"))
+                .unionByName(
+                    retire(selected.join(docs_c.select("url"), on="url", how="left_anti"), "fetch_miss")
+                )
+                .withColumn("wave", F.lit(wave))
+            )
+            v_done = self.catalog.append(DONE_TABLE, done_new.coalesce(n_files))
+            mark("done_commit")
+            counts = {  # in return-key order
+                "scheduled": len(scheduled_keys),
+                "dedup_hits": fc["dup"],
+                "robots_denied": fc["robots_denied"],
+                "fetch_misses": fc["selected"] - len(scheduled_keys),
+            }
+
+            # 8. per-partition lineage metrics (FIXTURES.md §6): ids taken
+            # before the coalesce; one partition groups with no exchange
+            elapsed = time.monotonic() - t0
+            part_metrics = (
+                docs_c.select(F.spark_partition_id().alias("partition_id"), "depth")
+                .coalesce(1)
+                .groupBy("partition_id")
+                .agg(F.count(F.lit(1)).alias("fetch_count"), F.max("depth").alias("depth"))
+                .select(
+                    F.lit(wave).alias("wave"), "partition_id", "depth", "fetch_count",
+                    F.lit(counts["dedup_hits"]).alias("dedup_hits"),
+                    F.lit(counts["dedup_hits"] / n_pending).alias("dedup_hit_rate"),
+                    F.lit(elapsed).alias("elapsed_s"),
+                )
+            )
+            self.catalog.append(METRICS_TABLE, part_metrics)
+        mark("metrics_commit")  # the publish included
+
+        # 9. index += this wave's signatures (already computed in the fused
+        # extract pass; gen = wave gives re-crawled keys last-wins at query
+        # time)
         if self._minhash_index_path is not None:
-            self._commit_wave_sigs_to_index(
-                docs_c.select("key_hash", "signature"), wave
-            )
+            self._commit_wave_sigs_to_index(docs_c.select("key_hash", "signature"), wave)
             mark("index_commit")
-
-        # 6. seen += scheduled keys; bloom |= scheduled keys. The seen and
-        # done tables are SKINNY, and every later wave re-reads them: both
-        # commits write one file per 8 of the documents commit's files
-        # (coalesce shrinks the reading stage, no shuffle).
-        n_files = max(1, len(docs_c.inputFiles()) // 8)
-        # bloom BEFORE seen (the safe crash direction): a bloom-NEGATIVE
-        # key never counts as seen, so the invariant is bloom ⊇ seen. A
-        # failed seen commit after the OR leaves extra bits (prune cost
-        # only); seen rows without bits would mean seen urls re-fetched.
-        self._bloom_add(scheduled_keys)
-        seen_new = docs_c.select("key_hash", "url", F.lit(wave).alias("first_seen_wave"))
-        self.catalog.append(SEEN_TABLE, seen_new.coalesce(n_files))
-        mark("seen_commit")
-
-        # 7. done += the fate's dup and robots-denied rows ∪ scheduled
-        # (the documents dir) ∪ fetch misses (selected − documents).
-        def retire(df: DataFrame, status: str) -> DataFrame:
-            return df.select("url", F.lit(status).alias("retire_status"))
-
-        done_new = (
-            fate.filter(F.col("retire_status") != "selected")
-            .select("url", "retire_status")
-            .unionByName(retire(docs_c, "scheduled"))
-            .unionByName(
-                retire(selected.join(docs_c.select("url"), on="url", how="left_anti"), "fetch_miss")
-            )
-            .withColumn("wave", F.lit(wave))
-        )
-        v_done = self.catalog.append(DONE_TABLE, done_new.coalesce(n_files))
-        mark("done_commit")
-        counts = {  # in return-key order
-            "scheduled": len(scheduled_keys),
-            "dedup_hits": fc["dup"],
-            "robots_denied": fc["robots_denied"],
-            "fetch_misses": fc["selected"] - len(scheduled_keys),
-        }
-
-        # 8. per-partition lineage metrics (FIXTURES.md §6): ids taken
-        # before the coalesce; one partition groups with no exchange
-        elapsed = time.monotonic() - t0
-        part_metrics = (
-            docs_c.select(F.spark_partition_id().alias("partition_id"), "depth")
-            .coalesce(1)
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("fetch_count"), F.max("depth").alias("depth"))
-            .select(
-                F.lit(wave).alias("wave"), "partition_id", "depth", "fetch_count",
-                F.lit(counts["dedup_hits"]).alias("dedup_hits"),
-                F.lit(counts["dedup_hits"] / n_pending).alias("dedup_hit_rate"),
-                F.lit(elapsed).alias("elapsed_s"),
-            )
-        )
-        self.catalog.append(METRICS_TABLE, part_metrics)
-        mark("metrics_commit")
-        # bump only after every commit of this wave succeeded; the
-        # repair latch is re-armed too (it was cleared at wave start so
-        # a failed wave forces repair, like a restart)
-        self._next_wave = wave + 1
-        self._repaired = True
         retired = sum(counts.values())
         if retired == fc["urls"]:
             self._drained_at = (versions[0], v_done)
@@ -566,11 +484,9 @@ class FrontierEngine:
         return fetched.select(*carry, "html").mapInPandas(run, schema)
 
     def _commit_wave_sigs_to_index(self, sigs: DataFrame, wave: int) -> None:
-        """Append one wave's pre-computed (key_hash, signature) rows to
-        the band-bucket index under gen = ``wave``. The index commits
-        ``bands`` first and ``sigs`` last, so a ``sigs`` row with
-        gen = ``wave`` proves the wave landed; ``_reconcile_minhash_index``
-        re-commits any docs wave without one on restart."""
+        """Commit one wave's pre-computed (key_hash, signature) rows to
+        the band-bucket index under gen = ``wave``: ``bands`` and
+        ``sigs`` in one index transaction that records ``wave``."""
         minhash_index_write_sigs(
             sigs,
             self._minhash_index_path,
@@ -581,29 +497,19 @@ class FrontierEngine:
         )
 
     def _reconcile_minhash_index(self) -> None:
-        """Roll the index forward over waves whose documents committed
-        but whose signatures never landed (crash between the docs commit
-        and the index's ``sigs`` commit). Runs once at construction — the
-        same restart recovery model as ``_repair_partial_wave``: one
-        narrow scan of the ``sigs`` gen column, next to the docs wave
-        scan. Also backfills a catalog that predates the index (every
-        docs wave missing), provided it was crawled with fingerprinting
+        """Index the published waves the band index lacks. The index
+        commits after the crawl publish, so a crash between the two
+        leaves the index's log head behind the crawl's; comparing the
+        two heads launches no job. Also backfills a catalog that
+        predates the index, provided it was crawled with fingerprinting
         on."""
-        if not self.catalog.exists(DOCS_TABLE):
+        if self._minhash_index_path is None:
+            return
+        crawled = self.catalog.last_wave()
+        indexed = SnapshotCatalog(self.spark, self._minhash_index_path).last_wave()
+        if crawled is None or (indexed is not None and indexed >= crawled):
             return
         docs = self.catalog.read(DOCS_TABLE)
-        doc_waves = {r["wave"] for r in docs.select("wave").distinct().collect()}
-        if not doc_waves:
-            return
-        index = SnapshotCatalog(self.spark, self._minhash_index_path)
-        landed: set[int] = set()
-        if index.exists(INDEX_SIGS):
-            landed = {
-                r["gen"] for r in index.read(INDEX_SIGS).select("gen").distinct().collect()
-            }
-        missing = sorted(doc_waves - landed)
-        if not missing:
-            return
         if "signature" not in docs.columns:
             raise ValueError(
                 "minhash_index_path set over a catalog whose documents "
@@ -612,7 +518,7 @@ class FrontierEngine:
                 "re-fingerprinting; rebuild it explicitly with "
                 "minhash_index_write instead"
             )
-        for w in missing:
+        for w in range(0 if indexed is None else indexed + 1, crawled + 1):
             self._commit_wave_sigs_to_index(
                 docs.filter(F.col("wave") == w).select("key_hash", "signature"), w
             )
@@ -645,6 +551,8 @@ class FrontierEngine:
         if self._minhash_index_path is None:
             raise ValueError("engine was built without minhash_index_path")
         from judyst_web_crawler_spark.operators.dedup_fuzzy import minhash_query_index
+
+        self._reconcile_minhash_index()
 
         docs = self.catalog.read(DOCS_TABLE)
         # wave-N rows superseded by a later re-crawl are stale — their

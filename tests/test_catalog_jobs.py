@@ -1,12 +1,12 @@
 """SnapshotCatalog reads launch no Spark job, and appends keep a table's
 schema.
 
-A manifest records the table's schema, so ``read`` and
+The catalog log records each table's schema, so ``read`` and
 ``read_last_append`` pass it to the reader instead of inferring it from
 parquet footers (one Spark job per data dir). The recorded schema must
-equal what inference would give, including partition columns last,
-all-nullable nested types and the unpartitioned fallback that ``_write``
-takes for an empty partitioned frame.
+equal what inference would give, including partition columns last and
+all-nullable nested types; an empty partitioned write, which leaves no
+parquet file, reads back through the recorded schema alone.
 """
 
 from __future__ import annotations
@@ -33,7 +33,7 @@ def _frontier_rows(depth: int, n: int = 3):
 
 
 def _dirs(cat: SnapshotCatalog, name: str) -> list[str]:
-    return cat._read_manifest(name, cat.current_version(name))["dirs"]
+    return [os.path.join(cat.root, d) for d in cat._table(name)["dirs"]]
 
 
 def _assert_schema_as_inferred(spark, cat: SnapshotCatalog, name: str) -> None:
@@ -83,17 +83,25 @@ def test_array_column_schema_equals_inferred(spark, tmp_path, jobs_of):
     assert sorted(r["signature"][0] for r in df.collect()) == [1, 1]
 
 
-def test_empty_partitioned_write_schema_equals_inferred(spark, tmp_path):
-    """An empty partitioned write is committed unpartitioned (no file
-    would be left to hold its schema); a later partitioned append reads
-    back in the same union."""
+def test_empty_partitioned_write_schema_equals_inferred(spark, tmp_path, jobs_of):
+    """An empty partitioned write leaves no parquet file, only
+    ``_SUCCESS``; it reads back as 0 rows with the recorded schema
+    (partition column last, no job), and a later partitioned append
+    unions with it."""
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     empty = spark.createDataFrame([], FRONTIER_SCHEMA)
     cat.overwrite("frontier_state", empty, partition_by=["depth"])
-    _assert_schema_as_inferred(spark, cat, "frontier_state")
+    (d,) = _dirs(cat, "frontier_state")
+    assert not [f for _d, _s, files in os.walk(d) for f in files if f.endswith(".parquet")]
+    df, n = jobs_of(lambda: cat.read("frontier_state"))
+    assert n == 0
+    assert df.count() == 0
     cat.append("frontier_state", spark.createDataFrame(_frontier_rows(1), FRONTIER_SCHEMA), partition_by=["depth"])
-    assert cat.read("frontier_state").schema == spark.read.parquet(_dirs(cat, "frontier_state")[0]).schema
-    assert sorted(r["key_hash"] for r in cat.read("frontier_state").collect()) == [100, 101, 102]
+    inferred = spark.read.parquet(_dirs(cat, "frontier_state")[1]).schema
+    assert df.schema == inferred
+    got = cat.read("frontier_state")
+    assert got.schema == inferred
+    assert sorted((r["key_hash"], r["depth"]) for r in got.collect()) == [(100, 1), (101, 1), (102, 1)]
 
 
 def test_append_accepts_reordered_columns(spark, tmp_path):
@@ -122,15 +130,15 @@ def test_append_refuses_a_different_column_set(spark, tmp_path, ddl, differ):
 
 
 def test_manifest_without_schema_is_an_error(spark, tmp_path):
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    cat.append("seen", spark.createDataFrame([(1, "u")], "key_hash long, url string"))
-    path = os.path.join(cat._manifest_dir("seen"), "v1.json")
-    with open(path) as f:
-        manifest = json.load(f)
-    del manifest["schema"]
-    with open(path, "w") as f:
-        json.dump(manifest, f)
-    with pytest.raises(ValueError, match="seen.*no schema"):
-        cat.read("seen")
-    with pytest.raises(ValueError, match="seen.*no schema"):
-        cat.append("seen", spark.createDataFrame([(2, "v")], "key_hash long, url string"))
+    """A root written by older code — table data with per-table
+    ``_manifests/``, whose entries may lack a schema, and no catalog log
+    — is refused, not migrated."""
+    root = tmp_path / "cat"
+    (root / "seen" / "_manifests").mkdir(parents=True)
+    (root / "seen" / "data" / "snap-1").mkdir(parents=True)
+    (root / "seen" / "_manifests" / "v1.json").write_text(
+        json.dumps({"version": 1, "op": "append", "dirs": [str(root / "seen" / "data" / "snap-1")]})
+    )
+    with pytest.raises(ValueError, match=r"seen/data.*no _log/"):
+        SnapshotCatalog(spark, str(root))
+    assert not (root / "_log").exists()

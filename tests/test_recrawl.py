@@ -152,10 +152,9 @@ def test_multi_capture_url_collapses_to_latest(spark):
 
 
 def test_recrawl_survives_engine_restart_repair(spark, tmp_path):
-    """A FRESH engine over the catalog after enqueue_recrawl runs crash
-    repair first — repair must not mistake forgotten urls (docs row, no
-    done row, but from a COMMITTED wave) for crash orphans and re-retire
-    them."""
+    """A FRESH engine over the catalog after enqueue_recrawl must
+    re-fetch the forgotten urls (docs row, no done row, from a PUBLISHED
+    wave): nothing at restart may re-retire them as crash orphans."""
     from judyst_web_crawler_spark.datagen import pages_df
     from judyst_web_crawler_spark.operators.frontier import (
         DOCS_TABLE,
@@ -183,7 +182,7 @@ def test_recrawl_survives_engine_restart_repair(spark, tmp_path):
     n = eng.enqueue_recrawl(aged, now=1_000_000, per_host_k=1)
     assert n >= 1
 
-    # restart: new engine, repair runs before its first wave
+    # restart: new engine on the same catalog
     cat2 = SnapshotCatalog(spark, root)
     eng2 = FrontierEngine(spark, cat2)
     eng2.run(pages, budget=6, max_waves=10)

@@ -1,6 +1,6 @@
 """Regression tests for the round-1 code-review findings: salted budget
 starvation, URL canonicalization, fetch-miss retirement, mid-wave crash
-repair, undecodable payloads, listing href cell, streaming replay."""
+resume, undecodable payloads, listing href cell, streaming replay."""
 
 from __future__ import annotations
 
@@ -91,7 +91,8 @@ def test_fetch_miss_retired_not_documented(spark, tmp_path):
 
 class _CrashingCatalog(SnapshotCatalog):
     """Raises on the first append to a chosen table — simulates a crash
-    between a wave's documents commit and its done/seen commits."""
+    between a wave's documents write and its done/seen writes, inside
+    the wave's transaction."""
 
     def __init__(self, spark, root, crash_table):
         super().__init__(spark, root)
@@ -112,6 +113,8 @@ class _CrashingCatalog(SnapshotCatalog):
 
 
 def test_crash_after_docs_commit_repairs_on_resume(spark, tmp_path):
+    """A crash after the documents write leaves the wave unpublished; a
+    fresh engine fetches every url exactly once."""
     pages = pages_df(spark, n_rows=20, n_hosts=2, seed=9).cache()
     seeds = (
         pages.select("url")
@@ -126,7 +129,7 @@ def test_crash_after_docs_commit_repairs_on_resume(spark, tmp_path):
         eng.run_wave(pages, budget=8)
         raise AssertionError("expected simulated crash")
     except RuntimeError:
-        pass  # docs committed, seen/done did not
+        pass  # docs staged, seen/done not: the wave published nothing
 
     # resume with a fresh engine over the same state
     cat2 = SnapshotCatalog(spark, root)
@@ -160,10 +163,10 @@ def test_listing_href_from_key_cell_only():
 
 
 def test_inprocess_retry_after_midwave_failure(spark, tmp_path):
-    """A failed wave must invalidate the cached wave id AND the repair
-    latch: retrying run_wave on the SAME engine re-derives the id from
-    the catalog and repairs the orphaned docs — no duplicate urls, no
-    reused wave id."""
+    """A failed wave publishes nothing: retrying run_wave on the SAME
+    engine reads the wave id from the catalog log head again and
+    re-fetches the wave — no duplicate urls, no wave id with two
+    generations of rows."""
     pages = pages_df(spark, n_rows=20, n_hosts=2, seed=11).cache()
     seeds = (
         pages.select("url")

@@ -1,7 +1,8 @@
 """Pins for the round-4 review findings (code-review pass over the r4
 diff): bloom-superset commit ordering, recrawl fan-out in
 near_dups_of_wave, over-eager constructor validation, index commit
-durability, and the URI-directory ingest guard."""
+durability, and the URI-directory ingest guard. ``_planted_pages`` is
+shared with tests/test_wave_faults.py."""
 
 from __future__ import annotations
 
@@ -228,12 +229,12 @@ def uninterrupted_index_crawl(spark, tmp_path_factory):
 def test_index_commit_crash_is_reconciled_on_restart(
     spark, tmp_path, monkeypatch, uninterrupted_index_crawl, crash_table
 ):
-    """Docs commit and index commit are separate commits; a crash in
-    wave 1 before the index's ``bands`` commit, or between its ``bands``
-    and ``sigs`` commits, must not lose the wave from the index. The
-    ``sigs`` commit lands last, so a restarted engine sees gen 1 missing
-    and re-commits it: the near-dup pairs of wave 1 and of every later
-    wave then equal those of an uninterrupted crawl."""
+    """The crawl publish and the index commit are separate commits; a
+    crash in wave 1 while the index transaction stages ``bands`` or
+    ``sigs`` must not lose the wave from the index. The index log head
+    then names wave 0 while the crawl's names wave 1, so a restarted
+    engine re-commits wave 1: the near-dup pairs of wave 1 and of every
+    later wave then equal those of an uninterrupted crawl."""
     from judyst_web_crawler_spark.operators.frontier import FrontierEngine
     from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
@@ -254,8 +255,8 @@ def test_index_commit_crash_is_reconciled_on_restart(
     monkeypatch.undo()
     assert SnapshotCatalog(spark, idx).read("sigs").filter("gen = 1").count() == 0
 
-    # restart: reconcile re-commits the docs-committed-but-unindexed
-    # wave, then the crawl runs on
+    # restart: reconcile re-commits the published-but-unindexed wave,
+    # then the crawl runs on
     eng2 = FrontierEngine(spark, cat, fingerprint_k=64, minhash_index_path=idx)
     eng2.run(pages, budget=7)
     assert _pairs_by_wave(eng2, cat, 1) == want
@@ -264,7 +265,8 @@ def test_index_commit_crash_is_reconciled_on_restart(
 def test_index_commit_reads_no_index_table(spark, tmp_path, monkeypatch):
     """A wave's index commit is two appends and nothing else: it reads
     neither ``bands`` nor ``sigs`` (no per-wave scan of the growing
-    index to derive a commit sequence number)."""
+    index to derive a commit sequence number; the lag check reads the
+    two log heads only)."""
     from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
     pages = _planted_pages(spark)

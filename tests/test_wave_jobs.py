@@ -7,6 +7,10 @@ One small politeness-bound crawl (module-scoped) serves most tests:
   pinned, one job group per wave. A selection plan evaluated twice, an
   inferring catalog read or a counter taken by an extra job shows up as
   a higher count;
+- the steady wave is run a second time by a fresh engine on a copy of
+  the catalog taken before it (a restart): it launches no more jobs than
+  the same-engine wave, so a restart costs no repair, reconcile or
+  wave-id scan;
 - the fixture plants priority ties the documents and done commits must
   resolve the same way: two url variants of one canonical key with equal
   ``(depth, page_seq, intra_page_seq)``, and a host whose budget cuts
@@ -18,6 +22,8 @@ One small politeness-bound crawl (module-scoped) serves most tests:
 """
 
 from __future__ import annotations
+
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,6 +45,7 @@ from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 FIRST_WAVE_JOBS = 12
 STEADY_WAVE_JOBS = 12
 EMPTY_WAVE_JOBS = 0
+RESTART_WAVE_JOBS = 12  # the steady wave, run by a fresh engine
 
 A = "http://a.example.ru"
 B = "http://b.example.ru"
@@ -70,22 +77,27 @@ def crawl(spark, tmp_path_factory, jobs_of):
         + [(u, 3, i) for i, u in enumerate([DENIED, MISSING] + OTHERS)],
         "url string, page_seq int, intra_page_seq int",
     )
-    cat = SnapshotCatalog(spark, str(tmp_path_factory.mktemp("wave_jobs") / "cat"))
+    base = tmp_path_factory.mktemp("wave_jobs")
+    cat = SnapshotCatalog(spark, str(base / "cat"))
     eng = FrontierEngine(spark, cat, politeness=politeness)
     eng.bootstrap(seeds)
     stats, jobs = [], []
     for w in range(3):
         if w == 1:
             eng.enqueue(spark.createDataFrame([(LATE, 0, 0)], "url string, page_seq int, intra_page_seq int"), depth=1)
+            shutil.copytree(cat.root, base / "restart")
         m, n = jobs_of(lambda: eng.run_wave(pages, budget=1))
         stats.append(m)
         jobs.append(n)
-    yield cat, stats, jobs
+    # the restart: construction (the Bloom rebuild) outside the job group
+    fresh = FrontierEngine(spark, SnapshotCatalog(spark, str(base / "restart")), politeness=politeness)
+    restart = jobs_of(lambda: fresh.run_wave(pages, budget=1))
+    yield cat, stats, jobs, restart
     pages.unpersist()
 
 
 def test_crawl_drains_in_two_waves(crawl):
-    _cat, stats, _jobs = crawl
+    _cat, stats, _jobs, _restart = crawl
     assert [s["frontier_pending"] for s in stats] == [13, 3, 0]
     # wave 0: 4 of the 6 tied urls, one x variant, 3 others; wave 1: the
     # last 2 tied urls (the late variant retires as a seen dup)
@@ -96,22 +108,29 @@ def test_crawl_drains_in_two_waves(crawl):
 
 
 def test_first_wave_job_budget(crawl):
-    _cat, _stats, jobs = crawl
+    _cat, _stats, jobs, _restart = crawl
     assert jobs[0] == FIRST_WAVE_JOBS
 
 
 def test_steady_wave_job_budget(crawl):
-    _cat, _stats, jobs = crawl
+    _cat, _stats, jobs, _restart = crawl
     assert jobs[1] == STEADY_WAVE_JOBS
 
 
 def test_empty_final_wave_job_budget(crawl):
-    _cat, _stats, jobs = crawl
+    _cat, _stats, jobs, _restart = crawl
     assert jobs[2] == EMPTY_WAVE_JOBS
 
 
+def test_restart_wave_job_budget(crawl):
+    _cat, stats, jobs, (m, n) = crawl
+    assert n == RESTART_WAVE_JOBS <= STEADY_WAVE_JOBS == jobs[1]
+    keys = ("wave", "frontier_pending", "scheduled", "dedup_hits", "robots_denied", "fetch_misses", "retired")
+    assert {k: m[k] for k in keys} == {k: stats[1][k] for k in keys}
+
+
 def test_every_url_retires_once_under_ties(crawl):
-    cat, stats, _jobs = crawl
+    cat, stats, _jobs, _restart = crawl
     frontier = {r["url"] for r in cat.read(FRONTIER_TABLE).select("url").collect()}
     done = [(r["url"], r["retire_status"]) for r in cat.read(DONE_TABLE).collect()]
     urls = [u for u, _s in done]
@@ -127,7 +146,7 @@ def test_every_url_retires_once_under_ties(crawl):
 
 
 def test_one_scheduled_url_per_key_and_documents_match(crawl):
-    cat, _stats, _jobs = crawl
+    cat, _stats, _jobs, _restart = crawl
     scheduled = (
         cat.read(DONE_TABLE).filter(F.col("retire_status") == "scheduled")
         .join(cat.read(FRONTIER_TABLE).select("url", "key_hash"), on="url")
@@ -143,7 +162,7 @@ def test_seen_counters_match_outside_replay(spark, crawl):
     """``seen_maybe``/``seen_exact_hits`` equal a Bloom built from
     outside over the keys seen before the wave, and an exact membership
     check, over the wave's pending urls."""
-    cat, stats, _jobs = crawl
+    cat, stats, _jobs, _restart = crawl
     frontier = cat.read(FRONTIER_TABLE).select("url", "key_hash", "depth").collect()
     done = cat.read(DONE_TABLE).select("url", "wave").collect()
     seen = cat.read(SEEN_TABLE).select("key_hash", "first_seen_wave").collect()
@@ -171,7 +190,7 @@ def test_fate_plan_shape(spark, crawl, tmp_path):
     seen check a correlated ``ExistenceJoin``; one hash exchange on
     key_hash serves both rank windows and one on host the budget window.
     The fixture's frontier has two dirs (bootstrap + enqueue)."""
-    cat, _stats, _jobs = crawl
+    cat, _stats, _jobs, _restart = crawl
     plan_of = FrontierEngine(spark, cat, politeness=_politeness(spark)).fate(budget=1)
     plan = simple_plan(plan_of)
     assert python_eval_ops(plan_of) == 1
