@@ -50,16 +50,16 @@ def _fanout(spark: SparkSession, df: DataFrame) -> DataFrame:
 
     Why: Spark parallelizes a scan by INPUT SPLITS
     (``files.maxPartitionBytes``) — sized for scan-bound work. A
-    CPU-bound projection over a table that is physically one small file
-    (the sandbox fixture; at 100 TB any late-stage compacted/filtered
-    tail has the same shape) runs on ONE core no matter how wide the
-    cluster — bench forensics measured quality_filters 51.9 s serial
-    vs ~1 s spread. Cost is one narrow round-robin exchange of the
-    input rows, negligible next to the per-row CPU it unlocks; when the
-    scan already has at least cluster-width splits this is skipped
-    entirely (no plan change at real scale)."""
+    CPU-bound projection over a table that is physically a few small
+    files (the test fixtures; at 100 TB any late-stage compacted or
+    filtered tail has the same shape) runs on as many cores as there
+    are files, however wide the cluster. Cost is one narrow round-robin
+    exchange of the input rows, negligible next to the per-row CPU it
+    unlocks. The gate counts the scan's input files (a driver-side
+    listing, no RDD conversion): with at least cluster-width files the
+    plan is left as it is (no plan change at real scale)."""
     target = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if len(df.inputFiles()) >= target:
         return df
     return df.repartition(target)
 
@@ -617,7 +617,7 @@ def q_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the full oracle set fits the driver's 50-query sweep window —
     identical column expressions, one projection.)
 
-    r5 adds the Gopher REPETITION rules (Rae et al. 2021 Table A1:
+    It also carries the Gopher REPETITION rules (Rae et al. 2021 Table A1:
     duplicate line/paragraph fraction + char fraction, top-2/3/4-gram
     character fraction, combined ``repetition_pass``) — the signals a
     boilerplate-heavy crawled page fails even when it passes every
@@ -1111,9 +1111,9 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``exact``: the capped all-pairs baseline (``_exact_near_dup_pairs``)
       the LSH path is measured against.
 
-    (Merged from round-4's embedding_near_dup / embedding_near_dup_exact
-    so the r5 span-REMOVAL query fits the driver's 50-entry sweep window
-    — identical pair expressions, one union.)"""
+    (The ``lsh`` and ``exact`` methods share one query so the
+    span-removal query fits the driver's 50-entry sweep window —
+    identical pair expressions, one union.)"""
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
@@ -1221,9 +1221,9 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").withColumn(
         "embedding", F.col("embedding").cast("array<double>")
     )
-    # the library's own candidate rule (also what ann_topk_jvm ranks) —
-    # NOT re-implemented here, so probe/bucket changes can't silently
-    # diverge from the parity this query exists to pin
+    # the library's own candidate rule — NOT re-implemented here, so
+    # probe/bucket changes can't silently diverge from the parity this
+    # query exists to pin
     cands = SIM.ann_candidates(emb, QUERY_VEC, _ANN_PLANES)
     approx = SIM.brute_force_topk(cands, QUERY_VEC, k=10)
     exact = SIM.brute_force_topk(emb, QUERY_VEC, k=10)
@@ -1659,9 +1659,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_prep": q_corpus_prep,
         "similarity_topk": q_similarity_topk,
         "token_jaccard": q_token_jaccard,
-        # r5: embedding_near_dup_exact merged INTO embedding_near_dup
-        # (method='exact'/'lsh' union — same pair expressions) to free
-        # this sweep slot for the span-REMOVAL query:
+        # embedding_near_dup holds both the 'exact' and 'lsh' methods
+        # (one union), which leaves this sweep slot to span removal:
         "dedup_spans_removed": q_dedup_spans_removed,
         "embedding_near_dup": q_embedding_near_dup,
         "ann_recall": q_ann_recall,

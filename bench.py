@@ -11,14 +11,13 @@ Prints ONE JSON line:
   shape, sized by the sf of the input dir, written to parquet first so the
   engine benchmarks real scans;
 - ``--scaling`` additionally re-runs the frontier job at two parallelism
-  levels (local[8] vs local[32] — the sandbox stand-in for N vs 4N
-  executors, BASELINE.json:2) in fresh subprocesses and reports throughput
-  at both plus scaling efficiency.
+  levels (default local[2] vs local[8] — the sandbox stand-in for N vs
+  4N executors, see ``run_scaling``) in fresh subprocesses and reports
+  throughput at both plus scaling efficiency.
 - the full-bench path idles the box for $SPARK_BENCH_COOLDOWN_S (default
-  600 s) BEFORE timing anything: this host degrades 2-6x under sustained
-  load and recovers over ~10 min idle (BASELINE.md host-state forensics),
-  so an uncooled bench at the end of a session measures thermal history,
-  not the engine. Set SPARK_BENCH_COOLDOWN_S=0 for iterative local runs.
+  600 s) BEFORE timing anything: a host that slows under sustained load
+  would otherwise time its own thermal history, not the engine. Set
+  SPARK_BENCH_COOLDOWN_S=0 for iterative local runs.
 """
 
 from __future__ import annotations
@@ -278,21 +277,17 @@ def run_queries(spark) -> dict[str, float]:
 def run_scaling() -> dict:
     """Same frontier job, same input size, at N vs 4N cores.
 
-    Default pair: local[2] vs local[8] — 4× PHYSICAL cores on this host.
-    (local[8]→local[32] crosses into SMT siblings + the single-box memory
-    bandwidth ceiling, which a real 4N-EXECUTOR cluster — each node with
-    its own memory bus — does not share; both pairs are reported in
-    BASELINE.md.) Override with SPARK_SCALING_LEVELS, e.g. "8,32".
-    Fresh subprocess per level so JVM state is clean.
+    Default pair: local[2] vs local[8]. Pick levels that stay within the
+    host's PHYSICAL cores: past them a leg crosses into SMT siblings and
+    the single-box memory-bandwidth ceiling, which a real 4N-EXECUTOR
+    cluster (each node with its own memory bus) does not share. Override
+    with SPARK_SCALING_LEVELS, e.g. "4,1". Fresh subprocess per level so
+    JVM state is clean.
 
-    Default ORDER is high leg first: the round-4 samples show the
-    multi-core leg is the thermally sensitive one (across ALL FIVE
-    round-4 published samples: low legs ±8%, high legs ±16%; across
-    the first three — the single-day subset the lo/hi comment below
-    cites — ±3% / ±13%; every sub-0.8 pair a depressed HIGH leg), so
-    it should run on the coldest box an invocation will ever see — its
-    first leg. The efficiency ratio is order-independent (lo/hi by
-    value)."""
+    Default ORDER is high leg first: the multi-core leg is the one most
+    sensitive to host state, so it runs on the coldest box an invocation
+    will ever see — its first leg. The efficiency ratio is
+    order-independent (lo/hi by value)."""
     levels = os.environ.get("SPARK_SCALING_LEVELS", "8,2").split(",")
     samples = int(os.environ.get("SPARK_SCALING_SAMPLES", "2"))
     results: dict = {}
@@ -332,11 +327,10 @@ def run_scaling() -> dict:
     # (BASELINE.md drift notes), so adjacent legs of DIFFERENT levels see
     # the most similar host state; interference only ever SLOWS a sample,
     # so the max is the least-interfered estimate of each leg's truth.
-    # SPARK_SCALING_COOLDOWN_S idles the box before EACH leg: round-3
-    # forensics showed sustained load pushes the host into a ~2-3×-slower
-    # state that recovers over ~10 min of idleness (BASELINE.md round-3
-    # scaling section) — without a cooldown, whichever leg runs later in
-    # the invocation measures the degraded host, not the engine.
+    # SPARK_SCALING_COOLDOWN_S idles the box before EACH leg: on a host
+    # that slows under sustained load, whichever leg runs later in the
+    # invocation would otherwise measure the degraded host, not the
+    # engine.
     cooldown = int(os.environ.get("SPARK_SCALING_COOLDOWN_S", "0"))
     for _ in range(samples):
         for cpus in levels:

@@ -114,12 +114,6 @@ def extract_text_udf(payloads: pd.Series) -> pd.Series:
     return payloads.map(extract_text)
 
 
-def extracted_text(html_col: Column | str) -> Column:
-    """Column expr: ``html BINARY`` payload → byte-identical decision text."""
-    c = F.col(html_col) if isinstance(html_col, str) else html_col
-    return extract_text_udf(c)
-
-
 # --- P1/P2: listing-row projection (ksrf.py:108-119) ---------------------
 
 

@@ -1,8 +1,7 @@
 """Near-duplicate detection for training-data pipelines.
 
-Four families, each structured for 100 TB scale:
+Three families, each structured for 100 TB scale:
 
-- exact:        hash-groupBy on a normalized fingerprint (1 shuffle).
 - MinHash+LSH:  shingle → k minhashes (vectorized numpy in mapInPandas)
                 → band buckets → self-join on (band, bucket) → exact
                 Jaccard verify on candidates only. The LSH band join is
@@ -35,7 +34,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark import cache
-from judyst_web_crawler_spark.functions.textstats import normalized_fingerprint
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 _MERSENNE = (1 << 61) - 1
@@ -87,24 +85,15 @@ def _cap_hot_buckets(
     return marked.filter(F.col("_rn") <= cap).drop("_rn")
 
 
-# ---------------------------------------------------------------- exact
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-equal (normalized) documents: fingerprint, count,
-    keep groups >1. One shuffle on the fingerprint."""
-    fp = df.select(F.col(id_col), normalized_fingerprint(text_col).alias("fingerprint"))
-    return (
-        fp.groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 # Seed for the second, independent span hash: (h1, h2) is a 128-bit key,
 # so a cross-span collision (which would silently merge two spans' counts)
 # is negligible at any corpus size (birthday bound ~n²/2^129).
 _SPAN_HASH_SALT = 0x9E3779B9
+
+# Largest shared-span survivor set ``duplicate_ngram_spans`` broadcasts
+# into its resolve join (5M ≈ 80 MB of 16 B keys); above it the join runs
+# shuffled.
+BROADCAST_RESOLVE_ROWS = 5_000_000
 
 
 def duplicate_ngram_spans(
@@ -114,7 +103,6 @@ def duplicate_ngram_spans(
     n: int = 8,
     min_docs: int = 2,
     resolve_spans: bool = True,
-    broadcast_resolve_threshold: int = 5_000_000,
 ) -> DataFrame:
     """Exact repeated token-n-gram spans ACROSS documents — the
     exact-substring dedup primitive (Lee et al. 2022, "Deduplicating
@@ -144,8 +132,7 @@ def duplicate_ngram_spans(
     spans), so an unconditional broadcast of the survivor hashes OOMs
     the driver exactly when the operator matters most. The resolve
     path counts the cut survivors (one scalar action on the already-cut
-    ``groups``) and broadcasts only below
-    ``broadcast_resolve_threshold`` rows (5M ≈ 80 MB of 16 B keys) —
+    ``groups``) and broadcasts only up to ``BROADCAST_RESOLVE_ROWS`` —
     that path filters singleton spans map-side, so strings cross no
     exchange before the ``min_docs`` filter. Above the threshold the
     semi-join runs shuffled: asking for resolved STRINGS over a
@@ -192,7 +179,7 @@ def duplicate_ngram_spans(
     # size-gate the resolve join (docstring): the count rides the cut
     # survivors, so it costs one scalar action, not a recompute of the
     # wide aggregation
-    use_broadcast = groups.count() <= broadcast_resolve_threshold
+    use_broadcast = groups.count() <= BROADCAST_RESOLVE_ROWS
     # Resolve strings for SURVIVING groups only: re-derive the windows
     # (CPU-linear, no stored intermediate), drop singletons via the
     # semi join, and collapse to one string per hash pair. min(span)
@@ -214,7 +201,6 @@ def duplicate_ngram_spans(
 
 def remove_duplicate_spans(
     df: DataFrame,
-    spans: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
@@ -241,10 +227,8 @@ def remove_duplicate_spans(
     lower-then-split — lowercasing never alters whitespace, so the
     token boundaries agree).
 
-    ``spans``: pass ``duplicate_ngram_spans(df, ..., resolve_spans=
-    False)`` output (or any frame with ``h1``/``h2`` of the same
-    128-bit span-hash family) to reuse a precomputed discovery pass;
-    ``None`` derives it here (hash-keyed, strings never shuffled).
+    Each round discovers its spans with ``duplicate_ngram_spans(...,
+    resolve_spans=False)``: hash-keyed, strings never shuffled.
 
     Scale shape (the 100 TB contract): no per-document quadratic HOF
     and no broadcast anywhere — boilerplate-heavy corpora make BOTH
@@ -295,12 +279,10 @@ def remove_duplicate_spans(
     cur = cur.select(id_col, text_col, n_tokens_orig)
 
     for rnd in range(rounds):
-        round_spans = spans if rnd == 0 else None
-        if round_spans is None:
-            round_spans = duplicate_ngram_spans(
-                cur, id_col, text_col, n=n, min_docs=min_docs,
-                resolve_spans=False,
-            )
+        round_spans = duplicate_ngram_spans(
+            cur, id_col, text_col, n=n, min_docs=min_docs,
+            resolve_spans=False,
+        )
         toks = toks_of(F.col(text_col))
         low = F.transform(toks, F.lower)
         idx = F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1))
@@ -385,13 +367,6 @@ def remove_duplicate_spans(
             cur = cache.cut(out)
 
     return out
-
-
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per fingerprint group."""
-    fp = df.withColumn("fingerprint", normalized_fingerprint(text_col))
-    keep = fp.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    return fp.join(keep, on=["fingerprint", id_col], how="inner").drop("fingerprint")
 
 
 # ------------------------------------------------------------- shingles
@@ -1127,54 +1102,11 @@ def fingerprint_text(
 ) -> tuple[np.ndarray, int]:
     """One document's (minhash signature int64[k], simhash int64) from the
     same two kernels ``minhash_signatures`` and ``simhash_signatures`` run,
-    sharing the shingle pass when both use the same shingle size — used by
-    ``combined_fingerprints`` and the frontier's fused extract+fingerprint
-    wave UDF."""
+    sharing the shingle pass when both use the same shingle size — the
+    frontier's fused extract+fingerprint wave UDF calls it per page."""
     sh = _shingle_hashes_fast(text, minhash_shingle_n)
     sh2 = sh if simhash_shingle_n == minhash_shingle_n else _shingle_hashes_fast(text, simhash_shingle_n)
     return _minhash_of(sh, a, b, k), _simhash_of(sh2)
-
-
-def combined_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 128,
-    minhash_shingle_n: int = 5,
-    simhash_shingle_n: int = 4,
-    seed: int = 42,
-) -> DataFrame:
-    """MinHash signature + SimHash in ONE Arrow pass per document.
-
-    The production crawl computes both per fetched page; fusing them
-    halves the JVM→Python transfers and shares the batch overhead
-    (separate stages would also each re-shuffle the text column). Same
-    outputs as ``minhash_signatures`` + ``simhash_signatures``.
-    """
-    a, b = _minhash_params(k, seed)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs, sims = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                sig, sim = fingerprint_text(t, a, b, k, minhash_shingle_n, simhash_shingle_n)
-                ids.append(i)
-                sigs.append(sig)
-                sims.append(sim)
-            yield pd.DataFrame({id_col: ids, "signature": sigs, "simhash": sims})
-
-    from pyspark.sql.types import ArrayType, LongType, StructField
-
-    selected = df.select(id_col, text_col)
-    out_schema = _id_derived_schema(
-        selected,
-        [id_col],
-        [
-            StructField("signature", ArrayType(LongType())),
-            StructField("simhash", LongType()),
-        ],
-    )
-    return selected.mapInPandas(compute, out_schema)
 
 
 # -------------------------------------------------------------- simhash

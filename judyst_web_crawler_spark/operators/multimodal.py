@@ -4,13 +4,12 @@ metadata, processed via Arrow-batched mapInPandas.
 The container has no image/audio codecs, so the DECODE step is stubbed
 (clearly marked) behind ``decode_image``/``decode_audio`` — but the
 Spark-side plumbing is real and tested: schemas, batch shapes, UDF
-signatures, partition-size control. A production deployment swaps the
-stub body for PIL/ffmpeg; nothing else changes.
+signatures. A production deployment swaps the stub body for PIL/ffmpeg;
+nothing else changes.
 
 Design for 100 TB of media: binary payloads are large, so operators here
-(1) never collect payloads, (2) repartition by byte-size budget before
-the UDF so an Arrow batch fits executor memory, (3) project metadata
-columns separately from payloads to keep scans narrow.
+(1) never collect payloads and (2) project metadata columns separately
+from payloads to keep scans narrow.
 """
 
 from __future__ import annotations
@@ -72,14 +71,6 @@ def fake_features(payload: bytes, dim: int = 8) -> list[float]:
     """Deterministic stand-in feature vector (digest-derived, unit-ish)."""
     d = hashlib.sha256(payload).digest()
     return [round((d[i] - 127.5) / 127.5, 6) for i in range(dim)]
-
-
-def repartition_by_payload_bytes(df: DataFrame, payload_col: str = "payload", target_mb: int = 64) -> DataFrame:
-    """Size partitions by payload BYTES, not row count — with media, row
-    count is a useless proxy. One pass to estimate, then repartition."""
-    total = df.select(F.sum(F.length(F.col(payload_col))).alias("b")).first()["b"] or 0
-    n = max(1, int(total / (target_mb * 1024 * 1024)) + 1)
-    return df.repartition(n)
 
 
 def extract_media_features(df: DataFrame, payload_col: str = "payload", dim: int = 8) -> DataFrame:

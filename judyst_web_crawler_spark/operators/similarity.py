@@ -194,9 +194,9 @@ def ann_candidates(
 ) -> DataFrame:
     """The sign-LSH candidate set for ``query``: vectors whose bucket
     matches the query's bucket in ≥1 table. The single normative probe
-    rule — ``ann_topk_jvm`` ranks these, and the driver's ann_recall
-    query measures recall over this exact set, so the bucket fold cannot
-    drift between the two.
+    rule — the driver's ann_recall query ranks these with
+    ``brute_force_topk`` and measures recall over this exact set, so the
+    bucket fold cannot drift between the two.
 
     ``engine='arrow'`` (default) computes every bucket in ONE vectorized
     pandas pass with the EXACT sequential summation the Column fold and
@@ -250,27 +250,6 @@ def ann_candidates(
     # matches the engine='jvm' path's type contract (_derived_schema)
     out_schema = _derived_schema(df.select(id_col, vec_col), [id_col, vec_col], [])
     return df.select(id_col, vec_col).mapInPandas(compute, out_schema)
-
-
-def ann_topk_jvm(
-    df: DataFrame,
-    query: list[float],
-    planes: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k with caller-supplied LITERAL hyperplanes, fully JVM-side:
-    ``ann_candidates`` → exact cosine top-k on candidates only.
-
-    This is the oracle-checkable twin of ``ann_topk`` (whose float32
-    numpy path and Generator planes a SQL engine cannot reproduce
-    bit-exactly): with ``arith_hyperplanes`` both sides compute identical
-    doubles, so recall@k against ``brute_force_topk`` is a deterministic,
-    SQL-verifiable scalar. No shuffle — candidates come from a filter,
-    the top-k is TakeOrderedAndProject."""
-    cands = ann_candidates(df, query, planes, id_col, vec_col)
-    return brute_force_topk(cands, query, k, id_col, vec_col)
 
 
 def ann_topk(
@@ -348,15 +327,11 @@ def ivf_assign(
     centroids: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    include_vec: bool = False,
 ) -> DataFrame:
     """(id, cell) — nearest-centroid assignment, vectorized per Arrow
     batch against the broadcast centroid matrix. At 100 TB this is the
     one full pass; probes then touch only nprobe/n_cells of the data
-    (write the output bucketed by ``cell`` for partition pruning).
-    ``include_vec`` carries the vector through the same pass — keeping
-    its INPUT element type (float32 stays float32) — so index builds
-    need no post-assignment join back to the vector table."""
+    (write the output bucketed by ``cell`` for partition pruning)."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(centroids.astype(np.float64))
 
@@ -367,18 +342,14 @@ def ivf_assign(
                 continue
             mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
             d2 = (mat**2).sum(1)[:, None] - 2 * mat @ cents.T + (cents**2).sum(1)[None, :]
-            out = {id_col: pdf[id_col], "cell": d2.argmin(axis=1).astype(np.int32)}
-            if include_vec:
-                out[vec_col] = pdf[vec_col]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame(
+                {id_col: pdf[id_col], "cell": d2.argmin(axis=1).astype(np.int32)}
+            )
 
     from pyspark.sql.types import IntegerType, StructField
 
     selected = df.select(id_col, vec_col)
-    extra = [StructField("cell", IntegerType())]
-    if include_vec:
-        extra.append(selected.schema[vec_col])  # carried with its input type
-    out_schema = _derived_schema(selected, [id_col], extra)
+    out_schema = _derived_schema(selected, [id_col], [StructField("cell", IntegerType())])
     return selected.mapInPandas(compute, out_schema)
 
 

@@ -135,75 +135,6 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream_tws(events: DataFrame) -> DataFrame:
-    """Same gap-session semantics on Spark 4's ``transformWithState``
-    API (the successor of applyInPandasWithState: typed per-key state
-    handles, timers, RocksDB-backed store). Kept alongside the
-    applyInPandasWithState path so both stateful-API generations are
-    exercised; equality is pinned by tests/test_streaming.py.
-
-    Requires the RocksDB state-store provider
-    (``spark.sql.streaming.stateStore.providerClass`` →
-    ``RocksDBStateStoreProvider``) — transformWithState does not run on
-    the default HDFS-backed provider — and the ``protobuf`` Python
-    package (the state-server wire protocol), which this container does
-    NOT ship: like lxml and the image codecs, a documented environment
-    limitation. The code path is complete; the test skips when protobuf
-    is absent and the applyInPandasWithState path remains the exercised
-    one here.
-    """
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(state-server protocol), not installed in this container; "
-            "use sessionize_stream (applyInPandasWithState) instead"
-        ) from e
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "session", "last_ts long, n_sessions long, n_events long"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            gap_s = 1800
-            if self._state.exists():
-                last_ts, n_sessions, n_events = self._state.get()
-            else:
-                last_ts, n_sessions, n_events = None, 0, 0
-            # all chunks first, ONE sort — see _session_fn
-            all_ts: list[int] = []
-            for pdf in rows:
-                all_ts.extend(
-                    (pd.to_datetime(pdf["ts"]).astype("int64") // 1_000_000_000).tolist()
-                )
-            for t in sorted(all_ts):
-                if last_ts is None or t - last_ts > gap_s:
-                    n_sessions += 1
-                last_ts = t
-                n_events += 1
-            self._state.update((last_ts, n_sessions, n_events))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_sessions": [n_sessions], "n_events": [n_events]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionProcessor(),
-        outputStructType=_SESSION_OUT,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def run_to_catalog(
     stream_df: DataFrame,
     catalog: Any,

@@ -70,3 +70,23 @@ def test_text_location(spark):
 def test_url_host(spark):
     df = spark.createDataFrame([("http://court001.example.ru/a/b.pdf",)], "url string")
     assert df.select(C.url_host("url").alias("h")).first()["h"] == "court001.example.ru"
+
+
+def test_canonical_url_semantics(spark):
+    df = spark.createDataFrame(
+        [
+            ("HTTP://Court.Example.RU/Ru/Doc/A.pdf",),
+            ("http://court.example.ru/Ru/Doc/A.pdf",),
+            ("http://court.example.ru/Ru/Doc/a.pdf",),
+            ("http://court.example.ru/x.pdf#page=2",),
+            ("http://court.example.ru/x.pdf",),
+        ],
+        "url string",
+    )
+    got = [r["c"] for r in df.select(C.canonical_url("url").alias("c")).collect()]
+    # host/scheme case-insensitive → rows 0 and 1 collapse
+    assert got[0] == got[1] == "http://court.example.ru/Ru/Doc/A.pdf"
+    # path case PRESERVED → row 2 stays distinct
+    assert got[2] == "http://court.example.ru/Ru/Doc/a.pdf" != got[1]
+    # fragment stripped → rows 3 and 4 collapse
+    assert got[3] == got[4] == "http://court.example.ru/x.pdf"

@@ -192,33 +192,6 @@ def _final_state(cat):
     return docs, seen
 
 
-def test_resume_with_bloom_rebuild(spark, tmp_path):
-    """Restart: the engine rebuilds its bloom from the committed seen
-    table; the prefilter must not change the final seen-set/output vs an
-    uninterrupted run."""
-    pages = pages_df(spark, n_rows=40, n_hosts=2, seed=11).cache()
-    seeds = _seeds_from_pages(pages)
-
-    cat_a = SnapshotCatalog(spark, str(tmp_path / "ba"))
-    eng_a = FrontierEngine(spark, cat_a)
-    eng_a.bootstrap(seeds)
-    eng_a.run(pages, budget=6, max_waves=50)
-
-    cat_b = SnapshotCatalog(spark, str(tmp_path / "bb"))
-    eng_b1 = FrontierEngine(spark, cat_b)
-    eng_b1.bootstrap(seeds)
-    eng_b1.run_wave(pages, budget=6)
-    del eng_b1
-    cat_b2 = SnapshotCatalog(spark, str(tmp_path / "bb"))
-    eng_b2 = FrontierEngine(spark, cat_b2)  # bloom rebuilt from seen
-    eng_b2.run(pages, budget=6, max_waves=50)
-
-    assert _final_state(cat_a) == _final_state(cat_b2)
-    docs, _ = _final_state(cat_a)
-    assert len(docs) == 40
-    pages.unpersist()
-
-
 def test_resume_equals_uninterrupted(spark, tmp_path):
     pages = pages_df(spark, n_rows=60, n_hosts=3, seed=3).cache()
     hosts = [r["h"] for r in pages.select(C.url_host("url").alias("h")).distinct().collect()]

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from judyst_web_crawler_spark.datagen import pages_df
 from judyst_web_crawler_spark.functions.extraction import (
     PAGE_NUMBER_PATTERN,
+    decode_payload,
     del_np_and_page_nums,
     extract_text,
     extract_text_udf,
@@ -88,3 +89,10 @@ def test_strip_udf_matches_python(spark):
     got = df.select("raw", strip_page_numbers_udf(F.col("raw")).alias("s")).collect()
     for row in got:
         assert row["s"] == del_np_and_page_nums(row["raw"])
+
+
+def test_decode_payload_undecodable_bytes():
+    # invalid utf-8 AND invalid cp1251 (0x98 undefined) → degrades, not raises
+    junk = b"\xff\xfe\x98\x01pdf-like"
+    out = decode_payload(junk)
+    assert isinstance(out, str) and len(out) > 0

@@ -4,12 +4,15 @@ byte-identical text, per-partition metrics recorded."""
 
 from __future__ import annotations
 
+from helpers import seeds_of
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.datagen import pages_df, politeness_df
 from judyst_web_crawler_spark.functions import canonical as C
 from judyst_web_crawler_spark.operators.frontier import (
     DOCS_TABLE,
+    DONE_TABLE,
     METRICS_TABLE,
     SEEN_TABLE,
     FrontierEngine,
@@ -25,7 +28,6 @@ def test_frontier_end_to_end_with_bloom(spark, tmp_path):
     # seeds: every url once + the first 10 urls again (duplicates)
     base = pages.select("url").orderBy("url")
     dups = base.limit(10)
-    from pyspark.sql import Window
 
     seeds = (
         base.unionAll(dups)
@@ -59,4 +61,24 @@ def test_frontier_end_to_end_with_bloom(spark, tmp_path):
     m = cat.read(METRICS_TABLE)
     assert {"wave", "partition_id", "fetch_count", "dedup_hits", "dedup_hit_rate", "elapsed_s"}.issubset(set(m.columns))
     assert m.agg(F.sum("fetch_count")).first()[0] == 50
+    pages.unpersist()
+
+
+def test_fetch_miss_retired_not_documented(spark, tmp_path):
+    pages = pages_df(spark, n_rows=10, n_hosts=1, seed=3).cache()
+    ghost = spark.createDataFrame(
+        [("http://court000.example.ru/ru/missing.pdf", 2, 99)],
+        "url string, page_seq int, intra_page_seq int",
+    )
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    eng = FrontierEngine(spark, cat)
+    eng.bootstrap(seeds_of(pages).unionByName(ghost))
+    stats = eng.run(pages, budget=50, max_waves=10)
+    docs = cat.read(DOCS_TABLE)
+    assert docs.count() == 10  # ghost url NOT in documents
+    assert docs.filter(F.col("text").isNull()).count() == 0
+    done = cat.read(DONE_TABLE)
+    miss = done.filter(F.col("retire_status") == "fetch_miss").collect()
+    assert [r["url"] for r in miss] == ["http://court000.example.ru/ru/missing.pdf"]
+    assert sum(s.get("fetch_misses", 0) for s in stats) == 1
     pages.unpersist()

@@ -1,12 +1,16 @@
 """Near-dup detection: planted duplicates must be found; unrelated texts
-must not pair up. MinHash estimates must track exact Jaccard."""
+must not pair up. MinHash estimates must track exact Jaccard. Also the
+exact-substring span operators (discovery and removal), pair-side
+attachment and the ``cache.cut`` seam of the near-dup operators."""
 
 from __future__ import annotations
 
 import hashlib
 import json
+import re
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
@@ -22,24 +26,29 @@ OTHER = (
 )
 
 
+_ROWS = [
+    (1, BASE * 3),
+    (2, BASE * 3),                                  # exact dup of 1
+    (3, BASE * 3 + " дополнительное предложение."),  # near dup of 1
+    (4, OTHER * 3),
+    (5, OTHER * 3 + " ещё абзац о снаряжении."),     # near dup of 4
+    (6, "короткий уникальный текст о кошках"),
+]
+
+
 def _docs(spark):
-    rows = [
-        (1, BASE * 3),
-        (2, BASE * 3),                                  # exact dup of 1
-        (3, BASE * 3 + " дополнительное предложение."),  # near dup of 1
-        (4, OTHER * 3),
-        (5, OTHER * 3 + " ещё абзац о снаряжении."),     # near dup of 4
-        (6, "короткий уникальный текст о кошках"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(_ROWS, "doc_id long, text string")
 
 
-def test_exact_duplicates(spark):
-    groups = D.exact_duplicates(_docs(spark)).collect()
-    assert len(groups) == 1
-    assert groups[0]["n_dups"] == 2 and groups[0]["keep_id"] == 1
-    kept = D.exact_dedup(_docs(spark)).select("doc_id").collect()
-    assert {r["doc_id"] for r in kept} == {1, 3, 4, 5, 6}
+def _fingerprints(k: int) -> list[tuple[int, list[int], int]]:
+    """(doc_id, signature, simhash) of every fixture doc from
+    ``fingerprint_text``, the kernel the frontier's wave UDF runs."""
+    a, b = D._minhash_params(k, 42)
+    out = []
+    for doc_id, text in _ROWS:
+        sig, sim = D.fingerprint_text(text, a, b, k)
+        out.append((doc_id, [int(x) for x in sig], int(sim)))
+    return out
 
 
 def test_minhash_near_duplicates(spark):
@@ -68,14 +77,15 @@ def test_simhash_near_duplicates(spark):
     assert all(not (a in (1, 2, 3) and b in (4, 5, 6)) for a, b in got)
 
 
-def test_combined_fingerprints_match_individual(spark):
+def test_fingerprint_text_matches_batch_signatures(spark):
     docs = _docs(spark)
-    comb = {r["doc_id"]: r for r in D.combined_fingerprints(docs, k=64).collect()}
+    comb = {doc_id: (sig, sim) for doc_id, sig, sim in _fingerprints(64)}
     mh = {r["doc_id"]: list(r["signature"]) for r in D.minhash_signatures(docs, k=64).collect()}
     sh = {r["doc_id"]: r["simhash"] for r in D.simhash_signatures(docs).collect()}
+    assert set(comb) == set(mh) == set(sh)
     for doc_id in mh:
-        assert list(comb[doc_id]["signature"]) == mh[doc_id]
-        assert comb[doc_id]["simhash"] == sh[doc_id]
+        assert comb[doc_id][0] == mh[doc_id]
+        assert comb[doc_id][1] == sh[doc_id]
 
 
 def _digest(rows) -> str:
@@ -86,16 +96,15 @@ def test_signature_kernels_golden(spark):
     """Bit-identity pin of the per-document kernels: sha256 over the
     sorted (doc_id, signature) / (doc_id, simhash) rows of the fixture,
     recorded before minhash_signatures, simhash_signatures and
-    fingerprint_text were folded onto one MinHash and one SimHash kernel.
-    (test_combined_fingerprints_match_individual alone cannot catch a
-    kernel regression: all three now share the kernels.)"""
+    fingerprint_text were folded onto one MinHash and one SimHash kernel
+    (``cb`` was then taken over a batch operator that ran
+    fingerprint_text per row; the same rows give the same digest).
+    test_fingerprint_text_matches_batch_signatures alone cannot catch a
+    kernel regression: all three share the kernels."""
     docs = _docs(spark)
     mh = [(r["doc_id"], list(r["signature"])) for r in D.minhash_signatures(docs, k=128).collect()]
     sh = [(r["doc_id"], r["simhash"]) for r in D.simhash_signatures(docs).collect()]
-    cb = [
-        (r["doc_id"], list(r["signature"]), r["simhash"])
-        for r in D.combined_fingerprints(docs, k=128).collect()
-    ]
+    cb = _fingerprints(128)
     assert _digest(mh) == "a071cf078c21af06f87f6893a442e1fad2030c8145e5fdd92881940f7726286b"
     assert _digest(sh) == "a76538685b4085116313a93faad6a4768477f8f81c3343fcb1d2f2dfb635718d"
     assert _digest(cb) == "bfd29b8819d43207cea89ef0d0b23468984ee60054ddd238303c7f2ba4eb4180"
@@ -343,3 +352,11 @@ def test_attach_pair_sides_id_col_named_like_pair_columns(spark):
     lookup = spark.createDataFrame([(1, "x"), (2, "y")], "id_a long, text string")
     rows = D.attach_pair_sides(pairs, lookup, "id_a", "text", "va", "vb").collect()
     assert [(r["id_a"], r["id_b"], r["va"], r["vb"]) for r in rows] == [(1, 2, "x", "y")]
+
+
+def test_jvm_signature_guards(spark):
+    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="mismatch"):
+        D.minhash_signatures_jvm(docs, [3, 5], [7])
+    with pytest.raises(ValueError, match="1..31"):
+        D.simhash_jvm(docs, bits=64)

@@ -127,3 +127,19 @@ def test_end_to_end_minhash_to_clusters(spark):
     assert out[1]["cluster_id"] == 1 and out[2]["cluster_id"] == 1 and out[3]["cluster_id"] == 1
     assert out[10]["cluster_id"] == 10 and out[11]["cluster_id"] == 10
     assert out[50]["cluster_size"] == 1
+
+
+def test_star_ignores_foreign_endpoints_like_label_path(spark):
+    """Pairs referencing ids absent from the corpus must not merge
+    components in EITHER algorithm (fallback parity)."""
+    # 1-99 and 2-99: 99 is NOT in the corpus; label prop never
+    # propagates through it, so 1 and 2 stay separate clusters
+    pairs = spark.createDataFrame([(1, 99), (2, 99), (3, 4)], "id_a long, id_b long")
+    corpus = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
+    lab = {r["node"]: r["cluster_id"] for r in G.connected_components(
+        pairs, nodes=corpus, node_col="node").collect()}
+    star = {r["node"]: r["cluster_id"] for r in G.connected_components_star(
+        pairs, nodes=corpus, node_col="node").collect()}
+    assert lab == star
+    assert star[1] == 1 and star[2] == 2 and star[3] == 3 and star[4] == 3
+    assert 99 not in star

@@ -60,3 +60,16 @@ def test_derived_redaction_links(spark):
     assert "doc1=90&doc2=100" in out[100]["redaction_comparison_link"]
     assert out[200]["redaction_comparison_link"] is None
     assert out[200]["addit_info_link"].endswith("cons_doc_LAW_200/add-info/")
+
+
+def test_listing_href_from_key_cell_only():
+    markup = """
+    <table><tr>
+      <td>01.01.2018</td>
+      <td><a href="/info-page">Определение</a></td>
+      <td>5-О/2018<a href="/doc5.pdf">pdf</a></td>
+    </tr></table>
+    """
+    rows = parse_listing_rows(markup)
+    assert rows[0]["url"] == "/doc5.pdf"  # td2's anchor, not the title link
+    assert rows[0]["canonical_key"] == "5-О/2018"

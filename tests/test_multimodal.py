@@ -34,13 +34,6 @@ def test_feature_extraction_end_to_end(spark):
             assert r["width"] is None
 
 
-def test_repartition_by_bytes(spark):
-    media = M.synthetic_media_df(spark, n_rows=200, seed=9)
-    small = M.repartition_by_payload_bytes(media, target_mb=1)
-    assert small.rdd.getNumPartitions() >= 1
-    assert small.count() == 200
-
-
 def test_frame_sample_plan(spark):
     media = M.synthetic_media_df(spark, n_rows=9, seed=1).filter(F.col("kind") == "video")
     plan = M.frame_sample_plan(media, every_n=10)

@@ -51,10 +51,10 @@ def test_agg_plan_is_jvm_only_with_partial_agg(spark):
 def test_extraction_plan_single_python_stage(spark):
     """The extract pipeline crosses JVM→Python exactly once per row batch."""
     from judyst_web_crawler_spark.datagen import pages_df
-    from judyst_web_crawler_spark.functions.extraction import extracted_text
+    from judyst_web_crawler_spark.functions.extraction import extract_text_udf
 
     pages = pages_df(spark, n_rows=10, with_oracle_text=False)
-    q = pages.select("url", extracted_text("html").alias("text"))
+    q = pages.select("url", extract_text_udf("html").alias("text"))
     assert P.python_eval_ops(q) == 1
 
 

@@ -3,14 +3,19 @@
 budget=1, single host, n_salts=1 → engine emission order must equal the
 reference's sequential order (page_seq, intra_page_seq) (ksrf.py:107-110).
 budget=k, multi-host → per-host order preserved, budget never exceeded,
-salted budgets never exceed the per-host total.
+salted budgets never exceed the per-host total, a budget smaller than
+the salt count still reaches every url.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark.datagen import pages_df
+from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
 from judyst_web_crawler_spark.operators.politeness import apply_robots, budget_topk
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 
 def _frontier(spark, n_hosts=3, pages=4, per_page=5):
@@ -51,11 +56,6 @@ def test_engine_budget1_single_host_reference_order(spark, tmp_path):
     """Full engine loop at budget=1 on one host: the documents table's
     wave numbers must reproduce the reference's sequential fetch order
     (ksrf.py:107-110,188-199) exactly."""
-    from judyst_web_crawler_spark.datagen import pages_df
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-    from pyspark.sql import Window
-
     pages = pages_df(spark, n_rows=7, n_hosts=1, seed=13).cache()
     w = Window.orderBy("url")
     seeds = (
@@ -119,3 +119,25 @@ def test_robots_filter(spark):
     )
     got = {r["url"] for r in apply_robots(fr, pol).collect()}
     assert got == {"http://h0.ru/ru/x.pdf", "http://h9.ru/anything.pdf"}
+
+
+def test_salted_budget_smaller_than_salts_never_starves(spark):
+    """budget < n_salts: every URL must still be reachable across waves
+    (the old split gave high salts share 0 forever)."""
+    rows = [
+        (f"http://h0.ru/d{i}.pdf", "h0.ru", 0, 2, i) for i in range(12)
+    ]
+    schema = "url string, host string, depth int, page_seq int, intra_page_seq int"
+    remaining = list(rows)
+    emitted = set()
+    for _ in range(30):
+        if not remaining:
+            break
+        wave = budget_topk(
+            spark.createDataFrame(remaining, schema), default_budget=2, n_salts=4
+        ).collect()
+        assert 1 <= len(wave) <= 2  # budget respected, progress guaranteed
+        for r in wave:
+            emitted.add(r["url"])
+        remaining = [r for r in remaining if r[0] not in {w["url"] for w in wave}]
+    assert emitted == {r[0] for r in rows}

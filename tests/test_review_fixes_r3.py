@@ -14,9 +14,10 @@ from __future__ import annotations
 
 import json
 
+from helpers import seam_parity
 from pyspark.sql import functions as F
 
-from judyst_web_crawler_spark import api, cache
+from judyst_web_crawler_spark import api as A
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
 from judyst_web_crawler_spark.operators import similarity as S
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
@@ -25,13 +26,21 @@ RU = (
     "Настоящим постановлением суд установил что жалоба гражданина "
     "подлежит рассмотрению в установленном законом порядке по делу "
 )
-MISC = (
+OTHER = (
     "Совершенно иной документ про погоду природу и путешествия по горам "
     "рекам и озёрам с фотографиями и картами маршрутов для туристов "
 )
 
 
-# ------------------------------------------------------------ ETL facade
+def _lazy_docs(spark):
+    rows = [
+        (1, RU * 3),
+        (2, RU * 3 + " дополнительное предложение суда."),
+        (3, OTHER * 3),
+        (4, OTHER * 3 + " ещё абзац о снаряжении."),
+        (5, "уникальный короткий текст о кошках и собаках"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def test_fill_data_source_last_record_wins_on_duplicate_keys(spark, tmp_path):
@@ -42,10 +51,10 @@ def test_fill_data_source_last_record_wins_on_duplicate_keys(spark, tmp_path):
     ]
     f = tmp_path / "headers.jsonl"
     f.write_text("\n".join(lines), encoding="utf-8")
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
-    n = api.fill_data_source_from_file(spark, str(f), db)
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
+    n = A.fill_data_source_from_file(spark, str(f), db)
     assert n == 2  # D8 + one D9, not three rows
-    headers = db.get_all_data(api.DataType.DOCUMENT_HEADER)
+    headers = db.get_all_data(A.DataType.DOCUMENT_HEADER)
     assert headers.count() == 2  # the table holds ONE row per key
     got = {r["doc_id"]: r["title"] for r in headers.collect()}
     # last record in the file wins, matching the reference's put_data loop
@@ -56,13 +65,13 @@ def test_update_database_from_source_headers_only_source(spark, tmp_path):
     """The canonical flow: headers arrive from a jsonl fill, the source
     has NO texts table at all, every text comes via fetch_fn — must not
     crash on the absent table (reference tools.py fetches per-uid)."""
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
-    src = api.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
+    src = A.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
     src.put_data_df(
         spark.createDataFrame(
             [(f"D{i}", f"T{i}") for i in range(4)], "doc_id string, title string"
         ),
-        api.DataType.DOCUMENT_HEADER,
+        A.DataType.DOCUMENT_HEADER,
     )
 
     def fetch(missing):
@@ -70,56 +79,23 @@ def test_update_database_from_source_headers_only_source(spark, tmp_path):
             "doc_id", F.concat(F.lit("F-"), F.col("doc_id")).alias("text")
         )
 
-    stats = api.update_database_from_source(db, src, fetch_fn=fetch)
+    stats = A.update_database_from_source(db, src, fetch_fn=fetch)
     assert stats == {"headers": 4, "texts_backfilled": 4}
-    texts = db.get_all_data_dict(api.DataType.DOCUMENT_TEXT)
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
     assert texts == {f"D{i}": f"F-D{i}" for i in range(4)}
 
 
-# ------------------------------------- one laziness policy (cache.cut)
-
-
-def _docs(spark):
-    rows = [
-        (1, RU * 3),
-        (2, RU * 3 + " дополнительное предложение суда."),
-        (3, MISC * 3),
-        (4, MISC * 3 + " ещё абзац о снаряжении."),
-        (5, "уникальный короткий текст о кошках и собаках"),
-    ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def _cache_manager(spark):
-    return spark._jsparkSession.sharedState().cacheManager()
-
-
-def _seam_parity(spark, monkeypatch, op) -> set:
-    """``op()``'s pairs with the real ``cache.cut`` equal its pairs with
-    the cut replaced by the identity (the full, uncut lineage), and the
-    real call plus a collect leaves the Dataset cache empty."""
-    cm = _cache_manager(spark)
-    cm.clearCache()
-    got = {(r["id_a"], r["id_b"]) for r in op().collect()}
-    assert cm.isEmpty()
-    with monkeypatch.context() as m:
-        m.setattr(cache, "cut", lambda df: df)
-        want = {(r["id_a"], r["id_b"]) for r in op().collect()}
-    assert got == want
-    return got
-
-
 def test_minhash_near_dup_lazy_matches_eager_and_leaks_nothing(spark, monkeypatch):
-    docs = _docs(spark)
-    got = _seam_parity(
+    docs = _lazy_docs(spark)
+    got = seam_parity(
         spark, monkeypatch, lambda: D.minhash_near_duplicates(docs, threshold=0.5)
     )
     assert (1, 2) in got and (3, 4) in got
 
 
 def test_minhash_near_dup_lazy_with_bucket_cap(spark, monkeypatch):
-    docs = _docs(spark)
-    got = _seam_parity(
+    docs = _lazy_docs(spark)
+    got = seam_parity(
         spark,
         monkeypatch,
         lambda: D.minhash_near_duplicates(docs, threshold=0.5, bucket_cap=8),
@@ -128,8 +104,8 @@ def test_minhash_near_dup_lazy_with_bucket_cap(spark, monkeypatch):
 
 
 def test_simhash_near_dup_lazy_matches_eager(spark, monkeypatch):
-    docs = _docs(spark)
-    got = _seam_parity(
+    docs = _lazy_docs(spark)
+    got = seam_parity(
         spark, monkeypatch, lambda: D.simhash_near_duplicates(docs, max_hamming=10)
     )
     assert got
@@ -138,7 +114,7 @@ def test_simhash_near_dup_lazy_matches_eager(spark, monkeypatch):
 def test_embedding_near_dup_lazy_matches_eager(spark, monkeypatch):
     rows = [(i, [1.0 if j == i % 4 else 0.01 * i for j in range(8)]) for i in range(10)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = _seam_parity(
+    got = seam_parity(
         spark,
         monkeypatch,
         lambda: S.embedding_near_duplicates(emb, dim=8, threshold=0.9),
@@ -158,7 +134,7 @@ def test_cut_signature_pass_runs_once(spark):
         acc.add(1)
         return t
 
-    docs = _docs(spark)
+    docs = _lazy_docs(spark)
     n = docs.count()
     counted = docs.select("doc_id", F.udf(tag, "string")("text").alias("text"))
     for op, evals in (
@@ -170,22 +146,6 @@ def test_cut_signature_pass_runs_once(spark):
         acc.value = 0
         op().collect()
         assert acc.value == evals
-
-
-def test_ann_topk_jvm_uses_ann_candidates(spark):
-    """ann_topk_jvm ≡ brute-force over ann_candidates — the decomposition
-    the driver's ann_recall query relies on for probe-rule parity."""
-    rows = [(i, [((i * 7 + j * 3) % 11 - 5) / 5.0 for j in range(8)]) for i in range(30)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = [0.5, -0.2, 0.8, 0.1, -0.6, 0.3, 0.0, 0.9]
-    planes = S.arith_hyperplanes(8, 4, 6)
-    cands = S.ann_candidates(emb, q, planes)
-    via_cands = {r["vec_id"] for r in S.brute_force_topk(cands, q, k=5).collect()}
-    direct = {r["vec_id"] for r in S.ann_topk_jvm(emb, q, planes, k=5).collect()}
-    assert via_cands == direct
-
-
-# ------------------------------------------------------- plan inspection
 
 
 def test_bracket_scan_ignores_quoted_brackets():

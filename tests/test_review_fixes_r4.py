@@ -1,41 +1,19 @@
-"""Pins for the round-4 review findings (code-review pass over the r4
-diff): bloom-superset commit ordering, recrawl fan-out in
-near_dups_of_wave, over-eager constructor validation, index commit
-durability, and the URI-directory ingest guard. ``_planted_pages`` is
-shared with tests/test_wave_faults.py."""
+"""Pins for the round-4 review findings: bloom-superset commit ordering,
+recrawl fan-out in near_dups_of_wave, over-eager constructor validation,
+the index commit's reads, and the URI-directory ingest guard."""
 
 from __future__ import annotations
 
 import pytest
+from helpers import index_engine, planted_pages, seeded_engine, seeds_of
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from judyst_web_crawler_spark import api as A
 from judyst_web_crawler_spark import cache
-
-
-def _seeded_engine(spark, tmp_path, **engine_kw):
-    from judyst_web_crawler_spark.datagen import pages_df
-    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    pages = pages_df(spark, n_rows=24, n_hosts=3, seed=21).cache()
-    w = Window.orderBy("url")
-    seeds = (
-        pages.select("url")
-        .withColumn("_rn", F.row_number().over(w))
-        .select(
-            "url",
-            F.lit(2).alias("page_seq"),
-            F.col("_rn").cast("int").alias("intra_page_seq"),
-        )
-    )
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(spark, cat, **engine_kw)
-    eng.bootstrap(seeds)
-    return eng, cat, pages
-
-
-# --------------------------------------- bloom ⊇ seen commit invariant
+from judyst_web_crawler_spark.datagen import pages_df
+from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 
 def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
@@ -48,7 +26,7 @@ def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
     from judyst_web_crawler_spark.operators import frontier as frontier_mod
     from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf
 
-    eng, cat, pages = _seeded_engine(spark, tmp_path)
+    eng, cat, pages = seeded_engine(spark, tmp_path)
 
     order: list[str] = []
     orig_add = frontier_mod.FrontierEngine._bloom_add
@@ -88,17 +66,12 @@ def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
     pages.unpersist()
 
 
-# ------------------------------- near_dups_of_wave under recrawled docs
-
-
 def test_near_dups_of_wave_single_row_per_pair_after_recrawl(spark, tmp_path):
     """The docs table is append-only, so a recrawled url holds MULTIPLE
     rows per key_hash; the verify join must consume one (latest) text per
     id or every pair touching a recrawled id fans out into duplicates —
     some scored against the superseded generation's text."""
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE
-
-    eng, cat, pages = _seeded_engine(
+    eng, cat, pages = seeded_engine(
         spark, tmp_path, fingerprint_k=64,
         minhash_index_path=str(tmp_path / "idx"),
     )
@@ -124,15 +97,9 @@ def test_near_dups_of_wave_single_row_per_pair_after_recrawl(spark, tmp_path):
     pages.unpersist()
 
 
-# --------------------------------------------- constructor validation
-
-
 def test_fingerprint_k_free_without_index(spark, tmp_path):
     """bands only constrain fingerprint_k when an index will be banded:
-    fingerprint-only engines accept any k (pre-r4 behavior)."""
-    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
+    fingerprint-only engines accept any k."""
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     FrontierEngine(spark, cat, fingerprint_k=100)  # 100 % 16 != 0 — fine
     with pytest.raises(ValueError, match="divide"):
@@ -141,136 +108,14 @@ def test_fingerprint_k_free_without_index(spark, tmp_path):
         )
 
 
-# --------------------------------------------- index commit durability
-
-
-def _planted_pages(spark):
-    """24 pages in 12 near-dup pairs: the i-th largest url carries the
-    html of the i-th smallest. Crawled at budget 7 per host, that is 3
-    waves, and the pairs straddle them: waves 1 and 2 pair with docs of
-    earlier waves, so their near-dup queries need those in the index."""
-    from judyst_web_crawler_spark.datagen import pages_df
-
-    pages = pages_df(spark, n_rows=24, n_hosts=3, seed=21)
-    rows = pages.orderBy("url").collect()
-    planted = spark.createDataFrame(
-        [(rows[-(i + 1)]["url"], rows[i]["html"]) for i in range(len(rows) // 2)],
-        ["url", "html2"],
-    )
-    other = [c for c in pages.columns if c not in ("url", "html")]
-    return (
-        pages.alias("p")
-        .join(planted.alias("x"), "url", "left")
-        .select("url", F.coalesce("x.html2", "p.html").alias("html"), *other)
-        .cache()
-    )
-
-
-def _index_engine(spark, root, pages):
-    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    seeds = (
-        pages.select("url")
-        .withColumn("_rn", F.row_number().over(Window.orderBy("url")))
-        .select(
-            "url",
-            F.lit(2).alias("page_seq"),
-            F.col("_rn").cast("int").alias("intra_page_seq"),
-        )
-    )
-    cat = SnapshotCatalog(spark, str(root / "cat"))
-    eng = FrontierEngine(
-        spark, cat, fingerprint_k=64, minhash_index_path=str(root / "idx")
-    )
-    eng.bootstrap(seeds)
-    return eng, cat
-
-
-def _pairs_by_wave(eng, cat, first_wave):
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE
-
-    waves = cat.read(DOCS_TABLE).filter(F.col("wave") >= first_wave).select("wave").distinct()
-    return {
-        r["wave"]: {
-            (p["id_a"], p["id_b"])
-            for p in eng.near_dups_of_wave(r["wave"], threshold=0.5)
-            .select("id_a", "id_b")
-            .collect()
-        }
-        for r in waves.collect()
-    }
-
-
-@pytest.fixture(scope="module")
-def uninterrupted_index_crawl(spark, tmp_path_factory):
-    """Planted pages, crawled to the end at budget 7 without a crash:
-    (pages, near-dup pairs of every wave from wave 1 on)."""
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE
-
-    pages = _planted_pages(spark)
-    eng, cat = _index_engine(spark, tmp_path_factory.mktemp("ref"), pages)
-    eng.run(pages, budget=7)
-    want = _pairs_by_wave(eng, cat, 1)
-    # precondition: a later wave pairs with a wave-1 doc, so its query
-    # needs wave 1 in the index
-    wave1 = {
-        r["key_hash"]
-        for r in cat.read(DOCS_TABLE).filter("wave = 1").select("key_hash").collect()
-    }
-    assert any({a, b} & wave1 for w, ps in want.items() if w > 1 for a, b in ps)
-    yield pages, want
-    pages.unpersist()
-
-
-@pytest.mark.parametrize(
-    "crash_table", ["bands", "sigs"], ids=["before_bands", "between_bands_and_sigs"]
-)
-def test_index_commit_crash_is_reconciled_on_restart(
-    spark, tmp_path, monkeypatch, uninterrupted_index_crawl, crash_table
-):
-    """The crawl publish and the index commit are separate commits; a
-    crash in wave 1 while the index transaction stages ``bands`` or
-    ``sigs`` must not lose the wave from the index. The index log head
-    then names wave 0 while the crawl's names wave 1, so a restarted
-    engine re-commits wave 1: the near-dup pairs of wave 1 and of every
-    later wave then equal those of an uninterrupted crawl."""
-    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    pages, want = uninterrupted_index_crawl
-    eng, cat = _index_engine(spark, tmp_path, pages)
-    idx = str(tmp_path / "idx")
-    eng.run_wave(pages, budget=7)
-    orig_append = SnapshotCatalog.append
-
-    def crashing_append(self, name, df, **kw):
-        if self.root == idx and name == crash_table:
-            raise RuntimeError(f"injected crash before the {name} commit")
-        return orig_append(self, name, df, **kw)
-
-    monkeypatch.setattr(SnapshotCatalog, "append", crashing_append)
-    with pytest.raises(RuntimeError, match="injected"):
-        eng.run_wave(pages, budget=7)
-    monkeypatch.undo()
-    assert SnapshotCatalog(spark, idx).read("sigs").filter("gen = 1").count() == 0
-
-    # restart: reconcile re-commits the published-but-unindexed wave,
-    # then the crawl runs on
-    eng2 = FrontierEngine(spark, cat, fingerprint_k=64, minhash_index_path=idx)
-    eng2.run(pages, budget=7)
-    assert _pairs_by_wave(eng2, cat, 1) == want
-
-
 def test_index_commit_reads_no_index_table(spark, tmp_path, monkeypatch):
     """A wave's index commit is two appends and nothing else: it reads
     neither ``bands`` nor ``sigs`` (no per-wave scan of the growing
     index to derive a commit sequence number; the lag check reads the
     two log heads only)."""
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    pages = _planted_pages(spark)
-    eng, _ = _index_engine(spark, tmp_path, pages)
+    pages = planted_pages(spark)
+    eng, _ = index_engine(spark, tmp_path)
+    eng.bootstrap(seeds_of(pages))
     idx = str(tmp_path / "idx")
     eng.run_wave(pages, budget=7)
     reads: list[str] = []
@@ -291,26 +136,18 @@ def test_index_commit_reads_no_index_table(spark, tmp_path, monkeypatch):
     pages.unpersist()
 
 
-# ----------------------------------------------- ingest guard: URI dirs
-
-
 def test_fill_data_source_rejects_uri_directory(spark, tmp_path):
     """A directory handed as a file: URI must hit the single-file guard —
     os.path.isdir can't see through URIs, Hadoop's FileSystem can."""
-    from judyst_web_crawler_spark import api
-
     d = tmp_path / "headers_dir"
     d.mkdir()
     (d / "part1.jsonl").write_text('{"uid": "1-П/2020", "columns": {}}\n')
-    crawler = api.init(spark, str(tmp_path / "db"))
+    crawler = A.init(spark, str(tmp_path / "db"))
     target = crawler.get_data_source("CatalogSource")
     with pytest.raises(ValueError, match="SINGLE"):
-        api.fill_data_source_from_file(
-            spark, "file://" + str(d), target, api.DataType.DOCUMENT_HEADER
+        A.fill_data_source_from_file(
+            spark, "file://" + str(d), target, A.DataType.DOCUMENT_HEADER
         )
-
-
-# --------------------------- corpus dedupe stays candidate-sized at scale
 
 
 def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path, monkeypatch):
@@ -322,7 +159,7 @@ def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path, monkeypatc
     exchange. (Catalyst additionally pushes the semi join below the
     docs-table union and inserts WindowGroupLimit, a map-side top-1
     pre-prune — both visible in this plan shape.)"""
-    eng, cat, pages = _seeded_engine(
+    eng, cat, pages = seeded_engine(
         spark, tmp_path, fingerprint_k=64,
         minhash_index_path=str(tmp_path / "idx"),
     )
@@ -347,9 +184,6 @@ def test_near_dups_corpus_dedupe_is_candidate_pruned(spark, tmp_path, monkeypatc
     pages.unpersist()
 
 
-# ------------------- AQE exchange-reuse fan-out (single-instance verify)
-
-
 def test_near_dups_recrawl_no_duplicate_pairs(spark, tmp_path):
     """End-to-end pin for the AQE exchange-reuse misplan: planted clone
     pages crawled, then re-crawled (two docs/index generations per id),
@@ -360,10 +194,6 @@ def test_near_dups_recrawl_no_duplicate_pairs(spark, tmp_path):
     mismatched partitioning — the last-wins row_number emitted one winner
     PER PARTITION and pairs touching re-crawled ids duplicated (observed:
     16 rows / 4 dups where 12 unique pairs exist)."""
-    from judyst_web_crawler_spark.datagen import pages_df
-    from judyst_web_crawler_spark.operators.frontier import FrontierEngine
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
     pages = pages_df(spark, n_rows=60, n_hosts=4, seed=7).cache()
     rows = pages.orderBy("url").collect()
     n_clones = 6
@@ -377,21 +207,8 @@ def test_near_dups_recrawl_no_duplicate_pairs(spark, tmp_path):
         .select("url", F.coalesce("x.html2", "p.html").alias("html"), *other)
         .cache()
     )
-    w = Window.orderBy("url")
-    seeds = (
-        pages.select("url")
-        .withColumn("_rn", F.row_number().over(w))
-        .select(
-            "url",
-            F.lit(2).alias("page_seq"),
-            F.col("_rn").cast("int").alias("intra_page_seq"),
-        )
-    )
-    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
-    eng = FrontierEngine(
-        spark, cat, fingerprint_k=64, minhash_index_path=str(tmp_path / "idx")
-    )
-    eng.bootstrap(seeds)
+    eng, _ = index_engine(spark, tmp_path)
+    eng.bootstrap(seeds_of(pages))
     eng.run(pages, budget=100, n_salts=2)
     recrawl = pages.filter(F.col("url").isin(clone_urls)).select("url", "warc_ts")
     eng.enqueue_recrawl(recrawl, now=4_000_000_000, per_host_k=n_clones)

@@ -1,14 +1,15 @@
-"""Round-3 additions: arithmetic-plane ANN twin, one-shot ETL facade,
-crawl-delay-derived budgets enforced end-to-end in a frontier wave."""
+"""Round-3 pins: deterministic arithmetic hyperplanes and the Arrow ANN
+candidate path, the one-shot ETL facade, crawl-delay-derived budgets
+enforced end-to-end in a frontier wave."""
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import Window
+from helpers import seeds_of
 from pyspark.sql import functions as F
 
-from judyst_web_crawler_spark import api
+from judyst_web_crawler_spark import api as A
 from judyst_web_crawler_spark.datagen import pages_df
 from judyst_web_crawler_spark.functions.canonical import url_host
 from judyst_web_crawler_spark.operators import similarity as S
@@ -20,9 +21,6 @@ from judyst_web_crawler_spark.operators.politeness import (
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-# ------------------------------------------------------- arithmetic ANN
 
 
 def test_arith_hyperplanes_deterministic_rationals():
@@ -38,53 +36,6 @@ def test_arith_hyperplanes_deterministic_rationals():
     assert min(flat) < 0 < max(flat)
 
 
-def test_ann_topk_jvm_buckets_match_python(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    planes = S.arith_hyperplanes(64, 2, 4)
-    got = {
-        r["vec_id"]: (r["b0"], r["b1"])
-        for r in emb.select(
-            "vec_id",
-            S.lsh_bucket_col("embedding", planes[0]).alias("b0"),
-            S.lsh_bucket_col("embedding", planes[1]).alias("b1"),
-        ).collect()
-    }
-    for r in emb.collect():
-        vec = [float(x) for x in r["embedding"]]
-        want = []
-        for table in planes:
-            b = 0
-            for j, plane in enumerate(table):
-                acc = 0.0
-                for q, p in zip(vec, plane):
-                    acc += q * p
-                if acc > 0:
-                    b |= 1 << j
-            want.append(b)
-        assert got[r["vec_id"]] == tuple(want)
-
-
-def test_ann_topk_jvm_recall_floor(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    ).cache()
-    q = [float(x) for x in emb.orderBy("vec_id").first()["embedding"]]
-    exact = {r["vec_id"] for r in S.brute_force_topk(emb, q, k=5).collect()}
-    planes = S.arith_hyperplanes(64, 16, 4)
-    approx = {
-        r["vec_id"] for r in S.ann_topk_jvm(emb, q, planes, k=5).collect()
-    }
-    # the query vector IS a table row → its own bucket always probes;
-    # generous tables on 50 vectors must recover most of top-5
-    assert len(exact & approx) >= 3
-    emb.unpersist()
-
-
-# ------------------------------------------------------------ ETL facade
-
-
 def test_fill_data_source_from_file(spark, tmp_path):
     lines = [
         json.dumps({"D1": {"title": "t1", "supertype": "КСРФ"}}, ensure_ascii=False),
@@ -93,35 +44,35 @@ def test_fill_data_source_from_file(spark, tmp_path):
     ]
     f = tmp_path / "headers.jsonl"
     f.write_text("\n".join(lines), encoding="utf-8")
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
-    n = api.fill_data_source_from_file(spark, str(f), db)
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
+    n = A.fill_data_source_from_file(spark, str(f), db)
     # the 'not unique' header is dropped (P8, ksrf.py:194)
     assert n == 2
-    headers = db.get_all_data_dict(api.DataType.DOCUMENT_HEADER)
+    headers = db.get_all_data_dict(A.DataType.DOCUMENT_HEADER)
     assert set(headers) == {"D1", "D3"}
     assert headers["D1"]["title"] == "t1"
 
 
 def test_update_database_from_source_backfills_only_missing(spark, tmp_path):
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
-    src = api.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
+    src = A.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
     ids = [f"D{i}" for i in range(12)]
     src.put_data_df(
         spark.createDataFrame([(i, f"T{i}") for i in ids], "doc_id string, title string"),
-        api.DataType.DOCUMENT_HEADER,
+        A.DataType.DOCUMENT_HEADER,
     )
     # source texts for even ids; db pre-seeded with ids divisible by 3
     src.put_data_df(
         spark.createDataFrame(
             [(f"D{i}", f"S{i}") for i in range(0, 12, 2)], "doc_id string, text string"
         ),
-        api.DataType.DOCUMENT_TEXT,
+        A.DataType.DOCUMENT_TEXT,
     )
     db.put_data_df(
         spark.createDataFrame(
             [(f"D{i}", f"D{i}") for i in range(0, 12, 3)], "doc_id string, text string"
         ),
-        api.DataType.DOCUMENT_TEXT,
+        A.DataType.DOCUMENT_TEXT,
     )
     fetched = []
 
@@ -133,13 +84,13 @@ def test_update_database_from_source_backfills_only_missing(spark, tmp_path):
             "doc_id string, text string",
         )
 
-    stats = api.update_database_from_source(db, src, fetch_fn=fetch)
+    stats = A.update_database_from_source(db, src, fetch_fn=fetch)
     assert stats["headers"] == 12
     # pre-seeded ids (0,3,6,9) are NOT backfilled; 8 remain
     assert stats["texts_backfilled"] == 8
     # the fetch leg saw exactly the odd non-%3 ids (no source text, no db text)
     assert sorted(fetched) == ["D1", "D11", "D5", "D7"]
-    texts = db.get_all_data_dict(api.DataType.DOCUMENT_TEXT)
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
     for i in range(12):
         if i % 3 == 0:
             assert texts[f"D{i}"] == f"D{i}"  # pre-existing wins (never refetched)
@@ -147,9 +98,6 @@ def test_update_database_from_source_backfills_only_missing(spark, tmp_path):
             assert texts[f"D{i}"] == f"S{i}"  # source text
         else:
             assert texts[f"D{i}"] == f"F{i}"  # fetched
-
-
-# --------------------------------------- crawl-delay budgets, end-to-end
 
 
 def test_engine_wave_respects_crawl_delay_budget(spark, tmp_path):
@@ -175,11 +123,7 @@ def test_engine_wave_respects_crawl_delay_budget(spark, tmp_path):
 
     cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
     eng = FrontierEngine(spark, cat, politeness=pol)
-    seeds = pages.select(
-        "url", F.lit(2).alias("page_seq"),
-        F.row_number().over(Window.orderBy("url")).cast("int").alias("intra_page_seq"),
-    )
-    eng.bootstrap(seeds)
+    eng.bootstrap(seeds_of(pages))
     stats = eng.run_wave(pages, budget=4, n_salts=2)
     assert stats["scheduled"] > 0
     per_host = {

@@ -1,5 +1,6 @@
-"""Round-4 pins: hashed exact-substring shuffle, ADVICE.md r3 fixes,
-widened lang-ID, engine↔index wiring."""
+"""Round-4 pins: hashed exact-substring shuffle, ETL refresh and ingest
+guards, cache handles of the hot-bucket cap, type-preserving ANN/LSH
+outputs, widened lang-ID, engine↔index wiring."""
 
 from __future__ import annotations
 
@@ -7,18 +8,19 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from test_plans import SF
 
+from judyst_web_crawler_spark import api as A
 from judyst_web_crawler_spark import cache
+from judyst_web_crawler_spark.functions import textstats as T
+from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
 from judyst_web_crawler_spark.plans import inspect as P
+from judyst_web_crawler_spark.plans.inspect import python_eval_ops
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
-SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
-
-def _docs(spark):
+def _sf_docs(spark):
     return spark.read.parquet(os.path.join(SF, "documents.parquet"))
-
-
-# ------------------------------------------------ duplicate_ngram_spans
 
 
 def test_ngram_span_shuffle_carries_hashes_not_strings(spark, monkeypatch):
@@ -29,9 +31,10 @@ def test_ngram_span_shuffle_carries_hashes_not_strings(spark, monkeypatch):
     broadcast left_semi that drops singleton spans map-side. Above the
     resolve gate's threshold the semi join runs shuffled, with no
     broadcast hint."""
+    from judyst_web_crawler_spark.operators import dedup_fuzzy
     from judyst_web_crawler_spark.operators.dedup_fuzzy import duplicate_ngram_spans
 
-    docs = _docs(spark)
+    docs = _sf_docs(spark)
     hashed_only = duplicate_ngram_spans(docs, n=8, min_docs=2, resolve_spans=False)
     for cols in P.exchange_input_columns(hashed_only):
         assert "span" not in cols, cols
@@ -41,7 +44,7 @@ def test_ngram_span_shuffle_carries_hashes_not_strings(spark, monkeypatch):
 
     # cache.cut as the identity: plan assertions need the full lineage
     # (the real cut truncates `groups` to a scan). The resolve join is
-    # SIZE-GATED: threshold 0 forces the shuffled branch, which must
+    # SIZE-GATED: a threshold of 0 rows forces the shuffled branch, which must
     # carry NO broadcast HINT — a boilerplate-heavy corpus would OOM the
     # driver. autoBroadcastJoinThreshold=-1 isolates the hint from the
     # planner's own small-estimate broadcasts (hints override the
@@ -49,9 +52,8 @@ def test_ngram_span_shuffle_carries_hashes_not_strings(spark, monkeypatch):
     # here); AQE may still upgrade at runtime off the TRUE survivor
     # size, which is the designed escape, not a forced driver collect
     monkeypatch.setattr(cache, "cut", lambda df: df)
-    full = duplicate_ngram_spans(
-        docs, n=8, min_docs=2, broadcast_resolve_threshold=0
-    )
+    monkeypatch.setattr(dedup_fuzzy, "BROADCAST_RESOLVE_ROWS", 0)
+    full = duplicate_ngram_spans(docs, n=8, min_docs=2)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -70,10 +72,10 @@ def test_ngram_span_shuffle_carries_hashes_not_strings(spark, monkeypatch):
 
 def test_ngram_span_hashed_path_matches_string_groupby(spark):
     """Value parity: the hash-keyed two-pass plan returns exactly what the
-    naive string-keyed groupBy returns (the r3 oracled semantics)."""
+    naive string-keyed groupBy returns (the oracled semantics)."""
     from judyst_web_crawler_spark.operators.dedup_fuzzy import duplicate_ngram_spans
 
-    docs = _docs(spark).limit(120)
+    docs = _sf_docs(spark).limit(120)
     got = {
         (r["span"], r["n_docs"], r["n_occurrences"], r["first_doc"])
         for r in duplicate_ngram_spans(docs, n=8, min_docs=2).collect()
@@ -106,7 +108,7 @@ def test_ngram_span_resolve_false_keeps_hash_keys(spark):
     downstream removal joins on hashes, strings never required."""
     from judyst_web_crawler_spark.operators.dedup_fuzzy import duplicate_ngram_spans
 
-    docs = _docs(spark).limit(120)
+    docs = _sf_docs(spark).limit(120)
     full = duplicate_ngram_spans(docs, n=8, min_docs=2).collect()
     hashed = duplicate_ngram_spans(docs, n=8, min_docs=2, resolve_spans=False)
     assert set(hashed.columns) == {"h1", "h2", "n_docs", "n_occurrences", "first_doc"}
@@ -117,41 +119,33 @@ def test_ngram_span_resolve_false_keeps_hash_keys(spark):
     assert counts_full == counts_hash
 
 
-# --------------------------------------------------- ADVICE.md r3 fixes
-
-
 def test_etl_refresh_propagates_updated_source_text(spark, tmp_path):
     """refresh=True = reference semantics (tools.py:58-67): the source's
     text overwrites a stale database copy for EVERY header uid; the
     default refresh=False touches only missing ids (documented scale
     deviation)."""
-    import json as _json  # noqa: F401  (parity with sibling test imports)
-
-    from judyst_web_crawler_spark import api
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
-    src = api.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
+    src = A.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
     src.put_data_df(
         spark.createDataFrame([("D1", "t1"), ("D2", "t2")], "doc_id string, title string"),
-        api.DataType.DOCUMENT_HEADER,
+        A.DataType.DOCUMENT_HEADER,
     )
     src.put_data_df(
         spark.createDataFrame([("D1", "NEW1"), ("D2", "NEW2")], "doc_id string, text string"),
-        api.DataType.DOCUMENT_TEXT,
+        A.DataType.DOCUMENT_TEXT,
     )
     db.put_data_df(
         spark.createDataFrame([("D1", "STALE1")], "doc_id string, text string"),
-        api.DataType.DOCUMENT_TEXT,
+        A.DataType.DOCUMENT_TEXT,
     )
     # default: D1 keeps the stale copy, only D2 backfilled
-    stats = api.update_database_from_source(db, src)
-    texts = db.get_all_data_dict(api.DataType.DOCUMENT_TEXT)
+    stats = A.update_database_from_source(db, src)
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
     assert stats["texts_backfilled"] == 1
     assert texts == {"D1": "STALE1", "D2": "NEW2"}
     # refresh: both re-put, stale copy overwritten (reference behavior)
-    stats = api.update_database_from_source(db, src, refresh=True)
-    texts = db.get_all_data_dict(api.DataType.DOCUMENT_TEXT)
+    stats = A.update_database_from_source(db, src, refresh=True)
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
     assert stats["texts_backfilled"] == 2
     assert texts == {"D1": "NEW1", "D2": "NEW2"}
 
@@ -159,19 +153,14 @@ def test_etl_refresh_propagates_updated_source_text(spark, tmp_path):
 def test_fill_data_source_rejects_multi_file_inputs(spark, tmp_path):
     """Directories and globs break the single-file last-record-wins
     ordering — rejected loudly, not silently mis-ordered."""
-    import pytest as _pytest
-
-    from judyst_web_crawler_spark import api
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
     d = tmp_path / "many"
     d.mkdir()
     (d / "a.jsonl").write_text('{"D1": {"title": "t"}}\n', encoding="utf-8")
-    db = api.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
-    with _pytest.raises(ValueError, match="SINGLE jsonlines file"):
-        api.fill_data_source_from_file(spark, str(d), db)
-    with _pytest.raises(ValueError, match="SINGLE jsonlines file"):
-        api.fill_data_source_from_file(spark, str(d / "*.jsonl"), db)
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
+    with pytest.raises(ValueError, match="SINGLE jsonlines file"):
+        A.fill_data_source_from_file(spark, str(d), db)
+    with pytest.raises(ValueError, match="SINGLE jsonlines file"):
+        A.fill_data_source_from_file(spark, str(d / "*.jsonl"), db)
 
 
 def test_cap_hot_buckets_no_cache_leak_without_handles(spark):
@@ -213,14 +202,9 @@ def test_ann_candidates_arrow_preserves_input_types(spark):
     assert rows and all(r["vec_id"].startswith("v") for r in rows)
 
 
-# ------------------------------------------------- widened trigram lang-ID
-
-
 def test_lang_id_trigram_new_languages_beat_script_heuristic(spark):
     """it/pt/nl/pl are all 'en' (and uk is 'ru') to the script-ratio
     heuristic; the widened trigram profiles identify each."""
-    from judyst_web_crawler_spark.functions import textstats as T
-
     docs = spark.createDataFrame(
         [
             ("it", "Il tribunale di Roma ha deciso che il ricorso della "
@@ -254,19 +238,12 @@ def test_lang_id_trigram_new_languages_beat_script_heuristic(spark):
         assert r["script"] == ("ru" if r["want"] == "uk" else "en")
 
 
-# ------------------------------------ engine ↔ incremental MinHash index
-
-
 def test_engine_incremental_minhash_index_across_waves(spark, tmp_path, monkeypatch):
     """2-wave crawl with minhash_index_path: each wave's signatures are
     committed from the fused extract pass, and near_dups_of_wave finds
     wave-2-vs-wave-1 pairs WITHOUT re-fingerprinting anything — the plan
     carries exactly ONE Python stage (the candidate-keyed verify), zero
     signature passes."""
-    from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
-    from judyst_web_crawler_spark.plans.inspect import python_eval_ops
-    from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
-
     base = (
         "настоящим постановлением суд установил что жалоба гражданина "
         "подлежит рассмотрению в установленном законом порядке " * 3
@@ -325,9 +302,8 @@ def test_engine_incremental_minhash_index_across_waves(spark, tmp_path, monkeypa
 
 def test_lsh_signatures_and_ivf_assign_preserve_input_types(spark):
     """lsh_signatures and ivf_assign follow the same derive-from-input
-    type contract as ann_candidates: string ids (and a float32 vec
-    carried by include_vec) round-trip instead of failing a hardcoded
-    long/array<double> cast."""
+    type contract as ann_candidates: string ids round-trip instead of
+    failing a hardcoded long/array<double> cast."""
     import numpy as np
 
     from judyst_web_crawler_spark.operators.similarity import (
@@ -350,11 +326,10 @@ def test_lsh_signatures_and_ivf_assign_preserve_input_types(spark):
     assert len(got) == 24 and all(r["vec_id"].startswith("doc-") for r in got)
 
     cents = np.array([[0.0, 1.0, -1.0, 0.5], [2.0, 1.0, -1.0, 0.5]])
-    assigned = ivf_assign(df, cents, include_vec=True)
+    assigned = ivf_assign(df, cents)
     assert [f.dataType.simpleString() for f in assigned.schema.fields] == [
         "string",
         "int",
-        "array<float>",
     ]
     rows = assigned.collect()
     assert len(rows) == 12 and {r["cell"] for r in rows} == {0, 1}

@@ -1,6 +1,6 @@
 """Round-5 pins: exact-substring span REMOVAL (Lee et al. 2022 §3, the
 consumer of duplicate_ngram_spans' hash keys), Gopher repetition rules,
-the size-gated resolve join, and the ADVICE.md r4 fixes on
+the size-gated resolve join, and the reserved-name and digest checks of
 attach_pair_sides."""
 
 from __future__ import annotations
@@ -10,18 +10,15 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
+from test_plans import SF
 
 from judyst_web_crawler_spark import cache
+from judyst_web_crawler_spark.operators import dedup_fuzzy as D
 from judyst_web_crawler_spark.plans import inspect as P
 
-SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
-
-def _docs(spark):
+def _sf_docs(spark):
     return spark.read.parquet(os.path.join(SF, "documents.parquet"))
-
-
-# ------------------------------------------------ remove_duplicate_spans
 
 
 def test_remove_spans_excises_shared_regions(spark):
@@ -69,7 +66,7 @@ def test_remove_spans_fully_excised_doc_yields_empty_text(spark):
 
 
 def test_remove_spans_fixture_rescan_is_empty(spark):
-    """The VERDICT r4 done-criterion: removed-then-rescanned corpus
+    """Span removal's done-criterion: the removed-then-rescanned corpus
     yields ZERO spans at the same n/min_docs (one round suffices on the
     natural fixture), and the removal is non-vacuous."""
     from judyst_web_crawler_spark.operators.dedup_fuzzy import (
@@ -77,7 +74,7 @@ def test_remove_spans_fixture_rescan_is_empty(spark):
         remove_duplicate_spans,
     )
 
-    docs = _docs(spark)
+    docs = _sf_docs(spark)
     cleaned = remove_duplicate_spans(docs, n=8, min_docs=2)
     removed_total = cleaned.agg(F.sum("n_tokens_removed")).collect()[0][0]
     assert removed_total and removed_total > 0, "vacuous fixture: nothing removed"
@@ -134,32 +131,10 @@ def test_remove_spans_rounds_do_not_stack_plans(spark):
     instead of re-executing every prior round at each action."""
     from judyst_web_crawler_spark.operators.dedup_fuzzy import remove_duplicate_spans
 
-    docs = _docs(spark)
+    docs = _sf_docs(spark)
     one = remove_duplicate_spans(docs, n=8, min_docs=2, rounds=1)
     three = remove_duplicate_spans(docs, n=8, min_docs=2, rounds=3)
     assert P.shuffle_count(three) == P.shuffle_count(one) > 0
-
-
-def test_remove_spans_accepts_precomputed_hash_keys(spark):
-    """The hash-keyed duplicate_ngram_spans output (resolve_spans=False)
-    is the designed join input — passing it explicitly matches the
-    internally-derived result row for row."""
-    from judyst_web_crawler_spark.operators.dedup_fuzzy import (
-        duplicate_ngram_spans,
-        remove_duplicate_spans,
-    )
-
-    docs = _docs(spark).limit(150)
-    spans = duplicate_ngram_spans(docs, n=8, min_docs=2, resolve_spans=False)
-    got = sorted(
-        (r["doc_id"], r["text"], r["n_tokens"], r["n_tokens_removed"])
-        for r in remove_duplicate_spans(docs, spans=spans, n=8, min_docs=2).collect()
-    )
-    want = sorted(
-        (r["doc_id"], r["text"], r["n_tokens"], r["n_tokens_removed"])
-        for r in remove_duplicate_spans(docs, n=8, min_docs=2).collect()
-    )
-    assert got == want and len(got) == 150
 
 
 def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark, monkeypatch):
@@ -171,7 +146,7 @@ def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark, monk
     corpus² — which is visible as every exchange being keyed narrow."""
     from judyst_web_crawler_spark.operators.dedup_fuzzy import remove_duplicate_spans
 
-    docs = _docs(spark)
+    docs = _sf_docs(spark)
     # cache.cut as the identity: assert on the full, uncut lineage
     monkeypatch.setattr(cache, "cut", lambda df: df)
     out = remove_duplicate_spans(docs, n=8, min_docs=2)
@@ -186,34 +161,23 @@ def test_remove_spans_plan_shuffles_hashes_and_ids_never_full_corpus(spark, monk
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-# --------------------------------------- size-gated span-string resolve
-
-
-def test_ngram_span_resolve_gate_paths_agree(spark):
-    """broadcast_resolve_threshold=0 (forced shuffled resolve) returns
+def test_ngram_span_resolve_gate_paths_agree(spark, monkeypatch):
+    """BROADCAST_RESOLVE_ROWS=0 (forced shuffled resolve) returns
     exactly the default (broadcast-resolved) rows — the gate changes the
     physical strategy, never the result."""
+    from judyst_web_crawler_spark.operators import dedup_fuzzy
     from judyst_web_crawler_spark.operators.dedup_fuzzy import duplicate_ngram_spans
 
-    docs = _docs(spark).limit(150)
+    docs = _sf_docs(spark).limit(150)
     key = lambda r: (r["span"], r["n_docs"], r["n_occurrences"], r["first_doc"])  # noqa: E731
     a = sorted(map(key, duplicate_ngram_spans(docs, n=8, min_docs=2).collect()))
-    b = sorted(
-        map(
-            key,
-            duplicate_ngram_spans(
-                docs, n=8, min_docs=2, broadcast_resolve_threshold=0
-            ).collect(),
-        )
-    )
+    monkeypatch.setattr(dedup_fuzzy, "BROADCAST_RESOLVE_ROWS", 0)
+    b = sorted(map(key, duplicate_ngram_spans(docs, n=8, min_docs=2).collect()))
     assert a == b and len(a) > 0
 
 
-# ------------------------------------------------- Gopher repetition rules
-
-
 def test_gopher_repetition_boilerplate_fails_while_length_gates_pass(spark):
-    """The VERDICT r4 done-criterion: a boilerplate-heavy document (one
+    """The repetition gate's done-criterion: a boilerplate-heavy document (one
     line repeated) FAILS the repetition gate while PASSING every length
     gate of gopher_quality_flags."""
     from judyst_web_crawler_spark.functions.textstats import (
@@ -306,7 +270,7 @@ def test_gopher_repetition_stays_in_codegen(spark):
     single-projection plan."""
     from judyst_web_crawler_spark.functions.textstats import gopher_repetition_flags
 
-    docs = _docs(spark)
+    docs = _sf_docs(spark)
     r = gopher_repetition_flags("text")
     out = docs.select("doc_id", *[c.alias(n) for n, c in r.items()])
     plan = P.simple_plan(out)
@@ -344,9 +308,8 @@ def test_bench_incremental_dedup_is_genuinely_multi_wave(spark, monkeypatch):
 def test_cpu_heavy_queries_fan_out_small_inputs(spark):
     """Per-row-CPU-heavy driver queries must not inherit the input
     file's split count: a one-file documents table would serialize the
-    whole projection on one core (bench forensics: quality_filters
-    51.9 s serial vs ~4 s spread at sf0.1). _fanout widens to
-    defaultParallelism when the scan has fewer splits."""
+    whole projection on one core. _fanout widens to defaultParallelism
+    when the scan has fewer input files."""
     import __spark_entry__ as E
 
     qs = E.queries()
@@ -356,12 +319,7 @@ def test_cpu_heavy_queries_fan_out_small_inputs(spark):
         assert got >= want, (name, got, want)
 
 
-# ------------------------------------------- attach_pair_sides (ADVICE r4)
-
-
 def test_attach_pair_sides_rejects_reserved_out_names(spark):
-    from judyst_web_crawler_spark.operators import dedup_fuzzy as D
-
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     lookup = spark.createDataFrame([(1, "x"), (2, "y")], "doc_id long, text string")
     for bad_a, bad_b in [("id_a", "vb"), ("va", "_side_id"), ("same", "same")]:
@@ -372,12 +330,10 @@ def test_attach_pair_sides_rejects_reserved_out_names(spark):
 
 
 def test_attach_pair_sides_uniformity_rides_digests_not_payload(spark):
-    """ADVICE r4 #1: the conflict check aggregates 8-byte xxhash64
+    """The conflict check aggregates 8-byte xxhash64
     digests, so the raw payload appears in exactly ONE aggregate
     expression (the output max), never a second min/max — pinned on the
     optimized plan's aggregate expressions."""
-    from judyst_web_crawler_spark.operators import dedup_fuzzy as D
-
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     lookup = spark.createDataFrame(
         [(1, "xxxx"), (2, "yyyy")], "doc_id long, text string"
@@ -413,8 +369,6 @@ def test_attach_pair_sides_uniformity_rides_digests_not_payload(spark):
 def test_attach_pair_sides_digest_check_on_array_values(spark):
     """The digest path must keep working for array payloads (embedding
     vectors) — equal arrays pass, conflicting arrays raise."""
-    from judyst_web_crawler_spark.operators import dedup_fuzzy as D
-
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     ok = spark.createDataFrame(
         [(1, [1.0, 2.0]), (1, [1.0, 2.0]), (2, [3.0, 4.0])],

@@ -1,14 +1,15 @@
 """A crash at any boundary of a wave loses nothing and duplicates nothing.
 
 A wave is one publish of the crawl catalog (documents, seen, done and
-metrics together), then one transaction of the band-index catalog. Each
-case raises once at one point of wave 1 of the planted-pairs crawl
-(``test_review_fixes_r4._planted_pages``: 12 near-dup pairs straddling
-the waves), then finishes the crawl either with a fresh engine on the
-same roots (a restart) or on the same engine (an in-process retry). The
-documents ``(url, wave, text)``, done ``(url, retire_status, wave)``,
-seen ``key_hash`` and every wave's near-dup pairs must equal those of an
-uninterrupted crawl.
+metrics together), then one transaction of the band-index catalog
+(``bands``, then ``sigs``). Each case raises once at one point of wave 1
+of the planted-pairs crawl (``helpers.planted_pages``: 12 near-dup pairs
+straddling the waves), then finishes the crawl either with a fresh
+engine on the same roots (a restart) or on the same engine (an
+in-process retry). The documents ``(url, wave, text)``, done ``(url,
+retire_status, wave)``, seen ``key_hash`` and every wave's near-dup
+pairs must equal those of an uninterrupted crawl, which is built once
+per module. A restart also rebuilds the Bloom prefilter from ``seen``.
 """
 
 from __future__ import annotations
@@ -16,9 +17,7 @@ from __future__ import annotations
 import shutil
 
 import pytest
-from pyspark.sql import Window
-from pyspark.sql import functions as F
-from test_review_fixes_r4 import _planted_pages
+from helpers import index_engine, planted_pages, seeds_of
 
 from judyst_web_crawler_spark.operators.frontier import (
     DOCS_TABLE,
@@ -34,11 +33,6 @@ BUDGET = 7
 
 class InjectedCrash(RuntimeError):
     pass
-
-
-def _engine(spark, root):
-    cat = SnapshotCatalog(spark, str(root / "cat"))
-    return FrontierEngine(spark, cat, fingerprint_k=64, minhash_index_path=str(root / "idx")), cat
 
 
 def _state(eng, cat):
@@ -59,20 +53,15 @@ def _state(eng, cat):
 def crawl(spark, tmp_path_factory):
     """(pages, the roots after bootstrap + wave 0, the uninterrupted
     crawl's final state)."""
-    pages = _planted_pages(spark)
-    seeds = (
-        pages.select("url")
-        .withColumn("_rn", F.row_number().over(Window.orderBy("url")))
-        .select("url", F.lit(2).alias("page_seq"), F.col("_rn").cast("int").alias("intra_page_seq"))
-    )
+    pages = planted_pages(spark)
     wave0 = tmp_path_factory.mktemp("wave0")
-    eng, _cat = _engine(spark, wave0)
-    eng.bootstrap(seeds)
+    eng, _cat = index_engine(spark, wave0)
+    eng.bootstrap(seeds_of(pages))
     assert eng.run_wave(pages, budget=BUDGET)["wave"] == 0
     ref = tmp_path_factory.mktemp("ref")
     for d in ("cat", "idx"):
         shutil.copytree(wave0 / d, ref / d)
-    eng, cat = _engine(spark, ref)
+    eng, cat = index_engine(spark, ref)
     eng.run(pages, budget=BUDGET)
     want = _state(eng, cat)
     assert any(want["pairs"][w] for w in want["pairs"] if w > 1)
@@ -88,6 +77,7 @@ POINTS = {
     "metrics": (SnapshotCatalog, "append", lambda c, name, *_: c.root.endswith("cat") and name == METRICS_TABLE, False),
     "publish": (SnapshotCatalog, "_publish", lambda c, *_: c.root.endswith("cat"), False),
     "before_index": (FrontierEngine, "_commit_wave_sigs_to_index", lambda *_: True, True),
+    "bands": (SnapshotCatalog, "append", lambda c, name, *_: c.root.endswith("idx") and name == "bands", True),
     "index": (SnapshotCatalog, "append", lambda c, name, *_: c.root.endswith("idx") and name == "sigs", True),
 }
 
@@ -98,7 +88,7 @@ def test_crash_in_wave_equals_uninterrupted(spark, tmp_path, monkeypatch, crawl,
     pages, wave0, want = crawl
     for d in ("cat", "idx"):
         shutil.copytree(wave0 / d, tmp_path / d)
-    eng, cat = _engine(spark, tmp_path)
+    eng, cat = index_engine(spark, tmp_path)
     owner, method, hits, published = POINTS[point]
     inner = getattr(owner, method)
 
@@ -120,6 +110,6 @@ def test_crash_in_wave_equals_uninterrupted(spark, tmp_path, monkeypatch, crawl,
     assert SnapshotCatalog(spark, str(tmp_path / "idx")).last_wave() == 0
 
     if resume == "restart":
-        eng, cat = _engine(spark, tmp_path)
+        eng, cat = index_engine(spark, tmp_path)
     eng.run(pages, budget=BUDGET)
     assert _state(eng, cat) == want
