@@ -25,10 +25,7 @@ from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
 from judyst_web_crawler_spark.functions import textstats as T
-from judyst_web_crawler_spark.functions.extraction import (
-    extract_text_udf,
-    month_number,
-)
+from judyst_web_crawler_spark.functions.extraction import month_number
 from judyst_web_crawler_spark.operators import dedup_fuzzy as DF
 from judyst_web_crawler_spark.operators import multimodal as MM
 from judyst_web_crawler_spark.operators import similarity as SIM

@@ -254,7 +254,6 @@ def run_queries(spark) -> dict[str, float]:
     qs = entrymod.queries()
     # warm the Arrow python-worker pool once so its multi-second spawn
     # cost isn't attributed to whichever heavy query happens to run first
-    import pandas as _pd
     from pyspark.sql import functions as _F
 
     spark.range(32).repartition(32).mapInPandas(

@@ -33,7 +33,6 @@ Scale notes (deviations from the reference, documented):
 from __future__ import annotations
 
 import json
-import os
 from enum import Enum
 
 from pyspark.sql import DataFrame, SparkSession, Window

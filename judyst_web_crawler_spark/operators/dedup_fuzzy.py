@@ -680,23 +680,20 @@ def attach_pair_sides(
 
     The obvious shape (alias ``df`` twice, join once per side) instantiates
     the same lookup subtree twice in one plan. When that subtree is itself
-    exchange-heavy (the query-index path: semi-join prune + last-wins
-    row_number window), Spark 4.1.2's AQE reuses an exchange across the two
-    copies with mismatched partitioning — the window then sees one id's
-    rows split over partitions and emits a per-partition "winner", and
-    every pair touching the id fans out into duplicate result rows
-    (observed live: recrawled ids in FrontierEngine.near_dups_of_wave;
-    pinned by test_near_dups_recrawl_no_duplicate_pairs). Unpivoting to
-    one row per (pair, side) and regrouping keeps the lookup subtree
-    single-instance — immune to the misplan, and the corpus-sized exchange
-    runs once instead of twice (half the big-side shuffle volume at scale;
-    the regroup shuffles only candidate-sized pair rows).
+    exchange-heavy (the query-index path: a candidate semi-join prune),
+    Spark 4.1.2's AQE can reuse an exchange across the two copies with
+    mismatched partitioning, and every pair touching an id split over
+    partitions fans out into duplicate result rows (pinned by
+    test_near_dups_of_wave_no_duplicate_pairs). Unpivoting to one row per
+    (pair, side) and regrouping keeps the lookup subtree single-instance —
+    immune to the misplan, and the corpus-sized exchange runs once
+    instead of twice (half the big-side shuffle volume at scale; the
+    regroup shuffles only candidate-sized pair rows).
 
     Semantics vs the naive double join — identical when ``df`` has ONE
-    non-null value per id (every internal caller: signatures/corpora are
-    deduped upstream, the query-index path via ``corpus_latest_by``). A
-    pair either of whose ids is absent from ``df`` is dropped (inner
-    semantics). Divergences, pinned in
+    non-null value per id (every internal caller: each id is fingerprinted
+    and committed once). A pair either of whose ids is absent from ``df``
+    is dropped (inner semantics). Divergences, pinned in
     test_attach_pair_sides_matches_naive_double_join /
     test_attach_pair_sides_divergence_cases_pinned: an all-NULL value
     drops the pair (the double join would carry the NULL through);
@@ -704,8 +701,8 @@ def attach_pair_sides(
     double join would fan the pair out); duplicate lookup rows with
     CONFLICTING values — or NULL mixed with non-NULL — RAISE at
     execution instead of silently scoring the pair against an arbitrary
-    generation's value (append-only corpora must be collapsed first,
-    e.g. via ``corpus_latest_by``; the conflict check rides the same
+    copy's value (an id committed twice with different values is a
+    caller bug, never scored silently; the conflict check rides the same
     hash aggregate, no extra shuffle, and compares 8-byte
     ``xxhash64(value)`` digests rather than the raw payload — document
     texts / embedding vectors flow through the aggregation state and
@@ -792,7 +789,7 @@ def attach_pair_sides(
         ),
         F.col("id_a").cast("string"),
         F.col("id_b").cast("string"),
-        F.lit("- collapse df to one row per id first (corpus_latest_by)"),
+        F.lit("- collapse df to one row per id first"),
     )
     # assert_true lives in a filter so the optimizer cannot prune it as
     # an unused projection; it returns NULL (isNull -> keep) on clean
@@ -901,22 +898,14 @@ def minhash_near_duplicates(
 # O(new × matching buckets), never a full-corpus re-scan. ``path`` is the
 # root of a ``SnapshotCatalog`` holding two append-only tables:
 #   bands  (band, bucket, id)     — partitioned by band
-#   sigs   (id, signature, gen)   — for the MinHash-estimate prune
+#   sigs   (id, signature)        — for the MinHash-estimate prune
 # A commit appends both in one transaction of that catalog, whose log
-# entry records ``wave = gen``: the index holds a generation whole or not
-# at all, and its log head names the last one. Exact-verify texts come
+# entry records the commit's ``wave``: the index holds a commit whole or
+# not at all, and its log head names the last one. Exact-verify texts come
 # from a keyed join against the documents table (candidate ids only —
-# column-pruned, not a corpus pass through Python).
-#
-# Re-crawled ids (the recrawl generations path re-fetches stale urls, so
-# an appended wave MAY contain ids already committed): the query keeps the
-# LATEST signature per candidate id — highest ``gen``, the crawl's own
-# last-wins rule; the frontier engine stamps ``gen = wave``, the same key
-# its text side dedupes by. Stale rows in ``bands`` are left in place
-# deliberately: a stale-bucket collision only ADDS a candidate pair, and
-# every candidate is gated by the exact Jaccard verify against CURRENT
-# text, so stale bands cost wasted verify work (bounded by the re-crawl
-# rate), never wrong output.
+# column-pruned, not a corpus pass through Python). Each id is committed
+# once; an id committed twice with different signatures or texts makes
+# the query raise (``attach_pair_sides``' conflict check).
 
 INDEX_BANDS = "bands"
 INDEX_SIGS = "sigs"
@@ -934,38 +923,35 @@ def minhash_index_write(
 ) -> None:
     """Commit a corpus slice to the persisted MinHash index (creating it
     on first use) — one Arrow fingerprint pass, two appends. Each call
-    takes the next ``gen`` (the count of ``sigs`` commits so far), so a
-    later write of a RE-CRAWLED id supersedes (last-wins) its stored
-    signature at query time instead of duplicating it."""
+    records the next wave id (the count of ``sigs`` commits so far)."""
     # both index tables read the signatures: cut so the pass runs once
     sigs = cache.cut(
         minhash_signatures(df, id_col, text_col, k=k, shingle_n=shingle_n, seed=seed)
     )
-    gen = SnapshotCatalog(df.sparkSession, path).current_version(INDEX_SIGS) or 0
-    minhash_index_write_sigs(sigs, path, gen, id_col=id_col, k=k, bands=bands)
+    wave = SnapshotCatalog(df.sparkSession, path).current_version(INDEX_SIGS) or 0
+    minhash_index_write_sigs(sigs, path, wave, id_col=id_col, k=k, bands=bands)
 
 
 def minhash_index_write_sigs(
     sigs: DataFrame,
     path: str,
-    gen: int,
+    wave: int,
     id_col: str = "doc_id",
     k: int = 64,
     bands: int = 16,
 ) -> None:
-    """Commit PRE-COMPUTED ``(id, signature)`` rows to the index under
-    commit generation ``gen`` — the path the frontier engine uses (the
-    wave's fused extract+fingerprint pass already produced the
-    signatures, and ``gen`` is the wave). ``bands`` and ``sigs`` publish
-    together, recording ``wave = gen``. No caching: ``sigs`` is read
-    twice, so pass a cheap plan (a parquet scan or a cut)."""
+    """Commit PRE-COMPUTED ``(id, signature)`` rows to the index — the
+    path the frontier engine uses (the wave's fused extract+fingerprint
+    pass already produced the signatures). ``bands`` and ``sigs`` publish
+    together, recording ``wave``. No caching: ``sigs`` is read twice, so
+    pass a cheap plan (a parquet scan or a cut)."""
     index = SnapshotCatalog(sigs.sparkSession, path)
     sigs = sigs.select(id_col, "signature")
-    with index.transaction(wave=gen):
+    with index.transaction(wave=wave):
         index.append(
             INDEX_BANDS, band_explode(sigs, id_col, bands, k // bands), partition_by=["band"]
         )
-        index.append(INDEX_SIGS, sigs.withColumn("gen", F.lit(gen)))
+        index.append(INDEX_SIGS, sigs)
 
 
 def minhash_query_index(
@@ -981,7 +967,6 @@ def minhash_query_index(
     threshold: float = 0.7,
     margin: float | None = 0.15,
     new_sigs: DataFrame | None = None,
-    corpus_latest_by: str | None = None,
 ) -> DataFrame:
     """Near-dup pairs of NEW documents vs the committed index (plus
     new-vs-new within the batch) — identical semantics to running
@@ -991,25 +976,16 @@ def minhash_query_index(
     pass; the corpus side is a parquet scan of the index.
 
     ``corpus_texts`` supplies (id, text) for the exact Jaccard verify —
-    pass the documents table; the join is candidate-keyed and
-    column-pruned. Returns a lazy plan over the cut new-signature table
-    and, when the prune or the corpus dedupe reads it, the cut candidate
-    pairs (``cache.py``).
+    pass the documents table; it is pruned to candidate ids before the
+    verify joins it, and it must hold one text per id (a conflicting
+    duplicate raises). Returns a lazy plan over the cut new-signature
+    table and the cut candidate pairs (``cache.py``).
 
     ``new_sigs`` (optional ``(id, signature)`` rows) skips the Arrow
     fingerprint pass over ``new_df`` entirely — pass it when the wave's
     signatures already exist (the frontier's fused extract+fingerprint
     stores them on the documents row): the query then runs ZERO
-    signature passes, new or corpus.
-
-    ``corpus_latest_by`` (optional column name, e.g. ``"wave"``): set it
-    when ``corpus_texts`` is APPEND-ONLY and may hold one row per crawl
-    generation of an id — the verify then consumes only the LATEST text
-    per id (max ``corpus_latest_by``, content-hash tiebreak), or pairs
-    touching a re-crawled id fan out into duplicates scored against
-    superseded text. The dedupe runs AFTER pruning to candidate ids —
-    the same shape as the stored-sig path — so the last-wins window
-    shuffles candidate-sized data, never the full corpus texts."""
+    signature passes, new or corpus."""
     spark = new_df.sparkSession
     if new_sigs is None:
         new_sigs = minhash_signatures(
@@ -1039,56 +1015,28 @@ def minhash_query_index(
     )
     within = minhash_lsh_candidates(new_sigs, id_col, bands=bands, rows_per_band=k // bands)
     pairs = cross.unionByName(within).distinct()
-    cand_ids = None
-    if margin is not None or corpus_latest_by is not None:
-        # the candidate-id set is consumed by the stored-sig prune and/or
-        # the corpus-text dedupe (each consumer re-runs the band join
-        # otherwise) — cut the small pair set
-        pairs = cache.cut(pairs)
-        cand_ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
+    # the candidate-id set prunes both verify inputs (each consumer would
+    # re-run the band join otherwise): cut the small pair set
+    pairs = cache.cut(pairs)
+    cand_ids = (
+        pairs.select(F.col("id_a").alias(id_col))
+        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
     if margin is not None:
-        # estimate prune: new ids use the freshly computed signatures
-        # (re-crawled ids may exist in both — new wins), index ids the
-        # stored ones — nothing is re-fingerprinted. Stored sigs are
-        # (1) pruned to candidate ids FIRST, so the last-wins window
-        # shuffles only candidate-sized data, never the corpus-scale
-        # index, then (2) deduped last-wins by commit gen: a re-crawled
-        # id has one sig row per commit, and without the dedupe the
-        # estimate join fans every pair touching it into duplicates.
-        # gen desc = last commit wins; the xxhash64(signature) secondary
-        # key makes a gen TIE (two commits a caller stamped equally) pick
-        # deterministically instead of by partition arrival order
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("gen").desc(), F.xxhash64("signature").desc()
-        )
-        stored = (
-            idx_sigs.join(cand_ids, id_col, "left_semi")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "gen")
-        )
+        # estimate prune: new ids use the freshly computed signatures,
+        # index ids the stored ones — nothing is re-fingerprinted. The
+        # stored sigs are pruned to candidate ids, so the corpus-scale
+        # index never reaches the estimate join's exchange. The wave's
+        # own ids are dropped from them: the engine commits the wave's
+        # signatures to the index before it queries the wave.
+        stored = idx_sigs.join(cand_ids, id_col, "left_semi")
         stored = stored.join(new_sigs.select(id_col), id_col, "left_anti")
         all_sigs = new_sigs.unionByName(stored)
         pairs = estimate_filter(pairs, all_sigs, id_col, threshold=threshold, margin=margin)
-    if corpus_latest_by is not None:
-        # append-only corpus: collapse to the latest text per CANDIDATE
-        # id before the verify joins — candidate-pruned first (map-side
-        # semi join), so the window shuffles candidate-sized rows, and
-        # the full corpus text column never crosses an exchange
-        wlat = Window.partitionBy(id_col).orderBy(
-            # deterministic tiebreak on a latest_by tie
-            F.col(corpus_latest_by).desc(), F.xxhash64(text_col).desc()
-        )
-        corpus_texts = (
-            corpus_texts.join(cand_ids, id_col, "left_semi")
-            .withColumn("_rn", F.row_number().over(wlat))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", corpus_latest_by)
-        )
+    # the verify reads texts of candidate ids only: without the prune,
+    # attach_pair_sides would shuffle the whole corpus text column
+    corpus_texts = corpus_texts.join(cand_ids, id_col, "left_semi")
     return jaccard_verify(pairs, corpus_texts, id_col, text_col, shingle_n, threshold)
 
 

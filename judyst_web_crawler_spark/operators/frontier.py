@@ -122,7 +122,7 @@ class FrontierEngine:
         # minhash_index_path: root of the band-bucket index's own
         # SnapshotCatalog (tables ``bands`` and ``sigs``, see
         # dedup_fuzzy). Each wave commits its (key_hash, signature) rows
-        # under gen = wave in one index transaction after the crawl
+        # in one index transaction recording the wave, after the crawl
         # publish, so near-dup queries against ALL previously crawled
         # documents never re-fingerprint anything (per-wave cost:
         # O(new × matching buckets)).
@@ -177,64 +177,6 @@ class FrontierEngine:
     def enqueue(self, seeds: DataFrame, depth: int) -> None:
         """Append newly-discovered URLs (deeper frontier levels)."""
         self.catalog.append(FRONTIER_TABLE, self._frontier_rows(seeds, depth), partition_by=["depth"])
-
-    def forget(self, urls: DataFrame) -> None:
-        """Un-retire urls: rewrite DONE and SEEN without them so a
-        recrawl generation can re-fetch (Iceberg's rewrite-files shape;
-        here the tables are rewritten whole). The Bloom keeps the stale
-        keys — bits cannot be cleared — so a forgotten key probes
-        maybe-seen and the exact EXISTS against the rewritten SEEN finds
-        nothing, which lets it through: staleness costs prefilter
-        efficiency for the forgotten keys, never correctness."""
-        u = urls.select("url").distinct().localCheckpoint(eager=True)
-        # SEEN dedups by CANONICAL key, not url: a variant url that
-        # shares the key would keep its seen row under a url anti-join
-        # and the recrawl would re-retire as 'dup' — rewrite SEEN on the
-        # forgotten urls' canonical key hashes instead.
-        keys = u.select(
-            C.key_hash(C.canonical_url(F.col("url"))).alias("key_hash")
-        ).distinct()
-        # FRONTIER too: otherwise the url's ORIGINAL row (better
-        # priority band) survives and the wave's url-collapse window
-        # would schedule it with first-crawl priority instead of the
-        # stale rank. One publish: all three rewrites land or none.
-        with self.catalog.transaction():
-            for t, on_df, on_col, pby in (
-                (FRONTIER_TABLE, u, "url", ["depth"]),
-                (DONE_TABLE, u, "url", None),
-                (SEEN_TABLE, keys, "key_hash", None),
-            ):
-                if self.catalog.exists(t):
-                    kept = self.catalog.read(t).join(on_df, on=on_col, how="left_anti")
-                    self.catalog.overwrite(t, kept, partition_by=pby)
-
-    def enqueue_recrawl(
-        self,
-        pages: DataFrame,
-        now,
-        min_age_s: int = 0,
-        per_host_k: int | None = None,
-    ) -> int:
-        """Stale-first recrawl intake (operators/recrawl.py): rank the
-        oldest captures per host, un-retire them, and enqueue them at
-        ``RECRAWL_DEPTH`` — priority sorts depth FIRST, so the whole
-        recrawl generation ranks after every fresh discovery at any real
-        depth (a depth-0 band would instead OUTRANK depth≥1 discoveries
-        and starve first fetches). Returns the number of urls enqueued."""
-        from judyst_web_crawler_spark.operators.recrawl import (
-            RECRAWL_DEPTH,
-            recrawl_seeds,
-        )
-
-        seeds = recrawl_seeds(
-            pages, now, min_age_s=min_age_s, per_host_k=per_host_k
-        ).localCheckpoint(eager=True)
-        n = seeds.count()
-        if n:
-            with self.catalog.transaction():  # forgotten ⇒ enqueued
-                self.forget(seeds)
-                self.enqueue(seeds, depth=RECRAWL_DEPTH)
-        return n
 
     # -- wave --------------------------------------------------------------
 
@@ -431,8 +373,7 @@ class FrontierEngine:
         mark("metrics_commit")  # the publish included
 
         # 9. index += this wave's signatures (already computed in the fused
-        # extract pass; gen = wave gives re-crawled keys last-wins at query
-        # time)
+        # extract pass)
         if self._minhash_index_path is not None:
             self._commit_wave_sigs_to_index(docs_c.select("key_hash", "signature"), wave)
             mark("index_commit")
@@ -485,8 +426,8 @@ class FrontierEngine:
 
     def _commit_wave_sigs_to_index(self, sigs: DataFrame, wave: int) -> None:
         """Commit one wave's pre-computed (key_hash, signature) rows to
-        the band-bucket index under gen = ``wave``: ``bands`` and
-        ``sigs`` in one index transaction that records ``wave``."""
+        the band-bucket index: ``bands`` and ``sigs`` in one index
+        transaction that records ``wave``."""
         minhash_index_write_sigs(
             sigs,
             self._minhash_index_path,
@@ -534,20 +475,9 @@ class FrontierEngine:
         re-fingerprinting any text: the wave's signatures come off its
         own documents rows, the prior corpus off the committed band
         index. Per-wave cost O(new × matching buckets) — the incremental
-        dedup loop a 100 TB crawl runs after every wave.
-
-        The docs table is append-only, so a re-crawled url holds one row
-        PER crawl generation of its key_hash; the sig side of the query
-        is already deduped last-wins by gen, and the TEXT side must match
-        it — or every pair touching a re-crawled id fans out into
-        duplicate rows, some exact-verified against the superseded text.
-        Both dedupes stay candidate/wave-sized at 100 TB: the wave side
-        drops superseded rows via an anti-join against the (key_hash,
-        wave) columns of LATER waves only — a narrow scan, no text
-        shuffled — and the corpus side is collapsed last-wins inside
-        ``minhash_query_index`` AFTER pruning to candidate ids
-        (``corpus_latest_by``), so the full corpus text column never
-        crosses an exchange."""
+        dedup loop a 100 TB crawl runs after every wave. The fate's seen
+        flag and key rank retire each key once, so a key_hash has one
+        documents row and one index row: both sides are read as-is."""
         if self._minhash_index_path is None:
             raise ValueError("engine was built without minhash_index_path")
         from judyst_web_crawler_spark.operators.dedup_fuzzy import minhash_query_index
@@ -555,23 +485,17 @@ class FrontierEngine:
         self._reconcile_minhash_index()
 
         docs = self.catalog.read(DOCS_TABLE)
-        # wave-N rows superseded by a later re-crawl are stale — their
-        # pairs are moot for the dedup loop
-        superseding = docs.filter(F.col("wave") > wave).select("key_hash")
-        wave_docs = docs.filter(F.col("wave") == wave).join(
-            superseding, on="key_hash", how="left_anti"
-        )
+        wave_docs = docs.filter(F.col("wave") == wave)
         return minhash_query_index(
             wave_docs.select("key_hash", "text"),
             self._minhash_index_path,
-            docs.select("key_hash", "text", "wave"),
+            docs.select("key_hash", "text"),
             id_col="key_hash",
             k=self.fingerprint_k,
             bands=self._minhash_bands,
             threshold=threshold,
             margin=margin,
             new_sigs=wave_docs.select("key_hash", "signature"),
-            corpus_latest_by="wave",
         )
 
     def discover_and_enqueue(self, pages: DataFrame, depth: int) -> int:

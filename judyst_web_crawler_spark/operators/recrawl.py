@@ -1,42 +1,26 @@
 """Recrawl scheduling: stale-first re-fetch priority from ``warc_ts``.
 
 The reference crawls once and stops (ksrf.py:107 loops a static listing;
-no revisit logic anywhere — grep-verified). A production frontier over a
-Common-Crawl-style table must RE-crawl: pages change, and the input
-schema carries ``warc_ts`` (the capture timestamp) exactly for this
-(SURVEY §2.8). This module turns capture age into the engine's existing
-priority vocabulary instead of inventing a second scheduler:
+no revisit logic anywhere — grep-verified), and so does the frontier
+engine: a url is fetched at most once per catalog. What a production
+frontier over a Common-Crawl-style table needs before it can revisit is
+a bounded, deterministic answer to "which pages are stalest", and the
+input schema carries ``warc_ts`` (the capture timestamp) exactly for
+this (SURVEY §2.8). :func:`stale_rank` gives that answer — per-host
+oldest-first ranking (one window shuffle on host), optionally age-gated
+and truncated to the top-k stalest per host, so the candidate set is
+bounded before anything consumes it: at 10¹⁰ URLs you never materialize
+"everything crawled more than a day ago" unranked. The driver's
+``recrawl_priority`` query runs it.
 
-- :func:`stale_rank` — per-host oldest-first ranking (one window shuffle
-  on host), optionally age-gated and truncated to the top-k stalest per
-  host, so the candidate set is bounded BEFORE it ever reaches the
-  frontier — at 10¹⁰ URLs you never materialize "everything crawled
-  more than a day ago" unranked.
-- :func:`recrawl_seeds` — maps the ranking onto the frontier's seed
-  schema: priority is ``(page_seq, intra_page_seq)`` ascending
-  (frontier.py:66, the reference's listing order ksrf.py:107-110), so
-  ``page_seq = RECRAWL_PAGE_SEQ`` (a band above fresh discoveries, which
-  bootstrap at 2) and ``intra_page_seq = stale rank`` make politeness
-  budgets drain each host oldest-capture-first while fresh URLs still
-  win ties.
-
-Scale shape: window over (host) — the same salted-skew considerations
-as budget_topk apply downstream; the rank itself is bounded by
-``per_host_k`` so no host can flood the frontier with its backlog.
+Scale shape: window over (host); the rank is bounded by ``per_host_k``
+so no host can flood a consumer with its backlog.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# priority sorts (depth, page_seq, intra_page_seq) ASC with depth
-# FIRST, so the band that actually subordinates recrawls to every fresh
-# discovery is DEPTH: FrontierEngine.enqueue_recrawl enqueues at
-# RECRAWL_DEPTH, far past any real crawl depth. page_seq keeps a band
-# marker too so recrawl rows are self-identifying in the frontier table.
-RECRAWL_DEPTH = 1_000_000
-RECRAWL_PAGE_SEQ = 1_000_000
 
 
 def stale_rank(
@@ -57,7 +41,7 @@ def stale_rank(
     collapse to their LATEST capture before ranking — staleness of a
     page is the age of its newest copy, and without the collapse one
     url's capture history would occupy several ``per_host_k`` slots and
-    enqueue duplicate frontier rows."""
+    rank the same url more than once."""
     from judyst_web_crawler_spark.functions import canonical as C
 
     now_c = F.lit(now) if not hasattr(now, "_jc") else now
@@ -91,23 +75,3 @@ def stale_rank(
         ranked = ranked.filter(F.col("stale_rank") <= per_host_k)
     return ranked
 
-
-def recrawl_seeds(
-    pages: DataFrame,
-    now,
-    host_col: str = "host",
-    ts_col: str = "warc_ts",
-    url_col: str = "url",
-    min_age_s: int = 0,
-    per_host_k: int | None = None,
-) -> DataFrame:
-    """Frontier-schema seeds (url, page_seq, intra_page_seq) that make
-    ``budget_topk`` drain each host oldest-capture-first."""
-    ranked = stale_rank(
-        pages, now, host_col, ts_col, url_col, min_age_s, per_host_k
-    )
-    return ranked.select(
-        "url",
-        F.lit(RECRAWL_PAGE_SEQ).alias("page_seq"),
-        F.col("stale_rank").cast("int").alias("intra_page_seq"),
-    )

@@ -176,3 +176,17 @@ def test_init_bootstrap(spark, tmp_path, source):
     # fresh catalog: put through the API then read back
     ds.put_data("D1", "текст", A.DataType.DOCUMENT_TEXT)
     assert ds.get_data("D1", A.DataType.DOCUMENT_TEXT) == "текст"
+
+
+def test_fill_data_source_rejects_uri_directory(spark, tmp_path):
+    """A directory handed as a file: URI must hit the single-file guard —
+    os.path.isdir can't see through URIs, Hadoop's FileSystem can."""
+    d = tmp_path / "headers_dir"
+    d.mkdir()
+    (d / "part1.jsonl").write_text('{"uid": "1-П/2020", "columns": {}}\n')
+    crawler = A.init(spark, str(tmp_path / "db"))
+    target = crawler.get_data_source("CatalogSource")
+    with pytest.raises(ValueError, match="SINGLE"):
+        A.fill_data_source_from_file(
+            spark, "file://" + str(d), target, A.DataType.DOCUMENT_HEADER
+        )

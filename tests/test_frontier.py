@@ -4,6 +4,7 @@ byte-identical text, per-partition metrics recorded."""
 
 from __future__ import annotations
 
+import pytest
 from helpers import seeds_of
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -82,3 +83,14 @@ def test_fetch_miss_retired_not_documented(spark, tmp_path):
     assert [r["url"] for r in miss] == ["http://court000.example.ru/ru/missing.pdf"]
     assert sum(s.get("fetch_misses", 0) for s in stats) == 1
     pages.unpersist()
+
+
+def test_fingerprint_k_free_without_index(spark, tmp_path):
+    """bands only constrain fingerprint_k when an index will be banded:
+    fingerprint-only engines accept any k."""
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    FrontierEngine(spark, cat, fingerprint_k=100)  # 100 % 16 != 0 — fine
+    with pytest.raises(ValueError, match="divide"):
+        FrontierEngine(
+            spark, cat, fingerprint_k=100, minhash_index_path=str(tmp_path / "i")
+        )

@@ -1,12 +1,15 @@
-"""Reachability: every public top-level function and class of the package
-is named by production code — the package itself, the driver contract
+"""Reachability: every public top-level function and class of the package,
+and every public method of a public package class, is named by production
+code — the package itself, the driver contract
 ``__spark_entry__.py``, ``bench.py``, ``perfbench/`` or ``tools/``. A
 definition only tests call is a liability, not an asset: delete it, or
 list it below with the reason it stays.
 
 The scan is static (AST, no Spark session). A definition counts as
 named when some production module loads it as a name, reads it as an
-attribute or imports it; its own ``def`` line does not count.
+attribute or imports it; its own ``def`` line does not count. A method
+counts as named when production code reads an attribute of that name on
+any object.
 """
 
 from __future__ import annotations
@@ -43,6 +46,14 @@ ALLOWED = {
     ("operators/multimodal.py", "decode_image"): "codec stub: where a real decoder plugs in",
     ("operators/multimodal.py", "decode_audio"): "codec stub: where a real decoder plugs in",
     ("streaming/rollup.py", "sessionize_stream"): "stateful streaming operator; no driver query streams it yet",
+}
+# (module, "Class.method") kept although only tests call it
+ALLOWED_METHODS = {
+    ("operators/frontier.py", "FrontierEngine.crawl"): "multi-depth link walk (the reference's contents-tree walk); kept pending a decision",
+    ("api.py", "DataSource.get_data"): "reference parity: DataSource interface",
+    ("api.py", "CatalogSource.get_data"): "reference parity: typed get",
+    ("api.py", "CatalogSource.get_all_data_dict"): "reference parity: whole-table dict read",
+    ("api.py", "CatalogSource.put_data"): "reference parity: typed put",
 }
 
 
@@ -83,6 +94,25 @@ def _public_defs() -> dict[str, list[str]]:
     return out
 
 
+def _public_methods() -> dict[str, list[str]]:
+    """module path (relative to the package) → "Class.method" for the
+    public methods of its public top-level classes."""
+    out = {}
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        names = [
+            f"{c.name}.{m.name}"
+            for c in tree.body
+            if isinstance(c, ast.ClassDef) and not c.name.startswith("_")
+            for m in c.body
+            if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and not m.name.startswith("_")
+        ]
+        if names:
+            out[path.relative_to(PKG).as_posix()] = names
+    return out
+
+
 def _production_names() -> set[str]:
     used: set[str] = set()
     for path in _production_files():
@@ -102,10 +132,23 @@ def test_every_public_definition_is_reached_by_production_code():
     assert unreached == [], "defined in the package but named only by tests:\n" + "\n".join(unreached)
 
 
+def test_every_public_method_is_reached_by_production_code():
+    used = _production_names()
+    unreached = [
+        f"{mod}:{name}"
+        for mod, names in _public_methods().items()
+        for name in names
+        if name.split(".")[1] not in used and (mod, name) not in ALLOWED_METHODS
+    ]
+    assert unreached == [], "method named only by tests:\n" + "\n".join(unreached)
+
+
 def test_allowlist_names_real_definitions():
     defs = _public_defs()
     assert set(ALLOWED_MODULES) <= set(defs)
     stale = [f"{mod}:{name}" for mod, name in ALLOWED if name not in defs.get(mod, [])]
+    methods = _public_methods()
+    stale += [f"{mod}:{name}" for mod, name in ALLOWED_METHODS if name not in methods.get(mod, [])]
     assert stale == []
 
 

@@ -4,6 +4,7 @@ EXISTS, so only the exact check decides."""
 
 from __future__ import annotations
 
+from helpers import seeded_engine
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
@@ -71,9 +72,10 @@ def test_sharded_bloom_equals_exact(spark):
 
 
 def test_bloom_hit_missing_from_seen_is_unseen(spark):
-    """A key the Bloom holds but ``seen`` lacks (what ``forget()`` leaves
-    behind) is maybe-seen, not seen: the EXISTS is correlated on the
-    candidate's own key, not an uncorrelated "seen is non-empty"."""
+    """A key the Bloom holds but ``seen`` lacks (what a failed publish
+    leaves behind: the wave ORs its keys into the Bloom before it stages
+    the seen rows) is maybe-seen, not seen: the EXISTS is correlated on
+    the candidate's own key, not an uncorrelated "seen is non-empty"."""
     keys = _urls(spark, 0, 3)
     seen = keys.filter(F.col("url").endswith("doc0.pdf"))
     n_bits = bloom_bits_for(3, 12)
@@ -161,4 +163,54 @@ def test_engine_with_sharded_bloom(spark, tmp_path):
     docs = cat.read(DOCS_TABLE)
     assert docs.count() == 40
     assert docs.select("url").distinct().count() == 40
+    pages.unpersist()
+
+
+def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
+    """The engine's Bloom must receive a wave's keys BEFORE the seen
+    table does: bloom-false-negatives bypass the exact check
+    (with_seen_flag flags a row seen only if the Bloom might hold its
+    key), so a failure between the two steps is only safe
+    in the bloom-superset direction. Pin the order, then the invariant
+    itself."""
+    from judyst_web_crawler_spark.operators import frontier as frontier_mod
+    from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf
+
+    eng, cat, pages = seeded_engine(spark, tmp_path)
+
+    order: list[str] = []
+    orig_add = frontier_mod.FrontierEngine._bloom_add
+    orig_append = type(cat).append
+    orig_overwrite = type(cat).overwrite
+
+    def rec_add(self, df):
+        order.append("bloom")
+        return orig_add(self, df)
+
+    def rec_append(self, table, df, **kw):
+        if table == frontier_mod.SEEN_TABLE:
+            order.append("seen")
+        return orig_append(self, table, df, **kw)
+
+    def rec_overwrite(self, table, df, **kw):
+        if table == frontier_mod.SEEN_TABLE:
+            order.append("seen")
+        return orig_overwrite(self, table, df, **kw)
+
+    monkeypatch.setattr(frontier_mod.FrontierEngine, "_bloom_add", rec_add)
+    monkeypatch.setattr(type(cat), "append", rec_append)
+    monkeypatch.setattr(type(cat), "overwrite", rec_overwrite)
+
+    eng.run_wave(pages, budget=8)
+    assert "bloom" in order and "seen" in order
+    assert order.index("bloom") < order.index("seen"), order
+
+    # invariant check: every committed seen key probes positive
+    monkeypatch.undo()
+    seen_df = cat.read(frontier_mod.SEEN_TABLE)
+    assert seen_df.count() > 0
+    mc = bloom_might_contain_udf(
+        eng._bloom_broadcast(), frontier_mod.BLOOM_BITS, frontier_mod.BLOOM_K
+    )
+    assert seen_df.filter(~mc(F.col("key_hash"))).count() == 0
     pages.unpersist()

@@ -205,16 +205,18 @@ def test_fate_plan_shape(spark, crawl, tmp_path):
 def test_drained_memo_never_skips_work(spark, tmp_path, jobs_of):
     """A wave that retired every url it saw lets the next wave at the
     same (frontier, done) versions return empty with no job. An enqueue
-    or a forget moves a version, so the next wave plans again: it finds
-    the enqueued url, and after a forget (which drops the url from the
-    frontier too) it looks and finds nothing until the recrawl enqueue."""
+    or a compaction moves a version, so the next wave plans again: it
+    finds the enqueued url, and after a compaction of ``done`` (a new
+    version, no new work) it looks and finds nothing until a fresh
+    enqueue."""
     schema = "url string, page_seq int, intra_page_seq int"
-    urls = OTHERS[:2] + [f"{B}/ru/new.pdf"]
+    urls = OTHERS[:2] + [f"{B}/ru/new.pdf", f"{B}/ru/new2.pdf"]
     pages = spark.createDataFrame(
         [(u, bytearray(f"<html><body><p>doc {u}</p></body></html>".encode())) for u in urls],
         "url string, html binary",
     )
-    eng = FrontierEngine(spark, SnapshotCatalog(spark, str(tmp_path / "cat")))
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    eng = FrontierEngine(spark, cat)
     eng.bootstrap(spark.createDataFrame([(u, 2, i) for i, u in enumerate(urls[:2])], schema))
     wave = lambda: jobs_of(lambda: eng.run_wave(pages, budget=5))  # noqa: E731
     assert wave()[0]["scheduled"] == 2
@@ -223,10 +225,10 @@ def test_drained_memo_never_skips_work(spark, tmp_path, jobs_of):
     eng.enqueue(spark.createDataFrame([(urls[2], 0, 0)], schema), depth=1)
     assert wave()[0]["scheduled"] == 1
     assert wave()[1] == 0
-    eng.forget(spark.createDataFrame([(urls[0],)], "url string"))
+    cat.compact(DONE_TABLE)
     m, n = wave()
     assert m["frontier_pending"] == 0 and n > 0
-    eng.enqueue(spark.createDataFrame([(urls[0], 0, 0)], schema), depth=2)
+    eng.enqueue(spark.createDataFrame([(urls[3], 0, 0)], schema), depth=2)
     assert wave()[0]["scheduled"] == 1
     assert wave()[1] == 0
 
