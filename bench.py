@@ -11,13 +11,9 @@ Prints ONE JSON line:
   shape, sized by the sf of the input dir, written to parquet first so the
   engine benchmarks real scans;
 - ``--scaling`` additionally re-runs the frontier job at two parallelism
-  levels (default local[2] vs local[8] — the sandbox stand-in for N vs
+  levels (default local[1] vs local[4] — the sandbox stand-in for N vs
   4N executors, see ``run_scaling``) in fresh subprocesses and reports
   throughput at both plus scaling efficiency.
-- the full-bench path idles the box for $SPARK_BENCH_COOLDOWN_S (default
-  600 s) BEFORE timing anything: a host that slows under sustained load
-  would otherwise time its own thermal history, not the engine. Set
-  SPARK_BENCH_COOLDOWN_S=0 for iterative local runs.
 """
 
 from __future__ import annotations
@@ -200,8 +196,16 @@ def bench_incremental_dedup(spark, sf: float) -> dict:
             body_repeats=24,
         )
         mirrors = base.filter(F.pmod(F.xxhash64("url"), F.lit(20)) == 0).withColumn(
-            "url", F.regexp_replace("url", "/ru/Decision/", "/mirror/Decision/")
+            "mirror", F.regexp_replace("url", "/ru/Decision/", "/mirror/Decision/")
         )
+        # the rewrite depends on datagen's url shape: if it stops matching,
+        # the mirrors would be exact duplicate url rows, not mirror urls
+        n_mirrors, n_same = mirrors.agg(
+            F.count(F.lit(1)), F.count_if(F.col("mirror") == F.col("url"))
+        ).first()
+        if not n_mirrors or n_same:
+            raise RuntimeError(f"{n_same} of {n_mirrors} mirror urls equal their base")
+        mirrors = mirrors.withColumn("url", F.col("mirror")).drop("mirror")
         base.unionByName(mirrors).write.parquet(pages_path)
         pages = spark.read.parquet(pages_path)
         seeds = pages.select(
@@ -276,18 +280,18 @@ def run_queries(spark) -> dict[str, float]:
 def run_scaling() -> dict:
     """Same frontier job, same input size, at N vs 4N cores.
 
-    Default pair: local[2] vs local[8]. Pick levels that stay within the
+    Default pair: local[1] vs local[4]. Pick levels that stay within the
     host's PHYSICAL cores: past them a leg crosses into SMT siblings and
     the single-box memory-bandwidth ceiling, which a real 4N-EXECUTOR
     cluster (each node with its own memory bus) does not share. Override
-    with SPARK_SCALING_LEVELS, e.g. "4,1". Fresh subprocess per level so
+    with SPARK_SCALING_LEVELS, e.g. "8,2". Fresh subprocess per level so
     JVM state is clean.
 
     Default ORDER is high leg first: the multi-core leg is the one most
     sensitive to host state, so it runs on the coldest box an invocation
     will ever see — its first leg. The efficiency ratio is
     order-independent (lo/hi by value)."""
-    levels = os.environ.get("SPARK_SCALING_LEVELS", "8,2").split(",")
+    levels = os.environ.get("SPARK_SCALING_LEVELS", "4,1").split(",")
     samples = int(os.environ.get("SPARK_SCALING_SAMPLES", "2"))
     results: dict = {}
 
@@ -321,7 +325,7 @@ def run_scaling() -> dict:
             )
         return json.loads(lines[-1])["frontier"]
 
-    # INTERLEAVED sample rounds (2,8,2,8 — not 2,2,8,8), best-of-N per
+    # INTERLEAVED sample rounds (4,1,4,1 — not 4,4,1,1), best-of-N per
     # level: this host's throughput drifts over tens of minutes
     # (BASELINE.md drift notes), so adjacent legs of DIFFERENT levels see
     # the most similar host state; interference only ever SLOWS a sample,
@@ -340,7 +344,7 @@ def run_scaling() -> dict:
             if prev is None or got["urls_per_sec"] > prev["urls_per_sec"]:
                 results[cpus] = got
     # lo/hi by numeric value, not list position: SPARK_SCALING_LEVELS
-    # also controls EXECUTION order (e.g. "8,2" measures the high leg
+    # also controls EXECUTION order (e.g. "4,1" measures the high leg
     # first, on the coldest box — the high-parallelism leg is the
     # thermally sensitive one; BASELINE.md round-4 table: low legs are
     # ±3% and high legs ±13% across the first-three same-day samples,
@@ -367,20 +371,6 @@ def main() -> None:
         res = run_scaling()
         print(json.dumps({"scaling": res, "sf": _sf_of(SF_DIR)}))
         return
-
-    # Official-artifact methodology (BASELINE.md "Host-state drift"):
-    # this host runs 2-6x slower after sustained load and recovers over
-    # ~10 min of idleness, so a bench launched at the END of a long
-    # session measures the session's thermal history, not the engine —
-    # that is exactly how BENCH_r03's phantom 4.7x "regression" happened
-    # (round-3 adjudication in VERDICT.md). The full-bench path therefore
-    # idles the box FIRST, by default; SPARK_BENCH_COOLDOWN_S=0 skips it
-    # for iterative local runs. The sleep happens before the SparkSession
-    # exists, so it costs wall-clock only — nothing is running.
-    # (--frontier-only legs skip this: run_scaling's own
-    # SPARK_SCALING_COOLDOWN_S governs those, avoiding double cooldowns.)
-    if not frontier_only:
-        time.sleep(int(os.environ.get("SPARK_BENCH_COOLDOWN_S", "600")))
 
     from judyst_web_crawler_spark.session import get_spark
 

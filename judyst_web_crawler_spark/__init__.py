@@ -6,7 +6,7 @@ Re-expresses the capabilities of the reference crawler
 
 - DataFrame-only frontier algebra (canonicalize → seen-filter → dedup →
   politeness top-k → extract → merge), SURVEY.md §2/§7.
-- Exact URL-seen via anti-join behind one incremental broadcast Bloom prefilter.
+- Exact URL-seen: a correlated EXISTS against the committed seen set.
 - Per-host politeness budgets inside (optionally salted) host groups.
 - Byte-identical text extraction (reference ksrf.py:154-159 regex) as
   Arrow pandas UDFs.

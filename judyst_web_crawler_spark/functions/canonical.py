@@ -101,7 +101,7 @@ def url_path(url: Column | str) -> Column:
 
 
 def key_hash(canonical: Column | str) -> Column:
-    """64-bit hash of the canonical key — the seen-set / bloom key.
+    """64-bit hash of the canonical key — the seen-set key.
 
     ``xxhash64`` is deterministic across executors and Spark versions
     with a fixed seed (42 default), so seen-set shards merge safely.

@@ -6,7 +6,7 @@ End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
         ├─ one exchange on key_hash: url rank (a rediscovered url is one
         │  fetch) + key rank (first-wins per canonical key, D1,
         │  ksrf.py:106-142)
-        ├─ Bloom probe + exact seen flag (EXISTS in seen)
+        ├─ exact seen flag (EXISTS in seen)
         ├─ robots flag + per-host budget rank (salted; politeness.py)
         ▼  retire_status: dup | robots_denied | selected | null (waits)
     fetch stand-in: join selected urls to the pages table (html BINARY)
@@ -28,17 +28,14 @@ End-to-end slice per wave (SURVEY §7 minimum slice; flagship entry):
 State and cost:
 - ALL state tables are append-only — no wave ever rewrites a table, so
   per-wave cost is O(pending), not O(frontier).
-- the seen filter has one Bloom prefilter (``BLOOM_BITS``/``BLOOM_K``),
-  held on the driver and maintained INCREMENTALLY: built once from the
-  ``seen`` table at engine construction (resume), then OR-merged with
-  each wave's scheduled keys. A row is seen only if the Bloom might hold
-  its key AND the key exists in ``seen``, so the Bloom never changes
-  which urls are new.
+- a row is seen iff its key EXISTS in the ``seen`` snapshot the wave
+  reads: the engine holds no seen-filter state, so two engines on one
+  catalog agree on every url's fate.
 - every join is broadcast (politeness config) or a key-hash equi-join;
-  only bloom blobs and the wave's scheduled keys reach the driver.
+  only the wave's scheduled keys reach the driver.
 - each selection step runs once: the fate's flags are columns of one
-  linear plan, never filters of a shared subtree, so the Bloom's Python
-  crossing runs once. The documents and done commits both read the fate
+  linear plan, never filters of a shared subtree, and the plan has no
+  Python stage. The documents and done commits both read the fate
   checkpoint (never html), so they agree on the winners of priority
   ties. Counters are ``Observation``s on jobs that run anyway. A wave
   that retires every url it saw records the (frontier, done) snapshot
@@ -49,7 +46,6 @@ from __future__ import annotations
 
 import time
 
-import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -61,12 +57,7 @@ from judyst_web_crawler_spark.operators.politeness import (
     priority_order,
     robots_allowed,
 )
-from judyst_web_crawler_spark.operators.seen import (
-    bloom_bits_for,
-    bloom_or,
-    build_bloom,
-    with_seen_flag,
-)
+from judyst_web_crawler_spark.operators.seen import with_seen_flag
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 FRONTIER_TABLE = "frontier_state"
@@ -74,12 +65,6 @@ SEEN_TABLE = "seen"
 DONE_TABLE = "done_urls"
 DOCS_TABLE = "documents"
 METRICS_TABLE = "metrics"
-
-# Seen-filter Bloom geometry: ≥12 bits per key up to 10^6 keys (2^24
-# bits, ≈0.1% false positives at 10^6 keys; a false positive costs an
-# exact-join probe, never a dropped url), probed k=5 times per key.
-BLOOM_BITS = bloom_bits_for(1_000_000, 12)
-BLOOM_K = 5
 
 # the columns of a pending row that the fate keeps and the documents carry
 CARRY = ["url", "host", "depth", "page_seq", "intra_page_seq", "key_hash"]
@@ -135,28 +120,7 @@ class FrontierEngine:
                 raise ValueError("minhash_bands must divide fingerprint_k")
         self._minhash_index_path = minhash_index_path
         self._minhash_bands = minhash_bands
-        self._bloom_bc = None
         self._drained_at = None  # (frontier, done) versions with nothing pending
-        if catalog.exists(SEEN_TABLE):
-            # resume: rebuild once from the committed seen set
-            blob = build_bloom(catalog.read(SEEN_TABLE), "key_hash", BLOOM_BITS, BLOOM_K)
-            self._bloom = np.frombuffer(blob, dtype=np.uint8).copy()
-        else:
-            self._bloom = np.zeros(BLOOM_BITS // 8, dtype=np.uint8)
-
-    # -- bloom maintenance -------------------------------------------------
-
-    def _bloom_broadcast(self):
-        if self._bloom_bc is None:
-            self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom.tobytes())
-        return self._bloom_bc
-
-    def _bloom_add(self, keys) -> None:
-        """OR newly-scheduled key hashes into the running bloom."""
-        bloom_or(self._bloom, keys, BLOOM_BITS, BLOOM_K)
-        if self._bloom_bc is not None:
-            self._bloom_bc.unpersist()
-            self._bloom_bc = None
 
     # -- bootstrap ---------------------------------------------------------
 
@@ -191,14 +155,12 @@ class FrontierEngine:
         """Every pending row with its ``retire_status`` (``dup``,
         ``robots_denied``, ``selected``, or null: waits for a later wave,
         or repeats a url, ``_ur > 1``), the url rank ``_ur`` and the seen
-        flags ``_maybe``/``_seen``. Lazy; ``run_wave`` checkpoints it."""
+        flag ``_seen``. Lazy; ``run_wave`` checkpoints it."""
         # key_hash is a function of url, so one exchange on key_hash
         # serves both windows. A url's rediscoveries rank after every
         # first row of their key: they neither rank nor retire. Seen is
         # all-or-nothing per key, so ranking before the seen check picks
-        # the winners a rank of the unseen rows would. The probe runs
-        # above the windows: over a multi-dir read a projection is pushed
-        # into every union branch, one Python stage per dir.
+        # the winners a rank of the unseen rows would.
         w_url = Window.partitionBy("key_hash", "url").orderBy(*priority_order())
         w_key = Window.partitionBy("key_hash").orderBy((F.col("_ur") > 1).asc(), *priority_order())
         rows = (
@@ -208,12 +170,9 @@ class FrontierEngine:
             .withColumn("_kr", F.row_number().over(w_key))
         )
         if self.catalog.exists(SEEN_TABLE):
-            rows = with_seen_flag(
-                rows, self.catalog.read(SEEN_TABLE).select("key_hash"), "key_hash",
-                self._bloom_broadcast(), BLOOM_BITS, BLOOM_K,
-            )
+            rows = with_seen_flag(rows, self.catalog.read(SEEN_TABLE).select("key_hash"), "key_hash")
         else:
-            rows = rows.withColumn("_maybe", F.lit(False)).withColumn("_seen", F.lit(False))
+            rows = rows.withColumn("_seen", F.lit(False))
         allowed, host_budget = F.lit(True), F.lit(budget)
         if self.politeness is not None:
             rules = self.politeness.select("host", "robots_allow", "robots_deny", "budget")
@@ -228,7 +187,7 @@ class FrontierEngine:
             .when(~F.col("_allowed"), "robots_denied")
             .when(F.col("_rank") <= F.col("_share"), "selected")
         )
-        return rows.select(*CARRY, "_ur", "_maybe", "_seen", status.alias("retire_status"))
+        return rows.select(*CARRY, "_ur", "_seen", status.alias("retire_status"))
 
     def run_wave(
         self,
@@ -274,7 +233,6 @@ class FrontierEngine:
                         fate_obs,
                         F.count(F.lit(1)).alias("rows"),
                         F.count_if(first).alias("urls"),
-                        F.count_if(first & F.col("_maybe")).alias("seen_maybe"),
                         F.count_if(first & F.col("_seen")).alias("seen_exact_hits"),
                         *(F.count_if(status == s).alias(s) for s in ("dup", "robots_denied", "selected")),
                     )
@@ -285,7 +243,6 @@ class FrontierEngine:
                 fc = fate_obs.get
             n_pending = fc["rows"]
             mark("pending")
-            timings["t_seen_filter"] = 0.0  # part of the fate plan
             if n_pending == 0:
                 # nothing staged: nothing is published, the wave id stays free
                 self._drained_at = versions
@@ -305,8 +262,7 @@ class FrontierEngine:
                 docs = fetched.select(
                     *CARRY, extract_text_udf(F.col("html")).alias("text")
                 ).withColumn("wave", F.lit(wave))
-            # the scheduled keys (bloom increment, ``scheduled``) come back
-            # with the write
+            # the scheduled keys (``scheduled``) come back with the write
             docs_obs = Observation()
             docs = docs.observe(docs_obs, F.collect_list("key_hash").alias("keys"))
             v_docs = self.catalog.append(DOCS_TABLE, docs)
@@ -317,16 +273,11 @@ class FrontierEngine:
             # without re-scanning every prior wave's documents
             docs_c = self.catalog.read_last_append(DOCS_TABLE, v_docs)
 
-            # 6. seen += scheduled keys; bloom |= scheduled keys. The seen and
-            # done tables are SKINNY, and every later wave re-reads them: both
-            # writes make one file per 8 of the documents write's files
-            # (coalesce shrinks the reading stage, no shuffle).
+            # 6. seen += scheduled keys. The seen and done tables are
+            # SKINNY, and every later wave re-reads them: both writes make
+            # one file per 8 of the documents write's files (coalesce
+            # shrinks the reading stage, no shuffle).
             n_files = max(1, len(docs_c.inputFiles()) // 8)
-            # bloom BEFORE the publish (the safe crash direction): a
-            # bloom-NEGATIVE key never counts as seen, so the invariant is
-            # bloom ⊇ seen. A failed publish after the OR leaves extra bits
-            # (prune cost only); seen rows without bits would re-fetch urls.
-            self._bloom_add(scheduled_keys)
             seen_new = docs_c.select("key_hash", "url", F.lit(wave).alias("first_seen_wave"))
             self.catalog.append(SEEN_TABLE, seen_new.coalesce(n_files))
             mark("seen_commit")
@@ -385,7 +336,6 @@ class FrontierEngine:
             "frontier_pending": n_pending,
             **counts,
             "retired": retired,
-            "seen_maybe": fc["seen_maybe"],
             "seen_exact_hits": fc["seen_exact_hits"],
             "elapsed_s": elapsed,
             **timings,

@@ -1,19 +1,17 @@
-"""URL-seen filter: incremental Bloom prefilter + exact EXISTS flag.
+"""URL-seen filter: the exact EXISTS flag, plus the Bloom kernels the
+benchmark's seen-filter replay measures.
 
-Two tiers (SURVEY.md §4 custom-op 1, north_star BASELINE.json:6):
-
-- PREFILTER: a Bloom filter over ``xxhash64(canonical_key)``.
-  ``build_bloom`` turns a DataFrame of keys into the bit array
-  (per-partition numpy bit arrays via ``mapInPandas``, OR-merged on the
-  driver). The frontier engine builds it once from the committed
-  ``seen`` table when it starts and then ORs in each wave's scheduled
-  keys (``bloom_or``), so the bits are never rebuilt from the whole
-  table mid-crawl.
-- TRUTH: a candidate is seen only if the Bloom *might* have seen it AND
-  its key EXISTS in ``seen`` (``with_seen_flag``), so a Bloom false
-  positive can never drop a URL (exact URL-seen parity,
-  BASELINE.json:14). The EXISTS still reads every candidate row: the
-  Bloom decides which rows *can* be seen, not how much the join reads.
+- TRUTH: a candidate is seen iff its key EXISTS in ``seen``
+  (``with_seen_flag``, a correlated subquery that plans as an
+  ``ExistenceJoin``; ``filter_new_exact`` is its anti-join oracle). The
+  frontier engine's fate plan uses this flag alone: the seen decision is
+  a function of the catalog snapshot a wave reads, with no driver-held
+  state (exact URL-seen parity, BASELINE.json:14).
+- BLOOM KERNELS: ``build_bloom`` (per-partition numpy bit arrays via
+  ``mapInPandas``, OR-merged on the driver), ``bloom_or`` and
+  ``bloom_might_contain_udf`` over ``xxhash64(canonical_key)``. No crawl
+  path probes them; ``perfbench/workloads.py::_seen_filter_replay``
+  imports them to replay a Bloom over a finished crawl's seen set.
 
 Hashing: Kirsch-Mitzenmacher double hashing from the single 64-bit key
 (g_i = h_lo + i*h_hi mod n_bits) — k derived probes, no extra hash passes.
@@ -96,18 +94,15 @@ def bloom_might_contain_udf(bc, n_bits: int, k: int):
     return might_contain
 
 
-def with_seen_flag(candidates: DataFrame, seen_df: DataFrame, hash_col: str, bc, n_bits: int, k: int) -> DataFrame:
-    """``candidates`` plus ``_maybe`` (the Bloom probe hit) and ``_seen``
-    (``_maybe`` AND ``hash_col`` EXISTS in ``seen_df``: exact). The EXISTS
-    plans as an ``ExistenceJoin``, so duplicate seen keys cannot fan rows
-    out. The caller keeps the bloom blob ``bc`` a superset of
-    ``seen_df``'s keys: a key the Bloom misses never counts as seen."""
-    mc = bloom_might_contain_udf(bc, n_bits, k)
+def with_seen_flag(candidates: DataFrame, seen_df: DataFrame, hash_col: str) -> DataFrame:
+    """``candidates`` plus ``_seen``: ``hash_col`` EXISTS in ``seen_df``
+    (exact). The EXISTS plans as an ``ExistenceJoin``, so duplicate seen
+    keys cannot fan rows out."""
     # alias the outer frame: an unqualified outer column would resolve
     # inside the subquery and plan an uncorrelated EXISTS
-    tagged = candidates.withColumn("_maybe", mc(F.col(hash_col))).alias("_cand")
+    tagged = candidates.alias("_cand")
     exact = seen_df.where(F.col(hash_col) == F.col(f"_cand.{hash_col}").outer()).exists()
-    return tagged.withColumn("_seen", F.col("_maybe") & exact)
+    return tagged.withColumn("_seen", exact)
 
 
 def filter_new_exact(candidates: DataFrame, seen_df: DataFrame, hash_col: str = "key_hash") -> DataFrame:

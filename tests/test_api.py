@@ -1,7 +1,11 @@
 """Consumer API facade: the reference's WebCrawler/DataSource surface
 (web_crawler.py:22-127, models/DatabaseWrapper.py:9-146) over the
 snapshot catalog — registry semantics, typed get/put, JSON boundary
-encoding of cons_selected_info, last-wins upserts."""
+encoding of cons_selected_info, last-wins upserts. The ETL facade:
+duplicate keys in a jsonlines file collapse last-wins before the merge
+(the reference's per-record put_data loop), and
+``update_database_from_source`` backfills only missing texts, also from
+a headers-only source (no texts table) through ``fetch_fn``."""
 
 from __future__ import annotations
 
@@ -190,3 +194,92 @@ def test_fill_data_source_rejects_uri_directory(spark, tmp_path):
         A.fill_data_source_from_file(
             spark, "file://" + str(d), target, A.DataType.DOCUMENT_HEADER
         )
+
+
+def test_update_database_from_source_backfills_only_missing(spark, tmp_path):
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
+    src = A.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
+    ids = [f"D{i}" for i in range(12)]
+    src.put_data_df(
+        spark.createDataFrame([(i, f"T{i}") for i in ids], "doc_id string, title string"),
+        A.DataType.DOCUMENT_HEADER,
+    )
+    # source texts for even ids; db pre-seeded with ids divisible by 3
+    src.put_data_df(
+        spark.createDataFrame(
+            [(f"D{i}", f"S{i}") for i in range(0, 12, 2)], "doc_id string, text string"
+        ),
+        A.DataType.DOCUMENT_TEXT,
+    )
+    db.put_data_df(
+        spark.createDataFrame(
+            [(f"D{i}", f"D{i}") for i in range(0, 12, 3)], "doc_id string, text string"
+        ),
+        A.DataType.DOCUMENT_TEXT,
+    )
+    fetched = []
+
+    def fetch(missing):
+        rows = missing.collect()
+        fetched.extend(r["doc_id"] for r in rows)
+        return spark.createDataFrame(
+            [(r["doc_id"], "F" + r["doc_id"][1:]) for r in rows],
+            "doc_id string, text string",
+        )
+
+    stats = A.update_database_from_source(db, src, fetch_fn=fetch)
+    assert stats["headers"] == 12
+    # pre-seeded ids (0,3,6,9) are NOT backfilled; 8 remain
+    assert stats["texts_backfilled"] == 8
+    # the fetch leg saw exactly the odd non-%3 ids (no source text, no db text)
+    assert sorted(fetched) == ["D1", "D11", "D5", "D7"]
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
+    for i in range(12):
+        if i % 3 == 0:
+            assert texts[f"D{i}"] == f"D{i}"  # pre-existing wins (never refetched)
+        elif i % 2 == 0:
+            assert texts[f"D{i}"] == f"S{i}"  # source text
+        else:
+            assert texts[f"D{i}"] == f"F{i}"  # fetched
+
+
+def test_fill_data_source_last_record_wins_on_duplicate_keys(spark, tmp_path):
+    lines = [
+        json.dumps({"D9": {"title": "first"}}, ensure_ascii=False),
+        json.dumps({"D8": {"title": "other"}}, ensure_ascii=False),
+        json.dumps({"D9": {"title": "second"}}, ensure_ascii=False),
+    ]
+    f = tmp_path / "headers.jsonl"
+    f.write_text("\n".join(lines), encoding="utf-8")
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
+    n = A.fill_data_source_from_file(spark, str(f), db)
+    assert n == 2  # D8 + one D9, not three rows
+    headers = db.get_all_data(A.DataType.DOCUMENT_HEADER)
+    assert headers.count() == 2  # the table holds ONE row per key
+    got = {r["doc_id"]: r["title"] for r in headers.collect()}
+    # last record in the file wins, matching the reference's put_data loop
+    assert got == {"D8": "other", "D9": "second"}
+
+
+def test_update_database_from_source_headers_only_source(spark, tmp_path):
+    """The canonical flow: headers arrive from a jsonl fill, the source
+    has NO texts table at all, every text comes via fetch_fn — must not
+    crash on the absent table (reference tools.py fetches per-uid)."""
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "db")))
+    src = A.CatalogSource("src", SnapshotCatalog(spark, str(tmp_path / "src")))
+    src.put_data_df(
+        spark.createDataFrame(
+            [(f"D{i}", f"T{i}") for i in range(4)], "doc_id string, title string"
+        ),
+        A.DataType.DOCUMENT_HEADER,
+    )
+
+    def fetch(missing):
+        return missing.select(
+            "doc_id", F.concat(F.lit("F-"), F.col("doc_id")).alias("text")
+        )
+
+    stats = A.update_database_from_source(db, src, fetch_fn=fetch)
+    assert stats == {"headers": 4, "texts_backfilled": 4}
+    texts = db.get_all_data_dict(A.DataType.DOCUMENT_TEXT)
+    assert texts == {f"D{i}": f"F-D{i}" for i in range(4)}

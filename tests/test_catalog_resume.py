@@ -2,7 +2,8 @@
 interrupt after wave w, restart from the committed snapshots → final
 seen-set/output equals the uninterrupted run (law_codes.py:752-776).
 Two writers on one root: the first publish wins, the second gets
-``CommitConflict`` and loses nothing of the winner's."""
+``CommitConflict`` and loses nothing of the winner's; two engines on one
+root decide seen from the snapshot each wave reads."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import sys
 import threading
 
 import pytest
+from helpers import seeded_engine
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -136,6 +138,24 @@ def test_failed_transaction_publishes_nothing(spark, tmp_path):
         assert cat.read("t").count() == 1
     assert sorted(os.listdir(os.path.join(root, "_log"))) == ["v1.json"]
     assert len(_data_dirs(root, "t")) == 1 and cat.last_wave() is None
+
+
+def test_second_engine_sees_keys_another_engine_published(spark, tmp_path):
+    """Engine B is built on a root before engine A's wave 0 publishes
+    the 24 pages; B then gets a ``#frag`` variant of each url (same
+    canonical key). B's wave reads A's ``seen`` rows: it retires all 24
+    as dups and fetches none, so ``documents`` keeps one row per key."""
+    eng_a, cat, pages = seeded_engine(spark, tmp_path)
+    eng_b = FrontierEngine(spark, SnapshotCatalog(spark, cat.root))
+    variants = pages.withColumn("url", F.concat("url", F.lit("#frag")))
+    both = pages.unionByName(variants)
+    assert eng_a.run_wave(both, budget=24)["scheduled"] == 24
+    eng_b.enqueue(_seeds_from_pages(variants), depth=1)
+    m = eng_b.run_wave(both, budget=24)
+    assert (m["frontier_pending"], m["scheduled"], m["dedup_hits"]) == (24, 0, 24)
+    docs = cat.read(DOCS_TABLE)
+    assert docs.count() == docs.select("key_hash").distinct().count() == 24
+    pages.unpersist()
 
 
 def test_concurrent_publishes_lose_no_entry(tmp_path):

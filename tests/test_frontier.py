@@ -21,7 +21,7 @@ from judyst_web_crawler_spark.operators.frontier import (
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 
-def test_frontier_end_to_end_with_bloom(spark, tmp_path):
+def test_frontier_end_to_end_duplicate_seeds(spark, tmp_path):
     pages = pages_df(spark, n_rows=50, n_hosts=3, seed=5).cache()
     hosts = [r["h"] for r in pages.select(C.url_host("url").alias("h")).distinct().collect()]
     pol = politeness_df(spark, hosts, budget=10)

@@ -11,6 +11,7 @@ import re
 
 import numpy as np
 import pytest
+from helpers import seam_parity
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.operators import dedup_fuzzy as D
@@ -38,6 +39,24 @@ _ROWS = [
 
 def _docs(spark):
     return spark.createDataFrame(_ROWS, "doc_id long, text string")
+
+
+RU = (
+    "Настоящим постановлением суд установил что жалоба гражданина "
+    "подлежит рассмотрению в установленном законом порядке по делу "
+)
+
+
+def _lazy_docs(spark):
+    """Two near-dup pairs, (1, 2) and (3, 4), and a singleton."""
+    rows = [
+        (1, RU * 3),
+        (2, RU * 3 + " дополнительное предложение суда."),
+        (3, OTHER * 3),
+        (4, OTHER * 3 + " ещё абзац о снаряжении."),
+        (5, "уникальный короткий текст о кошках и собаках"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def _fingerprints(k: int) -> list[tuple[int, list[int], int]]:
@@ -360,3 +379,55 @@ def test_jvm_signature_guards(spark):
         D.minhash_signatures_jvm(docs, [3, 5], [7])
     with pytest.raises(ValueError, match="1..31"):
         D.simhash_jvm(docs, bits=64)
+
+
+def test_minhash_near_dup_lazy_matches_eager_and_leaks_nothing(spark, monkeypatch):
+    docs = _lazy_docs(spark)
+    got = seam_parity(
+        spark, monkeypatch, lambda: D.minhash_near_duplicates(docs, threshold=0.5)
+    )
+    assert (1, 2) in got and (3, 4) in got
+
+
+def test_minhash_near_dup_lazy_with_bucket_cap(spark, monkeypatch):
+    docs = _lazy_docs(spark)
+    got = seam_parity(
+        spark,
+        monkeypatch,
+        lambda: D.minhash_near_duplicates(docs, threshold=0.5, bucket_cap=8),
+    )
+    assert (1, 2) in got and (3, 4) in got
+
+
+def test_simhash_near_dup_lazy_matches_eager(spark, monkeypatch):
+    docs = _lazy_docs(spark)
+    got = seam_parity(
+        spark, monkeypatch, lambda: D.simhash_near_duplicates(docs, max_hamming=10)
+    )
+    assert got
+
+
+def test_cut_signature_pass_runs_once(spark):
+    """Each cut intermediate is computed once per call: a counting UDF
+    on the input text sees every row twice in the MinHash pipeline (the
+    signature pass + the verify's text lookup; an uncut signature table
+    is recomputed for the band join's sides and the estimate filter)
+    and once in the SimHash pipeline, with or without a bucket cap."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def tag(t):
+        acc.add(1)
+        return t
+
+    docs = _lazy_docs(spark)
+    n = docs.count()
+    counted = docs.select("doc_id", F.udf(tag, "string")("text").alias("text"))
+    for op, evals in (
+        (lambda: D.minhash_near_duplicates(counted, threshold=0.5), 2 * n),
+        (lambda: D.minhash_near_duplicates(counted, threshold=0.5, bucket_cap=8), 2 * n),
+        (lambda: D.simhash_near_duplicates(counted, max_hamming=10), n),
+        (lambda: D.simhash_near_duplicates(counted, max_hamming=10, bucket_cap=8), n),
+    ):
+        acc.value = 0
+        op().collect()
+        assert acc.value == evals

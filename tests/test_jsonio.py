@@ -1,11 +1,14 @@
 """S6/S7/S9/P8 JSON header protocols: single-object file, jsonlines,
-'not unique' filter, link records with derived citations_number."""
+'not unique' filter (also through the ETL facade's file intake), link
+records with derived citations_number."""
 
 from __future__ import annotations
 
 import json
 
+from judyst_web_crawler_spark import api as A
 from judyst_web_crawler_spark.sources import jsonio
+from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 HEADERS = {
     "КСРФ/2483-О/2018": {
@@ -74,3 +77,20 @@ def test_links_jsonlines(spark, tmp_path):
     got = {(r["doc_id_from"], r["doc_id_to"]): r["citations_number"] for r in df.collect()}
     # A2: citations_number always re-derived as len(positions_list)
     assert got == {("A", "B"): 3, ("A", "C"): 0}
+
+
+def test_fill_data_source_from_file(spark, tmp_path):
+    lines = [
+        json.dumps({"D1": {"title": "t1", "supertype": "КСРФ"}}, ensure_ascii=False),
+        json.dumps({"D2": {"title": "t2", "not unique": True}}, ensure_ascii=False),
+        json.dumps({"D3": {"title": "t3"}}, ensure_ascii=False),
+    ]
+    f = tmp_path / "headers.jsonl"
+    f.write_text("\n".join(lines), encoding="utf-8")
+    db = A.CatalogSource("db", SnapshotCatalog(spark, str(tmp_path / "cat")))
+    n = A.fill_data_source_from_file(spark, str(f), db)
+    # the 'not unique' header is dropped (P8, ksrf.py:194)
+    assert n == 2
+    headers = db.get_all_data_dict(A.DataType.DOCUMENT_HEADER)
+    assert set(headers) == {"D1", "D3"}
+    assert headers["D1"]["title"] == "t1"

@@ -1,6 +1,7 @@
 """Physical-plan assertions (SURVEY §4): predicate pushdown and column
 pruning reach the parquet scan, small dims broadcast, pipelines stay in
-whole-stage codegen, and pandas-UDF stages appear exactly once."""
+whole-stage codegen, and pandas-UDF stages appear exactly once. The
+plan-text scan skips brackets and commas inside string literals."""
 
 from __future__ import annotations
 
@@ -135,3 +136,22 @@ def test_dsir_weights_plan_broadcasts_ratio_no_python(spark):
     w = D.importance_weights(feats, ratio)
     assert P.broadcast_hint_count(w) >= 1
     assert P.python_eval_ops(w) == 0
+
+
+def test_bracket_scan_ignores_quoted_brackets():
+    from judyst_web_crawler_spark.plans.inspect import (
+        _bracket_bodies,
+        _split_predicates,
+    )
+
+    plan = (
+        'Scan parquet\n'
+        'PushedFilters: [EqualTo(text, "a[b,c"), In(cell, [0,1,2])]\n'
+        'ReadSchema: struct<cell:int>'
+    )
+    bodies = _bracket_bodies(plan, "PushedFilters")
+    assert bodies == ['EqualTo(text, "a[b,c"), In(cell, [0,1,2])']
+    assert _split_predicates(bodies[0]) == [
+        'EqualTo(text, "a[b,c")',
+        "In(cell, [0,1,2])",
+    ]

@@ -4,17 +4,25 @@ budget=1, single host, n_salts=1 → engine emission order must equal the
 reference's sequential order (page_seq, intra_page_seq) (ksrf.py:107-110).
 budget=k, multi-host → per-host order preserved, budget never exceeded,
 salted budgets never exceed the per-host total, a budget smaller than
-the salt count still reaches every url.
+the salt count still reaches every url. Crawl-delay-derived budgets are
+enforced end-to-end in a frontier wave.
 """
 
 from __future__ import annotations
 
+from helpers import seeds_of
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.datagen import pages_df
+from judyst_web_crawler_spark.functions.canonical import url_host
 from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
-from judyst_web_crawler_spark.operators.politeness import apply_robots, budget_topk
+from judyst_web_crawler_spark.operators.politeness import (
+    apply_robots,
+    budget_from_crawl_delay,
+    budget_topk,
+    parse_robots_txt,
+)
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
 
@@ -141,3 +149,38 @@ def test_salted_budget_smaller_than_salts_never_starves(spark):
             emitted.add(r["url"])
         remaining = [r for r in remaining if r[0] not in {w["url"] for w in wave}]
     assert emitted == {r[0] for r in rows}
+
+
+def test_engine_wave_respects_crawl_delay_budget(spark, tmp_path):
+    pages = pages_df(spark, n_rows=120, n_hosts=4, seed=7).cache()
+    hosts = [r["h"] for r in pages.select(url_host("url").alias("h")).distinct().collect()]
+    # first host: Crawl-delay 5s over a 10s wave → budget floor(10/5)=2;
+    # the rest have no delay line → default budget 4
+    delay_host = sorted(hosts)[0]
+    robots = spark.createDataFrame(
+        [
+            (h, "User-agent: *\nCrawl-delay: 5\nDisallow:\n" if h == delay_host
+             else "User-agent: *\nDisallow:\n")
+            for h in hosts
+        ],
+        "host string, robots_txt string",
+    )
+    pol = budget_from_crawl_delay(
+        parse_robots_txt(robots), wave_seconds=10.0, default_budget=4
+    )
+    budgets = {r["host"]: r["budget"] for r in pol.collect()}
+    assert budgets[delay_host] == 2
+    assert all(b == 4 for h, b in budgets.items() if h != delay_host)
+
+    cat = SnapshotCatalog(spark, str(tmp_path / "cat"))
+    eng = FrontierEngine(spark, cat, politeness=pol)
+    eng.bootstrap(seeds_of(pages))
+    stats = eng.run_wave(pages, budget=4, n_salts=2)
+    assert stats["scheduled"] > 0
+    per_host = {
+        r["host"]: r["n"]
+        for r in cat.read(DOCS_TABLE).groupBy("host").agg(F.count("*").alias("n")).collect()
+    }
+    for h, n in per_host.items():
+        assert n <= budgets[h], (h, n, budgets[h])
+    pages.unpersist()

@@ -1,10 +1,10 @@
-"""The Bloom prefilter must never change results vs the exact anti-join
-(SURVEY §7 build step 4): the seen flag is the Bloom probe AND an exact
-EXISTS, so only the exact check decides."""
+"""The seen flag is the exact correlated EXISTS and agrees with the
+anti-join oracle (SURVEY §7 build step 4); the Bloom kernels the
+benchmark's seen-filter replay runs have no false negatives, and their
+shards and driver-side OR merge to one build."""
 
 from __future__ import annotations
 
-from helpers import seeded_engine
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.functions import canonical as C
@@ -28,21 +28,20 @@ def _probe(spark, keys_df, n_bits, k=5):
     return bc, bloom_might_contain_udf(bc, n_bits, k)
 
 
-def _unseen(candidates, seen, bc, n_bits):
-    return with_seen_flag(candidates, seen, "key_hash", bc, n_bits, 5).filter(~F.col("_seen"))
-
-
 def test_bloom_equals_exact(spark):
+    """The seen flag equals the anti-join, and a Bloom over ``seen`` at
+    12 bits/item or at 1024 bits for 5000 keys (nearly every candidate
+    maybe-seen) holds every flagged key: a replay never reports fewer
+    maybe-seen rows than exact hits."""
     seen = _urls(spark, 0, 5000)
     candidates = _urls(spark, 2500, 5000)  # half overlap
     want = {r["url"] for r in filter_new_exact(candidates, seen, "key_hash").collect()}
     assert len(want) == 2500
-    # 12 bits/item (few false positives) and 1024 bits for 5000 keys
-    # (nearly every candidate maybe-seen, so the exact branch decides)
+    flagged = with_seen_flag(candidates, seen, "key_hash")
+    assert {r["url"] for r in flagged.filter(~F.col("_seen")).collect()} == want
     for n_bits in (bloom_bits_for(5000, 12), 1024):
-        bc, _ = _probe(spark, seen, n_bits)
-        got = _unseen(candidates, seen, bc, n_bits)
-        assert {r["url"] for r in got.collect()} == want, n_bits
+        _, mc = _probe(spark, seen, n_bits)
+        assert flagged.filter(F.col("_seen") & ~mc(F.col("key_hash"))).count() == 0, n_bits
 
 
 def test_bloom_prefilter_prunes(spark):
@@ -59,48 +58,47 @@ def test_bloom_prefilter_prunes(spark):
 def test_sharded_bloom_equals_exact(spark):
     """build_bloom's per-partition shards OR-merge to the same bits
     however the keys are partitioned, and raw xxhash64 keys (negative
-    int64s included) filter exactly like the anti-join."""
+    int64s included) flag exactly like the anti-join."""
     seen = spark.range(500).select((F.xxhash64("id")).alias("key_hash"))
     cands = spark.range(300, 900).select((F.xxhash64("id")).alias("key_hash"))
     n_bits = bloom_bits_for(500, 12)
     blob = build_bloom(seen.repartition(8), "key_hash", n_bits, 5)
     assert blob == build_bloom(seen.coalesce(1), "key_hash", n_bits, 5)
-    bc = spark.sparkContext.broadcast(blob)
-    got = {r["key_hash"] for r in _unseen(cands, seen, bc, n_bits).collect()}
+    got = {r["key_hash"] for r in with_seen_flag(cands, seen, "key_hash").filter(~F.col("_seen")).collect()}
     want = {r["key_hash"] for r in filter_new_exact(cands, seen).collect()}
     assert got == want
 
 
 def test_bloom_hit_missing_from_seen_is_unseen(spark):
-    """A key the Bloom holds but ``seen`` lacks (what a failed publish
-    leaves behind: the wave ORs its keys into the Bloom before it stages
-    the seen rows) is maybe-seen, not seen: the EXISTS is correlated on
-    the candidate's own key, not an uncorrelated "seen is non-empty"."""
+    """A key a Bloom holds but ``seen`` lacks is unseen: the flag reads
+    ``seen`` alone, and its EXISTS is correlated on the candidate's own
+    key, not an uncorrelated "seen is non-empty"."""
     keys = _urls(spark, 0, 3)
     seen = keys.filter(F.col("url").endswith("doc0.pdf"))
-    n_bits = bloom_bits_for(3, 12)
-    bc, _ = _probe(spark, keys, n_bits)  # the Bloom still holds all three
-    got = {r["url"]: (r["_maybe"], r["_seen"]) for r in with_seen_flag(keys, seen, "key_hash", bc, n_bits, 5).collect()}
+    _, mc = _probe(spark, keys, bloom_bits_for(3, 12))  # holds all three
+    assert keys.filter(~mc(F.col("key_hash"))).count() == 0
+    got = {r["url"]: r["_seen"] for r in with_seen_flag(keys, seen, "key_hash").collect()}
     assert got == {
-        "http://h.ru/doc0.pdf": (True, True),
-        "http://h.ru/doc1.pdf": (True, False),
-        "http://h.ru/doc2.pdf": (True, False),
+        "http://h.ru/doc0.pdf": True,
+        "http://h.ru/doc1.pdf": False,
+        "http://h.ru/doc2.pdf": False,
     }
+    want = {r["url"] for r in filter_new_exact(keys, seen).collect()}
+    assert {u for u, s in got.items() if not s} == want
 
 
 def test_duplicate_seen_keys_keep_one_row_per_candidate(spark):
     keys = _urls(spark, 0, 4)
     seen = keys.unionByName(keys).unionByName(keys.limit(2))
-    n_bits = bloom_bits_for(4, 12)
-    bc, _ = _probe(spark, keys, n_bits)
-    flagged = with_seen_flag(keys, seen, "key_hash", bc, n_bits, 5)
+    flagged = with_seen_flag(keys, seen, "key_hash")
     assert sorted(r["url"] for r in flagged.collect()) == sorted(r["url"] for r in keys.collect())
     assert flagged.filter(F.col("_seen")).count() == 4
+    assert filter_new_exact(keys, seen).count() == 0
 
 
 def test_bloom_or_equals_build_bloom(spark):
-    """The engine ORs a wave's scheduled keys into its bits on the driver
-    (``bloom_or``); that equals ``build_bloom`` over the same keys."""
+    """ORing keys into bits on the driver (``bloom_or``) equals
+    ``build_bloom`` over the same keys."""
     import numpy as np
 
     from judyst_web_crawler_spark.operators.seen import bloom_or
@@ -113,9 +111,8 @@ def test_bloom_or_equals_build_bloom(spark):
 
 
 def test_sharded_bloom_incremental_add(spark):
-    """The engine's per-wave update: the OR of two incremental
-    build_bloom blobs reports every key of both batches, and equals one
-    build over their union."""
+    """The OR of two build_bloom blobs reports every key of both
+    batches, and equals one build over their union."""
     import numpy as np
 
     batch1 = spark.range(200).select(F.xxhash64("id").alias("key_hash"))
@@ -130,19 +127,9 @@ def test_sharded_bloom_incremental_add(spark):
     assert all_seen.filter(~mc(F.col("key_hash"))).count() == 0
 
 
-def test_engine_bloom_geometry_matches_benchmark_replay():
-    """perfbench's seen-filter replay measures a bloom of
-    bloom_bits_for(1_000_000, 12) bits probed k=5 times; the engine's
-    filter must be that same filter or the replay's seen.* metrics
-    describe something the crawl does not run."""
-    from judyst_web_crawler_spark.operators.frontier import BLOOM_BITS, BLOOM_K
-
-    assert (BLOOM_BITS, BLOOM_K) == (bloom_bits_for(1_000_000, 12), 5)
-
-
-def test_engine_with_sharded_bloom(spark, tmp_path):
-    """A multi-wave crawl through the engine's Bloom (built from
-    build_bloom's per-partition shards) fetches every url once."""
+def test_engine_multi_wave_repeated_seeds_fetch_once(spark, tmp_path):
+    """A multi-wave crawl whose seeds repeat urls fetches every url
+    once."""
     from judyst_web_crawler_spark.datagen import pages_df
     from judyst_web_crawler_spark.operators.frontier import DOCS_TABLE, FrontierEngine
     from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
@@ -163,54 +150,4 @@ def test_engine_with_sharded_bloom(spark, tmp_path):
     docs = cat.read(DOCS_TABLE)
     assert docs.count() == 40
     assert docs.select("url").distinct().count() == 40
-    pages.unpersist()
-
-
-def test_bloom_commits_before_seen_rows(spark, tmp_path, monkeypatch):
-    """The engine's Bloom must receive a wave's keys BEFORE the seen
-    table does: bloom-false-negatives bypass the exact check
-    (with_seen_flag flags a row seen only if the Bloom might hold its
-    key), so a failure between the two steps is only safe
-    in the bloom-superset direction. Pin the order, then the invariant
-    itself."""
-    from judyst_web_crawler_spark.operators import frontier as frontier_mod
-    from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf
-
-    eng, cat, pages = seeded_engine(spark, tmp_path)
-
-    order: list[str] = []
-    orig_add = frontier_mod.FrontierEngine._bloom_add
-    orig_append = type(cat).append
-    orig_overwrite = type(cat).overwrite
-
-    def rec_add(self, df):
-        order.append("bloom")
-        return orig_add(self, df)
-
-    def rec_append(self, table, df, **kw):
-        if table == frontier_mod.SEEN_TABLE:
-            order.append("seen")
-        return orig_append(self, table, df, **kw)
-
-    def rec_overwrite(self, table, df, **kw):
-        if table == frontier_mod.SEEN_TABLE:
-            order.append("seen")
-        return orig_overwrite(self, table, df, **kw)
-
-    monkeypatch.setattr(frontier_mod.FrontierEngine, "_bloom_add", rec_add)
-    monkeypatch.setattr(type(cat), "append", rec_append)
-    monkeypatch.setattr(type(cat), "overwrite", rec_overwrite)
-
-    eng.run_wave(pages, budget=8)
-    assert "bloom" in order and "seen" in order
-    assert order.index("bloom") < order.index("seen"), order
-
-    # invariant check: every committed seen key probes positive
-    monkeypatch.undo()
-    seen_df = cat.read(frontier_mod.SEEN_TABLE)
-    assert seen_df.count() > 0
-    mc = bloom_might_contain_udf(
-        eng._bloom_broadcast(), frontier_mod.BLOOM_BITS, frontier_mod.BLOOM_K
-    )
-    assert seen_df.filter(~mc(F.col("key_hash"))).count() == 0
     pages.unpersist()

@@ -1,8 +1,12 @@
-"""Similarity search over the driver embeddings table: ANN vs exact."""
+"""Similarity search over the driver embeddings table: ANN vs exact,
+deterministic arithmetic hyperplanes, the Arrow ANN candidate path
+against the Column fold, and the ``cache.cut`` seam of the embedding
+near-dup operator."""
 
 from __future__ import annotations
 
 import numpy as np
+from helpers import seam_parity
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.operators import similarity as S
@@ -116,3 +120,44 @@ def test_ann_candidates_recall_floor(spark):
     # generous tables on 50 vectors must recover most of top-5
     assert len(exact & approx) >= 3
     emb.unpersist()
+
+
+def test_arith_hyperplanes_deterministic_rationals():
+    p1 = S.arith_hyperplanes(8, 3, 4)
+    p2 = S.arith_hyperplanes(8, 3, 4)
+    assert p1 == p2
+    flat = [x for t in p1 for row in t for x in row]
+    assert all(-1.0 <= x <= 1.0 for x in flat)
+    # exact rationals k/1001 — reconstructible, so a SQL oracle can embed
+    # the repr'd doubles and get bit-identical values
+    assert all(abs(x * 1001.0 - round(x * 1001.0)) < 1e-9 for x in flat)
+    # not degenerate: both signs present
+    assert min(flat) < 0 < max(flat)
+
+
+def test_ann_candidates_arrow_matches_jvm(spark):
+    """The Arrow bucket pass must select the IDENTICAL candidate set as
+    the Column-fold path — same sequential mul/add order, bit-identical
+    sign decisions (the parity ann_recall's oracle relies on)."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
+    q = [((i * 37) % 101 - 50) / 50.0 for i in range(64)]
+    planes = S.arith_hyperplanes(64, 16, 5)
+    arrow = {r["vec_id"] for r in S.ann_candidates(emb, q, planes).collect()}
+    jvm = {
+        r["vec_id"]
+        for r in S.ann_candidates(emb, q, planes, engine="jvm").collect()
+    }
+    assert arrow == jvm and arrow  # identical and non-vacuous
+
+
+def test_embedding_near_dup_lazy_matches_eager(spark, monkeypatch):
+    rows = [(i, [1.0 if j == i % 4 else 0.01 * i for j in range(8)]) for i in range(10)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = seam_parity(
+        spark,
+        monkeypatch,
+        lambda: S.embedding_near_duplicates(emb, dim=8, threshold=0.9),
+    )
+    assert got  # non-vacuous: planted same-axis near-dups

@@ -9,7 +9,7 @@ engine on the same roots (a restart) or on the same engine (an
 in-process retry). The documents ``(url, wave, text)``, done ``(url,
 retire_status, wave)``, seen ``key_hash`` and every wave's near-dup
 pairs must equal those of an uninterrupted crawl, which is built once
-per module. A restart also rebuilds the Bloom prefilter from ``seen``.
+per module.
 """
 
 from __future__ import annotations

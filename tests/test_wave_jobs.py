@@ -8,17 +8,18 @@ One small politeness-bound crawl (module-scoped) serves most tests:
   inferring catalog read or a counter taken by an extra job shows up as
   a higher count;
 - the steady wave is run a second time by a fresh engine on a copy of
-  the catalog taken before it (a restart): it launches no more jobs than
-  the same-engine wave, so a restart costs no repair, reconcile or
-  wave-id scan;
+  the catalog taken before it (a restart): constructing the engine
+  launches no job, and its wave no more jobs than the same-engine wave,
+  so a restart costs no repair, reconcile, wave-id scan or seen-filter
+  rebuild;
 - the fixture plants priority ties the documents and done commits must
   resolve the same way: two url variants of one canonical key with equal
   ``(depth, page_seq, intra_page_seq)``, and a host whose budget cuts
   through six equal-priority urls;
-- the wave's seen-filter counters are checked against a Bloom and a
-  membership test rebuilt from outside, and the fate plan's shape (one
-  Python stage, an ``ExistenceJoin``, one exchange per window key) is
-  pinned on the fixture's catalog.
+- the wave's exact seen hits are checked against a membership test
+  rebuilt from outside, and the fate plan's shape (no Python stage, an
+  ``ExistenceJoin``, one exchange per window key) is pinned on the
+  fixture's catalog.
 """
 
 from __future__ import annotations
@@ -29,15 +30,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from judyst_web_crawler_spark.operators.frontier import (
-    BLOOM_BITS,
-    BLOOM_K,
     DOCS_TABLE,
     DONE_TABLE,
     FRONTIER_TABLE,
     SEEN_TABLE,
     FrontierEngine,
 )
-from judyst_web_crawler_spark.operators.seen import bloom_might_contain_udf, build_bloom
 from judyst_web_crawler_spark.plans.inspect import python_eval_ops, simple_plan
 from judyst_web_crawler_spark.sources.catalog import SnapshotCatalog
 
@@ -46,6 +44,7 @@ FIRST_WAVE_JOBS = 12
 STEADY_WAVE_JOBS = 12
 EMPTY_WAVE_JOBS = 0
 RESTART_WAVE_JOBS = 12  # the steady wave, run by a fresh engine
+CONSTRUCTION_JOBS = 0  # FrontierEngine(...) on a catalog that has ``seen``
 
 A = "http://a.example.ru"
 B = "http://b.example.ru"
@@ -89,9 +88,11 @@ def crawl(spark, tmp_path_factory, jobs_of):
         m, n = jobs_of(lambda: eng.run_wave(pages, budget=1))
         stats.append(m)
         jobs.append(n)
-    # the restart: construction (the Bloom rebuild) outside the job group
-    fresh = FrontierEngine(spark, SnapshotCatalog(spark, str(base / "restart")), politeness=politeness)
-    restart = jobs_of(lambda: fresh.run_wave(pages, budget=1))
+    # the restart: construction and the wave, each counted
+    fresh, n_new = jobs_of(
+        lambda: FrontierEngine(spark, SnapshotCatalog(spark, str(base / "restart")), politeness=politeness)
+    )
+    restart = (*jobs_of(lambda: fresh.run_wave(pages, budget=1)), n_new)
     yield cat, stats, jobs, restart
     pages.unpersist()
 
@@ -123,10 +124,17 @@ def test_empty_final_wave_job_budget(crawl):
 
 
 def test_restart_wave_job_budget(crawl):
-    _cat, stats, jobs, (m, n) = crawl
+    _cat, stats, jobs, (m, n, _n_new) = crawl
     assert n == RESTART_WAVE_JOBS <= STEADY_WAVE_JOBS == jobs[1]
     keys = ("wave", "frontier_pending", "scheduled", "dedup_hits", "robots_denied", "fetch_misses", "retired")
     assert {k: m[k] for k in keys} == {k: stats[1][k] for k in keys}
+
+
+def test_engine_construction_launches_no_job(crawl):
+    """The restart engine is built on a catalog that has ``seen``: it
+    holds no seen-filter state, so building it reads nothing."""
+    _cat, _stats, _jobs, (_m, _n, n_new) = crawl
+    assert n_new == CONSTRUCTION_JOBS
 
 
 def test_every_url_retires_once_under_ties(crawl):
@@ -158,10 +166,10 @@ def test_one_scheduled_url_per_key_and_documents_match(crawl):
     assert len([u for u in docs if u in VARIANTS]) == 1
 
 
-def test_seen_counters_match_outside_replay(spark, crawl):
-    """``seen_maybe``/``seen_exact_hits`` equal a Bloom built from
-    outside over the keys seen before the wave, and an exact membership
-    check, over the wave's pending urls."""
+def test_seen_counters_match_outside_replay(crawl):
+    """``seen_exact_hits`` equals an exact membership check, from
+    outside, of the wave's pending urls against the keys seen before the
+    wave."""
     cat, stats, _jobs, _restart = crawl
     frontier = cat.read(FRONTIER_TABLE).select("url", "key_hash", "depth").collect()
     done = cat.read(DONE_TABLE).select("url", "wave").collect()
@@ -171,29 +179,21 @@ def test_seen_counters_match_outside_replay(spark, crawl):
         # the depth-1 url was enqueued after wave 0
         pending = {r["url"]: r["key_hash"] for r in frontier if r["depth"] <= w and r["url"] not in retired}
         before = {r["key_hash"] for r in seen if r["first_seen_wave"] < w}
-        maybe = 0
-        if before:
-            keys = spark.createDataFrame([(k,) for k in before], "key_hash long")
-            bc = spark.sparkContext.broadcast(build_bloom(keys, "key_hash", BLOOM_BITS, BLOOM_K))
-            probe = bloom_might_contain_udf(bc, BLOOM_BITS, BLOOM_K)
-            cands = spark.createDataFrame([(k,) for k in pending.values()], "key_hash long")
-            maybe = cands.filter(probe(F.col("key_hash"))).count()
-            bc.unpersist()
         exact = sum(k in before for k in pending.values())
-        assert (stats[w]["seen_maybe"], stats[w]["seen_exact_hits"]) == (maybe, exact), w
+        assert stats[w]["seen_exact_hits"] == exact, w
     assert stats[1]["seen_exact_hits"] == 1  # the late variant of b0
 
 
 def test_fate_plan_shape(spark, crawl, tmp_path):
-    """The fate is one linear plan: with a seen table the Bloom probe is
-    its only Python stage (a flag, not branches that re-run it) and the
-    seen check a correlated ``ExistenceJoin``; one hash exchange on
-    key_hash serves both rank windows and one on host the budget window.
-    The fixture's frontier has two dirs (bootstrap + enqueue)."""
+    """The fate is one linear plan with no Python stage: with a seen
+    table the seen check is a correlated ``ExistenceJoin`` (a flag, not
+    branches that re-run a subtree); one hash exchange on key_hash serves
+    both rank windows and one on host the budget window. The fixture's
+    frontier has two dirs (bootstrap + enqueue)."""
     cat, _stats, _jobs, _restart = crawl
     plan_of = FrontierEngine(spark, cat, politeness=_politeness(spark)).fate(budget=1)
     plan = simple_plan(plan_of)
-    assert python_eval_ops(plan_of) == 1
+    assert python_eval_ops(plan_of) == 0
     assert "ExistenceJoin" in plan
     assert plan.count("Exchange hashpartitioning") == 2
     fresh = SnapshotCatalog(spark, str(tmp_path / "cat"))
